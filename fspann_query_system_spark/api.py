@@ -183,17 +183,20 @@ class ForwardSecureANNSystem:
             return {"version": new_version, "migrated": 0}
         self.profiler.start("reencrypt")
         bc = self._keys_bc()
+        # materialized with its lineage cut: the new store's plan holds the
+        # old store's three times (semi-join, anti-join, migrated rows), so
+        # a persisted plan would grow threefold per rotation
         new_enc = reencrypt_touched(self.encrypted, touched, bc,
-                                    new_version).persist()
-        migrated = new_enc.filter(F.col("key_version") == new_version).count()
+                                    new_version).localCheckpoint(eager=True)
+        census = {r.key_version: r.n_points
+                  for r in version_census(new_enc).collect()}
         old = self.encrypted
         self.encrypted = new_enc
         self.index = self.index.with_encrypted_points(new_enc, bc)
         old.unpersist()
         self.profiler.stop("reencrypt")
-        return {"version": new_version, "migrated": migrated,
-                "census": {r.key_version: r.n_points
-                           for r in version_census(new_enc).collect()}}
+        return {"version": new_version,
+                "migrated": census.get(new_version, 0), "census": census}
 
     # -- RESTORE (SURVEY §3.4) -------------------------------------------
     def restore_from_store(self, encrypted: DataFrame,

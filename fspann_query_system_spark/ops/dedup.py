@@ -599,6 +599,61 @@ def simhash(df: DataFrame, text_col: str = "text",
 # Near-dup clustering: connected components over the candidate-pair graph
 # ---------------------------------------------------------------------------
 
+# Edge-set size under which connected_components stops contracting on the
+# cluster and finishes with a union-find on the driver (Łącki et al.,
+# "Connected Components at Scale via Local Contractions", KDD'18).  2^20
+# long pairs are 16 MB of Arrow; collecting and finishing them costs less
+# than one distributed round at that size (SCALE.md §9).  0 disables the
+# driver finish.
+DRIVER_FINISH_EDGES = 1 << 20
+
+
+def _driver_components(edges) -> tuple:
+    """(nodes, component) numpy arrays for the (u, v) pyarrow table
+    ``edges``: every node of the edge set labeled with the minimum id of
+    its component.
+
+    Union-find by hooking and full path compression, vectorized: nodes
+    become their rank in sorted id order, so a smaller index IS a smaller
+    id; each pass hooks the larger root of every still-split edge onto the
+    smaller one (parent[i] <= i always holds, so the forest never gains a
+    cycle and every root is its tree's minimum), compresses every node to
+    its root, and keeps only the edges whose roots still differ, as root
+    pairs.  Each pass lowers at least one parent, so it terminates; a
+    random-order 2^20-node path takes 14 passes."""
+    import numpy as np
+    u = edges.column("u").to_numpy(zero_copy_only=False)
+    v = edges.column("v").to_numpy(zero_copy_only=False)
+    nodes, idx = np.unique(np.concatenate([u, v]), return_inverse=True)
+    a, b = idx[:len(u)], idx[len(u):]
+    parent = np.arange(len(nodes))
+    while True:
+        ra, rb = parent[a], parent[b]
+        split = ra != rb
+        if not split.any():
+            return nodes, nodes[parent]
+        a, b = ra[split], rb[split]
+        np.minimum.at(parent, np.maximum(a, b), np.minimum(a, b))
+        while True:
+            up = parent[parent]
+            if np.array_equal(up, parent):
+                break
+            parent = up
+
+
+def _finish_on_driver(edges: DataFrame, stats: dict | None) -> DataFrame:
+    """Collect ``edges`` (u, v) through Arrow and label its nodes on the
+    driver; the result is a driver-held table, not a lineage."""
+    import pyarrow as pa
+    table = edges.toArrow()
+    nodes, comp = _driver_components(table)
+    if stats is not None:
+        stats["local_edges"] = table.num_rows
+    typ = table.schema.field("u").type
+    return edges.sparkSession.createDataFrame(pa.table(
+        {"id": pa.array(nodes, typ), "component": pa.array(comp, typ)}))
+
+
 def connected_components(pairs: DataFrame, id_a: str = "id_a",
                          id_b: str = "id_b", max_iter: int = 50,
                          stats: dict | None = None,
@@ -611,7 +666,9 @@ def connected_components(pairs: DataFrame, id_a: str = "id_a",
     A̸≈C) must share one canonical id, which no pairwise operator gives.
 
     Algorithm: alternating large-star / small-star contraction (Kiveris
-    et al., "Connected Components in MapReduce and Beyond", SoCC'14):
+    et al., "Connected Components in MapReduce and Beyond", SoCC'14),
+    finished on the driver once the edge set is small (the local
+    contraction of Łącki et al., KDD'18):
 
       large-star  — every node links each strictly-larger neighbor to
                     the minimum of its closed neighborhood;
@@ -626,20 +683,31 @@ def connected_components(pairs: DataFrame, id_a: str = "id_a",
     gradually-drifting boilerplate converges in ~10 rounds, not 10³).
     Per round there is exactly ONE materializing action (the
     localCheckpoint truncating lineage) plus one tiny aggregate over the
-    just-checkpointed blocks that tests the fixpoint STRUCTURALLY: the
-    edge set is a disjoint union of stars iff no node both points
-    somewhere and is pointed at, and no node carries two roots — and a
-    star set is provably invariant under both steps.  Testing the
-    current round's output directly fires one round earlier than
-    comparing signatures across rounds, and never joins against the
-    previous state.  At the fixpoint every surviving edge IS a (member,
-    component-min) label, so the labeling falls out of the last edge set
-    without a propagation pass.
+    just-checkpointed blocks that returns the edge count and tests the
+    fixpoint STRUCTURALLY: the edge set is a disjoint union of stars iff
+    no node both points somewhere and is pointed at, and no node carries
+    two roots — and a star set is provably invariant under both steps.
+    At the fixpoint every surviving edge IS a (member, component-min)
+    label, so the labeling falls out of the last edge set without a
+    propagation pass.
 
-    Raises RuntimeError if ``max_iter`` rounds pass without reaching the
-    fixpoint — a partially-contracted labeling must never be consumed as
-    correct.  Pass ``stats={}`` to receive {"rounds": r} back (used by
-    the convergence-rate tests).
+    Driver finish: the initial (deduplicated) edge set is counted once
+    checkpointed, and each round's aggregate counts the round's edges.
+    As soon as an edge set holds fewer than :data:`DRIVER_FINISH_EDGES`
+    edges it is collected through Arrow and labeled by a vectorized
+    union-find on the driver (:func:`_driver_components`).  Contraction
+    preserves both every node and every component's minimum, so the
+    labels equal the fixpoint's.  Per-round cost at these sizes is job
+    scheduling, not data, so small inputs skip the rounds entirely.  The
+    finished labels are a driver-held table that Spark re-sends, not a
+    lineage over checkpointed blocks, so nothing downstream of the finish
+    carries the ``localCheckpoint`` fault hazard of :func:`_ckpt`.
+
+    Raises RuntimeError if ``max_iter`` distributed rounds pass without
+    reaching the fixpoint or the driver bound — a partially-contracted
+    labeling must never be consumed as correct.  Pass ``stats={}`` to
+    receive {"rounds": distributed rounds, "local_edges": edges finished
+    on the driver (0 when the rounds reach the fixpoint)} back.
 
     ``checkpoint_mode="reliable"`` makes every per-round materialization
     a reliable ``checkpoint`` (requires ``setCheckpointDir``): a lost
@@ -647,15 +715,18 @@ def connected_components(pairs: DataFrame, id_a: str = "id_a",
     instead of killing a multi-hour cluster job (see :func:`_ckpt`)."""
     # canonical initial edge set, checkpointed once: every round reads e
     # twice (union with its swap / join with its min table) and the
-    # upstream plan (e.g. minhash banding) must not recompute per read
+    # upstream plan (e.g. minhash banding) must not recompute per read.
+    # Both-null pairs are the only null rows (greatest/least skip nulls).
     e0 = _ckpt(pairs.select(F.greatest(F.col(id_a), F.col(id_b)).alias("u"),
                             F.least(F.col(id_a), F.col(id_b)).alias("v"))
                .distinct(), checkpoint_mode)
+    if stats is not None:
+        stats.update(rounds=0, local_edges=0)
+    if e0.count() < DRIVER_FINISH_EDGES:
+        return _finish_on_driver(e0.filter(F.col("u").isNotNull()), stats)
     singles = e0.filter(F.col("u") == F.col("v")).select("u")
     e = e0.filter(F.col("u") != F.col("v"))
-    converged, rounds = False, 0
-    for _ in range(max_iter):
-        rounds += 1
+    for rounds in range(1, max_iter + 1):
         # -- large-star: m = min over closed neighborhood; larger
         #    neighbors re-attach to m
         und = e.unionByName(
@@ -682,21 +753,30 @@ def connected_components(pairs: DataFrame, id_a: str = "id_a",
               .distinct()
               .select(F.col("_nu").alias("u"), F.col("_nv").alias("v")))
         e = _ckpt(ss, checkpoint_mode)
-        # star test: member rows map n -> its root, root rows map n -> n;
-        # any node with two distinct images breaks star-ness (either it
-        # carries two roots, or it is both member and root)
-        not_star = (e.select(F.col("u").alias("n"), F.col("v").alias("root"))
-                    .unionByName(e.select(F.col("v").alias("n"),
-                                          F.col("v").alias("root")))
-                    .groupBy("n")
-                    .agg(F.count_distinct("root").alias("nr"))
-                    .filter(F.col("nr") > 1).limit(1).count())
-        if not_star == 0:
-            converged = True
+        if stats is not None:
+            stats["rounds"] = rounds
+        # star test and edge count in one action: member rows map n -> its
+        # root, root rows map n -> n; any node with two distinct images
+        # breaks star-ness (either it carries two roots, or it is both
+        # member and root).  Member rows are the edges, one each.
+        chk = (e.select(F.col("u").alias("n"), F.col("v").alias("root"),
+                        F.lit(1).alias("_edge"))
+               .unionByName(e.select(F.col("v").alias("n"),
+                                     F.col("v").alias("root"),
+                                     F.lit(0).alias("_edge")))
+               .groupBy("n")
+               .agg((F.min("root") != F.max("root")).alias("_split"),
+                    F.sum("_edge").alias("_edges"))
+               .agg(F.count(F.when(F.col("_split"), 1)).alias("not_star"),
+                    F.coalesce(F.sum("_edges"), F.lit(0)).alias("edges"))
+               .first())
+        if chk.not_star == 0:
             break
-    if stats is not None:
-        stats["rounds"] = rounds
-    if not converged:
+        if chk.edges < DRIVER_FINISH_EDGES:
+            return _finish_on_driver(
+                e.unionByName(singles.select("u", F.col("u").alias("v"))),
+                stats)
+    else:
         raise RuntimeError(
             f"connected_components did not reach the star fixpoint in "
             f"{max_iter} rounds — refusing to return a partially "
@@ -729,8 +809,10 @@ def near_dup_pipeline(docs: DataFrame, text_col: str = "text",
 
     Scale shape: banding bounds the candidate set (never all-pairs); the
     verification join expands candidates by |shingles/doc| only for
-    banded pairs; CC is the log-round star contraction; the final
-    labeling is a left join on the (small) component table.  This is the
+    banded pairs; CC finishes on the driver under
+    ``DRIVER_FINISH_EDGES`` verified pairs and runs the log-round star
+    contraction above; the final labeling is a left join on the (small)
+    component table.  This is the
     composition a 100 TB dedup actually runs — candidate generation and
     exact verification must never both be all-pairs.
 

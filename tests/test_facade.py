@@ -325,3 +325,42 @@ def test_search_cached_restamps_q_id_for_same_vector(spark):
     assert sys_.cache.hits >= 1
     assert {r.q_id for r in r2} == {77}            # re-stamped, not q_id=1
     assert sorted((r.id, r.rank) for r in r2) == sorted((r.id, r.rank) for r in r1)
+
+
+def test_rotation_cycles_keep_store_plan_bounded(spark):
+    """Four rotate-then-search cycles: the re-encrypted store is
+    materialized with its lineage cut, so its plan stays the same size
+    instead of nesting the previous store three times per rotation; the
+    replayed batch and the routing tables (codes, bounds) never change."""
+    rng = np.random.default_rng(21)
+    X = rng.normal(0, 1, (300, 12))
+    vec = spark.createDataFrame([(i, X[i].tolist()) for i in range(300)],
+                                "id LONG, vector ARRAY<DOUBLE>")
+    cfg = SystemConfig(dim=12, m=6, lam=2, tables=3, divisions=1,
+                       probes=4, refinement_limit=100, top_k=5,
+                       rotation_max_ops=10**9)
+    sys_ = ForwardSecureANNSystem(spark, cfg, master_key=bytes(32))
+    sys_.index_vectors(vec)
+    q = vec.limit(6).select(F.col("id").alias("q_id"), "vector")
+
+    def rows(df):
+        return sorted(tuple(r) for r in df.collect())
+
+    def plan_size():
+        return len(sys_.encrypted._jdf.queryExecution().logical().toString())
+
+    first = rows(sys_.search(q, k=5).select("q_id", "id", "distance",
+                                            "rank"))
+    codes, bounds = rows(sys_.index.codes), rows(sys_.index.bounds)
+    sizes = []
+    for cycle in range(4):
+        out = sys_.rotate_and_reencrypt_touched()
+        assert out["version"] == cycle + 2 and out["migrated"] > 0
+        assert sum(out["census"].values()) == 300
+        sizes.append(plan_size())
+        replay = rows(sys_.search(q, k=5).select("q_id", "id", "distance",
+                                                 "rank"))
+        assert replay == first, cycle
+    assert len(set(sizes)) == 1, sizes
+    assert rows(sys_.index.codes) == codes
+    assert rows(sys_.index.bounds) == bounds

@@ -964,11 +964,14 @@ def test_connected_components_transitive(spark):
                     10: 10, 11: 10, 12: 10, 13: 10}
 
 
-def test_connected_components_long_chain(spark):
+def test_connected_components_long_chain(spark, monkeypatch):
     """Adversarial path graph (diameter 599): large-star/small-star must
     converge in O(log n) rounds, where min-label propagation would need
-    one round per hop (and silently truncate at max_iter)."""
+    one round per hop (and silently truncate at max_iter).  Pinned to the
+    distributed rounds (no driver finish)."""
+    from fspann_query_system_spark.ops import dedup
     from fspann_query_system_spark.ops.dedup import connected_components
+    monkeypatch.setattr(dedup, "DRIVER_FINISH_EDGES", 0)
     n = 600
     pairs = spark.createDataFrame([(i, i + 1) for i in range(n - 1)],
                                   "id_a LONG, id_b LONG")
@@ -1027,8 +1030,11 @@ def test_reliable_checkpoint_mode_identical_output(spark, tmp_path, docs):
     assert local_kl == reliable_kl
 
 
-def test_connected_components_nonconvergence_raises(spark):
+def test_connected_components_nonconvergence_raises(spark, monkeypatch):
+    # pinned to the distributed rounds: the driver finish never raises
+    from fspann_query_system_spark.ops import dedup
     from fspann_query_system_spark.ops.dedup import connected_components
+    monkeypatch.setattr(dedup, "DRIVER_FINISH_EDGES", 0)
     pairs = spark.createDataFrame([(i, i + 1) for i in range(63)],
                                   "id_a LONG, id_b LONG")
     with pytest.raises(RuntimeError, match="fixpoint"):
@@ -1043,6 +1049,76 @@ def test_connected_components_self_pairs_and_empty(spark):
     assert comp == {1: 1, 2: 1, 5: 5}
     empty = spark.createDataFrame([], "id_a LONG, id_b LONG")
     assert connected_components(empty).count() == 0
+
+
+def _cc_rows(pairs, **kw):
+    from fspann_query_system_spark.ops.dedup import connected_components
+    return sorted(tuple(r) for r in connected_components(pairs, **kw)
+                  .select("id", "component").collect())
+
+
+def test_connected_components_driver_finish_matches_rounds(spark,
+                                                           monkeypatch):
+    """The driver union-find and the distributed rounds label every input
+    identically: transitive fixture, the 600-node path, self-pairs,
+    empty input and planted chains with shuffled ids and cross links."""
+    from fspann_query_system_spark.ops import dedup
+    from fspann_query_system_spark.ops.dedup import connected_components
+    rng = np.random.default_rng(7)
+    ids = rng.permutation(10_000)[:120].tolist()
+    chains = [ids[i:i + 6] for i in range(0, 120, 6)]
+    planted = [(c[j], c[j + 1]) for c in chains for j in range(5)]
+    planted += [(chains[0][2], chains[1][4]), (chains[5][0], chains[9][5]),
+                (chains[3][3], chains[3][3])]
+    inputs = {
+        "transitive": [(2, 1), (2, 3), (7, 8), (10, 11), (11, 12), (12, 13)],
+        "path600": [(i, i + 1) for i in range(599)],
+        "self_pairs": [(5, 5), (1, 2), (2, 2)],
+        "empty": [],
+        "planted": planted,
+    }
+    labels = {}
+    for name, rows in inputs.items():
+        pairs = spark.createDataFrame(rows, "id_a LONG, id_b LONG")
+        local_stats, dist_stats = {}, {}
+        local = _cc_rows(pairs, stats=local_stats)
+        monkeypatch.setattr(dedup, "DRIVER_FINISH_EDGES", 0)
+        dist = _cc_rows(pairs, stats=dist_stats)
+        monkeypatch.undo()
+        assert local == dist, name
+        labels[name] = dict(local)
+        assert local_stats["rounds"] == 0, (name, local_stats)
+        assert dist_stats["local_edges"] == 0, (name, dist_stats)
+        if name == "path600":
+            assert local == [(i, 0) for i in range(600)]
+            assert local_stats["local_edges"] == 599
+            assert dist_stats["rounds"] >= 2
+    assert labels["planted"][chains[9][5]] == min(chains[5] + chains[9])
+    # string ids keep their type and order through the driver finish
+    s_pairs = spark.createDataFrame([("b", "a"), ("c", "b"), ("x", "y")],
+                                    "id_a STRING, id_b STRING")
+    s_out = connected_components(s_pairs)
+    assert s_out.schema["id"].dataType.simpleString() == "string"
+    assert sorted(tuple(r) for r in s_out.collect()) == [
+        ("a", "a"), ("b", "a"), ("c", "a"), ("x", "x"), ("y", "x")]
+
+
+def test_connected_components_hybrid_rounds_then_driver(spark, monkeypatch):
+    """Contraction never leaves fewer edges than nodes minus components,
+    so a mid-way driver finish needs a graph with redundant edges: the
+    600-node path plus chords to i+2 and i+3 (1,794 edges) under a bound
+    of 1,000 runs one or more rounds on the cluster, then finishes on the
+    driver.  Every node still gets the component minimum."""
+    from fspann_query_system_spark.ops import dedup
+    monkeypatch.setattr(dedup, "DRIVER_FINISH_EDGES", 1_000)
+    perm = np.random.default_rng(3).permutation(600).tolist()
+    rows = [(perm[i], perm[i + d]) for d in (1, 2, 3)
+            for i in range(600 - d)]
+    pairs = spark.createDataFrame(rows, "id_a LONG, id_b LONG")
+    stats = {}
+    assert _cc_rows(pairs, stats=stats) == [(i, 0) for i in range(600)]
+    assert stats["rounds"] >= 1, stats
+    assert 0 < stats["local_edges"] < 1_000, stats
 
 
 # ---------------------------------------------------------------------------
