@@ -16,6 +16,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .config import SystemConfig
+from .functions.plan import materialize
 from .crypto import KeyManager, RotationPolicy, encrypt_vectors, reencrypt_touched, \
     version_census, TouchedTracker
 from .lsh.params import LshParams, fit_params_from_df
@@ -186,8 +187,8 @@ class ForwardSecureANNSystem:
         # materialized with its lineage cut: the new store's plan holds the
         # old store's three times (semi-join, anti-join, migrated rows), so
         # a persisted plan would grow threefold per rotation
-        new_enc = reencrypt_touched(self.encrypted, touched, bc,
-                                    new_version).localCheckpoint(eager=True)
+        new_enc = materialize(reencrypt_touched(self.encrypted, touched, bc,
+                                                new_version))
         census = {r.key_version: r.n_points
                   for r in version_census(new_enc).collect()}
         old = self.encrypted

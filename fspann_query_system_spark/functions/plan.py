@@ -77,3 +77,24 @@ def rows_cached(df: DataFrame, *cols: str) -> list:
     if key not in cache:
         cache[key] = df.select(*cols).collect()
     return cache[key]
+
+
+def materialize(df: DataFrame) -> DataFrame:
+    """Eagerly materialize ``df`` and truncate its lineage: the one
+    checkpoint rule every operator in this package goes through.
+
+    With no checkpoint directory on the session (the default) this is
+    ``localCheckpoint``: blocks live un-replicated in executor storage
+    and free with the plan, but they are NOT fault-tolerant — lineage
+    is truncated, so losing one executor mid-job kills the query (fine
+    on local[N]; fatal for a multi-hour 100 TB dedup).  Calling
+    ``spark.sparkContext.setCheckpointDir(<HDFS/S3 dir>)`` is the
+    cluster switch: every materialization then becomes a reliable
+    ``checkpoint`` into that directory and survives executor loss.
+    The reference's analog is its atomic tmp-move persistence
+    discipline (RocksDBMetadataManager.java:342-375), which exists
+    precisely to survive interruption.
+    """
+    if df.sparkSession.sparkContext.getCheckpointDir() is not None:
+        return df.checkpoint(eager=True)
+    return df.localCheckpoint(eager=True)

@@ -23,45 +23,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..functions.plan import materialize, select_exploded
 from ..functions.text import fingerprint_md5, word_shingles
-
-
-def _ckpt(df: DataFrame, mode: str) -> DataFrame:
-    """Materialize ``df`` and truncate its lineage, the dedup family's
-    reuse primitive.
-
-    mode="local":    ``localCheckpoint`` — blocks live un-replicated on
-                     executors.  Fast, and blocks free with the plan, but
-                     NOT fault-tolerant: lineage is truncated, so losing
-                     one executor mid-job kills the query (fine on
-                     local[N]; fatal for a multi-hour 100 TB dedup).
-    mode="reliable": ``checkpoint`` into the directory set via
-                     ``spark.sparkContext.setCheckpointDir`` (HDFS/S3 on
-                     a cluster) — survives executor loss; the cluster
-                     deployment mode.  The reference's analog is its
-                     atomic tmp-move persistence discipline
-                     (RocksDBMetadataManager.java:342-375), which exists
-                     precisely to survive interruption.
-    mode="none":     pass-through — keep the lazy plan (the consumer
-                     re-executes the subtree per reference).  The A/B
-                     control for measuring a materialization decision
-                     in one JVM, and the right call when the input is
-                     known-cheap (an already-materialized table).
-    """
-    if mode == "none":
-        return df
-    if mode == "local":
-        return df.localCheckpoint(eager=True)
-    if mode == "reliable":
-        sc = df.sparkSession.sparkContext
-        if sc.getCheckpointDir() is None:
-            raise ValueError(
-                'checkpoint_mode="reliable" requires '
-                "spark.sparkContext.setCheckpointDir(<fault-tolerant dir>) "
-                "to be called first")
-        return df.checkpoint(eager=True)
-    raise ValueError(f"unknown checkpoint_mode {mode!r}; "
-                     f'use "local", "reliable" or "none"')
 
 
 # ---------------------------------------------------------------------------
@@ -105,7 +68,6 @@ def shingle_table(df: DataFrame, text_col: str = "text",
     Tokens are materialized into a column before the shingle transform
     (see ``shingles_from_tokens``: a captured expression is re-evaluated
     per element inside the HOF lambda, ~3x slower at sf0.1)."""
-    from ..functions.plan import select_exploded
     from ..functions.text import tokens, shingles_from_tokens
     sh = shingles_from_tokens(F.col("_toks"), k)
     if dedupe:
@@ -234,13 +196,12 @@ def band_table(df: DataFrame, text_col: str = "text",
 
 def minhash_band_pairs(df: DataFrame, text_col: str = "text",
                        id_col: str = "doc_id", k: int = 3,
-                       n_hashes: int = 16, bands: int = 4,
-                       checkpoint_mode: str = "local") -> DataFrame:
+                       n_hashes: int = 16, bands: int = 4) -> DataFrame:
     """Candidate near-dup pairs: docs sharing >= 1 LSH band.  Returns
     (id_a, id_b, n_shared_bands), id_a < id_b.
 
-    The band table is eagerly materialized (``_ckpt``; n·bands skinny
-    rows — exactly the table an incremental-dedup corpus persists
+    The band table is eagerly materialized (n·bands skinny rows —
+    exactly the table an incremental-dedup corpus persists
     anyway, see :func:`band_table`) before the self-join: both join
     sides otherwise re-execute the whole minhash chain (shingle
     explode + per-shingle md5 + the n_hashes-min aggregate — the
@@ -249,10 +210,8 @@ def minhash_band_pairs(df: DataFrame, text_col: str = "text",
     knn_join bipartite probe table).  Measured cost-neutral at sf0.1
     (2.34 s vs 2.31 s lazy, same-JVM interleaved medians — the pinning
     job offsets the saved chain at toy scale) and kept for the scale
-    shape: at 100 TB the saved pass is the dominant term.
-    ``checkpoint_mode="none"`` restores the lazy twin-subtree plan."""
-    banded = _ckpt(band_table(df, text_col, id_col, k, n_hashes, bands),
-                   checkpoint_mode)
+    shape: at 100 TB the saved pass is the dominant term."""
+    banded = materialize(band_table(df, text_col, id_col, k, n_hashes, bands))
     a = banded.select(F.col(id_col).alias("id_a"), "band", "band_hash")
     b = banded.select(F.col(id_col).alias("id_b"), "band", "band_hash")
     return (a.join(b, on=["band", "band_hash"])
@@ -352,7 +311,6 @@ def jaccard_pairs(df: DataFrame, text_col: str = "text",
                   id_col: str = "doc_id", k: int = 3,
                   threshold: float = 0.0,
                   max_df: int | None = None,
-                  checkpoint_mode: str = "local",
                   kernel_partitions: int | None = None) -> DataFrame:
     """Exact shingle-set Jaccard for all pairs sharing >= 1 shingle:
     (id_a, id_b, jaccard), id_a < id_b, jaccard >= threshold.
@@ -383,12 +341,11 @@ def jaccard_pairs(df: DataFrame, text_col: str = "text",
     shuffle ONCE into per-shingle posting lists; the df cap is an array-
     size filter on the grouped rows (no separate frequency pass or
     anti-join), and the ≤ max_df-bounded lists expand to ordered pairs
-    map-side.  Intermediates are localCheckpoint-ed, not persist-ed:
-    checkpoint blocks are released when the plan is garbage-collected,
-    where CacheManager-registered persists leak until an explicit
-    unpersist (repeated registry/bench invocations accumulated blocks);
-    ``checkpoint_mode="reliable"`` switches them to reliable
-    ``checkpoint`` for cluster runs (see :func:`_ckpt`).
+    map-side.  Intermediates are checkpointed (:func:`materialize`), not
+    persist-ed: checkpoint blocks are released when the plan is
+    garbage-collected, where CacheManager-registered persists leak until
+    an explicit unpersist (repeated registry/bench invocations
+    accumulated blocks).
 
     The posting rows are round-robined over ``kernel_partitions``
     (default: cluster default parallelism) before the pair expansion:
@@ -398,7 +355,7 @@ def jaccard_pairs(df: DataFrame, text_col: str = "text",
     2.2 s → 0.7 s on 32 cores — same pathology as the Levenshtein
     kernel in :func:`edit_near_dups`)."""
     inter, sizes = _shingle_overlap(df, text_col, id_col, k, max_df,
-                                    checkpoint_mode, kernel_partitions)
+                                    kernel_partitions)
     out = (inter
            .join(F.broadcast(sizes.select(F.col(id_col).alias("id_a"),
                                           F.col("sz").alias("sz_a"))), "id_a")
@@ -412,8 +369,7 @@ def jaccard_pairs(df: DataFrame, text_col: str = "text",
 
 
 def _shingle_overlap(df: DataFrame, text_col: str, id_col: str, k: int,
-                     max_df: int | None, checkpoint_mode: str,
-                     kernel_partitions: int | None
+                     max_df: int | None, kernel_partitions: int | None
                      ) -> tuple[DataFrame, DataFrame]:
     """Shared pair-overlap core of :func:`jaccard_pairs` /
     :func:`containment_pairs`: returns (``inter``: (id_a, id_b,
@@ -427,11 +383,11 @@ def _shingle_overlap(df: DataFrame, text_col: str, id_col: str, k: int,
     sh = (shingle_table(df, text_col, id_col, k, dedupe=True)
           .select(F.col(id_col), F.xxhash64("shingle").alias("shingle")))
     if max_df is not None:
-        posting = _ckpt(sh.groupBy("shingle")
-                        .agg(F.sort_array(F.collect_list(id_col)).alias("_ids"))
-                        .filter(F.size("_ids") <= max_df)
-                        .select("_ids"),
-                        checkpoint_mode)   # read twice: sizes + pairs
+        posting = materialize(   # read twice: sizes + pairs
+            sh.groupBy("shingle")
+            .agg(F.sort_array(F.collect_list(id_col)).alias("_ids"))
+            .filter(F.size("_ids") <= max_df)
+            .select("_ids"))
         # sizes reads the checkpointed posting blocks DIRECTLY: the
         # compute-balancing round-robin repartition below exists only
         # for the pair-expansion stage, and routing sizes through it
@@ -445,7 +401,6 @@ def _shingle_overlap(df: DataFrame, text_col: str, id_col: str, k: int,
             lambda x, i: F.transform(
                 F.slice(F.col("_ids"), i + F.lit(2), F.size(F.col("_ids"))),
                 lambda y: F.struct(x.alias("id_a"), y.alias("id_b")))))
-        from ..functions.plan import select_exploded
         inter = (select_exploded(posting.filter(F.size("_ids") >= 2),
                                  pair_structs, "p")
                  .select(F.col("p.id_a").alias("id_a"),
@@ -455,7 +410,7 @@ def _shingle_overlap(df: DataFrame, text_col: str, id_col: str, k: int,
         # uncapped exact mode: posting lists are unbounded (one hot
         # shingle would make a single giant array row), so pair the rows
         # with a shingle-keyed self-join instead
-        shc = _ckpt(sh, checkpoint_mode)          # read 3x: sizes + a + b
+        shc = materialize(sh)          # read 3x: sizes + a + b
         sizes = shc.groupBy(id_col).agg(F.count("*").alias("sz"))
         a = shc.select(F.col(id_col).alias("id_a"), "shingle")
         b = shc.select(F.col(id_col).alias("id_b"), "shingle")
@@ -469,7 +424,6 @@ def containment_pairs(df: DataFrame, text_col: str = "text",
                       id_col: str = "doc_id", k: int = 3,
                       threshold: float = 0.8,
                       max_df: int | None = None,
-                      checkpoint_mode: str = "local",
                       kernel_partitions: int | None = None) -> DataFrame:
     """Shingle-set CONTAINMENT near-dups (Broder 1997's second
     resemblance measure): (id_a, id_b, cont_a, cont_b, jaccard) with
@@ -493,7 +447,7 @@ def containment_pairs(df: DataFrame, text_col: str = "text",
     exists.  With the cap, containment is exact over the
     stopword-filtered sets, same contract as the Jaccard twin."""
     inter, sizes = _shingle_overlap(df, text_col, id_col, k, max_df,
-                                    checkpoint_mode, kernel_partitions)
+                                    kernel_partitions)
     out = (inter
            .join(F.broadcast(sizes.select(F.col(id_col).alias("id_a"),
                                           F.col("sz").alias("sz_a"))), "id_a")
@@ -571,7 +525,6 @@ def simhash(df: DataFrame, text_col: str = "text",
     explode (60 rows/token) would move to a vectorized pandas UDF; the
     plan here is the verifiable spec."""
     assert bits % 4 == 0 and bits <= 60
-    from ..functions.plan import select_exploded
     toks = (select_exploded(
                 df, F.filter(F.split(F.lower(F.col(text_col)), "\\s+"),
                              lambda t: t != ""), "tok", id_col)
@@ -656,8 +609,7 @@ def _finish_on_driver(edges: DataFrame, stats: dict | None) -> DataFrame:
 
 def connected_components(pairs: DataFrame, id_a: str = "id_a",
                          id_b: str = "id_b", max_iter: int = 50,
-                         stats: dict | None = None,
-                         checkpoint_mode: str = "local") -> DataFrame:
+                         stats: dict | None = None) -> DataFrame:
     """(id, component) for every id in ``pairs``; component = the minimum
     id reachable through the pair graph.
 
@@ -681,8 +633,8 @@ def connected_components(pairs: DataFrame, id_a: str = "id_a",
     alternation reaches the fixpoint in O(log n) rounds on ANY topology,
     vs O(diameter) for min-label propagation (a 10³-deep chain of
     gradually-drifting boilerplate converges in ~10 rounds, not 10³).
-    Per round there is exactly ONE materializing action (the
-    localCheckpoint truncating lineage) plus one tiny aggregate over the
+    Per round there is exactly ONE materializing action
+    (:func:`materialize` truncating lineage) plus one tiny aggregate over the
     just-checkpointed blocks that returns the edge count and tests the
     fixpoint STRUCTURALLY: the edge set is a disjoint union of stars iff
     no node both points somewhere and is pointed at, and no node carries
@@ -701,7 +653,7 @@ def connected_components(pairs: DataFrame, id_a: str = "id_a",
     scheduling, not data, so small inputs skip the rounds entirely.  The
     finished labels are a driver-held table that Spark re-sends, not a
     lineage over checkpointed blocks, so nothing downstream of the finish
-    carries the ``localCheckpoint`` fault hazard of :func:`_ckpt`.
+    carries the ``localCheckpoint`` fault hazard of :func:`materialize`.
 
     Raises RuntimeError if ``max_iter`` distributed rounds pass without
     reaching the fixpoint or the driver bound — a partially-contracted
@@ -709,17 +661,18 @@ def connected_components(pairs: DataFrame, id_a: str = "id_a",
     receive {"rounds": distributed rounds, "local_edges": edges finished
     on the driver (0 when the rounds reach the fixpoint)} back.
 
-    ``checkpoint_mode="reliable"`` makes every per-round materialization
-    a reliable ``checkpoint`` (requires ``setCheckpointDir``): a lost
-    executor then costs one round's recompute from the last checkpoint
-    instead of killing a multi-hour cluster job (see :func:`_ckpt`)."""
+    With a session checkpoint directory set, every per-round
+    materialization is a reliable ``checkpoint``: a lost executor then
+    costs one round's recompute from the last checkpoint instead of
+    killing a multi-hour cluster job (see :func:`materialize`)."""
     # canonical initial edge set, checkpointed once: every round reads e
     # twice (union with its swap / join with its min table) and the
     # upstream plan (e.g. minhash banding) must not recompute per read.
     # Both-null pairs are the only null rows (greatest/least skip nulls).
-    e0 = _ckpt(pairs.select(F.greatest(F.col(id_a), F.col(id_b)).alias("u"),
-                            F.least(F.col(id_a), F.col(id_b)).alias("v"))
-               .distinct(), checkpoint_mode)
+    e0 = materialize(
+        pairs.select(F.greatest(F.col(id_a), F.col(id_b)).alias("u"),
+                     F.least(F.col(id_a), F.col(id_b)).alias("v"))
+        .distinct())
     if stats is not None:
         stats.update(rounds=0, local_edges=0)
     if e0.count() < DRIVER_FINISH_EDGES:
@@ -752,7 +705,7 @@ def connected_components(pairs: DataFrame, id_a: str = "id_a",
                                        F.col("_mn").alias("_nv")))
               .distinct()
               .select(F.col("_nu").alias("u"), F.col("_nv").alias("v")))
-        e = _ckpt(ss, checkpoint_mode)
+        e = materialize(ss)
         if stats is not None:
             stats["rounds"] = rounds
         # star test and edge count in one action: member rows map n -> its
@@ -797,7 +750,6 @@ def near_dup_pipeline(docs: DataFrame, text_col: str = "text",
                       id_col: str = "doc_id", k: int = 3,
                       n_hashes: int = 8, bands: int | str = 8,
                       threshold: float = 0.5,
-                      checkpoint_mode: str = "local",
                       stats: dict | None = None) -> DataFrame:
     """The complete near-dup pipeline in one plan: MinHash-band candidate
     generation → exact shingle-set Jaccard verification of just those
@@ -823,14 +775,13 @@ def near_dup_pipeline(docs: DataFrame, text_col: str = "text",
     if bands == "auto":
         bands, _ = lsh_band_geometry(threshold, n_hashes)
     # Candidate pairs are consumed three times (two verify joins + the
-    # id semi-join below); localCheckpoint materializes the banding pass
+    # id semi-join below); materialize() pins the banding pass
     # ONCE instead of re-running shingle+minhash per consumer (the same
     # reuse discipline as jaccard_pairs — checkpoint, not persist, so
     # blocks free with the plan).
-    cand = _ckpt(minhash_band_pairs(docs, text_col, id_col,
-                                    k=k, n_hashes=n_hashes, bands=bands,
-                                    checkpoint_mode=checkpoint_mode)
-                 .select("id_a", "id_b"), checkpoint_mode)
+    cand = materialize(minhash_band_pairs(docs, text_col, id_col, k=k,
+                                          n_hashes=n_hashes, bands=bands)
+                       .select("id_a", "id_b"))
     if stats is not None:
         # one cheap count over the just-checkpointed blocks (scale
         # diagnostics: candidate volume is THE cost driver downstream)
@@ -849,9 +800,9 @@ def near_dup_pipeline(docs: DataFrame, text_col: str = "text",
     # the size agg: the (id, shingle) edge shuffles longs, not ~k-word
     # strings (same discipline as jaccard_pairs; only intersection
     # COUNTS reach the output, so the oracle needs no hash mirroring)
-    sh = _ckpt(shingle_table(docs_c, text_col, id_col, k=k, dedupe=True)
-               .select(F.col(id_col), F.xxhash64("shingle").alias("shingle")),
-               checkpoint_mode)
+    sh = materialize(
+        shingle_table(docs_c, text_col, id_col, k=k, dedupe=True)
+        .select(F.col(id_col), F.xxhash64("shingle").alias("shingle")))
     sizes = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("sz"))
     inter = (cand
              .join(sh.select(F.col(id_col).alias("id_a"), "shingle"),
@@ -868,8 +819,7 @@ def near_dup_pipeline(docs: DataFrame, text_col: str = "text",
                    >= threshold
                    * (F.col("_sza") + F.col("_szb") - F.col("n_inter")))
            .select("id_a", "id_b"))
-    comp = connected_components(ver, checkpoint_mode=checkpoint_mode,
-                                stats=stats)
+    comp = connected_components(ver, stats=stats)
     canonical = F.coalesce("component", id_col)
     return (docs.select(id_col)
             .join(comp.withColumnRenamed("id", id_col), on=id_col,
@@ -882,8 +832,8 @@ def near_dup_pipeline(docs: DataFrame, text_col: str = "text",
 def leakage_safe_split(docs: DataFrame, val_frac: float = 0.1,
                        text_col: str = "text", id_col: str = "doc_id",
                        k: int = 3, n_hashes: int = 8, bands: int = 8,
-                       threshold: float = 0.5, salt: str = "split",
-                       checkpoint_mode: str = "local") -> DataFrame:
+                       threshold: float = 0.5,
+                       salt: str = "split") -> DataFrame:
     """Near-dup-aware train/validation split: every document in a
     near-duplicate component lands on the SAME side, so no eval example
     has a training-set near-duplicate (the contamination mode a naive
@@ -905,8 +855,7 @@ def leakage_safe_split(docs: DataFrame, val_frac: float = 0.1,
     from .sampling import SAMPLE_DENOM, sample_bucket
     labeled = near_dup_pipeline(docs, text_col=text_col, id_col=id_col,
                                 k=k, n_hashes=n_hashes, bands=bands,
-                                threshold=threshold,
-                                checkpoint_mode=checkpoint_mode)
+                                threshold=threshold)
     cut = int(round(val_frac * SAMPLE_DENOM))
     side = F.when(sample_bucket(F.col("canonical_id"), salt) < cut,
                   F.lit("val")).otherwise(F.lit("train"))

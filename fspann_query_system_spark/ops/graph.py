@@ -58,6 +58,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.window import Window
 
+from ..functions.plan import materialize
+
 W_SCALE = 1_000_000    # edge-weight quantization: w = round(1e6/(1+dist))
 M_SCALE = 100_000      # per-node class-mass normalization target
 
@@ -147,7 +149,7 @@ def label_propagate(edges: DataFrame, seeds: DataFrame, iters: int = 2,
                 .unionByName(seed_mass))
         if checkpoint_every and (t + 1) % checkpoint_every == 0 \
                 and t + 1 < iters:
-            mass = mass.localCheckpoint(eager=True)
+            mass = materialize(mass)
 
     is_seed = (mass.join(seed_ids.withColumn("_is_seed", F.lit(True)),
                          "_node", "left")
@@ -282,7 +284,7 @@ def pagerank(edges: DataFrame, nodes: DataFrame | None = None,
                                  persist_nodes=release)
     if not release:
         return out
-    out = out.localCheckpoint(eager=True)
+    out = materialize(out)
     n_nodes = out.count()        # checkpointed: scans local blocks only
     for c in caches:
         c.unpersist()
@@ -339,7 +341,7 @@ def _pagerank_plan(edges: DataFrame, nodes: DataFrame | None,
                     .alias("_r")))
         if checkpoint_every and (t + 1) % checkpoint_every == 0 \
                 and t + 1 < iters:
-            rank = rank.localCheckpoint(eager=True)
+            rank = materialize(rank)
     out = rank.select(F.col("_node").alias(id_col),
                       F.round(F.col("_r") / PR_SCALE, 6).alias("score"))
     return out, tuple(caches)
@@ -442,7 +444,7 @@ def graph_coreset(df: DataFrame, centroids: DataFrame,
            .select(id_col, "cell", "score",
                    F.col("cell_rank").cast("int").alias("cell_rank")))
     if release:
-        out = out.localCheckpoint(eager=True)
+        out = materialize(out)
         # pagerank's eager-mode int64 budget guard, at this
         # composition's boundary (advice r10).  The checkpoint above
         # populated the node-set cache, so the count scans cached

@@ -39,7 +39,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..functions.plan import rows_cached
+from ..functions.plan import materialize, rows_cached
 
 
 def _codebook_tensor(codebook: DataFrame) -> np.ndarray:
@@ -493,7 +493,7 @@ def ivfpq_topk(base: DataFrame, queries: DataFrame, centroids: DataFrame,
         if assigned_given:
             census_src = assigned
         else:
-            codes = codes.localCheckpoint(eager=True)
+            codes = materialize(codes)
             census_src = codes
         counts = {r["cell"]: r["count"] for r in
                   census_src.groupBy("cell").count().collect()}

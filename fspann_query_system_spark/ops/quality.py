@@ -39,6 +39,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions import text as T
+from ..functions.plan import materialize, select_exploded
 
 
 def _det_sum(c: Column, scale: float = 1e9) -> Column:
@@ -252,7 +253,6 @@ def decontaminate(docs: DataFrame, text_col: str = "text", n: int = 5,
         bench_toks = _toks(bench_docs)
         corp_toks = toks
 
-    from ..functions.plan import select_exploded
     bench = (select_exploded(_grams(bench_toks),
                              F.col("grams"), "gram").select("gram").distinct()
              .withColumn("hit", F.lit(1)))
@@ -270,8 +270,7 @@ def decontaminate(docs: DataFrame, text_col: str = "text", n: int = 5,
         (F.col("hit_frac") >= F.lit(threshold)).cast("int"))
 
 
-def unigram_logprob(docs: DataFrame, text_col: str = "text",
-                    checkpoint_mode: str = "none") -> DataFrame:
+def unigram_logprob(docs: DataFrame, text_col: str = "text") -> DataFrame:
     """Per-document mean negative log-likelihood under the corpus MLE
     unigram model — the cheap end of the perplexity-filtering family
     (CCNet / Gopher score documents with a language model and drop the
@@ -299,24 +298,17 @@ def unigram_logprob(docs: DataFrame, text_col: str = "text",
     same-JVM interleaved medians; a 64-bit collision would merge two
     vocab rows, P ≈ |vocab|²/2⁶⁴).
 
-    ``checkpoint_mode`` ("none" default): with "local"/"reliable" the
-    hashed occurrence table and the vocab-bounded count table are
-    eagerly pinned so the tokenize+explode pass runs ONCE instead of
-    under three subtrees (vocab build, 1-row total, scoring join).
-    Measured at sf0.1 the pinning job costs MORE than the two saved
-    sub-second re-derivations (0.78 s lazy vs 1.02 s pinned, same-JVM
-    medians), so the bench default stays lazy; a 100 TB deployment,
-    where a corpus pass is hours not milliseconds, sets
-    "local"/"reliable" and pays one pass."""
-    from .dedup import _ckpt
+    The plan is lazy: the tokenize+explode pass runs under three
+    subtrees (vocab build, 1-row total, scoring join).  Pinning the
+    hashed occurrence and count tables with :func:`materialize` would
+    run it once, but measured at sf0.1 the pinning job costs MORE than
+    the two saved sub-second re-derivations (0.78 s lazy vs 1.02 s
+    pinned, same-JVM medians)."""
     toks = (docs.select("doc_id", T.tokens(text_col).alias("toks"))
             .where(F.size("toks") >= 1))
-    from ..functions.plan import select_exploded
     tok = select_exploded(toks, F.col("toks"), "token", "doc_id")
-    occ = _ckpt(tok.select("doc_id", F.xxhash64("token").alias("_tok")),
-                checkpoint_mode)
-    vocab = _ckpt(occ.groupBy("_tok").agg(F.count(F.lit(1)).alias("cnt")),
-                  checkpoint_mode)
+    occ = tok.select("doc_id", F.xxhash64("token").alias("_tok"))
+    vocab = occ.groupBy("_tok").agg(F.count(F.lit(1)).alias("cnt"))
     total = vocab.agg(F.sum("cnt").alias("total"))
     vocab = vocab.crossJoin(F.broadcast(total)).select(
         "_tok",
@@ -329,8 +321,7 @@ def unigram_logprob(docs: DataFrame, text_col: str = "text",
 
 
 def source_kl(docs: DataFrame, text_col: str = "text",
-              source_col: str = "source",
-              checkpoint_mode: str = "local") -> DataFrame:
+              source_col: str = "source") -> DataFrame:
     """Per-source KL divergence from the corpus unigram distribution —
     the mixture-drift report a data-curation pipeline runs to see which
     sources are lexically far from the blend (candidates for up/down-
@@ -350,14 +341,12 @@ def source_kl(docs: DataFrame, text_col: str = "text",
     """
     toks = docs.select(F.col(source_col).alias("source"),
                        T.tokens(text_col).alias("toks"))
-    from ..functions.plan import select_exploded
     tok = select_exploded(toks, F.col("toks"), "token", "source")
     sc = tok.groupBy("source", "token").agg(F.count(F.lit(1)).alias("cnt"))
     # vocabulary-sized: materialize once so the three consumers below
     # (corpus counts, per-source totals, join probe) don't re-scan the
-    # corpus; same lineage-truncation primitive as the dedup family
-    from .dedup import _ckpt
-    sc = _ckpt(sc, checkpoint_mode)
+    # corpus
+    sc = materialize(sc)
     corpus = sc.groupBy("token").agg(F.sum("cnt").alias("ccnt"))
     stot = sc.groupBy("source").agg(F.sum("cnt").alias("stot"))
     ctot = corpus.agg(F.sum("ccnt").alias("ctot"))
@@ -373,8 +362,7 @@ def source_kl(docs: DataFrame, text_col: str = "text",
 
 
 def vocab_overlap(docs: DataFrame, text_col: str = "text",
-                  source_col: str = "source",
-                  checkpoint_mode: str = "none") -> DataFrame:
+                  source_col: str = "source") -> DataFrame:
     """Pairwise vocabulary Jaccard between sources — the redundancy
     matrix of a multi-source corpus (two crawls of the same domain show
     up as a near-1 cell; a wrongly-labeled source as an outlier row).
@@ -392,21 +380,18 @@ def vocab_overlap(docs: DataFrame, text_col: str = "text",
     most sources² — bounded by the source count, not the corpus); per-
     source vocab sizes are a tiny broadcast.  Never corpus × corpus.
 
-    ``checkpoint_mode`` ("none" default; r12 optimization round): the
-    distinct (source, token) vocab table feeds THREE subtrees (sizes +
-    both self-join legs), so the lazy plan tokenizes the corpus three
-    times per action; "local"/"reliable" pins the vocab-bounded table
-    once.  Measured at sf0.1 the pinning job costs MORE than the two
-    saved sub-second re-derivations (0.59 s lazy vs 0.83 s pinned,
-    same-JVM interleaved medians), so the bench default stays lazy; a
-    100 TB corpus sets "local"/"reliable" and tokenizes ONCE.
+    The plan is lazy (r12 optimization round): the distinct (source,
+    token) vocab table feeds THREE subtrees (sizes + both self-join
+    legs), so the corpus is tokenized three times per action.  Pinning
+    the vocab-bounded table with :func:`materialize` would tokenize
+    once, but measured at sf0.1 the pinning job costs MORE than the
+    two saved sub-second re-derivations (0.59 s lazy vs 0.83 s pinned,
+    same-JVM interleaved medians).
     """
-    from .dedup import _ckpt
     toks = docs.select(F.col(source_col).alias("source"),
                        T.tokens(text_col).alias("toks"))
-    from ..functions.plan import select_exploded
-    sv = _ckpt(select_exploded(toks, F.col("toks"), "token", "source")
-               .distinct(), checkpoint_mode)
+    sv = (select_exploded(toks, F.col("toks"), "token", "source")
+          .distinct())
     sizes = sv.groupBy("source").agg(F.count(F.lit(1)).alias("n_vocab"))
     a = sv.select(F.col("source").alias("src_a"), "token")
     b = sv.select(F.col("source").alias("src_b"), "token")
@@ -442,7 +427,6 @@ def zipf_fit(docs: DataFrame, text_col: str = "text") -> DataFrame:
     ``regr_slope``/``regr_intercept``/``regr_r2``.
     """
     toks = docs.select(T.tokens(text_col).alias("toks"))
-    from ..functions.plan import select_exploded
     vocab = (select_exploded(toks, F.col("toks"), "token")
              .groupBy("token").agg(F.count(F.lit(1)).alias("cnt")))
     from pyspark.sql import Window
@@ -512,8 +496,7 @@ def bm25(docs: DataFrame, terms: tuple[str, ...],
 def bm25_topk(docs: DataFrame, queries: DataFrame, k: int = 10,
               text_col: str = "text",
               q_id_col: str = "q_id", terms_col: str = "terms",
-              k1: float = 1.2, b: float = 0.75,
-              checkpoint_mode: str = "local") -> DataFrame:
+              k1: float = 1.2, b: float = 0.75) -> DataFrame:
     """Multi-query BM25 retrieval: the top-k documents per query — the
     inverted-index search plan (posting-list join), complementing
     :func:`bm25` (fixed-term scoring column) and ``tfidf_topk``
@@ -538,16 +521,13 @@ def bm25_topk(docs: DataFrame, queries: DataFrame, k: int = 10,
     spelling re-derived the tokenize pass under FOUR independent plan
     subtrees (tf for scoring, tf again under dfreq, dl for the length
     join, dl again under the 1-row stats agg) — four corpus scans +
-    two posting shuffles per action.  One eager ``localCheckpoint``
-    (the dedup-family ``_ckpt`` contract; ``checkpoint_mode`` as
-    there) of ``posts`` — the query-term-bounded posting slice,
+    two posting shuffles per action.  One eager :func:`materialize`
+    of ``posts`` — the query-term-bounded posting slice,
     Σ_t df_t rows, tiny by the semi-join's construction — feeds both
     dfreq and scoring: three tokenize passes and ONE posting shuffle.
     The two remaining dl-side passes are map-only token counts; an
     A/B showed checkpointing the corpus-count dl table costs its
     materialization more than those passes save."""
-    from ..functions.plan import select_exploded
-    from .dedup import _ckpt
     d = docs.select("doc_id", T.tokens(text_col).alias("toks"))
     dl = d.select("doc_id", F.size("toks").alias("dl"))
     stats = dl.agg(F.count(F.lit(1)).cast("double").alias("n_docs"),
@@ -558,8 +538,7 @@ def bm25_topk(docs: DataFrame, queries: DataFrame, k: int = 10,
         queries.select(F.col(q_id_col).alias("q_id"), terms_col),
         F.col(terms_col), "term", "q_id").distinct())
     qterms = qt.select("term").distinct()
-    posts = _ckpt(tf.join(F.broadcast(qterms), "term", "leftsemi"),
-                  checkpoint_mode)
+    posts = materialize(tf.join(F.broadcast(qterms), "term", "leftsemi"))
     dfreq = posts.groupBy("term").agg(
         F.count(F.lit(1)).cast("double").alias("df"))
     idf = F.log(F.lit(1.0) + (F.col("n_docs") - F.col("df") + F.lit(0.5))
@@ -632,7 +611,6 @@ def _dsir_grams(docs: DataFrame, target: Column, text_col: str,
         "doc_id", "is_t",
         F.concat(F.col("toks"),
                  _bigrams(F.col("toks"), F.size("toks"))).alias("grams"))
-    from ..functions.plan import select_exploded
     g = select_exploded(grams, F.col("grams"), "gram", "doc_id", "is_t")
     if bucket_hash == "xxhash64":
         b = F.pmod(F.xxhash64("gram"), F.lit(n_buckets))
@@ -751,11 +729,10 @@ def dsir_weights(docs: DataFrame, target: Column,
     naive one-call form ran it TWICE — once under the histogram's
     broadcast subtree, once to score.  Instead the grams are
     pre-aggregated to per-(doc, bucket) COUNTS and that skinny
-    integer table is materialized once (eager ``localCheckpoint``,
-    the dedup-family ``_ckpt`` discipline — blocks free with the
-    plan); the histogram is then an integer re-aggregate of it and
-    the per-doc score weights each bucket's quantized log-ratio by
-    its count — both integer-exactly equal to the per-occurrence
+    integer table is materialized once (:func:`materialize` — blocks
+    free with the plan); the histogram is then an integer re-aggregate
+    of it and the per-doc score weights each bucket's quantized
+    log-ratio by its count — both integer-exactly equal to the per-occurrence
     spelling (ct = Σ is_t·cnt, score = Σ cnt·round(lr·1e9)), so the
     output is bit-identical while tokenization runs ONCE.  Rows
     materialized ≤ min(gram occurrences, n_docs·n_buckets) at 16
@@ -767,8 +744,7 @@ def dsir_weights(docs: DataFrame, target: Column,
     g2 = g.groupBy("doc_id", "is_t", "bucket").agg(
         F.count(F.lit(1)).alias("_cnt"))
     if ratio is None:
-        from .dedup import _ckpt
-        g2 = _ckpt(g2, "local")
+        g2 = materialize(g2)
         hist = (g2.groupBy("bucket")
                 .agg(F.sum(F.col("is_t") * F.col("_cnt")).alias("ct"),
                      F.sum("_cnt").alias("cr")))
@@ -842,7 +818,6 @@ def bloom_decontaminate(docs: DataFrame, text_col: str = "text",
                 F.lit(m_bits))
             for _, rot, cst in mixes])
 
-    from ..functions.plan import select_exploded
     bench_g = select_exploded(
         _grams(toks.where(F.col("doc_id") % bench_every == 0)),
         F.col("grams"), "gram")
@@ -929,8 +904,7 @@ def dsir_sample(docs: DataFrame, target: Column, n_keep: int,
 
 
 def bigram_logprob(docs: DataFrame, text_col: str = "text",
-                   alpha: float = 1.0,
-                   checkpoint_mode: str = "none") -> DataFrame:
+                   alpha: float = 1.0) -> DataFrame:
     """Per-document mean NLL under a corpus bigram model with additive
     unigram backoff — one rung up the perplexity-filter ladder from
     :func:`unigram_logprob` (CCNet scores with a 5-gram KenLM; the
@@ -954,37 +928,29 @@ def bigram_logprob(docs: DataFrame, text_col: str = "text",
     strings — only counts reach the output, so the SQL oracle mirrors
     raw strings; a collision would perturb one count).
 
-    ``checkpoint_mode`` ("none" default; r12 optimization round): the
-    lazy plan re-derives the tokenize+explode pass under SIX subtrees
-    (the scoring edge table, bcnt, ucnt twice for the two conditional
-    joins, the 1-row total, the bigram build) — ten doc-table scans
-    per action.  With "local"/"reliable" two eager checkpoints pin the
-    skinny hashed bigram edge table (doc_id + 3 longs per occurrence —
-    the posting-checkpoint class) and the vocab-bounded unigram table,
-    cutting that to exactly two tokenize passes.  Measured at sf0.1
-    the two pinning jobs cost MORE than the saved re-derivations
-    (1.54 s lazy vs 1.72 s pinned, same-JVM interleaved medians), so
-    the bench default stays lazy; a 100 TB corpus, where each saved
-    pass is hours, sets "local"/"reliable"."""
-    from .dedup import _ckpt
+    The plan is lazy (r12 optimization round): it re-derives the
+    tokenize+explode pass under SIX subtrees (the scoring edge table,
+    bcnt, ucnt twice for the two conditional joins, the 1-row total,
+    the bigram build) — ten doc-table scans per action.  Pinning the
+    skinny hashed bigram edge table (doc_id + 3 longs per occurrence)
+    and the vocab-bounded unigram table with :func:`materialize` would
+    cut that to two tokenize passes, but measured at sf0.1 the two
+    pinning jobs cost MORE than the saved re-derivations (1.54 s lazy
+    vs 1.72 s pinned, same-JVM interleaved medians)."""
     toks = (docs.select("doc_id", T.tokens(text_col).alias("toks"))
             .where(F.size("toks") >= 2))
     big = toks.select(
         "doc_id",
         _bigrams(F.col("toks"), F.size("toks")).alias("bgs"))
-    from ..functions.plan import select_exploded
     db = select_exploded(big, F.col("bgs"), "bg", "doc_id")
     # leading token of each bigram = the conditioning context s
-    db = _ckpt(
-        db.select("doc_id", F.xxhash64("bg").alias("_bg"),
-                  F.xxhash64(F.substring_index("bg", " ", 1)).alias("_s"),
-                  F.xxhash64(F.substring_index("bg", " ", -1)).alias("_t")),
-        checkpoint_mode)
+    db = db.select("doc_id", F.xxhash64("bg").alias("_bg"),
+                   F.xxhash64(F.substring_index("bg", " ", 1)).alias("_s"),
+                   F.xxhash64(F.substring_index("bg", " ", -1)).alias("_t"))
     bcnt = db.groupBy("_bg").agg(F.count(F.lit(1)).alias("cb"))
     tok = select_exploded(toks, F.col("toks"), "token", "doc_id")
-    ucnt = _ckpt(tok.select(F.xxhash64("token").alias("_tok"))
-                 .groupBy("_tok").agg(F.count(F.lit(1)).alias("cu")),
-                 checkpoint_mode)
+    ucnt = (tok.select(F.xxhash64("token").alias("_tok"))
+            .groupBy("_tok").agg(F.count(F.lit(1)).alias("cu")))
     total = ucnt.agg(F.sum("cu").alias("tt"))
     a = float(alpha)
     lp = (F.log((F.col("cb").cast("double")

@@ -18,7 +18,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.distance import cosine_expr
-from ..functions.plan import rows_cached
+from ..functions.plan import materialize, rows_cached
 from .pq import _q9
 
 
@@ -94,7 +94,6 @@ def _nearest_cells(df: DataFrame, centroids: DataFrame, n_cells: int,
                    keep_vector: bool, quantize: bool = False,
                    sq8: tuple | None = None,
                    mass: tuple | None = None,
-                   cell_mod: tuple | None = None,
                    packed: bool = False) -> DataFrame:
     """Shared coarse-quantizer kernel: for each row, the ``n_cells``
     nearest centroids by L2, ties broken by lowest centroid id →
@@ -136,15 +135,6 @@ def _nearest_cells(df: DataFrame, centroids: DataFrame, n_cells: int,
     IDENTICAL cells — at SemDeDup-scale |C| (≥ 10⁴) prefer fixed
     probing or a coarser census.
 
-    ``cell_mod=(g, gi)`` emits ONLY probe rows whose cell ≡ gi
-    (mod g): probe SELECTION runs unchanged (the mass rule still sees
-    every cell's cumulative count), and the union over gi ∈ [0, g)
-    equals the unfiltered output EXACTLY.  Measured honestly at
-    10M×p16/g4 (SCALE.md §9j): re-running the fixed-nc selection per
-    group costs MORE than the persist cycle it avoids — kept for the
-    union-equality contract and small-g mass probing, but the staged
-    :func:`knn_join_sq8` uses ``packed`` instead.
-
     ``packed=True`` (requires ``keep_vector=True``; the verdict r09
     Next #4 fix) emits ONE ROW PER INPUT ROW — (id, payload,
     cells ARRAY<BIGINT> in probe order) — instead of one row per
@@ -176,12 +166,8 @@ def _nearest_cells(df: DataFrame, centroids: DataFrame, n_cells: int,
     if packed and not keep_vector:
         raise ValueError("packed=True requires keep_vector=True "
                          "(the payload is the point of packing)")
-    if packed and cell_mod is not None:
-        raise ValueError("packed and cell_mod are mutually exclusive "
-                         "(slice the packed cells array downstream)")
     bc = spark.sparkContext.broadcast((cid[order], C[order], n_cells,
-                                       sq8_arrs, mass_arrs, cell_mod,
-                                       packed))
+                                       sq8_arrs, mass_arrs, packed))
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         yield from _nc_batches(bc.value, id_col, vector_col, keep_vector,
@@ -212,7 +198,7 @@ def _nc_batches(state, id_col: str, vector_col: str, keep_vector: bool,
     (:func:`_probe_cells_local`) runs the IDENTICAL code on a collected
     query batch — the probe sets cannot drift between the two spellings
     because they are the same function."""
-    cid_, C_, nc_req, sq8_, mass_, cmod_, packed_ = state
+    cid_, C_, nc_req, sq8_, mass_, packed_ = state
     nc = min(nc_req, len(cid_))
 
 
@@ -311,10 +297,6 @@ def _nc_batches(state, id_col: str, vector_col: str, keep_vector: bool,
                 keep = np.empty(perm.shape, dtype=bool)
                 keep[:, 0] = True           # prior mass 0 < budget
                 keep[:, 1:] = run_cnt[:, :-1] < budget_
-                if cmod_ is not None:
-                    # group slice AFTER the budget rule: selection
-                    # is global, emission per-group (union == all)
-                    keep &= (cid_[perm] % cmod_[0]) == cmod_[1]
                 nk = keep.sum(axis=1)
                 # perm[keep] flattens row-major: per-row cells in
                 # (dd, cid) order, rows in input order
@@ -386,17 +368,13 @@ def _nc_batches(state, id_col: str, vector_col: str, keep_vector: bool,
                 out["cells"] = list(cells1[:, None])
                 yield pd.DataFrame(out)
                 continue
-            rows = (slice(None) if cmod_ is None else
-                    (cells1 % cmod_[0]) == cmod_[1])
-            out = {id_col: pdf[id_col].to_numpy()[rows]}
+            out = {id_col: pdf[id_col].to_numpy()}
             if keep_vector:
                 if sq8_ is not None:
-                    out["qcodes"] = (payload(B) if cmod_ is None else
-                                     payload(B[rows]))
+                    out["qcodes"] = payload(B)
                 else:
-                    out[vector_col] = \
-                        pdf[vector_col].to_numpy()[rows]
-            out["cell"] = cells1[rows]
+                    out[vector_col] = pdf[vector_col].to_numpy()
+            out["cell"] = cells1
             yield pd.DataFrame(out)
             continue
         if nc_req > 1 and len(cid_) > 256:
@@ -459,36 +437,17 @@ def _nc_batches(state, id_col: str, vector_col: str, keep_vector: bool,
             out["cells"] = list(cells_m)
             yield pd.DataFrame(out)
             continue
-        if cmod_ is None:             # unfiltered fast path
-            out = {id_col: np.repeat(pdf[id_col].to_numpy(), nc)}
-            if keep_vector:
-                if sq8_ is not None:
-                    out["qcodes"] = list(np.repeat(
-                        np.array(payload(B), dtype=object), nc))
-                else:
-                    out[vector_col] = np.repeat(
-                        pdf[vector_col].to_numpy(), nc)
-            out["cell"] = cells_m.ravel()
-            if nc_req > 1:
-                out["cell_rank"] = np.tile(np.arange(1, nc + 1),
-                                           len(B))
-            yield pd.DataFrame(out)
-            continue
-        kmask = (cells_m % cmod_[0]) == cmod_[1]
-        nk = kmask.sum(axis=1)
-        out = {id_col: np.repeat(pdf[id_col].to_numpy(), nk)}
+        out = {id_col: np.repeat(pdf[id_col].to_numpy(), nc)}
         if keep_vector:
             if sq8_ is not None:
                 out["qcodes"] = list(np.repeat(
-                    np.array(payload(B), dtype=object), nk))
+                    np.array(payload(B), dtype=object), nc))
             else:
                 out[vector_col] = np.repeat(
-                    pdf[vector_col].to_numpy(), nk)
-        out["cell"] = cells_m[kmask]
+                    pdf[vector_col].to_numpy(), nc)
+        out["cell"] = cells_m.ravel()
         if nc_req > 1:
-            ranks_m = np.tile(np.arange(1, nc + 1),
-                              (len(B), 1))
-            out["cell_rank"] = ranks_m[kmask]
+            out["cell_rank"] = np.tile(np.arange(1, nc + 1), len(B))
         yield pd.DataFrame(out)
 
 
@@ -518,7 +477,7 @@ def _probe_cells_local(q_rows, c_rows, n_cells: int,
         cnt = np.array([int(counts.get(int(c), 0)) for c in cid[order]],
                        dtype=np.int64)
         mass_arrs = (cnt, int(budget))
-    state = (cid[order], C[order], n_cells, None, mass_arrs, None, False)
+    state = (cid[order], C[order], n_cells, None, mass_arrs, False)
     pdf = pd.DataFrame({"q_id": [r[0] for r in q_rows],
                         "vector": [list(r[1]) for r in q_rows]})
     probed: dict[int, set] = {}
@@ -962,13 +921,13 @@ def knn_join(df: DataFrame, centroids: DataFrame, k: int = 10,
         # cuts the dominant member-side exchange to the probed
         # fraction of the corpus.  Self-join (queries=None) probes
         # every occupied cell by construction — skipped there.
-        # The batch-sized probe output is eagerly localCheckpoint-ed
+        # The batch-sized probe output is eagerly materialized
         # first (r11 ADVICE / r12 opt round): the broadcast cell list
         # and the cogroup consume qp through two plan subtrees, so an
         # unmaterialized qp re-ran the Arrow probe kernel AND its
         # query-side upstream once per action; blocks free with the
-        # plan (the dedup-family _ckpt discipline).
-        qp = qp.localCheckpoint(eager=True)
+        # plan.
+        qp = materialize(qp)
         bp = bp.join(F.broadcast(qp.select("cell").distinct()),
                      "cell", "semi")
     w_rank = Window.partitionBy("q_id").orderBy("dist", "id")
@@ -1255,7 +1214,6 @@ def knn_graph_fold(graph: DataFrame, probes: DataFrame,
                    c_id_col: str = "id", c_vector_col: str = "vector",
                    method: str = "gemm",
                    shuffle_dtype: str = "double",
-                   materialize: str = "local",
                    deletes: DataFrame | None = None
                    ) -> tuple[DataFrame, DataFrame, DataFrame]:
     """One ingest-time fold of a micro-batch into the persisted
@@ -1271,17 +1229,14 @@ def knn_graph_fold(graph: DataFrame, probes: DataFrame,
     * probes'   = probes ∪ the batch rows' probe sets;
     * assigned' = assigned ∪ ``ivf_assign(batch)``.
 
-    ``materialize="local"`` (default) eagerly ``localCheckpoint``\\ s
-    each advanced table: lineage would otherwise grow by one fold per
-    batch and re-execute every prior fold on each action — the same
-    truncation discipline the staged :func:`knn_join_sq8` path uses
-    (in production, write the state to a table/Delta instead);
-    ``"reliable"`` uses the fault-tolerant ``checkpoint`` directory
-    (the cluster mode — see :func:`ops.dedup._ckpt`).
-    ``materialize="none"`` returns lazy plans (single-fold callers,
-    tests).  Per-batch cost is |batch|-proportional end to end: the
-    three appended deltas are batch-sized, and the incremental graph
-    update never scores old × old (see
+    Each advanced table is eagerly materialized
+    (:func:`~..functions.plan.materialize`): lineage would otherwise
+    grow by one fold per batch and re-execute every prior fold on each
+    action — the same truncation discipline the staged
+    :func:`knn_join_sq8` path uses (in production, write the state to
+    a table/Delta instead).  Per-batch cost is |batch|-proportional
+    end to end: the three appended deltas are batch-sized, and the
+    incremental graph update never scores old × old (see
     :func:`knn_join_incremental`'s scale note).
 
     ``deletes`` (optional, one id column) makes the fold an UPSERT:
@@ -1293,12 +1248,6 @@ def knn_graph_fold(graph: DataFrame, probes: DataFrame,
     ids must be disjoint from the SURVIVING corpus; re-using a
     just-deleted id (an in-place update) is therefore valid.
     """
-    if materialize not in ("local", "reliable", "none"):
-        raise ValueError(f"materialize must be 'local', 'reliable' "
-                         f"or 'none', got {materialize!r}")
-    from .dedup import _ckpt
-    keep = ((lambda d: d) if materialize == "none"
-            else (lambda d: _ckpt(d, materialize)))
     if deletes is not None:
         del_ids = deletes.select(
             F.col(deletes.columns[0]).alias(id_col)).distinct()
@@ -1336,7 +1285,7 @@ def knn_graph_fold(graph: DataFrame, probes: DataFrame,
         ivf_assign(new_batch, centroids, id_col, vector_col,
                    c_id_col, c_vector_col)
         .select(id_col, vector_col, "cell"))
-    return keep(g2), keep(p2), keep(a2)
+    return materialize(g2), materialize(p2), materialize(a2)
 
 
 def knn_join_sq8(df: DataFrame, centroids: DataFrame,
@@ -1348,7 +1297,6 @@ def knn_join_sq8(df: DataFrame, centroids: DataFrame,
                  exclude_self: bool = True,
                  shuffle_dtype: str = "double",
                  probe_groups: int = 1,
-                 checkpoint_mode: str = "local",
                  probe_mass: int | None = None,
                  probe_table: str = "flat") -> DataFrame:
     """kNN self-join with SQ8 PROBE CODES — the high-nprobe scale
@@ -1393,7 +1341,8 @@ def knn_join_sq8(df: DataFrame, centroids: DataFrame,
     top-m over the union of per-part top-m, so each group's per-cell
     top-k feeds a per-prober top-``k·rerank`` WITHIN the group, the
     g skinny partials (n·k·rerank rows each) are materialized via
-    eager ``localCheckpoint``, and one final window merges them.
+    :func:`~..functions.plan.materialize`, and one final window merges
+    them.
     What this bounds is the NEXT footprint after SQ8 probe codes: at
     nprobe 16 × 10M the stage-1→2 window exchange is n·nprobe·k ≈
     1.6e9 rows, which overflowed the measured single box (§9g
@@ -1404,16 +1353,16 @@ def knn_join_sq8(df: DataFrame, centroids: DataFrame,
     same knob caps per-stage shuffle capacity instead of /tmp.
     Default 1 = single-pass, byte-identical plan to round 8's entry.
 
-    ``checkpoint_mode`` picks how group partials materialize (the
-    dedup family's ``_ckpt`` contract): ``"local"`` localCheckpoints
-    into executor storage — fine at test scale, but the
-    MEMORY_AND_DISK deserialized blocks of an n·k·rerank partial are
-    heap-resident while they build (measured: heap OOM at 10M×g4 in
-    a 96 GB driver); ``"reliable"`` checkpoints SERIALIZED to the
-    configured checkpoint dir — zero heap residency, and with
+    Without a checkpoint directory the group partials are
+    ``localCheckpoint`` blocks in executor storage — fine at test
+    scale, but the MEMORY_AND_DISK deserialized blocks of an
+    n·k·rerank partial are heap-resident while they build (measured:
+    heap OOM at 10M×g4 in a 96 GB driver).  With
+    ``setCheckpointDir`` they are reliable checkpoints SERIALIZED to
+    that directory — zero heap residency, and with
     ``spark.cleaner.referenceTracking.cleanCheckpoints=true`` +
     ``spark.checkpoint.compress=true`` superseded partials are
-    deleted/compact.  Use "reliable" for corpus-scale staged runs.
+    deleted/compact.  Set one for corpus-scale staged runs.
 
     ``probe_mass`` switches to per-row ADAPTIVE mass-budget probing —
     identical rule and rationale as :func:`knn_join`'s ``probe_mass``
@@ -1515,12 +1464,11 @@ def knn_join_sq8(df: DataFrame, centroids: DataFrame,
                  .filter(F.col("_ar") <= kk).select("q_id", "id"))
     else:
         from pyspark import StorageLevel
-        from .dedup import _ckpt
         # Staged probe table.  All three layouts were built and
         # measured back-to-back at 10M × p16/g4 (SCALE.md §9j):
         #   flat persist (one row per probe, DISK_ONLY)   1847.7 s
         #   packed persist (one row per prober + explode) 2036.1 s
-        #   per-group kernel recompute (cell_mod fusion)  2872.4 s
+        #   per-group kernel recompute (probe fusion)     2872.4 s
         # so "flat" — the r8 plan — stays the default: disk reads of
         # the redundant table are cheaper than either the per-group
         # selection sweep or the per-group array explode + HOF filter.
@@ -1562,21 +1510,21 @@ def knn_join_sq8(df: DataFrame, centroids: DataFrame,
             # per-prober top-kk WITHIN the group, eagerly materialized:
             # the group's big shuffle is dereferenced (and reclaimed by
             # the periodic-GC cleaner) before the next group runs
-            part = _ckpt(sg.withColumn("_ar", F.row_number().over(w_ap))
-                         .filter(F.col("_ar") <= kk)
-                         .select("q_id", "id", "ad2"),
-                         checkpoint_mode)
+            part = materialize(
+                sg.withColumn("_ar", F.row_number().over(w_ap))
+                .filter(F.col("_ar") <= kk)
+                .select("q_id", "id", "ad2"))
             if running is None:
                 running = part
             else:
                 # incremental merge: fold into a running top-kk so the
                 # LIVE state is always ≤ 2 skinny n·kk checkpoints plus
                 # one n·2kk merge window — never g partials at once
-                running = _ckpt(running.unionByName(part)
-                                .withColumn("_ar", F.row_number().over(w_ap))
-                                .filter(F.col("_ar") <= kk)
-                                .select("q_id", "id", "ad2"),
-                                checkpoint_mode)
+                running = materialize(
+                    running.unionByName(part)
+                    .withColumn("_ar", F.row_number().over(w_ap))
+                    .filter(F.col("_ar") <= kk)
+                    .select("q_id", "id", "ad2"))
         pk.unpersist()       # stages 1-2 ran eagerly; stage 3 only
         short = running.select("q_id", "id")  # reads the checkpoints
     # stage 3: exact re-rank.  The shortlist rows carry a TRUE vector
@@ -1603,12 +1551,10 @@ def knn_join_sq8(df: DataFrame, centroids: DataFrame,
 
     if probe_groups <= 1:
         return _rerank(short, qv)
-    from .dedup import _ckpt
     out = None
     for gi in range(probe_groups):
         in_g = F.pmod(F.col("q_id"), F.lit(probe_groups)) == gi
-        res_g = _ckpt(_rerank(short.filter(in_g), qv.filter(in_g)),
-                      checkpoint_mode)
+        res_g = materialize(_rerank(short.filter(in_g), qv.filter(in_g)))
         out = res_g if out is None else out.unionByName(res_g)
     return out
 
@@ -2077,7 +2023,7 @@ def _bq_encode_cells(base: DataFrame, thresholds: list,
     kernel (:func:`_assign_cells_float`, the exact `ivf_assign`
     semantics — lowest-cid ties) in ONE corpus scan, no join.
 
-    The adaptive (``probe_mass``) BQ paths eagerly localCheckpoint this
+    The adaptive (``probe_mass``) BQ paths eagerly materialize this
     table so the cell census and the Hamming kernel both read the same
     materialized skinny blocks — one corpus pass per call where the
     census-only `ivf_assign` pass previously made it two (r12
@@ -2341,19 +2287,18 @@ def _bq_adaptive_setup(base: DataFrame, queries: DataFrame,
     ``assigned`` keeps the cheap cached census exactly as before.
     Returns ``(assigned, codes, probe_cells)``."""
     if assigned is None and codes is None:
-        codes = _bq_encode_cells(base, thresholds, centroids, id_col,
-                                 vector_col, c_id_col, c_vector_col)
-        codes = codes.localCheckpoint(eager=True)
+        codes = materialize(_bq_encode_cells(
+            base, thresholds, centroids, id_col, vector_col, c_id_col,
+            c_vector_col))
         census_src = codes
     elif assigned is None:
         # codes supplied without cells: BOTH consumers (census collect
         # + cell join) need only (id, cell), so one skinny assign pass
         # (keep_vector=False — no vectors through Arrow, guide §4.2)
         # is checkpointed and shared; payload is ~16 bytes/row
-        assigned = _nearest_cells(base, centroids, 1, id_col,
-                                  vector_col, c_id_col, c_vector_col,
-                                  keep_vector=False)
-        assigned = assigned.localCheckpoint(eager=True)
+        assigned = materialize(_nearest_cells(
+            base, centroids, 1, id_col, vector_col, c_id_col,
+            c_vector_col, keep_vector=False))
         census_src = assigned
     else:
         census_src = assigned

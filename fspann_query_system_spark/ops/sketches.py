@@ -130,8 +130,7 @@ def kmv_cardinality(docs: DataFrame, group_col: str = "source",
 
 def cms_heavy_hitters(docs: DataFrame, text_col: str = "text",
                       top_n: int = 20, depth: int = 4,
-                      width: int = 1024,
-                      checkpoint_mode: str = "local") -> DataFrame:
+                      width: int = 1024) -> DataFrame:
     """Count-min-sketch frequency estimates for the corpus's heavy
     hitters, next to the exact counts (Cormode & Muthukrishnan '05).
 
@@ -153,19 +152,14 @@ def cms_heavy_hitters(docs: DataFrame, text_col: str = "text",
     width rows -- broadcast.  At 100 TB the per-partition sketch is
     what you'd actually ship (union of partials = elementwise sum);
     building it from the count table here keeps the demo exact-
-    comparable without an extra pass over raw tokens.
-
-    ``checkpoint_mode="reliable"`` swaps the count-table
-    materialization to a reliable ``checkpoint`` (same discipline as
-    the dedup family's :func:`~..ops.dedup._ckpt`): the per-token count
-    table at corpus scale is large, and un-replicated localCheckpoint
-    blocks die with their executor.
+    comparable without an extra pass over raw tokens.  The per-token
+    count table goes through :func:`materialize`: at corpus scale it
+    is large, so a cluster run sets a checkpoint directory.
     """
-    from ..functions.plan import select_exploded
-    from .dedup import _ckpt
+    from ..functions.plan import materialize, select_exploded
     toks = select_exploded(docs, T.tokens(text_col), "tok")
-    counts = _ckpt(toks.groupBy("tok").agg(F.count(F.lit(1)).alias("cnt")),
-                   checkpoint_mode)   # reused: sketch build + exact top-N
+    counts = materialize(   # reused: sketch build + exact top-N
+        toks.groupBy("tok").agg(F.count(F.lit(1)).alias("cnt")))
 
     def bucket(j):
         h = F.md5(F.concat(F.lit(f"{j}:"), F.col("tok")))

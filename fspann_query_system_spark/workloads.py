@@ -29,7 +29,7 @@ from .lsh.params import LshConfig, LshParams, fit_params
 from .lsh.coding import code_vectors, with_hamming
 from .lsh.partitioner import build_partitions
 from .functions import text as T
-from .functions.plan import select_exploded
+from .functions.plan import materialize, select_exploded
 
 ORACLE_SF_DIR = "/root/testdata/sf0.01"
 
@@ -1594,7 +1594,7 @@ def q_tfidf_topk(spark, sf_dir):
 
     The tf table feeds two subtrees (the df aggregate and the scoring
     join), so the lazy spelling ran the tokenize+explode+tf shuffle
-    twice per action; one eager localCheckpoint of the skinny
+    twice per action; one eager materialize() of the skinny
     (doc_id, term, tf) table (posting-checkpoint class — the same
     discipline as the dedup family) runs it once (r12 optimization
     round; measured cost-neutral at sf0.1 — 1.41 s vs 1.44 s lazy,
@@ -1602,9 +1602,8 @@ def q_tfidf_topk(spark, sf_dir):
     pass at scale)."""
     d = _t(spark, sf_dir, "documents")
     toks = select_exploded(d, T.tokens("text"), "term", "doc_id")
-    tf = (toks.groupBy("doc_id", "term")
-          .agg(F.count(F.lit(1)).alias("tf"))
-          .localCheckpoint())
+    tf = materialize(toks.groupBy("doc_id", "term")
+                     .agg(F.count(F.lit(1)).alias("tf")))
     dfreq = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
     n = d.select(F.count(F.lit(1)).cast("double").alias("n_docs"))
     scored = (tf.join(dfreq, "term")
@@ -2383,7 +2382,7 @@ GROUP BY 1, 2
 def q_streaming_incremental_dedup(spark, sf_dir):
     """Streaming admission control — the incremental-dedup ingest shape
     as a live stream: the standing corpus's band table is materialized
-    ONCE (localCheckpoint here; a bucketed table in production), then
+    ONCE (materialize() here; a bucketed table in production), then
     every arriving micro-batch is banded O(batch) inside foreachBatch
     and equi-joined against it (broadcast_batch mode: the corpus never
     exchanges per batch).  foreachBatch is the correct vehicle because
@@ -2396,10 +2395,10 @@ def q_streaming_incremental_dedup(spark, sf_dir):
     docs = _t(spark, sf_dir, "documents")
     from .ops.dedup import band_table, incremental_near_dups
     corpus = docs.filter(F.col("doc_id") % 4 != 0)
-    corpus_bands = band_table(corpus, "text", "doc_id",
-                              k=3, n_hashes=8, bands=8).localCheckpoint()
+    corpus_bands = materialize(band_table(corpus, "text", "doc_id",
+                                          k=3, n_hashes=8, bands=8))
     schema = spark.read.parquet(f"{sf_dir}/documents.parquet").schema
-    # per-batch matches stay IN the JVM (localCheckpoint + final union)
+    # per-batch matches stay IN the JVM (materialize + final union)
     # instead of a driver collect/createDataFrame round-trip — guide §5
     # (r12 optimization round, same change as q_streaming_decontaminate)
     from functools import reduce
@@ -2411,7 +2410,7 @@ def q_streaming_incremental_dedup(spark, sf_dir):
                                     k=3, n_hashes=8, bands=8,
                                     corpus_bands=corpus_bands,
                                     broadcast_batch=True)
-        collected.append(out.localCheckpoint())
+        collected.append(materialize(out))
 
     stream = (spark.readStream.schema(schema)
               .option("maxFilesPerTrigger", 1)
@@ -3098,7 +3097,7 @@ def q_ivfpq_residual_ann(spark, sf_dir):
     # consumed by the fit init, every Lloyd round AND the encode scan —
     # materialize it ONCE instead of recomputing it per consumer (r12
     # optimization round, guide §1.2/§2.4)
-    res = res.localCheckpoint(eager=True)
+    res = materialize(res)
     # init past the centroid ids: their residuals are identically zero
     cb = pq_fit(res, m_sub=PQ_M_SUB, k=PQ_K, iters=PQ_ITERS,
                 init_offset=N_IVF_CENTROIDS)
@@ -3864,9 +3863,9 @@ def q_streaming_knn_graph(spark, sf_dir):
     is_arriving = (F.col("id") % KNN_INC_BATCH_MOD).isin(list(rems))
     base, centroids, graph, probes, assigned = _knn_graph_state(
         spark, sf_dir, ~is_arriving)
-    state = {"g": graph.localCheckpoint(eager=True),
-             "p": probes.localCheckpoint(eager=True),
-             "a": assigned.localCheckpoint(eager=True)}
+    state = {"g": materialize(graph),
+             "p": materialize(probes),
+             "a": materialize(assigned)}
 
     def fold(bdf, _bid):
         for rem in rems:
@@ -4767,9 +4766,9 @@ def q_streaming_decontaminate(spark, sf_dir):
     from functools import reduce
     from .ops.quality import decontaminate
     docs = _t(spark, sf_dir, "documents")
-    bench = docs.filter(F.col("doc_id") % 50 == 0).localCheckpoint()
+    bench = materialize(docs.filter(F.col("doc_id") % 50 == 0))
     schema = spark.read.parquet(f"{sf_dir}/documents.parquet").schema
-    # per-batch scores stay IN the JVM as localCheckpoint blocks and are
+    # per-batch scores stay IN the JVM as checkpoint blocks and are
     # union-ed at the end: the previous spelling collect()ed every batch
     # to the driver and createDataFrame-d the rows back (a corpus-sized
     # pickle round-trip — guide §5: the driver should do no data work;
@@ -4778,8 +4777,7 @@ def q_streaming_decontaminate(spark, sf_dir):
 
     def score(bdf, _bid):
         corp = bdf.filter(F.col("doc_id") % 50 != 0)
-        collected.append(
-            decontaminate(corp, bench_docs=bench).localCheckpoint())
+        collected.append(materialize(decontaminate(corp, bench_docs=bench)))
 
     stream = (spark.readStream.schema(schema)
               .option("maxFilesPerTrigger", 1)

@@ -984,50 +984,47 @@ def test_connected_components_long_chain(spark, monkeypatch):
     assert stats["rounds"] <= 16, stats
 
 
-def test_reliable_checkpoint_mode_identical_output(spark, tmp_path, docs):
-    """checkpoint_mode="reliable" is the cluster fault-tolerance path
-    (localCheckpoint blocks die with an executor; reliable .checkpoint()
-    survives): it must error clearly with no checkpoint dir, then produce
-    byte-identical CC labels and near-dup keep/drop decisions."""
+def test_materialize_follows_checkpoint_dir(spark, tmp_path, docs):
+    """materialize() takes the reliable path exactly when the session has
+    a checkpoint directory (the cluster fault-tolerance switch:
+    localCheckpoint blocks die with an executor, reliable checkpoints
+    survive): files land under the directory, and CC labels, near-dup
+    keep/drop decisions, CMS estimates and source KL are identical to
+    the localCheckpoint run."""
+    from fspann_query_system_spark.functions.plan import materialize
     from fspann_query_system_spark.ops.dedup import (connected_components,
                                                      near_dup_pipeline)
+    from fspann_query_system_spark.ops.quality import source_kl
+    from fspann_query_system_spark.ops.sketches import cms_heavy_hitters
+    sc = spark.sparkContext
+    assert sc.getCheckpointDir() is None
     pairs = spark.createDataFrame(
         [(2, 1), (2, 3), (7, 8), (10, 11), (11, 12), (12, 13)],
         "id_a LONG, id_b LONG")
-    with pytest.raises(ValueError, match="setCheckpointDir"):
-        connected_components(pairs, checkpoint_mode="reliable").collect()
-    with pytest.raises(ValueError, match="checkpoint_mode"):
-        connected_components(pairs, checkpoint_mode="bogus").collect()
-    local_cc = {(r.id, r.component) for r in
-                connected_components(pairs).collect()}
-    local_pipe = {(r.doc_id, r.canonical_id, r.keep) for r in
-                  near_dup_pipeline(docs).collect()}
-    spark.sparkContext.setCheckpointDir(str(tmp_path / "ckpt"))
-    reliable_cc = {(r.id, r.component) for r in
-                   connected_components(pairs, checkpoint_mode="reliable")
-                   .collect()}
-    reliable_pipe = {(r.doc_id, r.canonical_id, r.keep) for r in
-                     near_dup_pipeline(docs, checkpoint_mode="reliable")
-                     .collect()}
-    assert local_cc == reliable_cc
-    assert local_pipe == reliable_pipe
-    # cms_heavy_hitters threads the same mode through its count-table
-    # materialization
-    from fspann_query_system_spark.ops.sketches import cms_heavy_hitters
-    local_cms = {tuple(r) for r in cms_heavy_hitters(docs).collect()}
-    reliable_cms = {tuple(r) for r in
-                    cms_heavy_hitters(docs, checkpoint_mode="reliable")
-                    .collect()}
-    assert local_cms == reliable_cms
-    # source_kl materializes its vocab-sized (source, token) aggregate
-    # through the same primitive
-    from fspann_query_system_spark.ops.quality import source_kl
     kl_docs = docs.withColumn(
         "source", (F.col("doc_id") % 2).cast("string"))
-    local_kl = {tuple(r) for r in source_kl(kl_docs).collect()}
-    reliable_kl = {tuple(r) for r in
-                   source_kl(kl_docs, checkpoint_mode="reliable").collect()}
-    assert local_kl == reliable_kl
+
+    def outputs():
+        return ({(r.id, r.component) for r in
+                 connected_components(pairs).collect()},
+                {(r.doc_id, r.canonical_id, r.keep) for r in
+                 near_dup_pipeline(docs).collect()},
+                {tuple(r) for r in cms_heavy_hitters(docs).collect()},
+                {tuple(r) for r in source_kl(kl_docs).collect()})
+
+    local = outputs()
+    ckpt = tmp_path / "ckpt"
+    sc.setCheckpointDir(str(ckpt))
+    try:
+        pinned = materialize(pairs)
+        assert sorted(pinned.collect()) == sorted(pairs.collect())
+        assert any(p.is_file() for p in ckpt.rglob("part-*"))
+        assert outputs() == local
+    finally:
+        getattr(sc._jsc.sc(), "checkpointDir_$eq")(
+            sc._jvm.scala.Option.apply(None))
+    assert sc.getCheckpointDir() is None
+    assert sorted(materialize(pairs).collect()) == sorted(pairs.collect())
 
 
 def test_connected_components_nonconvergence_raises(spark, monkeypatch):
@@ -1580,34 +1577,6 @@ def test_unigram_logprob_known_values(spark):
     assert rows[1].avg_nll == pytest.approx(-math.log(0.4), abs=1e-4)
     assert rows[2].avg_nll == pytest.approx(
         -(math.log(0.4) + math.log(0.2)) / 2, abs=1e-4)
-
-
-def test_unigram_logprob_checkpoint_modes_equal(spark):
-    """checkpoint_mode only pins intermediates — "none" (lazy bench
-    default) and "local" (the 100 TB single-pass mode) must produce
-    identical rows (r12: the hashed-edge rework + mode default)."""
-    from fspann_query_system_spark.ops.quality import unigram_logprob
-    docs = spark.createDataFrame(
-        [(i, f"tok{i % 7} tok{i % 3} shared") for i in range(40)],
-        "doc_id LONG, text STRING")
-    lazy = sorted(unigram_logprob(docs, checkpoint_mode="none").collect())
-    pinned = sorted(unigram_logprob(docs, checkpoint_mode="local").collect())
-    assert lazy == pinned
-
-
-def test_minhash_band_pairs_checkpoint_modes_equal(spark):
-    """The eager band-table materialization (r12) must not change the
-    candidate pair set."""
-    from fspann_query_system_spark.ops.dedup import minhash_band_pairs
-    docs = spark.createDataFrame(
-        [(i, "the quick brown fox " + ("jumps" if i % 2 else "sits"))
-         for i in range(30)],
-        "doc_id LONG, text STRING")
-    lazy = sorted(minhash_band_pairs(
-        docs, checkpoint_mode="none").collect())
-    pinned = sorted(minhash_band_pairs(
-        docs, checkpoint_mode="local").collect())
-    assert lazy == pinned and len(lazy) > 0
 
 
 def test_source_kl_identical_vs_disjoint(spark):
@@ -2328,49 +2297,6 @@ def test_nearest_cells_mass_large_codebook_matches_exact_rule(spark):
         assert got[q] == list(o[prior < budget])
 
 
-def test_nearest_cells_cell_mod_union_equals_unfiltered(spark):
-    """cell_mod=(g, gi) group slicing (the staged knn_join_sq8 probe
-    fusion): the UNION over gi of per-group outputs must equal the
-    unfiltered output exactly — per branch: fixed-nprobe small |C|,
-    fixed-nprobe large |C| (tiled GEMM), mass small |C|, mass large
-    |C|, and argmin (nc=1) large |C| — including payload columns."""
-    import numpy as np
-    from fspann_query_system_spark.ops.similarity import _nearest_cells
-    rng = np.random.default_rng(11)
-    X = rng.normal(0, 2, (300, 16))
-    df = spark.createDataFrame([(i, X[i].tolist()) for i in range(len(X))],
-                               "id LONG, vector ARRAY<DOUBLE>")
-    mins = X.min(axis=0).tolist()
-    maxs = X.max(axis=0).tolist()
-
-    def rows(dfx):
-        cols = dfx.columns
-        return sorted(tuple(r[c] for c in cols) for r in dfx.collect())
-
-    for n_c in (40, 300):                      # small and large codebook
-        C = rng.normal(0, 2, (n_c, 16))
-        cents = spark.createDataFrame(
-            [(j, C[j].tolist()) for j in range(n_c)],
-            "id LONG, vector ARRAY<DOUBLE>")
-        counts = {j: (j % 5) + 1 for j in range(n_c)}
-        for kw, nc in ((dict(), 1),                  # argmin branch
-                       (dict(), 3),                  # fixed nprobe=3
-                       (dict(mass=(counts, 8)), 3),  # adaptive budget
-                       (dict(sq8=(mins, maxs)), 3)):  # code payload
-            keep_vec = "sq8" in kw
-            base = rows(_nearest_cells(df, cents, nc, "id", "vector",
-                                       "id", "vector",
-                                       keep_vector=keep_vec, **kw))
-            g = 3
-            parts = []
-            for gi in range(g):
-                parts += rows(_nearest_cells(df, cents, nc, "id",
-                                             "vector", "id", "vector",
-                                             keep_vector=keep_vec,
-                                             cell_mod=(g, gi), **kw))
-            assert sorted(parts) == base, (n_c, kw, nc)
-
-
 def test_knn_join_incremental_equals_full_rebuild(spark, clustered):
     """Folding a new batch into an existing graph (frozen quantizer)
     must equal the full rebuild bit-for-bit — including displacement
@@ -2543,9 +2469,9 @@ def test_nearest_cells_packed_equals_exploded(spark):
 
 
 def test_knn_join_sq8_probe_groups_identical_with_mass(spark, clustered):
-    """The staged path under an adaptive mass budget: per-group fused
-    probe emission (cell_mod) must leave results identical to the
-    single-pass adaptive plan."""
+    """The staged path under an adaptive mass budget: per-group probe
+    slicing must leave results identical to the single-pass adaptive
+    plan."""
     from fspann_query_system_spark.ops.similarity import (knn_join_sq8,
                                                           sq8_stats)
     df, X = clustered
@@ -3261,7 +3187,7 @@ def test_knn_graph_fold_upsert_delete_then_reinsert_identity(
     og = knn_join(full, cents, k=5, nprobe=2, assigned=assigned)
     g2, p2, a2 = knn_graph_fold(
         og, probes, assigned, full.filter(is_mut), cents, k=5,
-        nprobe=2, materialize="none",
+        nprobe=2,
         deletes=full.filter(is_mut).select("id"))
     assert (sorted(map(tuple, g2.collect()))
             == sorted(map(tuple, og.collect())))
@@ -3457,7 +3383,7 @@ def test_knn_graph_fold_preserves_vector_carrying_probe_layout(spark,
                            assigned=assigned), probes, assigned
         for batch in (base.filter(is_b1), base.filter(is_b2)):
             g, p, a = knn_graph_fold(g, p, a, batch, cents, k=5,
-                                     nprobe=2, materialize="local")
+                                     nprobe=2)
         assert ("vector" in p.columns) == kv   # layout preserved
         outs[kv] = sorted(map(tuple, g.collect()))
     assert outs[False] == outs[True]

@@ -451,3 +451,27 @@ def test_cluster_sample_map_side_assign_single_cell_window(spark):
     assert "Join" not in plan
     assert "CartesianProduct" not in plan
     assert plan.count("Window") >= 1
+
+
+def test_checkpoints_only_through_materialize():
+    """The materialization policy lives in one module: every eager
+    checkpoint in the package goes through ``functions.plan.materialize``
+    (localCheckpoint, or a reliable checkpoint once the session has a
+    checkpoint directory).  A bare ``.localCheckpoint(`` / ``.checkpoint(``
+    anywhere else would silently bypass the cluster switch."""
+    import ast
+    from pathlib import Path
+
+    import fspann_query_system_spark as pkg
+    root = Path(pkg.__file__).parent
+    allowed = root / "functions" / "plan.py"
+    bare = []
+    for path in sorted(root.rglob("*.py")):
+        if path == allowed:
+            continue
+        for node in ast.walk(ast.parse(path.read_text(), str(path))):
+            if (isinstance(node, ast.Call)
+                    and isinstance(node.func, ast.Attribute)
+                    and node.func.attr in ("localCheckpoint", "checkpoint")):
+                bare.append(f"{path.relative_to(root)}:{node.lineno}")
+    assert not bare, bare

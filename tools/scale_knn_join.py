@@ -267,7 +267,12 @@ def main():
     # and checkpoint tree behind — measured 33 GB of a 94 GB fs)
     import shutil
     shutil.rmtree("/tmp/knn_join_ckpt", ignore_errors=True)
-    spark.sparkContext.setCheckpointDir("/tmp/knn_join_ckpt")
+    # staged sq8 runs (KNN_PROBE_GROUPS > 1) need reliable checkpoints:
+    # local ones hold each n·k·rerank partial on the heap (see
+    # knn_join_sq8); single-pass runs keep localCheckpoint
+    pg = int(os.environ.get("KNN_PROBE_GROUPS", "1"))
+    if pg > 1:
+        spark.sparkContext.setCheckpointDir("/tmp/knn_join_ckpt")
 
     from fspann_query_system_spark.ops.similarity import (
         kmeans_fit, ivf_assign, knn_join)
@@ -374,12 +379,10 @@ def main():
         from fspann_query_system_spark.ops.similarity import (knn_join_sq8,
                                                               sq8_stats)
         mins, maxs = sq8_stats(emb)
-        pg = int(os.environ.get("KNN_PROBE_GROUPS", "1"))
         graph = knn_join_sq8(emb, cent, mins, maxs, k=k, nprobe=nprobe,
                              rerank=2, c_id_col="cell", assigned=assigned,
                              shuffle_dtype="float", probe_groups=pg,
-                             checkpoint_mode="reliable" if pg > 1
-                             else "local", probe_mass=probe_mass)
+                             probe_mass=probe_mass)
     else:
         graph = knn_join(emb, cent, k=k, nprobe=nprobe,
                          c_id_col="cell", assigned=assigned,
