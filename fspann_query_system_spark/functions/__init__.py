@@ -1,3 +1,3 @@
-from .distance import l2_expr, l2_udf, cosine_expr, dot_expr
+from .distance import l2_expr, cosine_expr, dot_expr
 
-__all__ = ["l2_expr", "l2_udf", "cosine_expr", "dot_expr"]
+__all__ = ["l2_expr", "cosine_expr", "dot_expr"]

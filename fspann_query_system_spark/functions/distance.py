@@ -1,24 +1,13 @@
 """Vector distance kernels (reference ``QueryServiceImpl.l2:364-372``,
-``Coding.dot:349-353``).
-
-Two tiers:
-- native Catalyst expressions (zip_with + aggregate) — stay inside
-  whole-stage codegen, no Python round-trip; the default for plans where
-  the vector column is already joined in.
-- Arrow-vectorized pandas UDF — faster per-row for wide vectors / huge
-  candidate sets (numpy SIMD beats codegen's per-element loop on 100+-d
-  arrays); used by the heavy refine stages when profiling says so.
+``Coding.dot:349-353``) as native Catalyst expressions (zip_with +
+aggregate): they stay inside whole-stage codegen, with no Python
+round-trip, for plans where the vector column is already joined in.
 """
 
 from __future__ import annotations
 
-import numpy as np
-import pandas as pd
-
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import DoubleType
 
 
 def _c(col: str | Column) -> Column:
@@ -66,20 +55,3 @@ def cosine_expr(a, b) -> Column:
     na = F.sqrt(dot_expr(a, a))
     nb = F.sqrt(dot_expr(b, b))
     return num / (na * nb)
-
-
-@pandas_udf(DoubleType())
-def l2_udf(a: pd.Series, b: pd.Series) -> pd.Series:
-    A = np.vstack([np.asarray(x, dtype=np.float64) for x in a])
-    B = np.vstack([np.asarray(x, dtype=np.float64) for x in b])
-    return pd.Series(np.sqrt(np.square(A - B).sum(axis=1)))
-
-
-@pandas_udf(DoubleType())
-def cosine_udf(a: pd.Series, b: pd.Series) -> pd.Series:
-    A = np.vstack([np.asarray(x, dtype=np.float64) for x in a])
-    B = np.vstack([np.asarray(x, dtype=np.float64) for x in b])
-    num = (A * B).sum(axis=1)
-    den = np.linalg.norm(A, axis=1) * np.linalg.norm(B, axis=1)
-    den[den == 0.0] = np.inf
-    return pd.Series(num / den)

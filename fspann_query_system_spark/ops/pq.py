@@ -218,15 +218,12 @@ def pq_encode(df: DataFrame, codebook: DataFrame,
     if carry_cell and assign_centroids is not None:
         raise ValueError("carry_cell and assign_centroids are mutually "
                          "exclusive")
-    from .similarity import _assign_cells_float
+    from .similarity import _assign_cells_float, _sorted_centroids
     spark = df.sparkSession
     assign_state = None
     if assign_centroids is not None:
-        c_rows = rows_cached(assign_centroids, id_col, vector_col)
-        a_cid = np.array([r[0] for r in c_rows], dtype=np.int64)
-        a_C = np.array([list(r[1]) for r in c_rows], dtype=np.float64)
-        a_ord = np.argsort(a_cid, kind="stable")
-        assign_state = (a_cid[a_ord], a_C[a_ord])
+        assign_state = _sorted_centroids(
+            rows_cached(assign_centroids, id_col, vector_col))
     bc = spark.sparkContext.broadcast((_codebook_tensor(codebook),
                                        assign_state))
 
@@ -263,100 +260,139 @@ def pq_encode(df: DataFrame, codebook: DataFrame,
     return df.select(*in_cols).mapInPandas(run, schema=schema)
 
 
-def pq_topk(base: DataFrame, queries: DataFrame, codebook: DataFrame,
-            k: int = 10, rerank: int = 4,
-            id_col: str = "id", vector_col: str = "vector",
-            q_id_col: str = "q_id", q_vector_col: str = "vector",
-            codes: DataFrame | None = None) -> DataFrame:
-    """ADC-compressed-refine ANN: rank candidates on PQ codes (m_sub
-    bytes scanned per vector instead of 4·dim), exact re-rank only the
-    top ``k·rerank`` with true vectors → (q_id, id, dist, rank ≤ k).
+_TOPK_SCHEMA = "q_id BIGINT, id BIGINT, dist DOUBLE, rank INT"
 
-    The approx stage never reconstructs vectors: per query a lookup
-    table LUT[sub, cell] = ||q_sub − c_{sub,cell}||² (m·k doubles) is
-    built driver-side and broadcast; each batch scores a row as
-    ``Σ_sub LUT[sub, codes[sub]]`` — pure table lookups + a sum, the
-    classic ADC inner loop.  Per-batch partial top-(k·rerank) with a
-    tie-inclusive cut (duplicated vectors yield equal codes AND equal
-    exact distances; an arbitrary boundary subset would make the final
-    top-k depend on batch partitioning — same contract as
-    ``sq8_topk``).
 
-    STANDALONE mode (codes=None over the full table) is the exhaustive
-    compressed baseline — every query scans every code at m_sub bytes a
-    row.  The scale path passes a precomputed/pruned ``codes`` table
-    (e.g. IVF-pruned cells), same kernel."""
-    from ..functions.distance import l2_expr
-    spark = base.sparkSession
-    if codes is None:
-        codes = pq_encode(base, codebook, id_col=id_col,
-                          vector_col=vector_col)
+def _query_batch(queries: DataFrame, q_id_col: str,
+                 q_vector_col: str) -> tuple:
+    """The collected query batch of a compressed-refine call →
+    ``(rows, int64 ids, float64 matrix)``; ``rows`` is empty when the
+    batch is."""
     q_rows = rows_cached(queries, q_id_col, q_vector_col)
-    if not q_rows:
-        return spark.createDataFrame(
-            [], "q_id BIGINT, id BIGINT, dist DOUBLE, rank INT")
-    T = _codebook_tensor(codebook)
-    m, kc, d_sub = T.shape
     q_ids = np.array([r[0] for r in q_rows], dtype=np.int64)
-    Q = (np.array([list(r[1]) for r in q_rows], dtype=np.float64)
-         .reshape(len(q_rows), m, d_sub))
-    # LUT[q, sub, cell] = squared L2 between q's subvector and the cell,
-    # element-quantized to int64 so ADC sums are merge-order-exact
-    lut = _q9(np.square(Q[:, :, None, :] - T[None])).sum(axis=3)
-    kk = k * rerank
-    bc = spark.sparkContext.broadcast((q_ids, lut, kk))
+    Q = np.array([list(r[1]) for r in q_rows], dtype=np.float64)
+    return q_rows, q_ids, Q
+
+
+def _scan_shortlist(codes: DataFrame, code_col: str, q_ids: np.ndarray,
+                    kk: int, score, state, decode=None,
+                    cell_lists: list | None = None,
+                    assign: tuple | None = None,
+                    vector_col: str = "vector") -> DataFrame:
+    """The approximate stage of every compressed-refine family (SQ8, BQ,
+    PQ, IVF-BQ, IVF-PQ): one Arrow pass over ``codes`` →
+    (q_id, id, d BIGINT), at most ``kk`` rows per (query, batch).
+
+    Each batch's ``code_col`` list column is stacked once into an int64
+    matrix, which ``decode(state, M)`` (default: none) turns once per
+    batch into the matrix ``M`` the codec scores — SQ8 reconstructs its
+    floats there rather than once per query.  ``score(state, M, qi,
+    cell)`` returns the int64 approximate distances of those rows to
+    query ``qi`` (``cell`` is the probed cell the rows sit in, None
+    without routing).  ``state`` is the codec's query-side arrays (SQ8
+    ``(Q, mn, rg)``, packed query words, ADC tables) and rides in the
+    call's one broadcast.
+
+    With ``cell_lists`` (per-query probed cells, aligned with ``q_ids``)
+    only rows in a query's probed cells are scored: the batch is sorted
+    by cell once and each probed cell is a ``searchsorted`` range, so a
+    query touches its probed rows, not the batch.  Row cells come from
+    the ``cell`` column or, with ``assign=(cid_sorted, C_sorted)``, are
+    derived inline from ``vector_col``
+    (:func:`~.similarity._assign_cells_float`, the exact `ivf_assign`
+    semantics) — the fused encode+assign scan.
+
+    The batch cut is the exact batch top-``kk`` under the global
+    ``(d, id)`` order: ``np.partition`` picks the kth distance, every
+    row below it is kept, and the tie plateau at it is cut to the rows
+    still needed by an ``argpartition`` on id — linear in the batch for
+    any id type, however wide the plateau.  A global top-``kk`` row is
+    therefore always a batch top-``kk`` row — the shortlist cannot
+    depend on how the table is partitioned — and a plateau (duplicated
+    vectors, code-degenerate clusters, integer Hamming distances) never
+    ships more than ``kk`` rows per batch."""
+    from .similarity import _assign_cells_float
+    cols = ["id", code_col]
+    if assign is not None:
+        cols.append(vector_col)
+    elif cell_lists is not None:
+        cols.append("cell")
+    bc = codes.sparkSession.sparkContext.broadcast(
+        (q_ids, kk, state, cell_lists, assign))
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        q_ids_, lut_, kk_ = bc.value
-        nq, m_, _ = lut_.shape
-        subs = np.arange(m_)
+        q_ids_, kk_, st, cells_, assign_ = bc.value
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            C = np.vstack([np.asarray(c, dtype=np.int64)
-                           for c in pdf["codes"].to_numpy()])
+            M = np.vstack([np.asarray(c, dtype=np.int64)
+                           for c in pdf[code_col].to_numpy()])
+            if decode is not None:
+                M = decode(st, M)
             ids = pdf["id"].to_numpy()
-            n = len(ids)
-            take = min(kk_, n)
-            frames = []
-            for qi in range(nq):
-                d2 = lut_[qi, subs[None, :], C].sum(axis=1)
-                if take < n:
-                    kth = np.partition(d2, take - 1)[take - 1]
-                    part = np.flatnonzero(d2 <= kth)
-                    if len(part) > take:
-                        # bound the tie plateau: exactly the batch
-                        # top-take under the global (d2, id) order —
-                        # identical codes tie exactly, and a
-                        # code-degenerate cluster would otherwise ship
-                        # its whole membership to the shortlist window
-                        order = np.lexsort((ids[part], d2[part]))[:take]
-                        part = part[order]
+            if cells_ is not None:
+                if assign_ is not None:
+                    V = np.vstack([np.asarray(v, dtype=np.float64)
+                                   for v in pdf[vector_col].to_numpy()])
+                    row_cell = _assign_cells_float(V, *assign_)
                 else:
-                    part = np.arange(n)
+                    row_cell = np.asarray(pdf["cell"].to_numpy(),
+                                          dtype=np.int64)
+                order = np.argsort(row_cell, kind="stable")
+                sorted_cells = row_cell[order]
+            frames = []
+            for qi in range(len(q_ids_)):
+                if cells_ is None:
+                    keep = slice(None)
+                    d = score(st, M, qi, None)
+                else:
+                    cs = cells_[qi]
+                    lo = np.searchsorted(sorted_cells, cs, side="left")
+                    hi = np.searchsorted(sorted_cells, cs, side="right")
+                    segs = [(c, order[a:b])
+                            for c, a, b in zip(cs, lo, hi) if b > a]
+                    if not segs:
+                        continue
+                    keep = np.concatenate([rows for _, rows in segs])
+                    d = np.concatenate([score(st, M[rows], qi, c)
+                                        for c, rows in segs])
+                kid = ids[keep]
+                part = np.arange(len(d))
+                if kk_ < len(d):
+                    kth = np.partition(d, kk_ - 1)[kk_ - 1]
+                    less = np.flatnonzero(d < kth)
+                    tie = np.flatnonzero(d == kth)
+                    need = kk_ - len(less)
+                    if len(tie) > need:
+                        tie = tie[np.argpartition(kid[tie], need - 1)[:need]]
+                    part = np.concatenate([less, tie])
                 frames.append(pd.DataFrame({
                     "q_id": np.full(len(part), q_ids_[qi], dtype=np.int64),
-                    "id": ids[part], "d2": d2[part]}))
-            yield pd.concat(frames, ignore_index=True)
+                    "id": kid[part], "d": d[part]}))
+            if frames:
+                yield pd.concat(frames, ignore_index=True)
 
     id_type = codes.schema["id"].dataType.simpleString()
-    partial = codes.mapInPandas(
-        run, schema=f"q_id BIGINT, id {id_type}, d2 DOUBLE")
-    return _exact_rerank(partial, base, queries, k, kk,
-                         id_col, vector_col, q_id_col, q_vector_col)
+    return codes.select(*cols).mapInPandas(
+        run, schema=f"q_id BIGINT, id {id_type}, d BIGINT")
+
+
+def _shortlist(partial: DataFrame, kk: int) -> DataFrame:
+    """(q_id, id, d) partials → each query's first ``kk`` ids under the
+    (d, id) order."""
+    w = Window.partitionBy("q_id").orderBy(F.col("d").asc(),
+                                           F.col("id").asc())
+    return (partial.withColumn("_ar", F.row_number().over(w))
+            .filter(F.col("_ar") <= kk).select("q_id", "id"))
 
 
 def _exact_rerank(partial: DataFrame, base: DataFrame, queries: DataFrame,
                   k: int, kk: int, id_col: str, vector_col: str,
                   q_id_col: str, q_vector_col: str) -> DataFrame:
-    """Shared compressed-refine tail: (q_id, id, d2) partials →
-    (ad2, id)-ordered shortlist of ``kk`` → exact-L2 re-rank of only
+    """Shared compressed-refine tail: (q_id, id, d) partials →
+    (d, id)-ordered shortlist of ``kk`` → exact-L2 re-rank of only
     those ids with true vectors → top ``k``."""
     from ..functions.distance import l2_expr
-    w_approx = Window.partitionBy("q_id").orderBy(F.col("d2").asc(),
-                                                  F.col("id").asc())
-    shortlist = (partial.withColumn("_ar", F.row_number().over(w_approx))
-                 .filter(F.col("_ar") <= kk).select("q_id", "id"))
     qv = queries.select(F.col(q_id_col).alias("q_id"),
                         F.col(q_vector_col).alias("_qv"))
     bv = base.select(F.col(id_col).alias("id"),
@@ -367,12 +403,63 @@ def _exact_rerank(partial: DataFrame, base: DataFrame, queries: DataFrame,
     # it so the exact re-rank NEVER shuffles the base vector table
     # (unhinted, a >10MB shortlist silently flipped this join to
     # sort-merge over the full base — measured 5x at 10M)
-    return (shortlist.hint("broadcast").join(bv, on="id")
+    return (_shortlist(partial, kk).hint("broadcast").join(bv, on="id")
             .join(F.broadcast(qv), on="q_id")
             .withColumn("dist", l2_expr("_qv", "_bv"))
             .withColumn("rank", F.row_number().over(w_exact))
             .filter(F.col("rank") <= k)
             .select("q_id", "id", "dist", "rank"))
+
+
+def _adc_tables(Q: np.ndarray, T: np.ndarray) -> np.ndarray:
+    """ADC lookup tables: LUT[q, sub, cell] = squared L2 between query
+    q's subvector and the codebook cell, element-quantized to int64
+    (``_q9``) so ADC sums are merge-order-exact."""
+    m, _, d_sub = T.shape
+    return _q9(np.square(Q.reshape(len(Q), m, 1, d_sub) - T[None])
+               ).sum(axis=3)
+
+
+def _adc(lut: np.ndarray, M: np.ndarray) -> np.ndarray:
+    """ADC distance of code rows ``M`` under one (m_sub, k) lookup
+    table: ``Σ_sub LUT[sub, M[:, sub]]`` — table lookups and a sum."""
+    return lut[np.arange(len(lut)), M].sum(axis=1)
+
+
+def pq_topk(base: DataFrame, queries: DataFrame, codebook: DataFrame,
+            k: int = 10, rerank: int = 4,
+            id_col: str = "id", vector_col: str = "vector",
+            q_id_col: str = "q_id", q_vector_col: str = "vector",
+            codes: DataFrame | None = None) -> DataFrame:
+    """ADC-compressed-refine ANN: rank candidates on PQ codes (m_sub
+    bytes scanned per vector instead of 4·dim), exact re-rank only the
+    top ``k·rerank`` with true vectors → (q_id, id, dist, rank ≤ k).
+
+    The approx stage never reconstructs vectors: per query a lookup
+    table LUT[sub, cell] = ||q_sub − c_{sub,cell}||² (m·k integers,
+    :func:`_adc_tables`) is built driver-side and broadcast; each batch
+    scores a row as ``Σ_sub LUT[sub, codes[sub]]`` — pure table lookups
+    + a sum, the classic ADC inner loop — in the shared
+    :func:`_scan_shortlist` kernel, whose (d, id) batch cut keeps the
+    shortlist independent of batch partitioning (duplicated vectors
+    yield equal codes AND equal exact distances).
+
+    STANDALONE mode (codes=None over the full table) is the exhaustive
+    compressed baseline — every query scans every code at m_sub bytes a
+    row.  The scale path passes a precomputed/pruned ``codes`` table
+    (e.g. IVF-pruned cells), same kernel."""
+    if codes is None:
+        codes = pq_encode(base, codebook, id_col=id_col,
+                          vector_col=vector_col)
+    q_rows, q_ids, Q = _query_batch(queries, q_id_col, q_vector_col)
+    if not q_rows:
+        return base.sparkSession.createDataFrame([], _TOPK_SCHEMA)
+    kk = k * rerank
+    partial = _scan_shortlist(codes, "codes", q_ids, kk,
+                              lambda luts, M, qi, cell: _adc(luts[qi], M),
+                              _adc_tables(Q, _codebook_tensor(codebook)))
+    return _exact_rerank(partial, base, queries, k, kk,
+                         id_col, vector_col, q_id_col, q_vector_col)
 
 
 def residual_table(base: DataFrame, centroids: DataFrame,
@@ -498,83 +585,29 @@ def ivfpq_topk(base: DataFrame, queries: DataFrame, centroids: DataFrame,
         counts = {r["cell"]: r["count"] for r in
                   census_src.groupBy("cell").count().collect()}
         mass = (counts, probe_mass)
-    q_rows = rows_cached(queries, q_id_col, q_vector_col)
+    q_rows, q_ids, Q = _query_batch(queries, q_id_col, q_vector_col)
     if not q_rows:
-        return spark.createDataFrame(
-            [], "q_id BIGINT, id BIGINT, dist DOUBLE, rank INT")
+        return spark.createDataFrame([], _TOPK_SCHEMA)
     # probe sets DRIVER-SIDE on the already-collected query batch (the
     # _nc_batches kernel body verbatim): removes the probe-kernel
     # Spark job this call previously ran per invocation, and the
     # centroid collect it needs is shared with the by_residual LUTs
     c_rows = rows_cached(centroids, id_col, vector_col)
     probed = _probe_cells_local(q_rows, c_rows, nprobe, mass=mass)
-    T = _codebook_tensor(codebook)
-    m, kc, d_sub = T.shape
-    q_ids = np.array([r[0] for r in q_rows], dtype=np.int64)
-    Q = (np.array([list(r[1]) for r in q_rows], dtype=np.float64)
-         .reshape(len(q_rows), m, d_sub))
-    kk = k * rerank
     cell_lists = [probed.get(int(q), np.empty(0, dtype=np.int64))
                   for q in q_ids]
+    T = _codebook_tensor(codebook)
     if by_residual:
         coarse = {int(r[0]): np.asarray(list(r[1]), dtype=np.float64)
                   for r in c_rows}
         # per-(query, probed cell) LUT over the residual query
-        luts = [{int(c): _q9(np.square(
-                    (Q[qi].reshape(-1) - coarse[int(c)])
-                    .reshape(m, 1, d_sub) - T)).sum(axis=2)
-                 for c in cell_lists[qi]}
-                for qi in range(len(q_ids))]
+        luts = [{int(c): _adc_tables((Q[qi] - coarse[int(c)])[None], T)[0]
+                 for c in cells} for qi, cells in enumerate(cell_lists)]
     else:
-        lut_all = _q9(np.square(Q[:, :, None, :] - T[None])).sum(axis=3)
-        luts = [{int(c): lut_all[qi] for c in cell_lists[qi]}
-                for qi in range(len(q_ids))]
-    bc = spark.sparkContext.broadcast((q_ids, luts, kk, cell_lists, m))
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        q_ids_, luts_, kk_, cells_, m_ = bc.value
-        nq = len(q_ids_)
-        subs = np.arange(m_)
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            C = np.vstack([np.asarray(c, dtype=np.int64)
-                           for c in pdf["codes"].to_numpy()])
-            ids = pdf["id"].to_numpy()
-            row_cell = pdf["cell"].to_numpy()
-            frames = []
-            for qi in range(nq):
-                keeps, d2s = [], []
-                for c in cells_[qi]:
-                    keep = np.flatnonzero(row_cell == c)
-                    if len(keep) == 0:
-                        continue
-                    lut_c = luts_[qi][int(c)]
-                    keeps.append(keep)
-                    d2s.append(lut_c[subs[None, :], C[keep]].sum(axis=1))
-                if not keeps:
-                    continue
-                keep = np.concatenate(keeps)
-                d2 = np.concatenate(d2s)
-                take = min(kk_, len(keep))
-                if take < len(keep):
-                    kth = np.partition(d2, take - 1)[take - 1]
-                    part = np.flatnonzero(d2 <= kth)
-                    if len(part) > take:
-                        # bound the tie plateau (see pq_topk): exact
-                        # batch top-take under the (d2, id) order
-                        kid = ids[keep]
-                        order = np.lexsort((kid[part], d2[part]))[:take]
-                        part = part[order]
-                else:
-                    part = np.arange(len(keep))
-                frames.append(pd.DataFrame({
-                    "q_id": np.full(len(part), q_ids_[qi], dtype=np.int64),
-                    "id": ids[keep][part], "d2": d2[part]}))
-            if frames:
-                yield pd.concat(frames, ignore_index=True)
-
-    id_type = base.schema[id_col].dataType.simpleString()
+        # every probed cell of a query shares the query's one table
+        luts = [dict.fromkeys(map(int, cells), lut)
+                for cells, lut in zip(cell_lists, _adc_tables(Q, T))]
+    kk = k * rerank
     # JVM-side pre-filter on the probed-cell UNION (Q·nprobe-bounded,
     # ≪ |C| for online query batches): rows in unprobed cells
     # contribute nothing, so dropping them BEFORE the Arrow kernel
@@ -598,7 +631,9 @@ def ivfpq_topk(base: DataFrame, queries: DataFrame, centroids: DataFrame,
             cells_df = spark.createDataFrame(
                 [(int(c),) for c in all_cells], "cell BIGINT")
             sel = sel.join(F.broadcast(cells_df), "cell", "semi")
-    partial = sel.mapInPandas(
-        run, schema=f"q_id BIGINT, id {id_type}, d2 DOUBLE")
+    partial = _scan_shortlist(
+        sel, "codes", q_ids, kk,
+        lambda luts, M, qi, cell: _adc(luts[qi][cell], M), luts,
+        cell_lists=cell_lists)
     return _exact_rerank(partial, base, queries, k, kk,
                          id_col, vector_col, q_id_col, q_vector_col)

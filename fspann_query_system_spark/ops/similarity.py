@@ -120,10 +120,11 @@ def _nearest_cells(df: DataFrame, centroids: DataFrame, n_cells: int,
     8·dim, an 8× probe-shuffle reduction over float64.
 
     ``mass=(counts, budget)`` switches to per-row ADAPTIVE probing
-    (the map-side twin of :func:`_adaptive_probe_cells`, verdict r08
-    Next #5): ``counts`` is the {cell: member_count} census (one
-    |C|-bounded collect), and each row probes cells in ascending
-    ELEMENT-QUANTIZED (``_q9``) L2 order — ties by lowest cid — while
+    (verdict r08 Next #5; :func:`_probe_cells_local` runs the same
+    rule on a collected query batch): ``counts`` is the
+    {cell: member_count} census (one |C|-bounded collect), and each
+    row probes cells in ascending ELEMENT-QUANTIZED (``_q9``) L2 order
+    — ties by lowest cid — while
     the cumulative member count of the cells BEFORE it is < ``budget``.
     Per-row scanned candidate mass is thus hard-bounded regardless of
     cell-size skew, which fixed ``n_cells`` cannot offer (a prober
@@ -145,29 +146,18 @@ def _nearest_cells(df: DataFrame, centroids: DataFrame, n_cells: int,
     path persists the packed table once and each group explodes only
     its cell ≡ gi slice JVM-side."""
     spark = df.sparkSession
-    c_rows = rows_cached(centroids, c_id_col, c_vector_col)
-    cid = np.array([r[0] for r in c_rows], dtype=np.int64)
-    C = np.array([list(r[1]) for r in c_rows], dtype=np.float64)
-    order = np.argsort(cid, kind="stable")      # argmin ties -> lowest cid
+    cid, C = _sorted_centroids(rows_cached(centroids, c_id_col,
+                                           c_vector_col))
     sq8_arrs = None
     if sq8 is not None:
         mn8 = np.asarray(sq8[0], dtype=np.float64)
         rg8 = np.asarray(sq8[1], dtype=np.float64) - mn8
         sq8_arrs = (mn8, rg8)
-    mass_arrs = None
-    if mass is not None:
-        counts, budget = mass
-        if budget < 1:
-            raise ValueError(f"probe mass budget must be >= 1, "
-                             f"got {budget}")
-        cnt = np.array([int(counts.get(int(c), 0)) for c in cid[order]],
-                       dtype=np.int64)
-        mass_arrs = (cnt, int(budget))
     if packed and not keep_vector:
         raise ValueError("packed=True requires keep_vector=True "
                          "(the payload is the point of packing)")
-    bc = spark.sparkContext.broadcast((cid[order], C[order], n_cells,
-                                       sq8_arrs, mass_arrs, packed))
+    bc = spark.sparkContext.broadcast((cid, C, n_cells, sq8_arrs,
+                                       _mass_arrs(mass, cid), packed))
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         yield from _nc_batches(bc.value, id_col, vector_col, keep_vector,
@@ -464,20 +454,16 @@ def _probe_cells_local(q_rows, c_rows, n_cells: int,
     Q·nprobe probe pairs locally removes one whole Spark job (scan +
     Arrow kernel + collect) from every call without touching results.
     ``mass=(counts, budget)`` mirrors `_nearest_cells(mass=)` —
-    validation included."""
-    cid = np.array([r[0] for r in c_rows], dtype=np.int64)
-    C = np.array([list(r[1]) for r in c_rows], dtype=np.float64)
-    order = np.argsort(cid, kind="stable")
-    mass_arrs = None
-    if mass is not None:
-        counts, budget = mass
-        if budget < 1:
-            raise ValueError(f"probe mass budget must be >= 1, "
-                             f"got {budget}")
-        cnt = np.array([int(counts.get(int(c), 0)) for c in cid[order]],
-                       dtype=np.int64)
-        mass_arrs = (cnt, int(budget))
-    state = (cid[order], C[order], n_cells, None, mass_arrs, False)
+    validation included — and is the one adaptive-probe rule of the
+    collected-batch families (IVF-PQ, IVF-BQ, IVF-BQ-SQ8): cells in
+    ascending element-quantized L2 order, ties by lowest cid, kept
+    while the member count of the cells BEFORE them is < budget.  A
+    query in a dense region covers its neighbourhood with few cells;
+    one whose cluster is shattered across many small cells probes
+    deeper (SCALE.md §9e addendum 2), and the (dd, cid) order plus one
+    cumulative-sum window reproduce the probe set in SQL."""
+    cid, C = _sorted_centroids(c_rows)
+    state = (cid, C, n_cells, None, _mass_arrs(mass, cid), False)
     pdf = pd.DataFrame({"q_id": [r[0] for r in q_rows],
                         "vector": [list(r[1]) for r in q_rows]})
     probed: dict[int, set] = {}
@@ -487,6 +473,28 @@ def _probe_cells_local(q_rows, c_rows, n_cells: int,
             probed.setdefault(int(q), set()).add(int(c))
     return {q: np.array(sorted(s), dtype=np.int64)
             for q, s in probed.items()}
+
+
+def _sorted_centroids(c_rows) -> tuple:
+    """Collected (cid, vector) centroid rows → ``(cid, C)`` sorted by
+    cid, so argmin's first-minimum rule is the lowest-cid tie-break."""
+    cid = np.array([r[0] for r in c_rows], dtype=np.int64)
+    C = np.array([list(r[1]) for r in c_rows], dtype=np.float64)
+    order = np.argsort(cid, kind="stable")
+    return cid[order], C[order]
+
+
+def _mass_arrs(mass: tuple | None, cid: np.ndarray) -> tuple | None:
+    """``mass=(counts, budget)`` → the kernel's ``(member counts aligned
+    with cid, budget)``; a budget below 1 probes nothing and raises."""
+    if mass is None:
+        return None
+    counts, budget = mass
+    if budget < 1:
+        raise ValueError(f"probe mass budget must be >= 1, got {budget}")
+    cnt = np.array([int(counts.get(int(c), 0)) for c in cid],
+                   dtype=np.int64)
+    return cnt, int(budget)
 
 
 def _assign_cells_float(B: np.ndarray, cid_sorted: np.ndarray,
@@ -742,7 +750,7 @@ def ivf_topk(base: DataFrame, queries: DataFrame, centroids: DataFrame,
     distance order while the cumulative member count of closer cells
     is below the budget — run MAP-SIDE over the (possibly distributed)
     query table via :func:`_nearest_cells`, so unlike the
-    collected-batch ``_adaptive_probe_cells`` path it never needs the
+    collected-batch ``_probe_cells_local`` path it never needs the
     queries on the driver.  Per-query scanned rows are hard-bounded
     under cell-size skew; the broadcast probes table simply carries a
     variable probe count per query.  NOTE (mirrors :func:`knn_join`):
@@ -822,7 +830,7 @@ def knn_join(df: DataFrame, centroids: DataFrame, k: int = 10,
     * ``"gemm"`` (default, the scale path): per-cell Arrow cogroup —
       one BLAS d2 matrix per (probers × members) cell, shortlist by
       GEMM distance with a +8 safety margin, EXACT recompute of the
-      shortlist (``sqrt(Σ(a-b)²)``, the ``l2_udf`` formulation), emit
+      shortlist (``sqrt(Σ(a-b)²)``, the numpy form of ``l2_expr``), emit
       only per-(prober, cell) top-k.  The final window then ranks
       ≤ k·nprobe rows per prober instead of cell_size·nprobe.
       Measured ~40× over the expr path at 1M (SCALE.md §9g).  Ties:
@@ -860,7 +868,7 @@ def knn_join(df: DataFrame, centroids: DataFrame, k: int = 10,
     row probes cells in ascending element-quantized distance order
     while the cumulative member count of closer cells is below the
     budget — the self-join twin of the query path's
-    :func:`_adaptive_probe_cells` (verdict r08 Next #5).  This
+    :func:`_probe_cells_local` (verdict r08 Next #5).  This
     hard-bounds every prober's scanned candidate mass under cell-size
     skew: with fixed nprobe a prober landing on a 10×-average cell
     pays 10× in its cogroup (the measured p22 tail, SCALE.md §9g),
@@ -1818,12 +1826,13 @@ def sq8_topk(base: DataFrame, queries: DataFrame, mins: list, maxs: list,
     ``k*rerank`` with the true vectors → (q_id, id, dist, rank ≤ k).
 
     This is the memory path the SQ8 codebook exists for: the approx
-    stage is an Arrow-batched numpy kernel over the codes column with a
-    per-batch partial top-k (shuffle carries O(Q·k·rerank·n_batches)
-    rows, like :func:`cosine_topk`), and the exact stage joins true
-    vectors for only Q·k·rerank ids.  Reconstruction is elementwise
-    IEEE double (mn + c/255·rg), identical in numpy and SQL, so the
-    two-stage result is oracle-checkable; the ``rerank`` margin absorbs
+    stage is the shared :func:`~.pq._scan_shortlist` kernel over the
+    codes column, scoring with :func:`_sq8_dist` (shuffle carries
+    O(Q·k·rerank·n_batches) rows, like :func:`cosine_topk`), and the
+    exact stage (:func:`~.pq._exact_rerank`) joins true vectors for
+    only Q·k·rerank ids.  Reconstruction is elementwise IEEE double
+    (mn + c/255·rg), identical in numpy and SQL, so the two-stage
+    result is oracle-checkable; the ``rerank`` margin absorbs
     approx-boundary ties.
 
     STANDALONE mode (as called here, over the full ``codes`` table) is
@@ -1831,87 +1840,52 @@ def sq8_topk(base: DataFrame, queries: DataFrame, mins: list, maxs: list,
     O(N·Q) approx ranking at 1/4 the bytes of the float scan.  It is
     the exhaustive-compressed baseline, not the scale path.  The scale
     path is ``AnnIndex.with_sq8()`` + ``search_batch(sq8_rerank=...)``
-    (``query/ann.py``), which runs this same kernel over only the
-    LSH-capped candidate pool of each query."""
-    from ..functions.distance import l2_expr
-    spark = base.sparkSession
+    (``query/ann.py``), which ranks only the LSH-capped candidate pool
+    of each query on SQ8 codes."""
+    from .pq import (_TOPK_SCHEMA, _exact_rerank, _query_batch,
+                     _scan_shortlist)
     if codes is None:
         codes = sq8_quantize(base, mins, maxs, id_col=id_col,
-                             vector_col=vector_col).select("id", "codes")
-    q_rows = rows_cached(queries, q_id_col, q_vector_col)
+                             vector_col=vector_col)
+    q_rows, q_ids, Q = _query_batch(queries, q_id_col, q_vector_col)
     if not q_rows:
-        return spark.createDataFrame(
-            [], f"q_id BIGINT, id BIGINT, dist DOUBLE, rank INT")
-    q_ids = np.array([r[0] for r in q_rows], dtype=np.int64)
-    Q = np.array([list(r[1]) for r in q_rows], dtype=np.float64)
+        return base.sparkSession.createDataFrame([], _TOPK_SCHEMA)
     mn = np.array(mins, dtype=np.float64)
     rg = np.array(maxs, dtype=np.float64) - mn
     kk = k * rerank
-    bc = spark.sparkContext.broadcast((q_ids, Q, mn, rg, kk))
+    partial = _scan_shortlist(
+        codes, "codes", q_ids, kk,
+        lambda st, R, qi, cell: _sq8_dist(R, st[0][qi]), (Q, mn, rg),
+        decode=lambda st, C: _sq8_decode(C, st[1], st[2]))
+    return _exact_rerank(partial, base, queries, k, kk,
+                         id_col, vector_col, q_id_col, q_vector_col)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        q_ids_, Q_, mn_, rg_, kk_ = bc.value
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            C = np.vstack([np.asarray(c, dtype=np.float64)
-                           for c in pdf["codes"].to_numpy()])
-            R = mn_ + C / 255.0 * rg_              # reconstruction
-            ids = pdf["id"].to_numpy()
-            n = len(ids)
-            take = min(kk_, n)
-            frames = []
-            for qi in range(len(q_ids_)):
-                # element-quantized int64 sum: order-exact in any
-                # engine (SCALE.md pathology #3 addendum — the duckdb
-                # parallel-agg flip); mirrored in SQL_SQ8_ANN's ad CTE
-                d2 = _q9(np.square(R - Q_[qi])).sum(axis=1)
-                if take < n:
-                    # tie-inclusive cut first (duplicated vectors yield
-                    # equal codes AND equal distances, so an arbitrary
-                    # boundary subset would make the shortlist depend on
-                    # batch partitioning) ...
-                    kth = np.partition(d2, take - 1)[take - 1]
-                    part = np.flatnonzero(d2 <= kth)
-                    if len(part) > take:
-                        # ... then bound the plateau: exactly the batch
-                        # top-take under the global (d2, id) order — a
-                        # code-degenerate cluster would otherwise ship
-                        # its whole membership to the shortlist window
-                        # (the BQ 10M pathology)
-                        order = np.lexsort((ids[part], d2[part]))[:take]
-                        part = part[order]
-                else:
-                    part = np.arange(n)
-                frames.append(pd.DataFrame({
-                    "q_id": np.full(len(part), q_ids_[qi], dtype=np.int64),
-                    "id": ids[part], "d2": d2[part]}))
-            yield pd.concat(frames, ignore_index=True)
 
-    id_type = codes.schema["id"].dataType.simpleString()
-    partial = codes.mapInPandas(
-        run, schema=f"q_id BIGINT, id {id_type}, d2 DOUBLE")
-    w_approx = Window.partitionBy("q_id").orderBy(F.col("d2").asc(),
-                                                  F.col("id").asc())
-    shortlist = (partial.withColumn("_ar", F.row_number().over(w_approx))
-                 .filter(F.col("_ar") <= kk).select("q_id", "id"))
+def _sq8_decode(C: np.ndarray, mn: np.ndarray,
+                rg: np.ndarray) -> np.ndarray:
+    """SQ8 code rows ``C`` → their elementwise-IEEE reconstruction
+    ``mn + C/255·rg`` (identical in numpy and SQL)."""
+    return mn + C / 255.0 * rg
 
-    qv = queries.select(F.col(q_id_col).alias("q_id"),
-                        F.col(q_vector_col).alias("_qv"))
-    bv = base.select(F.col(id_col).alias("id"),
-                     F.col(vector_col).alias("_bv"))
-    w_exact = Window.partitionBy("q_id").orderBy(F.col("dist").asc(),
-                                                 F.col("id").asc())
-    # the shortlist is Q*k*rerank-bounded by construction: broadcast
-    # it so the exact re-rank NEVER shuffles the base vector table
-    # (unhinted, a >10MB shortlist silently flipped this join to
-    # sort-merge over the full base — measured 5x at 10M)
-    return (shortlist.hint("broadcast").join(bv, on="id")
-            .join(F.broadcast(qv), on="q_id")
-            .withColumn("dist", l2_expr("_qv", "_bv"))
-            .withColumn("rank", F.row_number().over(w_exact))
-            .filter(F.col("rank") <= k)
-            .select("q_id", "id", "dist", "rank"))
+
+_SQ8_ROWS = 256
+
+
+def _sq8_dist(R: np.ndarray, Q: np.ndarray) -> np.ndarray:
+    """SQ8 approximate distance of reconstructed rows ``R``
+    (:func:`_sq8_decode`) to ``Q`` (one query, or one per row), as an
+    element-quantized (``_q9``) int64 sum — order-exact in any engine
+    (SCALE.md pathology #3 addendum, the duckdb parallel-agg flip);
+    mirrored by SQL_SQ8_ANN's ad CTE.
+
+    Scored ``_SQ8_ROWS`` rows at a time so the elementwise temporaries
+    stay cache-sized: batch-sized ones made each call's speed depend on
+    the allocator's page-fault churn (0.41 s against 0.55–1.26 s per
+    10k-row, 64-d batch of 100 queries, measured on a 4-core Xeon)."""
+    Q = np.broadcast_to(Q, R.shape)
+    return np.concatenate([np.zeros(0, dtype=np.int64)] + [
+        _q9(np.square(R[i:i + _SQ8_ROWS] - Q[i:i + _SQ8_ROWS])).sum(axis=1)
+        for i in range(0, len(R), _SQ8_ROWS)])
 
 
 def sq8_stats(df: DataFrame, vector_col: str = "vector") -> tuple[list, list]:
@@ -2033,11 +2007,8 @@ def _bq_encode_cells(base: DataFrame, thresholds: list,
     spark = base.sparkSession
     enc = bq_encode(base, thresholds, id_col=id_col,
                     vector_col=vector_col, keep=(vector_col,))
-    c_rows = rows_cached(centroids, c_id_col, c_vector_col)
-    cid = np.array([r[0] for r in c_rows], dtype=np.int64)
-    C = np.array([list(r[1]) for r in c_rows], dtype=np.float64)
-    o = np.argsort(cid, kind="stable")
-    bc = spark.sparkContext.broadcast((cid[o], C[o]))
+    bc = spark.sparkContext.broadcast(_sorted_centroids(
+        rows_cached(centroids, c_id_col, c_vector_col)))
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         cid_, C_ = bc.value
@@ -2067,99 +2038,44 @@ def bq_topk(base: DataFrame, queries: DataFrame, thresholds: list,
     ``k*rerank`` with true vectors → (q_id, id, dist, rank ≤ k).
 
     Same two-stage gated shape as :func:`sq8_topk`: the approx stage is
-    an Arrow kernel over the words column with a per-batch tie-inclusive
-    partial top-k (Hamming is integer-valued, so ties are common — the
-    cut keeps every row at the kth value, and the deterministic global
-    order is (hamming, id)); the exact stage joins true vectors for only
-    Q·k·rerank ids.  1-bit codes are the coarsest tier, so ``rerank``
-    defaults higher (8) than SQ8's 4.
+    the shared :func:`~.pq._scan_shortlist` kernel over the words
+    column scoring with :func:`_hamming_score`.  Hamming is
+    integer-valued with massive tie plateaus (every member of a
+    code-degenerate cluster shares one value — a tie-INCLUSIVE cut kept
+    ~whole clusters per batch, measured 10× at 10M as rerank grows);
+    the kernel's exact batch top-``kk`` under the global (hamming, id)
+    order stays partition-invariant and flat in rerank.  The exact
+    stage joins true vectors for only Q·k·rerank ids.  1-bit codes are
+    the coarsest tier, so ``rerank`` defaults higher (8) than SQ8's 4.
 
     STANDALONE mode scans every code per query — the exhaustive
     compressed baseline.  At scale, compose with LSH/IVF routing the
     same way SQ8 composes via ``AnnIndex.with_sq8``."""
-    from ..functions.distance import l2_expr
-    spark = base.sparkSession
+    from .pq import (_TOPK_SCHEMA, _exact_rerank, _query_batch,
+                     _scan_shortlist)
     if codes is None:
         codes = bq_encode(base, thresholds, id_col=id_col,
                           vector_col=vector_col)
-    q_rows = rows_cached(queries, q_id_col, q_vector_col)
+    q_rows, q_ids, Q = _query_batch(queries, q_id_col, q_vector_col)
     if not q_rows:
-        return spark.createDataFrame(
-            [], "q_id BIGINT, id BIGINT, dist DOUBLE, rank INT")
-    q_ids = np.array([r[0] for r in q_rows], dtype=np.int64)
-    Q = np.array([list(r[1]) for r in q_rows], dtype=np.float64)
-    qwords = _pack_query_words(Q, thresholds)
+        return base.sparkSession.createDataFrame([], _TOPK_SCHEMA)
     kk = k * rerank
-    bc = spark.sparkContext.broadcast((q_ids, qwords, kk))
+    partial = _scan_shortlist(codes, "words", q_ids, kk, _hamming_score,
+                              _pack_query_words(Q, thresholds))
+    return _exact_rerank(partial, base, queries, k, kk,
+                         id_col, vector_col, q_id_col, q_vector_col)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        q_ids_, qw_, kk_ = bc.value
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            W = np.vstack([np.asarray(ws, dtype=np.int64)
-                           for ws in pdf["words"].to_numpy()]).view(np.uint64)
-            ids = pdf["id"].to_numpy()
-            n = len(ids)
-            take = min(kk_, n)
-            # Hamming is integer-valued with massive tie plateaus
-            # (every member of a code-degenerate cluster shares one
-            # value), so a tie-INCLUSIVE cut can keep ~whole clusters
-            # per batch (measured: 10× blowup at 10M as rerank grows).
-            # Instead select EXACTLY the batch top-take by the global
-            # order (ham, id) via one packed-int argpartition — still
-            # partition-invariant (a global top-kk row is a batch
-            # top-kk row under the same total order), flat in rerank.
-            ids_i = np.asarray(ids)
-            packable = (np.issubdtype(ids_i.dtype, np.integer)
-                        and n and ids_i.min() >= 0
-                        and ids_i.max() < (1 << 48))
-            frames = []
-            for qi in range(len(q_ids_)):
-                ham = _popcount64(W ^ qw_[qi]).sum(axis=1)
-                if take < n:
-                    if packable:
-                        key = (ham << np.int64(48)) | ids_i.astype(np.int64)
-                        part = np.argpartition(key, take - 1)[:take]
-                    else:
-                        kth = np.partition(ham, take - 1)[take - 1]
-                        part = np.flatnonzero(ham <= kth)
-                else:
-                    part = np.arange(n)
-                frames.append(pd.DataFrame({
-                    "q_id": np.full(len(part), q_ids_[qi], dtype=np.int64),
-                    "id": ids[part], "ham": ham[part]}))
-            yield pd.concat(frames, ignore_index=True)
 
-    id_type = codes.schema["id"].dataType.simpleString()
-    partial = codes.mapInPandas(
-        run, schema=f"q_id BIGINT, id {id_type}, ham BIGINT")
-    w_approx = Window.partitionBy("q_id").orderBy(F.col("ham").asc(),
-                                                  F.col("id").asc())
-    shortlist = (partial.withColumn("_ar", F.row_number().over(w_approx))
-                 .filter(F.col("_ar") <= kk).select("q_id", "id"))
-
-    qv = queries.select(F.col(q_id_col).alias("q_id"),
-                        F.col(q_vector_col).alias("_qv"))
-    bv = base.select(F.col(id_col).alias("id"),
-                     F.col(vector_col).alias("_bv"))
-    w_exact = Window.partitionBy("q_id").orderBy(F.col("dist").asc(),
-                                                 F.col("id").asc())
-    # the shortlist is Q*k*rerank-bounded by construction: broadcast
-    # it so the exact re-rank NEVER shuffles the base vector table
-    # (unhinted, a >10MB shortlist silently flipped this join to
-    # sort-merge over the full base — measured 5x at 10M)
-    return (shortlist.hint("broadcast").join(bv, on="id")
-            .join(F.broadcast(qv), on="q_id")
-            .withColumn("dist", l2_expr("_qv", "_bv"))
-            .withColumn("rank", F.row_number().over(w_exact))
-            .filter(F.col("rank") <= k)
-            .select("q_id", "id", "dist", "rank"))
+def _hamming_score(qwords: np.ndarray, W: np.ndarray, qi: int,
+                   cell) -> np.ndarray:
+    """Hamming distance of packed word rows ``W`` to query ``qi``."""
+    return _popcount64(W ^ qwords[qi]).sum(axis=1)
 
 
 def _pack_query_words(Q: np.ndarray, thresholds: list) -> np.ndarray:
-    """Binary-quantize query vectors into packed MSB-first uint64 words
-    (the driver-side mirror of :func:`bq_encode`'s native expression)."""
+    """Binary-quantize query vectors into packed MSB-first 64-bit words
+    (the driver-side mirror of :func:`bq_encode`'s native expression),
+    viewed as int64 like the BIGINT words column."""
     thr = np.array(thresholds, dtype=np.float64)
     dim = len(thresholds)
     n_words = (dim + 63) // 64
@@ -2170,7 +2086,7 @@ def _pack_query_words(Q: np.ndarray, thresholds: list) -> np.ndarray:
         for j in range(chunk.shape[1]):                # MSB-first
             qwords[:, w] = ((qwords[:, w] << np.uint64(1))
                             | chunk[:, j].astype(np.uint64))
-    return qwords
+    return qwords.view(np.int64)
 
 
 def ivf_bq_topk(base: DataFrame, queries: DataFrame, centroids: DataFrame,
@@ -2202,90 +2118,40 @@ def ivf_bq_topk(base: DataFrame, queries: DataFrame, centroids: DataFrame,
     Pass ``assigned`` / ``codes`` to reuse ingest-time materializations
     (both computed once per corpus, never per query).  ``probe_mass``
     switches to per-query ADAPTIVE probing (see
-    :func:`ivf_bq_sq8_topk` / :func:`_adaptive_probe_cells`)."""
+    :func:`ivf_bq_sq8_topk` / :func:`_probe_cells_local`)."""
+    from .pq import _TOPK_SCHEMA, _exact_rerank
     kk = k * rerank
-    probe_cells = None
+    mass = None
     if probe_mass is not None:
-        # one-corpus-pass census + probes (r12 optimization round):
-        # the fused (id, words, cell) encode+assign table is
-        # checkpointed and reused by the census AND the Hamming
-        # kernel — see _bq_adaptive_setup
-        assigned, codes, probe_cells = _bq_adaptive_setup(
-            base, queries, centroids, thresholds, probe_mass,
-            assigned, codes, id_col, vector_col,
-            q_id_col, q_vector_col, c_id_col, c_vector_col)
+        assigned, codes, mass = _bq_adaptive_setup(
+            base, centroids, thresholds, probe_mass, assigned, codes,
+            id_col, vector_col, c_id_col, c_vector_col)
     partial = _ivf_bq_partial(base, queries, centroids, thresholds, kk,
                               nprobe, id_col, vector_col, q_id_col,
                               q_vector_col, c_id_col, c_vector_col,
-                              assigned, codes, probe_cells)
+                              assigned, codes, mass)
     if partial is None:
-        return base.sparkSession.createDataFrame(
-            [], "q_id BIGINT, id BIGINT, dist DOUBLE, rank INT")
-    partial = partial.select("q_id", "id",
-                             F.col("ham").cast("double").alias("d2"))
-    from .pq import _exact_rerank
+        return base.sparkSession.createDataFrame([], _TOPK_SCHEMA)
     return _exact_rerank(partial, base, queries, k, kk,
                          id_col, vector_col, q_id_col, q_vector_col)
 
 
-def _adaptive_probe_cells(queries: DataFrame, centroids: DataFrame,
-                          counts: dict, probe_mass: int,
-                          q_id_col: str = "q_id",
-                          q_vector_col: str = "vector",
-                          c_id_col: str = "id",
-                          c_vector_col: str = "vector") -> dict:
-    """Per-query ADAPTIVE probe lists (verdict r07 Next #4 — the
-    O6-retry idea applied to IVF): cells in ascending quantized-L2
-    order from the query, included while the cumulative member count
-    of the cells BEFORE them is < ``probe_mass``.  Every query thus
-    scans ≥ ``probe_mass`` candidate rows: a query in a dense region
-    covers its neighbourhood with few cells, a query whose natural
-    cluster is shattered across many small kmeans cells automatically
-    probes deeper — fixed ``nprobe`` gives the first kind wasted work
-    and the second kind a routing ceiling (SCALE.md §9e addendum 2:
-    p16 sat AT the 0.41 ceiling because 16 probes cover 16/39ths of a
-    shattered cluster regardless of need).
-
-    Distances are ELEMENT-QUANTIZED (``_q9``) and ordered (dd, cid),
-    so the probe SET is reproducible in any engine — the oracle's
-    cumulative-sum window over the same ordering picks identical
-    cells.  Driver-side by design: queries are a collected batch by
-    the family's contract, |C| is bounded (the coarse codebook), and
-    the output is the same per-query cell-list structure the fixed
-    path broadcasts."""
-    q_rows = rows_cached(queries, q_id_col, q_vector_col)
-    c_rows = rows_cached(centroids, c_id_col, c_vector_col)
-    cid = np.array([r[0] for r in c_rows], dtype=np.int64)
-    C = np.array([list(r[1]) for r in c_rows], dtype=np.float64)
-    o0 = np.argsort(cid, kind="stable")
-    cid, C = cid[o0], C[o0]
-    cnt = np.array([counts.get(int(c), 0) for c in cid], dtype=np.int64)
-    out: dict[int, np.ndarray] = {}
-    for r in q_rows:
-        q = np.asarray(list(r[1]), dtype=np.float64)
-        dd = _q9(np.square(C - q)).sum(axis=1)
-        o = np.lexsort((cid, dd))          # (dd, cid) ascending
-        prior = np.concatenate(([0], np.cumsum(cnt[o])[:-1]))
-        out[int(r[0])] = np.sort(cid[o[prior < probe_mass]])
-    return out
-
-
-def _bq_adaptive_setup(base: DataFrame, queries: DataFrame,
-                       centroids: DataFrame, thresholds: list,
-                       probe_mass: int, assigned: DataFrame | None,
+def _bq_adaptive_setup(base: DataFrame, centroids: DataFrame,
+                       thresholds: list, probe_mass: int,
+                       assigned: DataFrame | None,
                        codes: DataFrame | None,
                        id_col: str, vector_col: str,
-                       q_id_col: str, q_vector_col: str,
                        c_id_col: str, c_vector_col: str) -> tuple:
-    """Cell census + per-query adaptive probe sets for the IVF-BQ
-    family, scanning the corpus ONCE (r12 optimization round): with
-    neither ``assigned`` nor ``codes`` supplied, the fused
-    (id, words, cell) encode+assign table (:func:`_bq_encode_cells`)
-    is eagerly checkpointed and serves as BOTH the census source and
-    the Hamming-kernel input — the census-only `ivf_assign` corpus
-    pass this path previously paid is gone.  A supplied persisted
-    ``assigned`` keeps the cheap cached census exactly as before.
-    Returns ``(assigned, codes, probe_cells)``."""
+    """Cell census for the adaptive IVF-BQ family, scanning the corpus
+    ONCE (r12 optimization round): with neither ``assigned`` nor
+    ``codes`` supplied, the fused (id, words, cell) encode+assign table
+    (:func:`_bq_encode_cells`) is eagerly checkpointed and serves as
+    BOTH the census source and the Hamming-kernel input — the
+    census-only `ivf_assign` corpus pass this path previously paid is
+    gone.  A supplied persisted ``assigned`` keeps the cheap cached
+    census exactly as before.  Returns ``(assigned, codes, mass)``,
+    ``mass`` being the ``(counts, probe_mass)`` pair
+    :func:`_probe_cells_local` takes."""
     if assigned is None and codes is None:
         codes = materialize(_bq_encode_cells(
             base, thresholds, centroids, id_col, vector_col, c_id_col,
@@ -2304,10 +2170,7 @@ def _bq_adaptive_setup(base: DataFrame, queries: DataFrame,
         census_src = assigned
     counts = {r["cell"]: r["count"] for r in
               census_src.groupBy("cell").count().collect()}
-    probe_cells = _adaptive_probe_cells(
-        queries, centroids, counts, probe_mass,
-        q_id_col, q_vector_col, c_id_col, c_vector_col)
-    return assigned, codes, probe_cells
+    return assigned, codes, (counts, probe_mass)
 
 
 def _ivf_bq_partial(base: DataFrame, queries: DataFrame,
@@ -2317,42 +2180,34 @@ def _ivf_bq_partial(base: DataFrame, queries: DataFrame,
                     c_id_col: str, c_vector_col: str,
                     assigned: DataFrame | None,
                     codes: DataFrame | None,
-                    probe_cells: dict | None = None) -> DataFrame | None:
+                    mass: tuple | None = None) -> DataFrame | None:
     """IVF-routed BQ Hamming pre-screen shared by :func:`ivf_bq_topk`
-    and :func:`ivf_bq_sq8_topk`: (q_id, id, ham) batch partials, at
-    most ``kk`` rows per (query, batch), probed cells only.  ``None``
-    when the query set is empty.  ``probe_cells`` (q_id → sorted cell
-    array, e.g. from :func:`_adaptive_probe_cells`) overrides the
-    fixed top-``nprobe`` probe selection.
+    and :func:`ivf_bq_sq8_topk`: (q_id, id, d) batch partials from
+    :func:`~.pq._scan_shortlist`, at most ``kk`` rows per (query,
+    batch), probed cells only.  ``None`` when the query set is empty.
+    Probe sets are computed DRIVER-SIDE on the already-collected query
+    batch by :func:`_probe_cells_local` — fixed top-``nprobe``, or
+    adaptive with ``mass=(counts, budget)``.
 
     On-the-fly plan shape (r12 optimization round): when NEITHER
     ``assigned`` nor ``codes`` is supplied, the corpus scan is ONE
-    fused pass — JVM-native BQ word packing feeding an Arrow kernel
-    that derives each row's coarse cell inline
-    (:func:`_assign_cells_float`, the exact `ivf_assign` semantics)
-    and Hamming-scores probed cells.  This removes the separate assign
-    kernel pass over the corpus AND the codes⋈assigned id-join the
-    previous plan paid (guide §2.4/§4).  Fixed probe sets are computed
-    DRIVER-SIDE on the already-collected query batch
-    (:func:`_probe_cells_local` — the `_nc_batches` kernel body
-    verbatim), removing one more Spark job per call.  Pass persisted
+    fused pass — JVM-native BQ word packing feeding the kernel, which
+    derives each row's coarse cell inline (:func:`_assign_cells_float`,
+    the exact `ivf_assign` semantics) and Hamming-scores probed cells.
+    This removes the separate assign kernel pass over the corpus AND
+    the codes⋈assigned id-join (guide §2.4/§4).  Pass persisted
     ``assigned``/``codes`` to keep the ingest-reuse join path."""
-    spark = base.sparkSession
-    fused = assigned is None and codes is None
-    c_rows = None
-    if fused:
+    from .pq import _query_batch, _scan_shortlist
+    c_rows = rows_cached(centroids, c_id_col, c_vector_col)
+    assign = None
+    if assigned is None and codes is None:
         codes = bq_encode(base, thresholds, id_col=id_col,
                           vector_col=vector_col, keep=(vector_col,))
-        c_rows = rows_cached(centroids, c_id_col, c_vector_col)
-        a_cid = np.array([r[0] for r in c_rows], dtype=np.int64)
-        a_C = np.array([list(r[1]) for r in c_rows], dtype=np.float64)
-        a_ord = np.argsort(a_cid, kind="stable")
-        assign_state = (a_cid[a_ord], a_C[a_ord])
-    elif codes is not None and "cell" in codes.columns:
-        # pre-fused (id, words, cell) table — e.g. the probe_mass
-        # path's checkpointed _bq_encode_cells output: no join needed
-        assign_state = None
-    else:
+        assign = _sorted_centroids(c_rows)
+    elif codes is None or "cell" not in codes.columns:
+        # ingest-reuse join path; a pre-fused (id, words, cell) table —
+        # e.g. the probe_mass path's checkpointed _bq_encode_cells
+        # output — skips it
         if assigned is None:
             assigned = ivf_assign(base, centroids, id_col, vector_col,
                                   c_id_col, c_vector_col)
@@ -2361,85 +2216,16 @@ def _ivf_bq_partial(base: DataFrame, queries: DataFrame,
                               vector_col=vector_col)
         codes = codes.join(assigned.select(F.col(id_col).alias("id"),
                                            "cell"), on="id")
-        assign_state = None
-    q_rows = rows_cached(queries, q_id_col, q_vector_col)
+    q_rows, q_ids, Q = _query_batch(queries, q_id_col, q_vector_col)
     if not q_rows:
         return None
-    q_ids = np.array([r[0] for r in q_rows], dtype=np.int64)
-    if probe_cells is None:
-        if c_rows is None:
-            c_rows = rows_cached(centroids, c_id_col, c_vector_col)
-        probed = _probe_cells_local(q_rows, c_rows, nprobe)
-        cell_lists = [probed.get(int(q), np.empty(0, dtype=np.int64))
-                      for q in q_ids]
-    else:
-        cell_lists = [np.asarray(probe_cells.get(int(q), ()),
-                                 dtype=np.int64) for q in q_ids]
-    Q = np.array([list(r[1]) for r in q_rows], dtype=np.float64)
-    qwords = _pack_query_words(Q, thresholds)
-    bc = spark.sparkContext.broadcast((q_ids, qwords, kk, cell_lists,
-                                       assign_state))
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        q_ids_, qw_, kk_, cells_, assign_ = bc.value
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            W = np.vstack([np.asarray(ws, dtype=np.int64)
-                           for ws in pdf["words"].to_numpy()]).view(np.uint64)
-            ids = pdf["id"].to_numpy()
-            if assign_ is not None:
-                V = np.vstack([np.asarray(v, dtype=np.float64)
-                               for v in pdf[vector_col].to_numpy()])
-                row_cell = _assign_cells_float(V, assign_[0], assign_[1])
-            else:
-                row_cell = np.asarray(pdf["cell"].to_numpy(),
-                                      dtype=np.int64)
-            # one cell-sort per batch, then each query's probed rows are
-            # searchsorted range gathers — O(kept) per query instead of
-            # an O(rows) isin sweep per query (the difference between
-            # nprobe/|C| and 1 of the batch touched per query)
-            order = np.argsort(row_cell, kind="stable")
-            sorted_cells = row_cell[order]
-            ids_i = np.asarray(ids)
-            packable = (np.issubdtype(ids_i.dtype, np.integer)
-                        and len(ids_i) and ids_i.min() >= 0
-                        and ids_i.max() < (1 << 48))
-            frames = []
-            for qi in range(len(q_ids_)):
-                cs = cells_[qi]
-                lo = np.searchsorted(sorted_cells, cs, side="left")
-                hi = np.searchsorted(sorted_cells, cs, side="right")
-                keep = (np.concatenate([order[a:b] for a, b in zip(lo, hi)])
-                        if len(cs) else np.empty(0, dtype=np.int64))
-                if len(keep) == 0:
-                    continue
-                ham = _popcount64(W[keep] ^ qw_[qi]).sum(axis=1)
-                take = min(kk_, len(keep))
-                if take < len(keep):
-                    if packable:
-                        # exact batch top-take by the global (ham, id)
-                        # order — bounded under BQ's tie plateaus (see
-                        # bq_topk)
-                        key = ((ham << np.int64(48))
-                               | ids_i[keep].astype(np.int64))
-                        part = np.argpartition(key, take - 1)[:take]
-                    else:
-                        kth = np.partition(ham, take - 1)[take - 1]
-                        part = np.flatnonzero(ham <= kth)
-                else:
-                    part = np.arange(len(keep))
-                frames.append(pd.DataFrame({
-                    "q_id": np.full(len(part), q_ids_[qi], dtype=np.int64),
-                    "id": ids[keep][part], "ham": ham[part]}))
-            if frames:
-                yield pd.concat(frames, ignore_index=True)
-
-    id_type = codes.schema["id"].dataType.simpleString()
-    in_cols = ["id", "words", vector_col if fused else "cell"]
-    return (codes.select(*in_cols)
-            .mapInPandas(run,
-                         schema=f"q_id BIGINT, id {id_type}, ham BIGINT"))
+    probed = _probe_cells_local(q_rows, c_rows, nprobe, mass=mass)
+    cell_lists = [probed.get(int(q), np.empty(0, dtype=np.int64))
+                  for q in q_ids]
+    return _scan_shortlist(codes, "words", q_ids, kk, _hamming_score,
+                           _pack_query_words(Q, thresholds),
+                           cell_lists=cell_lists, assign=assign,
+                           vector_col=vector_col)
 
 
 def ivf_bq_sq8_topk(base: DataFrame, queries: DataFrame,
@@ -2475,12 +2261,11 @@ def ivf_bq_sq8_topk(base: DataFrame, queries: DataFrame,
     tier-3 is the shared :func:`~.pq._exact_rerank` broadcast tail.
     Nothing corpus-sized shuffles in any tier.
 
-    SQ8 distances are the elementwise-IEEE reconstruction of
-    :func:`sq8_topk`, so the whole three-tier result is
-    oracle-checkable cross-engine.
+    SQ8 distances are :func:`sq8_topk`'s (:func:`_sq8_dist`), so the
+    whole three-tier result is oracle-checkable cross-engine.
 
     ``probe_mass`` switches probing from fixed top-``nprobe`` cells to
-    PER-QUERY ADAPTIVE coverage (:func:`_adaptive_probe_cells`): cells
+    PER-QUERY ADAPTIVE coverage (:func:`_probe_cells_local`): cells
     in quantized-distance order until the cumulative member count of
     prior cells reaches the budget.  This is the §9e-addendum-2
     ceiling fix — at 10M the p16 point sat AT its routing ceiling
@@ -2489,34 +2274,24 @@ def ivf_bq_sq8_topk(base: DataFrame, queries: DataFrame,
     each query needs it.  The probe set stays engine-reproducible
     (quantized distances + (dd, cid) order + a cumulative-sum rule the
     oracle mirrors with one window)."""
+    from .pq import _TOPK_SCHEMA, _exact_rerank, _query_batch, _shortlist
     kk1 = k * bq_keep
-    probe_cells = None
+    mass = None
     if probe_mass is not None:
-        # one-corpus-pass census + probes (r12 optimization round):
-        # see _bq_adaptive_setup / ivf_bq_topk
-        assigned, codes, probe_cells = _bq_adaptive_setup(
-            base, queries, centroids, thresholds, probe_mass,
-            assigned, codes, id_col, vector_col,
-            q_id_col, q_vector_col, c_id_col, c_vector_col)
+        assigned, codes, mass = _bq_adaptive_setup(
+            base, centroids, thresholds, probe_mass, assigned, codes,
+            id_col, vector_col, c_id_col, c_vector_col)
     partial = _ivf_bq_partial(base, queries, centroids, thresholds, kk1,
                               nprobe, id_col, vector_col, q_id_col,
                               q_vector_col, c_id_col, c_vector_col,
-                              assigned, codes, probe_cells)
+                              assigned, codes, mass)
     spark = base.sparkSession
     if partial is None:
-        return spark.createDataFrame(
-            [], "q_id BIGINT, id BIGINT, dist DOUBLE, rank INT")
-    w_bq = Window.partitionBy("q_id").orderBy(F.col("ham").asc(),
-                                              F.col("id").asc())
-    short1 = (partial.withColumn("_ar", F.row_number().over(w_bq))
-              .filter(F.col("_ar") <= kk1).select("q_id", "id"))
-
+        return spark.createDataFrame([], _TOPK_SCHEMA)
     if sq8_codes is None:
         sq8_codes = sq8_quantize(base, mins, maxs, id_col=id_col,
                                  vector_col=vector_col).select("id", "codes")
-    q_rows = rows_cached(queries, q_id_col, q_vector_col)
-    q_ids = np.array([r[0] for r in q_rows], dtype=np.int64)
-    Q = np.array([list(r[1]) for r in q_rows], dtype=np.float64)
+    _, q_ids, Q = _query_batch(queries, q_id_col, q_vector_col)
     mn = np.array(mins, dtype=np.float64)
     rg = np.array(maxs, dtype=np.float64) - mn
     qidx = {int(q): i for i, q in enumerate(q_ids)}
@@ -2527,22 +2302,21 @@ def ivf_bq_sq8_topk(base: DataFrame, queries: DataFrame,
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            C = np.vstack([np.asarray(c, dtype=np.float64)
+            C = np.vstack([np.asarray(c, dtype=np.int64)
                            for c in pdf["codes"].to_numpy()])
-            R = mn_ + C / 255.0 * rg_              # sq8_topk reconstruction
             rows = np.array([qidx_[int(q)] for q in pdf["q_id"].to_numpy()])
-            # element-quantized like sq8_topk (mirrors the oracle's ad)
-            d2 = _q9(np.square(R - Q_[rows])).sum(axis=1)
             yield pd.DataFrame({"q_id": pdf["q_id"].to_numpy(),
-                                "id": pdf["id"].to_numpy(), "d2": d2})
+                                "id": pdf["id"].to_numpy(),
+                                "d": _sq8_dist(_sq8_decode(C, mn_, rg_),
+                                               Q_[rows])})
 
     id_type = sq8_codes.schema["id"].dataType.simpleString()
     # shortlist is Q·k·bq_keep-bounded: broadcast it so tier-2 reads
     # the code table map-side (same discipline as _exact_rerank)
-    pairs = short1.hint("broadcast").join(sq8_codes, on="id")
+    pairs = _shortlist(partial, kk1).hint("broadcast").join(sq8_codes,
+                                                            on="id")
     partial2 = pairs.mapInPandas(
-        score, schema=f"q_id BIGINT, id {id_type}, d2 DOUBLE")
-    from .pq import _exact_rerank
+        score, schema=f"q_id BIGINT, id {id_type}, d BIGINT")
     return _exact_rerank(partial2, base, queries, k, k * rerank,
                          id_col, vector_col, q_id_col, q_vector_col)
 

@@ -3296,7 +3296,7 @@ def sql_ivfbq_sq8_ann(nq: int, kk1: int, kk2: int,
     down to kk2 before the exact re-rank.
 
     ``probe_mass`` switches the cprobes CTE to ADAPTIVE coverage
-    (mirrors ops/similarity.py:_adaptive_probe_cells): cells ordered
+    (mirrors ops/similarity.py:_probe_cells_local): cells ordered
     by element-quantized distance, kept while the running member
     count of PRIOR cells is below the budget — one cumulative-sum
     window, exactly the Spark rule."""
@@ -3397,7 +3397,7 @@ def q_ivfbq_sq8_adaptive(spark, sf_dir):
     the cumulative member count covers a mass budget — dense-region
     queries probe few cells, queries whose neighbourhood is shattered
     across many cells probe deeper, at the same total scanned rows
-    (ops/similarity.py:_adaptive_probe_cells)."""
+    (ops/similarity.py:_probe_cells_local)."""
     from .ops.similarity import (sq8_stats, bq_thresholds, ivf_bq_sq8_topk)
     base = _emb(spark, sf_dir)
     centroids = base.filter(F.col("id") < N_IVF_CENTROIDS)

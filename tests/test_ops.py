@@ -920,30 +920,54 @@ def test_bq_topk_partition_invariant(spark):
 def test_topk_boundary_ties_deterministic(spark):
     """Duplicated vectors put exact ties on the partial-top-k boundary:
     every kernel must return the lowest-id winners regardless of how the
-    base table is partitioned (tie-inclusive batch cut + (score, id)
-    window)."""
+    base table is partitioned (exact (score, id) batch cut + (score, id)
+    window).  Covers exact kNN and the SQ8, BQ, PQ, IVF-BQ and IVF-PQ
+    compressed-refine scans, over integer ids and a string-id copy."""
     from fspann_query_system_spark.query.exact import knn_exact
-    from fspann_query_system_spark.ops.similarity import (sq8_topk,
-                                                          sq8_stats)
+    from fspann_query_system_spark.ops.pq import ivfpq_topk, pq_topk
+    from fspann_query_system_spark.ops.similarity import (
+        bq_thresholds, bq_topk, ivf_bq_topk, sq8_stats, sq8_topk)
     # 40 identical vectors + 2 distinct closer ones
-    rows = ([(i, [1.0, 1.0, 1.0, 1.0]) for i in range(40)]
-            + [(100, [0.5, 0.5, 0.5, 0.5]), (101, [0.4, 0.4, 0.4, 0.4])])
+    nums = list(range(40)) + [100, 101]
+    vecs = [[1.0] * 4] * 40 + [[0.5] * 4, [0.4] * 4]
     q = spark.createDataFrame([(0, [0.0, 0.0, 0.0, 0.0])],
                               "q_id LONG, vector ARRAY<DOUBLE>")
-    expect_knn = {101, 100} | set(range(8))   # closest two, then lowest ids
-    for nparts in (1, 7, 32):
-        df = spark.createDataFrame(rows, "id LONG, vector ARRAY<DOUBLE>") \
-                  .repartition(nparts)
-        got = {r.id for r in knn_exact(df, q, k=10).collect()}
-        assert got == expect_knn, (nparts, sorted(got))
-        mins, maxs = sq8_stats(df)
-        got8 = {r.id for r in sq8_topk(df, q, mins, maxs, k=10,
-                                       rerank=1).collect()}
-        assert got8 == expect_knn, (nparts, sorted(got8))
+    # a codebook whose cells are the three distinct sub-vectors (exact
+    # PQ codes), and two coarse cells that are both probed
+    cb = spark.createDataFrame(
+        [(s, c, [v, v]) for s in range(2)
+         for c, v in enumerate((1.0, 0.5, 0.4))],
+        "sub INT, cell INT, vector ARRAY<DOUBLE>")
+    cents = spark.createDataFrame([(0, [1.0] * 4), (1, [0.45] * 4)],
+                                  "id LONG, vector ARRAY<DOUBLE>")
+    for id_type, ident in (("LONG", int), ("STRING", "v{:03d}".format)):
+        # closest two, then the lowest ids
+        expect = {ident(i) for i in [101, 100] + list(range(8))}
+        rows = [(ident(i), v) for i, v in zip(nums, vecs)]
+        for nparts in (1, 7, 32):
+            df = spark.createDataFrame(
+                rows, f"id {id_type}, vector ARRAY<DOUBLE>") \
+                .repartition(nparts)
+            mins, maxs = sq8_stats(df)
+            thr = bq_thresholds(mins, maxs)
+            runs = {
+                "sq8": sq8_topk(df, q, mins, maxs, k=10, rerank=1),
+                "bq": bq_topk(df, q, thr, k=10, rerank=1),
+                "pq": pq_topk(df, q, cb, k=10, rerank=1),
+                "ivf_bq": ivf_bq_topk(df, q, cents, thr, k=10, nprobe=2,
+                                      rerank=1),
+                "ivfpq": ivfpq_topk(df, q, cents, cb, k=10, nprobe=2,
+                                    rerank=1)}
+            if id_type == "LONG":
+                runs["knn_exact"] = knn_exact(df, q, k=10)
+            for name, out in runs.items():
+                got = {r.id for r in out.collect()}
+                assert got == expect, (id_type, nparts, name, sorted(got))
     # cosine: all 40 dups have cosine 1.0 with the query direction
     from fspann_query_system_spark.ops.similarity import cosine_topk
     qc = spark.createDataFrame([(0, [1.0, 1.0, 1.0, 1.0])],
                                "q_id LONG, vector ARRAY<DOUBLE>")
+    rows = list(zip(nums, vecs))
     for nparts in (1, 7, 32):
         df = spark.createDataFrame(rows, "id LONG, vector ARRAY<DOUBLE>") \
                   .repartition(nparts)
@@ -2578,26 +2602,26 @@ def test_ivf_bq_sq8_tight_budget_recall_and_plateau_coverage(spark,
         assert top.id == qid and top.dist == 0.0
 
 
-def test_adaptive_probe_cells_mass_coverage_semantics(spark, clustered):
-    """_adaptive_probe_cells: cells in quantized-distance order, kept
+def test_probe_cells_local_mass_coverage_semantics(spark, clustered):
+    """_probe_cells_local(mass=): cells in quantized-distance order, kept
     while the cumulative member count of PRIOR cells is < probe_mass —
     so (a) every query's probed mass reaches the budget (or exhausts
     the corpus), (b) removing the last probed cell drops coverage
     below the budget (no over-probing), (c) a saturating budget probes
     every non-empty cell."""
     from fspann_query_system_spark.ops.similarity import (
-        _adaptive_probe_cells, ivf_assign)
+        _probe_cells_local, ivf_assign)
     df, X = clustered
     small = df.filter(F.col("id") < 400)
     centroids = small.filter(F.col("id") % 50 == 0)   # 8 cells
     assigned = ivf_assign(small, centroids)
     counts = {r["cell"]: r["count"] for r in
               assigned.groupBy("cell").count().collect()}
-    q = small.filter(F.col("id") < 6) \
-        .select(F.col("id").alias("q_id"), "vector")
+    q_rows = small.filter(F.col("id") < 6) \
+        .select(F.col("id").alias("q_id"), "vector").collect()
+    c_rows = centroids.select("id", "vector").collect()
     mass = 120
-    probes = _adaptive_probe_cells(q, centroids, counts, mass,
-                                   c_id_col="id")
+    probes = _probe_cells_local(q_rows, c_rows, 1, mass=(counts, mass))
     assert set(probes) == set(range(6))
     total = sum(counts.values())
     for cells in probes.values():
@@ -2607,10 +2631,44 @@ def test_adaptive_probe_cells_mass_coverage_semantics(spark, clustered):
         # for the cell that followed it => the SMALLEST probed set
         biggest = max(counts.get(int(c), 0) for c in cells)
         assert covered - biggest < mass
-    full = _adaptive_probe_cells(q, centroids, counts, total + 1,
-                                 c_id_col="id")
+    full = _probe_cells_local(q_rows, c_rows, 1, mass=(counts, total + 1))
     nonempty = {c for c, n in counts.items() if n > 0}
     assert all(set(map(int, v)) >= nonempty for v in full.values())
+
+
+@pytest.mark.parametrize("family", ["ivf_topk", "ivfpq_topk", "ivf_bq_topk",
+                                    "ivf_bq_sq8_topk"])
+def test_probe_mass_below_one_raises(spark, clustered, family):
+    """A probe-mass budget below 1 probes no cell: every IVF family
+    refuses it with ValueError instead of returning zero rows."""
+    from fspann_query_system_spark.ops.pq import ivfpq_topk
+    from fspann_query_system_spark.ops.similarity import (
+        bq_thresholds, ivf_assign, ivf_bq_sq8_topk, ivf_bq_topk, ivf_topk,
+        sq8_stats)
+    df, X = clustered
+    small = df.filter(F.col("id") < 200)
+    cents = small.filter(F.col("id") % 50 == 0)
+    assigned = ivf_assign(small, cents)
+    q = small.filter(F.col("id") < 3) \
+        .select(F.col("id").alias("q_id"), "vector")
+    mins, maxs = sq8_stats(small)
+    thr = bq_thresholds(mins, maxs)
+    cb = spark.createDataFrame(
+        [(s, c, X[c, 8 * s:8 * s + 8].tolist())
+         for s in range(2) for c in range(4)],
+        "sub INT, cell INT, vector ARRAY<DOUBLE>")
+    calls = {
+        "ivf_topk": lambda: ivf_topk(small, q, cents, k=5, probe_mass=0,
+                                     assigned=assigned),
+        "ivfpq_topk": lambda: ivfpq_topk(small, q, cents, cb, k=5,
+                                         probe_mass=0, assigned=assigned),
+        "ivf_bq_topk": lambda: ivf_bq_topk(small, q, cents, thr, k=5,
+                                           probe_mass=0, assigned=assigned),
+        "ivf_bq_sq8_topk": lambda: ivf_bq_sq8_topk(
+            small, q, cents, thr, mins, maxs, k=5, probe_mass=0,
+            assigned=assigned)}
+    with pytest.raises(ValueError, match="probe mass budget"):
+        calls[family]()
 
 
 def test_ivf_bq_sq8_adaptive_budget_beats_matched_fixed_probes(spark,

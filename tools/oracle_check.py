@@ -10,12 +10,15 @@ Usage: python3 tools/oracle_check.py [--window] [name ...]
 from __future__ import annotations
 
 import argparse
+import os
 import sys
 import time
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+# the repo root, so the package imports from any working directory
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from fspann_query_system_spark.session import get_spark          # noqa: E402
 from fspann_query_system_spark.workloads import (QUERIES,        # noqa: E402
@@ -54,7 +57,50 @@ def rows_normalized(cols, rows):
     return sorted(tuple(norm(r[i]) for i in order) for r in rows)
 
 
-def main():
+def oracle_connection():
+    """A DuckDB connection with one view per registry table under ``SF``."""
+    con = duckdb.connect()
+    for t in TABLES:
+        con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{SF}/{t}.parquet'")
+    return con
+
+
+def check_entry(spark, con, oracles: dict, name: str) -> tuple[str, str]:
+    """Run registry entry ``name`` and compare it with its DuckDB oracle
+    → ``(status, line)``, status one of "pass", "fail", "rows-only"."""
+    t0 = time.time()
+    try:
+        sdf = QUERIES[name](spark, SF)
+        s_cols = [c.lower() for c in sdf.columns]
+        s_rows = [tuple(r) for r in sdf.collect()]
+        if name not in oracles:
+            return "rows-only", (f"  {name:28s} rows-only: {len(s_rows)} "
+                                 f"rows ({time.time()-t0:.1f}s)")
+        # fetchdf (NOT fetchall) — the reference compare goes through
+        # pandas, where HUGEINT becomes float64; fetchall would hide that
+        # dtype drift.
+        ddf = con.sql(oracles[name]).fetchdf()
+        d_cols = [c.lower() for c in ddf.columns]
+        d_rows = list(ddf.itertuples(index=False, name=None))
+        a = rows_normalized(s_cols, s_rows)
+        b = rows_normalized(d_cols, d_rows)
+        if sorted(s_cols) != sorted(d_cols):
+            return "fail", (f"✗ {name:28s} SCHEMA: spark={sorted(s_cols)} "
+                            f"duck={sorted(d_cols)}")
+        if len(a) != len(b):
+            return "fail", f"✗ {name:28s} ROWS: spark={len(a)} duck={len(b)}"
+        if a != b:
+            diffs = [(x, y) for x, y in zip(a, b) if x != y]
+            return "fail", (f"✗ {name:28s} VALUES: {len(diffs)} differing "
+                            f"rows; first: spark={diffs[0][0]} "
+                            f"duck={diffs[0][1]}")
+        return "pass", f"✓ {name:28s} {len(a)} rows ({time.time()-t0:.1f}s)"
+    except Exception as e:
+        return "fail", (f"✗ {name:28s} ERROR: {type(e).__name__}: "
+                        f"{str(e).splitlines()[0][:140]}")
+
+
+def main() -> int:
     ap = argparse.ArgumentParser(description=__doc__)
     ap.add_argument("--window", action="store_true",
                     help="check the driver's gate window (first 50 entries)")
@@ -71,50 +117,23 @@ def main():
     unknown = [n for n in names if n not in QUERIES]
     if unknown:
         ap.error(f"unknown query names: {unknown}")
+    # Spark's Python workers inherit PYTHONPATH from the JVM, not this
+    # process's sys.path: export the repo root before the session starts
+    os.environ["PYTHONPATH"] = os.pathsep.join(
+        p for p in (ROOT, os.environ.get("PYTHONPATH")) if p)
     spark = get_spark("oracle-check")
     spark.sparkContext.setLogLevel("ERROR")
-    con = duckdb.connect()
-    for t in TABLES:
-        con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{SF}/{t}.parquet'")
+    con = oracle_connection()
     oracles = oracle_sql_map()
-    n_pass = n_fail = 0
+    counts = {"pass": 0, "fail": 0, "rows-only": 0}
     for name in names:
-        t0 = time.time()
-        try:
-            sdf = QUERIES[name](spark, SF)
-            s_cols = [c.lower() for c in sdf.columns]
-            s_rows = [tuple(r) for r in sdf.collect()]
-            if name not in oracles:
-                print(f"  {name:28s} rows-only: {len(s_rows)} rows "
-                      f"({time.time()-t0:.1f}s)")
-                continue
-            # fetchdf (NOT fetchall) — the driver goes through pandas, where
-            # HUGEINT becomes float64; fetchall would hide that dtype drift.
-            ddf = con.sql(oracles[name]).fetchdf()
-            d_cols = [c.lower() for c in ddf.columns]
-            d_rows = list(ddf.itertuples(index=False, name=None))
-            a = rows_normalized(s_cols, s_rows)
-            b = rows_normalized(d_cols, d_rows)
-            if sorted(s_cols) != sorted(d_cols):
-                print(f"✗ {name:28s} SCHEMA: spark={sorted(s_cols)} duck={sorted(d_cols)}")
-                n_fail += 1
-            elif len(a) != len(b):
-                print(f"✗ {name:28s} ROWS: spark={len(a)} duck={len(b)}")
-                n_fail += 1
-            elif a != b:
-                diffs = [(x, y) for x, y in zip(a, b) if x != y]
-                print(f"✗ {name:28s} VALUES: {len(diffs)} differing rows; "
-                      f"first: spark={diffs[0][0]} duck={diffs[0][1]}")
-                n_fail += 1
-            else:
-                print(f"✓ {name:28s} {len(a)} rows ({time.time()-t0:.1f}s)")
-                n_pass += 1
-        except Exception as e:
-            print(f"✗ {name:28s} ERROR: {type(e).__name__}: {str(e).splitlines()[0][:140]}")
-            n_fail += 1
-    print(f"\n{n_pass} pass, {n_fail} fail, "
-          f"{len(names) - n_pass - n_fail} rows-only")
+        status, line = check_entry(spark, con, oracles, name)
+        print(line)
+        counts[status] += 1
+    print(f"\n{counts['pass']} pass, {counts['fail']} fail, "
+          f"{counts['rows-only']} rows-only")
+    return 1 if counts["fail"] else 0
 
 
 if __name__ == "__main__":
-    main()
+    sys.exit(main())
