@@ -134,7 +134,13 @@ class ForwardSecureANNSystem:
         ``index_vectors(..., sq8=True)``.  ``with_diagnostics`` carries
         the stabilization counters (raw/kept/decrypted candidate counts
         per query) through the result — see
-        :func:`query.profiler.stabilization_rows`."""
+        :func:`query.profiler.stabilization_rows`.
+
+        The result comes back persisted and materialized by one action:
+        the adaptive retry check's collect (plus one count when a retry
+        pass runs — for every query with fewer than k rows, zero
+        included; :func:`query.ann.search_batch_adaptive`), or one
+        ``count()``.  The batch is coded and routed on the driver."""
         if self.index is None:
             raise RuntimeError("index not built")
         k = k or self.config.top_k
@@ -146,10 +152,12 @@ class ForwardSecureANNSystem:
                                   self.config.decoy_mode, self.config.dim,
                                   seed=self.config.seed).drop("is_decoy")
         self.profiler.start("search")
-        fn = search_batch_adaptive if adaptive else search_batch
-        res = fn(self.index, q, k=k, sq8_rerank=sq8_rerank,
-                 with_diagnostics=with_diagnostics).persist()
-        res.count()
+        kw = dict(k=k, sq8_rerank=sq8_rerank, with_diagnostics=with_diagnostics)
+        if adaptive:
+            res = search_batch_adaptive(self.index, q, **kw)
+        else:
+            res = search_batch(self.index, q, **kw).persist()
+            res.count()
         self.profiler.stop("search")
         if self.config.reenc_mode != "off":
             self.tracker.record(res.select("id"))

@@ -6,9 +6,11 @@ The reference answers queries one at a time; this engine executes the
 whole query *set* as one DataFrame plan (SURVEY §3.2 — the single biggest
 idiomatic win).  Physical shape (SURVEY §4):
 
-  queries → [code UDF] → q_codes (q_id, table, division, key, bits)
-          → routing against broadcast partition bounds (binary search +
-            hamming-ranked multi-probe, O2/O3)                 map-side
+  queries → collected once; coded (F1/F2 filter) and routed on the
+            driver against the collected partition bounds (binary
+            search + hamming-ranked multi-probe, O2/O3)        no job
+          → probes (q_id, table, division, part_idx, part_ham) as a
+            driver-built table
           → join codes table on (table, division, part_idx)    shuffle 1
           → groupBy (q_id, id) min(partition hamming)  (J2/A1)
           → per-query ranked-hamming prefilter, LIMIT refinement (F4/O5)
@@ -28,6 +30,7 @@ from typing import Iterator
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -36,6 +39,7 @@ from ..lsh.coding import code_vectors, code_family, _popcount, with_hamming
 from ..lsh.params import LshParams, LshConfig, fit_params_from_df
 from ..lsh.partitioner import build_partitions
 from ..functions.distance import l2_expr
+from ..functions.plan import rows_cached
 
 # routing_mode="auto" crossover: broadcast routing measured at parity
 # with the distributed join up to ~125k bounds rows (1M vectors,
@@ -332,19 +336,23 @@ class AnnIndex:
 
     def bounds_rows(self) -> int:
         """Total partition count across (t,d) slices — the routing-table
-        size that decides broadcast-vs-join routing (cached)."""
+        size that decides broadcast-vs-join routing (cached; set without
+        a job once :meth:`routing` has collected the bounds)."""
         if self._bounds_rows is None:
             self._bounds_rows = self.bounds.count()
         return self._bounds_rows
 
     def routing(self):
-        """Collect + broadcast per-(t,d) partition bounds for driver-free
-        binary-search routing in executors.  Bounds are N/block rows —
-        tiny relative to data (SURVEY §2 O2)."""
+        """Collect the per-(t,d) partition bounds once and pack them for
+        driver-side binary-search routing (a broadcast handle whose
+        ``.value`` holds the packed arrays; ``insert`` routes with it in
+        executors).  Bounds are N/block rows — tiny relative to data
+        (SURVEY §2 O2)."""
         if self._routing_bc is None:
             rows = self.bounds.select(
                 "table", "division", "part_idx", "min_key", "max_key", "rep_bits"
             ).collect()
+            self._bounds_rows = len(rows)
             info: dict = {}
             for r in rows:
                 info.setdefault((r.table, r.division), []).append(
@@ -362,97 +370,138 @@ class AnnIndex:
         return self._routing_bc
 
 
-def _route_probes(q_codes: DataFrame, routing_bc, probes: int) -> DataFrame:
-    """(q_id, table, division, code_key, code_bits) →
-    (q_id, table, division, part_idx, part_ham).
+def _query_batch(queries: DataFrame, q_id_col: str, q_vector_col: str,
+                 dim: int):
+    """The batch on the driver → (q_ids int64 (n,), Q float64 (n, dim)).
 
-    Binary-search the sorted bounds for the partition containing (or
-    nearest to) the query key (reference ``GreedyPartitioner
-    .findNearestPartition:101-124``), then take the ``probes``
-    best-by-hamming partitions inside the ±probes contiguous window —
-    the reachable set of the reference's best-first queue
-    (``PartitionedIndexService.lookupCandidateIds:506-553``)."""
+    Collected once per DataFrame object (``rows_cached``: the adaptive
+    retry check, and any later search of the same object, replay the
+    first collect).  Rows that :func:`code_vectors` would drop — wrong
+    dimension, NaN/Inf (F1/F2, reference
+    ``Coding.requireVector:355-361``) — are dropped here, so they get no
+    probes and no results."""
+    ids, vecs = [], []
+    for q_id, v in rows_cached(queries, q_id_col, q_vector_col):
+        if q_id is None or v is None or len(v) != dim:
+            continue
+        a = np.asarray(v, dtype=np.float64)
+        if np.isfinite(a).all():
+            ids.append(q_id)
+            vecs.append(a)
+    Q = np.vstack(vecs) if vecs else np.empty((0, dim))
+    return np.asarray(ids, dtype=np.int64), Q
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        packed = routing_bc.value
-        for pdf in batches:
-            out_q, out_t, out_d, out_p, out_h = [], [], [], [], []
-            for row in pdf.itertuples(index=False):
-                td = (row.table, row.division)
-                if td not in packed:
-                    continue
-                min_keys, max_keys, reps = packed[td]
-                npart = len(min_keys)
-                qk = row.code_key
-                # binary search on min_keys; check containment vs nearest
-                pos = int(np.searchsorted(min_keys, qk, side="right")) - 1
-                if pos >= 0 and qk <= max_keys[pos]:
-                    routed = pos
-                else:
-                    left = pos if pos >= 0 else 0
-                    right = min(pos + 1, npart - 1)
-                    dl = max(min_keys[left] - qk, qk - max_keys[left], 0)
-                    dr = max(min_keys[right] - qk, qk - max_keys[right], 0)
-                    routed = left if dl <= dr else right
-                lo = max(0, routed - probes)
-                hi = min(npart, routed + probes + 1)
-                window = np.arange(lo, hi)
-                qbits = np.array(row.code_bits, dtype=np.int64)
-                x = (reps[window] ^ qbits).view(np.uint64)
-                ham = _popcount(x).sum(axis=1).astype(np.int64)
-                order = np.lexsort((window, np.abs(window - routed), ham))[:probes]
-                sel = window[order]
-                out_q.append(np.full(len(sel), row.q_id))
-                out_t.append(np.full(len(sel), row.table, dtype=np.int32))
-                out_d.append(np.full(len(sel), row.division, dtype=np.int32))
-                out_p.append(sel.astype(np.int32))
-                out_h.append(ham[order])
-            if out_q:
-                yield pd.DataFrame({
-                    "q_id": np.concatenate(out_q),
-                    "table": np.concatenate(out_t),
-                    "division": np.concatenate(out_d),
-                    "part_idx": np.concatenate(out_p),
-                    "part_ham": np.concatenate(out_h),
-                })
 
-    return q_codes.mapInPandas(
-        run, schema="q_id BIGINT, table INT, division INT, part_idx INT, part_ham BIGINT")
+def _list_array(M: np.ndarray) -> pa.ListArray:
+    """An (n, W) matrix as an Arrow list column (``ARRAY`` in Spark)."""
+    offsets = np.arange(0, M.size + 1, M.shape[1], dtype=np.int32)
+    return pa.ListArray.from_arrays(offsets, pa.array(M.reshape(-1)))
+
+
+def _q_codes_table(q_ids: np.ndarray, coded: dict) -> pa.Table:
+    """The coded batch as an Arrow table (q_id, table, division,
+    code_key, code_bits) — the join router's input."""
+    n = len(q_ids)
+    td = list(coded)
+    return pa.table({
+        "q_id": pa.array(np.tile(q_ids, len(td)), pa.int64()),
+        "table": pa.array(np.repeat([t for t, _ in td], n), pa.int32()),
+        "division": pa.array(np.repeat([d for _, d in td], n), pa.int32()),
+        "code_key": pa.array(np.concatenate([coded[x][0] for x in td]),
+                             pa.int64()),
+        "code_bits": _list_array(np.concatenate([coded[x][1] for x in td])),
+    })
+
+
+def _nearest_part(keys: np.ndarray, min_keys: np.ndarray,
+                  max_keys: np.ndarray) -> np.ndarray:
+    """Partition of each key in one (table, division) slice: the one
+    whose [min_key, max_key] holds it, else the nearer neighbour by
+    key distance, ties to the left (reference
+    ``GreedyPartitioner.findNearestPartition:101-124``).  The query and
+    insert routers share it, so appended points are reachable by
+    construction."""
+    pos = np.searchsorted(min_keys, keys, side="right") - 1
+    left = np.maximum(pos, 0)
+    right = np.minimum(pos + 1, len(min_keys) - 1)
+    dl = np.maximum(np.maximum(min_keys[left] - keys, keys - max_keys[left]), 0)
+    dr = np.maximum(np.maximum(min_keys[right] - keys, keys - max_keys[right]), 0)
+    return np.where((pos >= 0) & (keys <= max_keys[left]), pos,
+                    np.where(dl <= dr, left, right))
+
+
+def _route_slice(keys: np.ndarray, words: np.ndarray, bounds,
+                 probes: int):
+    """One (table, division) slice of the probe routing, vectorized over
+    the batch: query keys (n,) and code words (n, W) against that
+    slice's packed (min_keys, max_keys, reps) → (row, part_idx,
+    part_ham) of every probe.
+
+    Route each key to its partition (:func:`_nearest_part`), then take
+    the ``probes`` best partitions inside the ±probes contiguous window
+    under (rep hamming, |offset|, part_idx) — the reachable set of the
+    reference's best-first queue
+    (``PartitionedIndexService.lookupCandidateIds:506-553``).
+    :func:`_route_probes_join` is the distributed twin."""
+    min_keys, max_keys, reps = bounds
+    npart = len(min_keys)
+    routed = _nearest_part(keys, min_keys, max_keys)
+    # the window (routed ± probes) ∩ [0, npart), as fixed-width rows
+    # with out-of-range slots sorted last
+    w = min(probes, npart - 1)
+    win = routed[:, None] + np.arange(-w, w + 1)
+    valid = (win >= 0) & (win < npart)
+    x = (reps[np.clip(win, 0, npart - 1)] ^ words[:, None, :]).view(np.uint64)
+    ham = _popcount(x).sum(axis=2).astype(np.int64)
+    order = np.lexsort((win, np.abs(win - routed[:, None]), ham, ~valid),
+                       axis=-1)[:, :probes]
+    take = np.take_along_axis(valid, order, 1)
+    rows = np.broadcast_to(np.arange(len(keys))[:, None], order.shape)
+    return (rows[take], np.take_along_axis(win, order, 1)[take],
+            np.take_along_axis(ham, order, 1)[take])
+
+
+def _route_probes_local(q_ids: np.ndarray, coded: dict, packed: dict,
+                        probes: int) -> pa.Table:
+    """The coded batch routed on the driver → Arrow table (q_id, table,
+    division, part_idx, part_ham), one row per probe."""
+    out: dict = {"q_id": [], "table": [], "division": [], "part_idx": [],
+                 "part_ham": []}
+    for (t, d), (keys, words) in coded.items():
+        if (t, d) not in packed:
+            continue
+        rows, parts, hams = _route_slice(keys, words, packed[(t, d)], probes)
+        out["q_id"].append(q_ids[rows])
+        out["table"].append(np.full(len(rows), t, dtype=np.int32))
+        out["division"].append(np.full(len(rows), d, dtype=np.int32))
+        out["part_idx"].append(parts.astype(np.int32))
+        out["part_ham"].append(hams)
+    types = {"q_id": pa.int64(), "table": pa.int32(), "division": pa.int32(),
+             "part_idx": pa.int32(), "part_ham": pa.int64()}
+    return pa.table({c: pa.array(np.concatenate(v) if v else [], types[c])
+                     for c, v in out.items()})
 
 
 def _route_nearest(codes: DataFrame, routing_bc) -> DataFrame:
     """(id, table, division, code_key, code_bits) → same + ``part_idx`` of
-    the containment/nearest partition — the insert-side twin of the query
-    router (identical binary-search + nearest-gap rule, reference
-    ``GreedyPartitioner.findNearestPartition:101-124``), so appended
-    points are reachable by the query path by construction."""
+    the containment/nearest partition (:func:`_nearest_part`, the query
+    router's rule), so appended points are reachable by the query path
+    by construction.  Rows of a (table, division) with no bounds are
+    dropped."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         packed = routing_bc.value
         for pdf in batches:
-            n = len(pdf)
-            if n == 0:
+            if len(pdf) == 0:
                 continue
-            parts = np.empty(n, dtype=np.int32)
-            keep = np.ones(n, dtype=bool)
-            for i, row in enumerate(pdf.itertuples(index=False)):
-                td = (row.table, row.division)
-                if td not in packed:
-                    keep[i] = False
-                    continue
-                min_keys, max_keys, _ = packed[td]
-                npart = len(min_keys)
-                qk = row.code_key
-                pos = int(np.searchsorted(min_keys, qk, side="right")) - 1
-                if pos >= 0 and qk <= max_keys[pos]:
-                    routed = pos
-                else:
-                    left = pos if pos >= 0 else 0
-                    right = min(pos + 1, npart - 1)
-                    dl = max(min_keys[left] - qk, qk - max_keys[left], 0)
-                    dr = max(min_keys[right] - qk, qk - max_keys[right], 0)
-                    routed = left if dl <= dr else right
-                parts[i] = routed
+            t, d = pdf["table"].to_numpy(), pdf["division"].to_numpy()
+            keys = pdf["code_key"].to_numpy(dtype=np.int64)
+            parts = np.full(len(pdf), -1, dtype=np.int32)
+            for (ti, di), (min_keys, max_keys, _) in packed.items():
+                m = (t == ti) & (d == di)
+                if m.any():
+                    parts[m] = _nearest_part(keys[m], min_keys, max_keys)
+            keep = parts >= 0
             out = pdf[keep].copy()
             out["part_idx"] = parts[keep]
             yield out
@@ -465,8 +514,8 @@ def _route_nearest(codes: DataFrame, routing_bc) -> DataFrame:
 
 def _route_probes_join(q_codes: DataFrame, bounds: DataFrame,
                        probes: int) -> DataFrame:
-    """Join-based twin of :func:`_route_probes` for bounds tables past the
-    broadcast budget (SCALE.md §1: ≥ ~1B vectors per (table, division) the
+    """Join-based twin of the driver router (:func:`_route_slice`) for
+    bounds tables past the broadcast budget (SCALE.md §1: ≥ ~1B vectors per (table, division) the
     bounds are ~16M rows × L×D and stop being driver-collectable).
 
     Same semantics, fully distributed:
@@ -588,33 +637,35 @@ def _route_probes_join(q_codes: DataFrame, bounds: DataFrame,
                     F.col("part_ham").cast("long").alias("part_ham")))
 
 
-def _sq8_shortlist(index: AnnIndex, kept: DataFrame, qv: DataFrame,
-                   limit: int) -> DataFrame:
+def _sq8_shortlist(index: AnnIndex, kept: DataFrame, q_ids: np.ndarray,
+                   Q: np.ndarray, limit: int) -> DataFrame:
     """Rank hamming-kept candidates by SQ8-reconstructed L2 and keep the
     ``limit`` best per query → (q_id, id).
 
     Plan: kept ⋈ sq8_codes on id (the only shuffle that moves codes — and
     it moves ≤ Q·refinement_limit rows of 1-byte/dim arrays, not vectors),
-    broadcast-join the query vectors, one Arrow kernel for the batched
-    reconstruction+distance, then a per-query (d2, id) window.  Runs
-    strictly BEFORE the payload join, so the decrypt stage sees only
-    limit/refinement_limit of the candidates."""
+    one Arrow kernel for the batched reconstruction+distance, then a
+    per-query (d2, id) window.  The query matrix ``Q`` (rows keyed by
+    ``q_ids``) rides in the kernel's broadcast variable, so no query
+    vector is copied onto the candidate rows.  Runs strictly BEFORE the
+    payload join, so the decrypt stage sees only limit/refinement_limit
+    of the candidates."""
     spark = kept.sparkSession
     mn = np.array(index.sq8_mins, dtype=np.float64)
     rg = np.array(index.sq8_maxs, dtype=np.float64) - mn
-    bc = spark.sparkContext.broadcast((mn, rg))
+    order = np.argsort(q_ids, kind="stable")
+    bc = spark.sparkContext.broadcast((mn, rg, q_ids[order], Q[order]))
 
     carry = [c for c in kept.columns if c.startswith("_cand_")]
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        mn_, rg_ = bc.value
+        mn_, rg_, qid_, Q_ = bc.value
         for pdf in batches:
             if len(pdf) == 0:
                 continue
             C = np.vstack([np.asarray(c, dtype=np.float64)
                            for c in pdf["codes"].to_numpy()])
-            Qm = np.vstack([np.asarray(v, dtype=np.float64)
-                            for v in pdf["_qvec"].to_numpy()])
+            Qm = Q_[np.searchsorted(qid_, pdf["q_id"].to_numpy())]
             d2 = np.square(mn_ + C / 255.0 * rg_ - Qm).sum(axis=1)
             out = {"q_id": pdf["q_id"], "id": pdf["id"], "_ad": d2}
             for c in carry:
@@ -625,8 +676,7 @@ def _sq8_shortlist(index: AnnIndex, kept: DataFrame, qv: DataFrame,
     schema = f"q_id BIGINT, id {id_type}, _ad DOUBLE"
     schema += "".join(f", {c} BIGINT" for c in carry)
     approx = (kept.join(index.sq8_codes, on="id")
-              .join(F.broadcast(qv), on="q_id")
-              .select("q_id", "id", "codes", "_qvec", *carry)
+              .select("q_id", "id", "codes", *carry)
               .mapInPandas(run, schema=schema))
     w = Window.partitionBy("q_id").orderBy(F.col("_ad").asc(), F.col("id").asc())
     return (approx.withColumn("_sr", F.row_number().over(w))
@@ -655,13 +705,20 @@ def search_batch(index: AnnIndex, queries: DataFrame, k: int = 10,
     partitioning, so they add NO extra shuffle.  Collapse them with
     :func:`fspann_query_system_spark.query.profiler.stabilization_rows`.
 
+    The query batch is collected once (it is broadcast to the refine
+    stage anyway, so it must fit on the driver) and coded on the
+    driver; rows the coding filter drops (NaN/Inf, wrong dimension) get
+    no results.
+
     ``routing_mode``: "auto" (default) picks by measured crossover:
-    "broadcast" — collect the bounds once, binary-search them in
-    executors — below ``AUTO_ROUTING_ROWS`` bounds rows, "join" — fully
-    distributed routing (:func:`_route_probes_join`) — above it, where
-    re-shipping the broadcast table per search measurably loses
-    (SCALE.md §8b: 303 vs 237 ms/q at 10M vectors).  All three accepted
-    explicitly; broadcast and join are output-identical (tested).
+    "broadcast" — collect the bounds once, binary-search them on the
+    driver (:func:`_route_slice`) — below ``AUTO_ROUTING_ROWS`` bounds
+    rows, "join" — fully distributed routing
+    (:func:`_route_probes_join`) — above it (SCALE.md §8b: 303 vs 237
+    ms/q at 10M vectors, measured when the broadcast router ran in
+    executors and re-shipped the bounds every search).  All three
+    accepted explicitly; broadcast and join are output-identical
+    (tested).
 
     ``sq8_rerank``: with an index built ``.with_sq8()``, rank the
     hamming-kept candidates on the SQ8 shadow first and decrypt/score
@@ -687,9 +744,14 @@ def search_batch(index: AnnIndex, queries: DataFrame, k: int = 10,
     refinement_limit = refinement_limit or cfg.refinement_limit
     T = cfg.hamming_threshold if hamming_threshold is None else hamming_threshold
 
-    q = queries.select(F.col(q_id_col).alias("q_id"),
-                       F.col(q_vector_col).alias("vector"))
-    q_codes = code_vectors(q, index.params, id_col="q_id", vector_col="vector")
+    if routing_mode not in ("auto", "broadcast", "join"):
+        raise ValueError(f"routing_mode must be 'broadcast', 'join', or "
+                         f"'auto', got {routing_mode!r}")
+    spark = queries.sparkSession
+    q_ids, Q = _query_batch(queries, q_id_col, q_vector_col, cfg.dim)
+    # {(table, division): (keys (n,), words (n, W))}, code_vectors' kernel
+    coded = {(t, d): code_family(Q, alpha, r, omega, cfg.lam)
+             for t, d, alpha, r, omega in index.params.packed()}
 
     if routing_mode == "auto":
         # measured crossover (SCALE.md §8b): broadcast and join route at
@@ -701,12 +763,13 @@ def search_batch(index: AnnIndex, queries: DataFrame, k: int = 10,
         routing_mode = ("join" if index.bounds_rows() > AUTO_ROUTING_ROWS
                         else "broadcast")
     if routing_mode == "join":
-        probes_df = _route_probes_join(q_codes, index.bounds, probes)
-    elif routing_mode == "broadcast":
-        probes_df = _route_probes(q_codes, index.routing(), probes)
+        probes_df = _route_probes_join(
+            spark.createDataFrame(_q_codes_table(q_ids, coded)),
+            index.bounds, probes)
     else:
-        raise ValueError(f"routing_mode must be 'broadcast', 'join', or "
-                         f"'auto', got {routing_mode!r}")
+        # a driver-built table: broadcasting it runs no job
+        probes_df = spark.createDataFrame(_route_probes_local(
+            q_ids, coded, index.routing().value, probes))
 
     # shuffle 1: probe partitions → member ids; min-merge across tables/divisions
     cand = (probes_df.join(index.codes.select("table", "division", "part_idx", "id"),
@@ -738,7 +801,8 @@ def search_batch(index: AnnIndex, queries: DataFrame, k: int = 10,
     if with_diagnostics:
         kept = kept.withColumn("_cand_kept", F.count(F.lit(1)).over(wq))
 
-    qv = q.withColumnRenamed("vector", "_qvec")
+    qv = spark.createDataFrame(pa.table({
+        "q_id": pa.array(q_ids, pa.int64()), "_qvec": _list_array(Q)}))
 
     # optional compressed-refine: approximate rank on the SQ8 shadow,
     # so the decrypt/score stage below touches only k*sq8_rerank rows
@@ -746,7 +810,7 @@ def search_batch(index: AnnIndex, queries: DataFrame, k: int = 10,
         if index.sq8_codes is None:
             raise ValueError(
                 "sq8_rerank requires an index built with .with_sq8()")
-        kept = _sq8_shortlist(index, kept, qv, k * sq8_rerank)
+        kept = _sq8_shortlist(index, kept, q_ids, Q, k * sq8_rerank)
     if with_diagnostics:
         kept = kept.withColumn("_cand_decrypted", F.count(F.lit(1)).over(wq))
 
@@ -780,23 +844,38 @@ def search_batch(index: AnnIndex, queries: DataFrame, k: int = 10,
 def search_batch_adaptive(index: AnnIndex, queries: DataFrame, k: int = 10,
                           **kw) -> DataFrame:
     """O6 adaptive retry: one extra pass with the wider probe budget for
-    queries that returned fewer than k rows (reference
-    ``QueryServiceImpl.needRetry:444-447``).
+    every query that returned fewer than k rows, zero included
+    (reference ``QueryServiceImpl.needRetry:444-447``).  Queries the
+    coding filter drops (NaN/Inf, wrong dimension) are not retried.
 
-    ``probe_override <= 0`` disables the retry entirely (reference
+    The result comes back persisted and materialized.  The first pass
+    takes ONE action with no shuffle of its own: a query has k rows
+    exactly when its ``rank == k`` row exists, so collecting the q_ids
+    of those rows fills the cache, and the retry set is the rest of the
+    batch's coded q_ids (already on the driver).  Without a retry the
+    first pass is returned as is; a retry pass is persisted and
+    materialized by one more action, and replaces the first pass's rows
+    of its queries.
+
+    ``probe_override <= 0`` disables the retry entirely: the first pass
+    is materialized by one ``count()`` (reference
     ``RuntimeConfig.probeOverride = -1`` default — the PAPER_BASELINE
     search mode, ``config/SearchMode.java:3-6``, runs with no widening
     heuristic; see ``configs/example.json`` profile ``paper_baseline``)."""
-    if index.params.cfg.probe_override <= 0:
-        return search_batch(index, queries, k=k, **kw)
+    override = index.params.cfg.probe_override
     first = search_batch(index, queries, k=k, **kw).persist()
-    counts = first.groupBy("q_id").count()
-    under = counts.filter(F.col("count") < k).select("q_id")
-    missing = queries.join(under.withColumnRenamed("q_id", "_u"),
-                           queries["q_id"] == F.col("_u"), "left_semi")
-    if missing.limit(1).count() == 0:
+    if override <= 0:
+        first.count()
         return first
-    retry = search_batch(index, missing, k=k,
-                         probes=index.params.cfg.probe_override, **kw)
-    kept = first.join(under, on="q_id", how="left_anti")
-    return kept.unionByName(retry)
+    full = {r.q_id for r in
+            first.filter(F.col("rank") == k).select("q_id").collect()}
+    q_id_col = kw.get("q_id_col", "q_id")
+    q_ids, _ = _query_batch(queries, q_id_col, kw.get("q_vector_col", "vector"),
+                            index.params.cfg.dim)
+    retry_ids = sorted(set(q_ids.tolist()) - full)
+    if not retry_ids:
+        return first
+    retry = search_batch(index, queries.filter(F.col(q_id_col).isin(retry_ids)),
+                         k=k, **{**kw, "probes": override}).persist()
+    retry.count()
+    return first.filter(~F.col("q_id").isin(retry_ids)).unionByName(retry)

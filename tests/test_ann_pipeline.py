@@ -197,6 +197,91 @@ def test_join_routing_matches_broadcast(index, queries):
         search_batch(idx, queries, k=10, routing_mode="bogus")
 
 
+def _edge_keys(min_keys, max_keys):
+    """Query keys that hit every routing case of one (table, division)
+    slice: below the first min_key, above the last max_key, on block
+    edges, and inside each gap — at its midpoint (equal distance to both
+    neighbours when the gap width is even: the tie goes left) and one
+    step off it on either side.  Returns (keys, number of tie keys)."""
+    keys = [max(0, int(min_keys[0]) - 7), int(max_keys[-1]) + 7,
+            int(min_keys[0]), int(max_keys[-1])]
+    ties = 0
+    for lo, hi in zip(max_keys[:-1], min_keys[1:]):
+        lo, hi = int(lo), int(hi)
+        if hi - lo < 2:
+            continue
+        mid = lo + (hi - lo) // 2
+        keys += [mid - 1, mid, mid + 1]
+        ties += (hi - lo) % 2 == 0
+    return np.array(keys, dtype=np.int64), ties
+
+
+def test_driver_router_matches_join_router(spark, clustered):
+    """The driver router (numpy, vectorized per (table, division)) and
+    the distributed ``_route_probes_join`` pick the same probes with the
+    same rep hamming, on a tiny-block index and hand-made query keys:
+    below the first block, above the last, in gaps (including the
+    equal-distance tie), on block edges; probe windows clipped at both
+    ends; and probes at or past the partition count."""
+    from fspann_query_system_spark.query.ann import (
+        _q_codes_table, _route_probes_join, _route_probes_local)
+    df, X = clustered
+    cfg = LshConfig(dim=16, m=8, lam=2, tables=2, divisions=2, seed=5,
+                    block_size=8, probes=3, refinement_limit=100)
+    idx = AnnIndex.build(df.filter(F.col("id") < 240), cfg)
+    packed = idx.routing().value
+    rng = np.random.default_rng(0)
+    per_td, ties = {}, 0
+    for td, (mins, maxs, reps) in packed.items():
+        keys, t = _edge_keys(mins, maxs)
+        per_td[td] = (keys, reps.shape[1])
+        ties += t
+    assert ties > 0                     # the dl == dr case is exercised
+    n = max(len(k) for k, _ in per_td.values())
+    q_ids = np.arange(n, dtype=np.int64) * 3 + 1
+    coded = {td: (np.resize(keys, n),
+                  rng.integers(-2**62, 2**62, (n, W), dtype=np.int64))
+             for td, (keys, W) in per_td.items()}
+    q_codes = spark.createDataFrame(_q_codes_table(q_ids, coded))
+    npart = max(len(m) for m, _, _ in packed.values())
+    for probes in (1, 3, npart, npart + 5):
+        local = sorted(tuple(r.values()) for r in
+                       _route_probes_local(q_ids, coded, packed,
+                                           probes).to_pylist())
+        joined = sorted(tuple(r) for r in _route_probes_join(
+            q_codes, idx.bounds, probes).select(
+            "q_id", "table", "division", "part_idx", "part_ham").collect())
+        assert local == joined, probes
+        per_q = {}
+        for q, t, d, _, _ in local:
+            per_q[(q, t, d)] = per_q.get((q, t, d), 0) + 1
+        assert set(per_q.values()) <= set(range(1, probes + 1))
+
+
+def test_broadcast_and_join_routing_identical_on_string_ids(spark, clustered):
+    """End to end on a tiny-block index with STRING point ids: broadcast
+    (driver) and join routing return identical rows, diagnostics
+    included, through the SQ8 shortlist and an allow-list."""
+    df, X = clustered
+    sdf = df.filter(F.col("id") < 400).select(
+        F.format_string("p%04d", "id").alias("id"), "vector")
+    cfg = LshConfig(dim=16, m=8, lam=2, tables=3, divisions=2, seed=8,
+                    block_size=8, probes=4, refinement_limit=120)
+    idx = AnnIndex.build(sdf, cfg).with_sq8()
+    q = spark.createDataFrame(
+        [(i, (X[i * 37] + 0.01).tolist()) for i in range(10)],
+        "q_id LONG, vector ARRAY<DOUBLE>")
+    allow = sdf.filter(F.col("id") < "p0300").select("id")
+    for kw in ({}, {"sq8_rerank": 3, "with_diagnostics": True},
+               {"sq8_rerank": 3, "allow": allow, "with_diagnostics": True},
+               {"probes": 60}):
+        got = [sorted(tuple(r) for r in search_batch(
+                   idx, q, k=6, routing_mode=mode, **kw).collect())
+               for mode in ("broadcast", "join")]
+        assert got[0] == got[1] and got[0], kw
+        assert isinstance(got[0][0][1], str)
+
+
 def test_auto_routing_picks_by_bounds_size(index, queries, monkeypatch):
     """routing_mode="auto" flips broadcast→join at the measured bounds-
     size crossover (SCALE.md §8b) and both selections return the same
@@ -558,3 +643,71 @@ def test_fused_decrypt_score_bit_identical_to_split(spark, clustered, queries):
                        sq8_rerank=4, with_diagnostics=True) \
         .orderBy("q_id", "rank").collect()
     assert [tuple(r) for r in r8f] == [tuple(r) for r in r8s]
+
+
+def test_bounds_rows_is_free_after_routing(spark, index):
+    """``routing()`` records the bounds row count it collected, so the
+    ``routing_mode="auto"`` choice on a facade whose routing was forced
+    at set-up runs no ``bounds.count()`` job."""
+    from dataclasses import replace
+    idx = replace(index[0], _routing_bc=None, _bounds_rows=None)
+    idx.routing()
+    sc = spark.sparkContext
+    sc.setJobGroup("bounds-rows", "bounds-rows")
+    try:
+        n = idx.bounds_rows()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup("bounds-rows") == []
+    assert n == index[0].bounds.count()
+
+
+@pytest.fixture(scope="module")
+def underfilled(spark, clustered):
+    """A 2,000-row index searched with probes=1 (probe_override=40) and
+    an allow-list of 50 ids that only the wide probe reaches for q 0, so
+    q 0 has ZERO first-pass rows.  q 7 has a NaN vector, which the
+    coding filter drops (never searched, never retried)."""
+    df, X = clustered
+    cfg = LshConfig(dim=16, m=8, lam=2, tables=4, divisions=2, seed=42,
+                    block_size=32, probes=1, probe_override=40,
+                    refinement_limit=2000)
+    idx = AnnIndex.build(df, cfg)
+    q0 = spark.createDataFrame([(0, X[0].tolist())],
+                               "q_id LONG, vector ARRAY<DOUBLE>")
+
+    def reach(p):
+        return {r.id for r in search_batch(idx, q0, k=2000,
+                                           probes=p).collect()}
+
+    only_wide = sorted(reach(40) - reach(1))
+    assert len(only_wide) >= 50
+    allow = spark.createDataFrame([(int(i),) for i in only_wide[:50]],
+                                  "id LONG")
+    q = spark.createDataFrame([(0, X[0].tolist()), (7, [float("nan")] * 16)],
+                              "q_id LONG, vector ARRAY<DOUBLE>")
+    assert search_batch(idx, q, k=10, allow=allow).count() == 0
+    want = sorted(tuple(r) for r in search_batch(
+        idx, q0, k=10, probes=40, allow=allow).collect())
+    assert len(want) == 10
+    return idx, q, allow, want
+
+
+def test_adaptive_retry_includes_zero_result_queries(underfilled):
+    """O6 needRetry: a query with fewer than k rows is retried with the
+    wide probe budget — zero rows included (the retry once only saw
+    q_ids present in the first pass)."""
+    idx, q, allow, want = underfilled
+    got = sorted(tuple(r) for r in search_batch_adaptive(
+        idx, q, k=10, allow=allow).collect())
+    assert got == want
+
+
+def test_adaptive_retry_overrides_explicit_probes(underfilled):
+    """An explicit ``probes=`` must not collide with the retry's probe
+    override (it raised "got multiple values for keyword argument
+    'probes'" whenever the retry fired)."""
+    idx, q, allow, want = underfilled
+    got = sorted(tuple(r) for r in search_batch_adaptive(
+        idx, q, k=10, probes=1, allow=allow).collect())
+    assert got == want

@@ -364,3 +364,45 @@ def test_rotation_cycles_keep_store_plan_bounded(spark):
     assert len(set(sizes)) == 1, sizes
     assert rows(sys_.index.codes) == codes
     assert rows(sys_.index.bounds) == bounds
+
+
+def test_search_job_count_ceiling(spark, clustered):
+    """Counter gate: the Spark jobs one ``search(sq8_rerank=...)`` starts
+    on a small encrypted SQ8 store, counted by job group through the
+    status tracker (the caller's own collect excluded).  A change that
+    adds a job to the interactive search must raise this ceiling and say
+    why.
+
+    History on this fixture (lazy tables forced first, a new query
+    DataFrame per search): 19 jobs for a facade's first search and 17 for
+    its second, when the batch was coded and routed by an executor
+    ``mapInPandas``, the SQ8 kernel read query vectors broadcast-joined
+    onto its candidate rows, the auto routing choice counted the bounds,
+    and the adaptive-retry check (groupBy, semi-join,
+    ``limit(1).count()``) was followed by a second ``count()``.  With the
+    batch coded and routed on the driver and one collect that both
+    materializes the result and finds the queries to retry: 11 and 11,
+    each counting the one job that collects its batch."""
+    df, X = clustered
+    cfg = SystemConfig(dim=16, m=8, lam=2, tables=4, divisions=2,
+                       block_size=32, refinement_limit=400,
+                       rotation_max_ops=10**9, top_k=10)
+    sys_ = ForwardSecureANNSystem(spark, cfg, master_key=b"\x45" * 32)
+    sys_.index_vectors(df, sq8=True)
+    # the facade's lazy tables, forced as a server does at set-up
+    sys_.index.routing()
+    sys_.index.codes.count()
+    sys_.index.sq8_codes.count()
+    sc = spark.sparkContext
+    counts = []
+    for i in range(2):
+        q = df.filter(F.col("id") % 97 == i).selectExpr("id AS q_id", "vector")
+        sc.setJobGroup(f"search-jobs-{i}", "search")
+        try:
+            res = sys_.search(q, k=10, sq8_rerank=4)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        counts.append(len(sc.statusTracker().getJobIdsForGroup(
+            f"search-jobs-{i}")))
+        assert res.filter("rank = 10").count() == q.count()
+    assert max(counts) <= 11, counts
