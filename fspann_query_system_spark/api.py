@@ -5,26 +5,45 @@ SETUP → GT → INDEX → FINALIZE → QUERY+EVAL → SELECTIVE RE-ENCRYPT → 
 
 The reference is a single-process Java service looping queries serially;
 this facade drives the same lifecycle as a handful of DataFrame plans:
-index build is one job, the whole query set is one plan, re-encryption is
-one semi-join plan.  Keys stay on the driver (broadcast only)."""
+index build is one job, the whole query set is one plan.  Keys stay on
+the driver (broadcast only).
+
+The encrypted store is a fixed base plus a small re-encrypted delta,
+merged on read (the reference writes one record file per id and
+version, so its re-encryption touches only the touched records).  A
+rotation writes the new delta — the touched rows under the new key plus
+the older delta rows — and never the base; once the delta holds more
+than ``COMPACT_FRACTION`` of the store, a compaction rewrites the base
+from the live view.  See :meth:`ForwardSecureANNSystem.reencrypt_touched_to`."""
 
 from __future__ import annotations
 
-import numpy as np
+import math
+
+import pyarrow as pa
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .config import SystemConfig
-from .functions.plan import materialize
-from .crypto import KeyManager, RotationPolicy, encrypt_vectors, reencrypt_touched, \
-    version_census, TouchedTracker
+from .functions.plan import as_leaf, materialize, release
+from .crypto import KeyManager, RotationPolicy, encrypt_vectors, reencrypt_all, \
+    TouchedTracker
 from .lsh.params import LshParams, fit_params_from_df
 from .query.ann import AnnIndex, search_batch, search_batch_adaptive
 from .query.exact import knn_exact, groundtruth_table
 from .query.profiler import Profiler, query_metric_rows, aggregates
 from .query.token import interleave_decoys, strip_decoy_results
 from .sources.registry import load_vectors
+
+# A rotation first compacts (rewrites the base from the live view) when
+# the delta held more than this fraction of the store's rows at the last
+# census.  Between compactions a rotation writes only the delta, so the
+# base is rewritten about once per this fraction of the store migrated:
+# a migrated row costs about 1 + 1/COMPACT_FRACTION written rows,
+# amortized, against a delta of up to this fraction masked and merged on
+# every read.  1/8 is a starting point, not a measured optimum.
+COMPACT_FRACTION = 1 / 8
 
 
 class ForwardSecureANNSystem:
@@ -42,15 +61,23 @@ class ForwardSecureANNSystem:
         self.profiler = Profiler()
         self.tracker = TouchedTracker()
         self.index: AnnIndex | None = None
-        self.encrypted: DataFrame | None = None
-        self._base: DataFrame | None = None
+        self.encrypted: DataFrame | None = None     # the live store
+        self._store: DataFrame | None = None        # its encrypted base
+        self._leaf: DataFrame | None = None         # the base as a plan leaf
+        self._delta: DataFrame | None = None        # rows re-encrypted since
+        self._delta_rows = 0                        # the last compaction
+        self._rows = 0
+        self._store_parts = 0
+        self._base: DataFrame | None = None         # plaintext vectors
         from .query.cache import QueryCache
         self.cache = QueryCache()
         self._index_epoch = 0
 
     # -- INDEX ------------------------------------------------------------
     def _keys_bc(self):
-        return self.spark.sparkContext.broadcast(self.keys.key_map())
+        """Every live key version.  Retirement is census-gated, so a
+        version not yet retired may still guard rows, however old."""
+        return self.spark.sparkContext.broadcast(self.keys.key_map(oldest=1))
 
     def index_vectors(self, vectors: DataFrame,
                       params: LshParams | None = None,
@@ -60,15 +87,17 @@ class ForwardSecureANNSystem:
         :meth:`search` can compressed-refine (``sq8_rerank=``)."""
         self.profiler.start("index_build")
         self._base = vectors.persist()
-        self.keys.record_ops(self._base.count())
+        rows = self._base.count()
+        self.keys.record_ops(rows)
         self.keys.rotate_if_needed()
         plain_idx = AnnIndex.build(self._base, self.config.lsh(), params=params)
         if sq8:
             plain_idx = plain_idx.with_sq8()
-        self.encrypted = encrypt_vectors(
-            self._base, self._keys_bc(), self.keys.current_version).persist()
-        self.encrypted.count()
-        self.index = plain_idx.with_encrypted_points(self.encrypted, self._keys_bc())
+        bc = self._keys_bc()
+        store = encrypt_vectors(self._base, bc, self.keys.current_version).persist()
+        store.count()
+        self.index = plain_idx
+        self._set_base(store, as_leaf(store), rows, bc)
         self._index_epoch += 1
         self.cache.invalidate()
         self.profiler.stop("index_build")
@@ -109,9 +138,10 @@ class ForwardSecureANNSystem:
             else:
                 hit_rows.extend((q_id, *row) for row in cached)
         if miss:
-            mdf = self.spark.createDataFrame(
-                [(r.q_id, list(r.vector)) for _, r in miss],
-                "q_id LONG, vector ARRAY<DOUBLE>")
+            mdf = self.spark.createDataFrame(pa.table({
+                "q_id": pa.array([r.q_id for _, r in miss], pa.int64()),
+                "vector": pa.array([r.vector for _, r in miss],
+                                   pa.list_(pa.float64()))}))
             res = self.search(mdf, k=k, adaptive=adaptive, with_decoys=False)
             got = res.select("q_id", "id", "distance", "rank").collect()
             by_q: dict = {}
@@ -121,8 +151,11 @@ class ForwardSecureANNSystem:
                 rows = by_q.get(r.q_id, [])
                 self.cache.put(ck, rows)
                 hit_rows.extend((r.q_id, *row) for row in rows)
-        return self.spark.createDataFrame(
-            hit_rows, "q_id LONG, id LONG, distance DOUBLE, rank INT")
+        cols = list(zip(*hit_rows)) or [()] * 4
+        return self.spark.createDataFrame(pa.table({
+            name: pa.array(col, typ) for name, col, typ in zip(
+                ("q_id", "id", "distance", "rank"), cols,
+                (pa.int64(), pa.int64(), pa.float64(), pa.int32()))}))
 
     def search(self, queries: DataFrame, k: int | None = None,
                adaptive: bool = True, with_decoys: bool | None = None,
@@ -186,41 +219,110 @@ class ForwardSecureANNSystem:
     def reencrypt_touched_to(self, new_version: int) -> dict:
         """Migration body without the rotation — callers that share one
         KeyManager across several indexes (MultiDimSystem) rotate ONCE
-        and migrate every index to the same version."""
+        and migrate every index to the same version.
+
+        The store is a fixed base plus a delta (merge-on-read).  The live
+        view :attr:`encrypted` — also the index's payload table, so every
+        search and every census sees it — is the base rows whose id the
+        delta does not hold, plus the delta, coalesced to the base's
+        partition count.  A rotation:
+
+        1. compacts first if the delta held more than
+           ``COMPACT_FRACTION`` of the rows at the last census: the live
+           view is materialized as the new base (same partition count),
+           and the old base and delta are released;
+        2. drains the tracker (:meth:`TouchedTracker.drain`: one collect,
+           deduplicated on the driver into an Arrow table, which
+           broadcasts without a Python worker stage);
+        3. re-encrypts the touched live rows through
+           :func:`crypto.reencrypt.reencrypt_all` (F5: rows already under
+           the target key pass through), one task per base partition's
+           worth of rows the new delta can hold;
+        4. materializes only the new delta — the old delta without the
+           re-touched ids, plus those rows — never the base, and
+           releases the old delta;
+        5. takes the census over the live view's two halves in one
+           aggregate, which also sizes the delta for steps 1 and 3.
+
+        So between compactions the base is never rewritten, and the
+        delta holds exactly the ids migrated since the last compaction.
+        A masked base row is not live: the census does not count it and
+        no search reads it.  Once its key is retired it is unreadable
+        garbage, which the next compaction drops."""
         touched = self.tracker.drain()
         if touched is None:
             return {"version": new_version, "migrated": 0}
         self.profiler.start("reencrypt")
         bc = self._keys_bc()
-        # materialized with its lineage cut: the new store's plan holds the
-        # old store's three times (semi-join, anti-join, migrated rows), so
-        # a persisted plan would grow threefold per rotation
-        new_enc = materialize(reencrypt_touched(self.encrypted, touched, bc,
-                                                new_version))
-        census = {r.key_version: r.n_points
-                  for r in version_census(new_enc).collect()}
-        old = self.encrypted
-        self.encrypted = new_enc
-        self.index = self.index.with_encrypted_points(new_enc, bc)
-        old.unpersist()
+        if self._delta_rows > COMPACT_FRACTION * self._rows:
+            old = (self._store, self._delta)
+            compacted = materialize(self.encrypted)
+            self._set_base(compacted, compacted, self._rows, bc)
+            for df in old:
+                release(df)
+        ids = F.broadcast(self.spark.createDataFrame(touched))
+        # one task per base partition's worth of delta rows, coalesced
+        # BEFORE the kernel: a kernel below a coalesce would run once per
+        # store partition, serially, inside each task
+        parts = max(1, math.ceil(self._store_parts * (self._delta_rows
+                                                      + touched.num_rows)
+                                 / max(1, self._rows)))
+        delta = reencrypt_all(self.encrypted.join(ids, on="id", how="left_semi")
+                              .coalesce(parts), bc, new_version)
+        old = self._delta
+        if old is not None:
+            delta = old.join(ids, on="id", how="left_anti").unionByName(delta)
+        delta = materialize(delta.coalesce(parts))
+        masked = self._leaf.join(F.broadcast(delta.select("id")), on="id",
+                                 how="left_anti")
+        census, n_delta = {}, 0
+        for r in (masked.select("key_version", F.lit(0).alias("in_delta"))
+                  .unionByName(delta.select("key_version",
+                                            F.lit(1).alias("in_delta")))
+                  .groupBy("key_version", "in_delta").count().collect()):
+            census[r.key_version] = census.get(r.key_version, 0) + r["count"]
+            n_delta += r.in_delta * r["count"]
+        self._delta, self._delta_rows = delta, n_delta
+        self._rows = sum(census.values())
+        self._set_live(masked.unionByName(delta).coalesce(self._store_parts), bc)
+        if old is not None:
+            release(old)
         self.profiler.stop("reencrypt")
         return {"version": new_version,
                 "migrated": census.get(new_version, 0), "census": census}
+
+    def _set_base(self, store: DataFrame, leaf: DataFrame, rows: int,
+                  keys_bc) -> None:
+        """Make ``store`` (``rows`` rows) the encrypted base, with no
+        delta: the live store.  ``leaf`` is the same rows behind a
+        one-node plan (:func:`functions.plan.as_leaf`), which the live
+        view reads once a delta exists, so the view's plan keeps one
+        shape whether the base was persisted at ingest or materialized
+        by a compaction."""
+        self._store, self._leaf, self._rows = store, leaf, rows
+        self._delta, self._delta_rows = None, 0
+        self._store_parts = store.rdd.getNumPartitions()
+        self._set_live(store, keys_bc)
+
+    def _set_live(self, live: DataFrame, keys_bc) -> None:
+        """Make ``live`` the store of the facade and of its index."""
+        self.encrypted = live
+        self.index = self.index.with_encrypted_points(live, keys_bc)
 
     # -- RESTORE (SURVEY §3.4) -------------------------------------------
     def restore_from_store(self, encrypted: DataFrame,
                            params: LshParams) -> None:
         """Rebuild routing state from an encrypted store: decrypt →
         re-code with persisted params (the reference must re-insert
-        one-by-one; here it is one decrypt + one build plan)."""
+        one-by-one; here it is one decrypt + one build plan).  The store
+        becomes the base of this facade's live store."""
         from .crypto.aes import decrypt_vectors
         bc = self._keys_bc()
         plain = decrypt_vectors(encrypted, bc, mode="strict") \
             .select("id", "vector")
         self._base = plain.persist()
-        idx = AnnIndex.build(self._base, params.cfg, params=params)
-        self.encrypted = encrypted
-        self.index = idx.with_encrypted_points(encrypted, bc)
+        self.index = AnnIndex.build(self._base, params.cfg, params=params)
+        self._set_base(encrypted, as_leaf(encrypted), encrypted.count(), bc)
         self._index_epoch += 1
         self.cache.invalidate()
 

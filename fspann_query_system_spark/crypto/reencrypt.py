@@ -11,11 +11,14 @@ Forward security loop:
    is safe to delete (F6) — deleting it makes previously-captured
    ciphertext snapshots undecryptable (the forward-security game).
 
-All set state lives in DataFrames; the reference's in-memory
-``ReencryptionTracker`` becomes an accumulated union + dropDuplicates.
+The reference's in-memory ``ReencryptionTracker`` becomes an
+accumulated union of id DataFrames, collected once at drain and
+deduplicated on the driver.
 """
 
 from __future__ import annotations
+
+import pyarrow as pa
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -34,9 +37,16 @@ class TouchedTracker:
         part = ids_df.select(F.col(id_col).alias("id"))
         self._acc = part if self._acc is None else self._acc.unionByName(part)
 
-    def drain(self) -> DataFrame | None:
+    def drain(self) -> pa.Table | None:
+        """The distinct recorded ids as a one-column Arrow table, the id
+        type kept, or None when nothing was recorded; resets the
+        tracker.  One collect of the union, no shuffle: the
+        deduplication runs on the driver.  A DataFrame built from the
+        table broadcasts without a Python worker stage."""
         out, self._acc = self._acc, None
-        return out.dropDuplicates(["id"]) if out is not None else None
+        if out is None:
+            return None
+        return pa.table({"id": out.toArrow().column("id").unique()})
 
 
 def version_census(encrypted: DataFrame) -> DataFrame:
@@ -57,26 +67,28 @@ def reencrypt_touched(encrypted: DataFrame, touched: DataFrame,
     """J4: new encrypted table with touched, stale rows re-encrypted under
     ``target_version`` (fresh IVs); untouched/current rows pass through.
 
-    Plan: semi-join selects the migration set (F5 filters already-current
-    rows), decrypt → encrypt kernels run only on that set, anti-join keeps
-    the rest — no full-table crypto pass (the reference's "selective"
-    property, ``KeyRotationServiceImpl.reencryptTouched:215-289``)."""
-    stale = (encrypted
-             .join(touched.select(F.col(id_col).alias(id_col)).dropDuplicates([id_col]),
-                   on=id_col, how="left_semi")
-             .filter(F.col("key_version") < F.lit(target_version)))
-    migrated = encrypt_vectors(
-        decrypt_vectors(stale, keys_bc, mode="strict", id_col=id_col),
-        keys_bc, target_version, id_col=id_col)
-    untouched = encrypted.join(
-        stale.select(id_col), on=id_col, how="left_anti")
+    Plan: the untouched rows (anti-join) plus :func:`reencrypt_all` over
+    the touched rows (semi-join) — the crypto kernels run only on the
+    touched slice, no full-table crypto pass (the reference's "selective"
+    property, ``KeyRotationServiceImpl.reencryptTouched:215-289``).  A
+    semi-join never repeats a row, so ``touched`` may hold duplicates."""
+    ids = touched.select(F.col(id_col).alias(id_col))
+    migrated = reencrypt_all(encrypted.join(ids, on=id_col, how="left_semi"),
+                             keys_bc, target_version, id_col=id_col)
+    untouched = encrypted.join(ids, on=id_col, how="left_anti")
     return untouched.select(migrated.columns).unionByName(migrated)
 
 
 def reencrypt_all(encrypted: DataFrame, keys_bc, target_version: int,
                   id_col: str = "id") -> DataFrame:
-    """Full rotation (reference ``reEncryptAll:108-113``): every stale row
-    migrates to the target key."""
+    """The package's one migration (J4 + F5): every row of ``encrypted``
+    under a key version >= ``target_version``.  Stale rows
+    (``key_version < target``) are decrypted under their recorded key
+    (strict) and encrypted again under the target with fresh IVs; current
+    rows pass through unchanged.  Over a whole store it is the full rotation
+    (reference ``reEncryptAll:108-113``); :func:`reencrypt_touched` and
+    the facade's delta store (``api.ForwardSecureANNSystem``) apply it to
+    the touched slice only."""
     stale = encrypted.filter(F.col("key_version") < F.lit(target_version))
     current = encrypted.filter(F.col("key_version") >= F.lit(target_version))
     migrated = encrypt_vectors(

@@ -98,3 +98,32 @@ def materialize(df: DataFrame) -> DataFrame:
     if df.sparkSession.sparkContext.getCheckpointDir() is not None:
         return df.checkpoint(eager=True)
     return df.localCheckpoint(eager=True)
+
+
+def as_leaf(df: DataFrame) -> DataFrame:
+    """``df``'s rows behind a plan of one ``LogicalRDD`` leaf — the node
+    :func:`materialize` returns, with ``df``'s output attributes and
+    statistics — without storing them again: the leaf reads whatever
+    ``df`` reads (its cache, when ``df`` is persisted).  Lets a persisted
+    table stand where a materialized one will later stand, so a plan
+    built over either keeps one shape.  It is the plan node a
+    checkpoint builds (``LogicalRDD.fromDataset``), over ``df``'s own
+    rows instead of stored ones.  Lazy: no job."""
+    spark = df.sparkSession
+    jvm = spark._jvm
+    logical_rdd = getattr(getattr(jvm.org.apache.spark.sql.execution,
+                                  "LogicalRDD$"), "MODULE$")
+    plan = logical_rdd.fromDataset(df._jdf.queryExecution().toRdd(),
+                                   df._jdf, False)
+    return DataFrame(jvm.org.apache.spark.sql.classic.Dataset.ofRows(
+        spark._jsparkSession, plan), spark)
+
+
+def release(df: DataFrame) -> None:
+    """Free the storage ``df`` holds: its cache, and the blocks of a
+    local checkpoint, which ``unpersist`` alone leaves to the JVM's
+    garbage collector.  ``df`` must not be read afterwards."""
+    df.unpersist()
+    plan = df._jdf.queryExecution().analyzed()
+    if plan.nodeName() == "LogicalRDD":
+        plan.rdd().unpersist(False)

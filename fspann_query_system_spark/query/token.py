@@ -14,6 +14,7 @@ from __future__ import annotations
 from dataclasses import dataclass
 
 import numpy as np
+import pyarrow as pa
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -21,6 +22,7 @@ from pyspark.sql import functions as F
 from ..lsh.coding import code_single
 from ..lsh.params import LshParams
 from ..crypto.aes import AESGCM, IV_LEN, vector_to_bytes, bytes_to_vector
+from .ann import _list_array
 
 
 @dataclass
@@ -113,9 +115,10 @@ def interleave_decoys(queries: DataFrame, ratio: float, mode: str,
         return real
     rng = np.random.default_rng(seed)
     D = generate_decoys(n_dec, dim, mode, rng, sample)
-    dec = spark.createDataFrame(
-        [(-(i + 1), D[i].tolist(), True) for i in range(n_dec)],
-        "q_id LONG, vector ARRAY<DOUBLE>, is_decoy BOOLEAN")
+    dec = spark.createDataFrame(pa.table({
+        "q_id": pa.array(-np.arange(1, n_dec + 1), pa.int64()),
+        "vector": _list_array(np.asarray(D, dtype=np.float64)),
+        "is_decoy": pa.array(np.ones(n_dec, dtype=bool))}))
     return real.unionByName(dec).orderBy(F.rand(seed))
 
 

@@ -117,8 +117,9 @@ def test_touched_tracker_dedup(spark):
     t = TouchedTracker()
     t.record(spark.createDataFrame([(1,), (2,)], "id LONG"))
     t.record(spark.createDataFrame([(2,), (3,)], "id LONG"))
-    drained = sorted(r.id for r in t.drain().collect())
-    assert drained == [1, 2, 3]
+    drained = t.drain()
+    assert sorted(drained.column("id").to_pylist()) == [1, 2, 3]
+    assert str(drained.schema.field("id").type) == "int64"
     assert t.drain() is None
 
 

@@ -328,13 +328,20 @@ def test_search_cached_restamps_q_id_for_same_vector(spark):
 
 
 def test_rotation_cycles_keep_store_plan_bounded(spark):
-    """Four rotate-then-search cycles: the re-encrypted store is
-    materialized with its lineage cut, so its plan stays the same size
-    instead of nesting the previous store three times per rotation; the
-    replayed batch and the routing tables (codes, bounds) never change."""
+    """Six rotate-then-search cycles on one facade, whose touched sets
+    cross the compaction fraction twice: the live store keeps one
+    partition count (it used to be rewritten as a union of itself and
+    the migrated rows, doubling its partitions: 4 -> 8 -> 16 ...) and
+    one plan size, across compactions too, instead of nesting the
+    previous store; the base is the same persisted table between
+    compactions; the delta holds exactly the distinct ids touched since
+    the last compaction; the replayed batch and the routing tables
+    (codes, bounds) never change."""
+    from fspann_query_system_spark.api import COMPACT_FRACTION
     rng = np.random.default_rng(21)
-    X = rng.normal(0, 1, (300, 12))
-    vec = spark.createDataFrame([(i, X[i].tolist()) for i in range(300)],
+    n = 300
+    X = rng.normal(0, 1, (n, 12))
+    vec = spark.createDataFrame([(i, X[i].tolist()) for i in range(n)],
                                 "id LONG, vector ARRAY<DOUBLE>")
     cfg = SystemConfig(dim=12, m=6, lam=2, tables=3, divisions=1,
                        probes=4, refinement_limit=100, top_k=5,
@@ -352,18 +359,104 @@ def test_rotation_cycles_keep_store_plan_bounded(spark):
     first = rows(sys_.search(q, k=5).select("q_id", "id", "distance",
                                             "rank"))
     codes, bounds = rows(sys_.index.codes), rows(sys_.index.bounds)
-    sizes = []
-    for cycle in range(4):
+    parts = sys_.encrypted.rdd.getNumPartitions()
+    # every search touches its result ids; each cycle adds `step` fresh
+    # ids, sized so that the delta passes the fraction every second cycle
+    result_ids = {r[1] for r in first}
+    limit = COMPACT_FRACTION * n
+    step = int(limit - len(result_ids))
+    assert step > 0 and len(result_ids) + 2 * step > limit
+    fresh = iter(sorted(set(range(n)) - result_ids))
+    base, expected, sizes, compactions = sys_._store, set(), [], 0
+    for cycle in range(6):
+        extra = [next(fresh) for _ in range(step)]
+        sys_.tracker.record(spark.createDataFrame([(i,) for i in extra],
+                                                  "id LONG"))
+        compacts = len(expected) > limit
         out = sys_.rotate_and_reencrypt_touched()
         assert out["version"] == cycle + 2 and out["migrated"] > 0
-        assert sum(out["census"].values()) == 300
+        assert sum(out["census"].values()) == n
+        if compacts:
+            assert sys_._store is not base, cycle
+            base, expected = sys_._store, set()
+            compactions += 1
+        else:
+            assert sys_._store is base, cycle
+        expected |= result_ids | set(extra)
+        assert {r.id for r in sys_._delta.select("id").collect()} == expected
+        assert out["migrated"] == len(result_ids | set(extra))
+        assert sys_.encrypted.rdd.getNumPartitions() == parts, cycle
         sizes.append(plan_size())
         replay = rows(sys_.search(q, k=5).select("q_id", "id", "distance",
                                                  "rank"))
         assert replay == first, cycle
+    assert compactions == 2
     assert len(set(sizes)) == 1, sizes
     assert rows(sys_.index.codes) == codes
     assert rows(sys_.index.bounds) == bounds
+
+
+def test_forward_security_invariants_over_base_and_delta(spark, clustered):
+    """Every row touched over three cycles.  Version 1 retires while
+    masked base rows still hold v1 ciphertext; the live census has no
+    row under a retired version and counts every row; every live row
+    decrypts in strict mode, under the live keys alone, to its source
+    vector; a retired key no longer derives; once a compaction has run no
+    physical row (base or delta) remains under a retired version; codes
+    and bounds stay byte-identical throughout."""
+    from fspann_query_system_spark.api import COMPACT_FRACTION
+    from fspann_query_system_spark.crypto import decrypt_vectors
+    df, X = clustered
+    n = len(X)
+    cfg = SystemConfig(dim=16, m=8, lam=2, tables=4, divisions=2,
+                       block_size=32, refinement_limit=400,
+                       rotation_max_ops=10**9, top_k=10)
+    sys_ = ForwardSecureANNSystem(spark, cfg, master_key=b"\x46" * 32)
+    sys_.index_vectors(df)
+
+    def rows(d):
+        return sorted(tuple(r) for r in d.collect())
+
+    def versions(d):
+        return {r.key_version for r in d.select("key_version").distinct()
+                .collect()}
+
+    def cycle(lo, hi):
+        sys_.tracker.record(df.filter((F.col("id") >= lo) & (F.col("id") < hi))
+                            .select("id"))
+        out = sys_.rotate_and_reencrypt_touched()
+        retired = sys_.keys.delete_keys_older_than(out["version"],
+                                                   out["census"])
+        assert sum(out["census"].values()) == n
+        assert rows(sys_.index.codes) == codes
+        assert rows(sys_.index.bounds) == bounds
+        return out, retired
+
+    codes, bounds = rows(sys_.index.codes), rows(sys_.index.bounds)
+    # cycle 1 leaves a delta past the fraction; cycle 2 compacts it into
+    # the base, then migrates the last v1 rows into a delta that still
+    # passes the fraction; cycle 3 compacts again
+    last = n - int(COMPACT_FRACTION * n) - 50
+    _, retired = cycle(0, last)
+    assert retired == []
+    base = sys_._store
+    out, retired = cycle(last, n)
+    assert sys_._store is not base
+    assert retired == [1] and 1 not in out["census"]
+    with pytest.raises(KeyError, match="retired"):
+        sys_.keys.key_for(1)
+    # masked base rows still hold v1 ciphertext: garbage, not live
+    assert 1 in versions(sys_._store)
+    assert versions(sys_.encrypted) == {2, 3}
+    live = spark.sparkContext.broadcast(sys_.keys.key_map())
+    got = {r.id: r.vector for r in decrypt_vectors(
+        sys_.encrypted, live, mode="strict").select("id", "vector").collect()}
+    assert len(got) == n
+    assert all(np.array_equal(got[i], X[i]) for i in range(n))
+
+    cycle(0, 10)
+    assert not {1} & (versions(sys_._store) | versions(sys_._delta))
+    assert versions(sys_.encrypted) == {2, 3, 4}
 
 
 def test_search_job_count_ceiling(spark, clustered):
@@ -406,3 +499,58 @@ def test_search_job_count_ceiling(spark, clustered):
             f"search-jobs-{i}")))
         assert res.filter("rank = 10").count() == q.count()
     assert max(counts) <= 11, counts
+
+
+def test_rotation_job_count_ceiling(spark, clustered):
+    """Counter gate for the forward-security write path: the Spark jobs
+    of one ``rotate_and_reencrypt_touched`` on the 2,000-row fixture after
+    a ``search(sq8_rerank=4)``, counted by job group (first rotation, and
+    a second one that also folds the older delta in), and of the search
+    on the rotated store.
+
+    History on this fixture: 8 jobs for each of the two rotations when
+    the rotation deduplicated the touched set in Spark (twice, once per
+    use), rewrote the whole store as a union of its untouched and its
+    re-encrypted rows and took the census over it; the searches took 11
+    jobs each.  With the touched ids collected once and deduplicated on
+    the driver, a delta write instead of a store rewrite and the census
+    over the live view's two halves: 6 and 7 (the second also folds the
+    older delta in).  A search on a rotated store pays one job for the
+    broadcast of the delta's ids, which mask the base: 12, against 11
+    on an unrotated store (``test_search_job_count_ceiling``)."""
+    df, X = clustered
+    cfg = SystemConfig(dim=16, m=8, lam=2, tables=4, divisions=2,
+                       block_size=32, refinement_limit=400,
+                       rotation_max_ops=10**9, top_k=10)
+    sys_ = ForwardSecureANNSystem(spark, cfg, master_key=b"\x47" * 32)
+    sys_.index_vectors(df, sq8=True)
+    sys_.index.routing()
+    sys_.index.codes.count()
+    sys_.index.sq8_codes.count()
+    sc = spark.sparkContext
+
+    def jobs(group, fn):
+        sc.setJobGroup(group, group)
+        try:
+            out = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    rotations, searches = [], []
+    for i in range(2):
+        q = df.filter(F.col("id") % 89 == i).selectExpr("id AS q_id", "vector")
+        res, n = jobs(f"rotated-search-{i}",
+                      lambda: sys_.search(q, k=10, sq8_rerank=4))
+        assert res.filter("rank = 10").count() == q.count()
+        searches.append(n)
+        out, n = jobs(f"rotation-jobs-{i}", sys_.rotate_and_reencrypt_touched)
+        assert out["migrated"] > 0 and sys_._delta is not None
+        rotations.append(n)
+    q = df.filter(F.col("id") % 89 == 2).selectExpr("id AS q_id", "vector")
+    res, n = jobs("rotated-search-2", lambda: sys_.search(q, k=10, sq8_rerank=4))
+    assert res.filter("rank = 10").count() == q.count()
+    searches.append(n)
+    assert searches[0] <= 11, searches
+    assert max(searches[1:]) <= 12, searches
+    assert max(rotations) <= 7, rotations

@@ -1008,6 +1008,47 @@ def test_connected_components_long_chain(spark, monkeypatch):
     assert stats["rounds"] <= 16, stats
 
 
+def test_as_leaf_reads_the_cache_and_release_frees_checkpoints(spark):
+    """as_leaf: a one-node plan (the shape materialize returns, with the
+    same output attributes) over a persisted table's cached rows — the
+    random column a recomputation would redraw reads back identical —
+    storing nothing more.  release:
+    the blocks of a local checkpoint are gone afterwards, which
+    unpersist alone does not do."""
+    import secrets
+    from fspann_query_system_spark.functions.plan import (as_leaf,
+                                                          materialize,
+                                                          release)
+    sc = spark.sparkContext
+
+    def stored():
+        return {i.id(): i.memSize() + i.diskSize()
+                for i in sc._jsc.sc().getRDDStorageInfo()}
+
+    def rows(df):
+        return sorted(tuple(r) for r in df.collect())
+
+    draw = F.udf(lambda: secrets.randbits(62), "long").asNondeterministic()
+    df = spark.range(0, 500, numPartitions=3).withColumn("r", draw())
+    cached = df.persist()
+    cached.count()
+    before = stored()
+    leaf = as_leaf(cached)
+    plan = leaf._jdf.queryExecution().logical()
+    assert plan.nodeName() == "LogicalRDD" and plan.children().isEmpty()
+    assert plan.output().toString() == \
+        cached._jdf.queryExecution().analyzed().output().toString()
+    assert rows(leaf) == rows(cached)
+    assert stored() == before
+    release(cached)
+
+    pinned = materialize(spark.range(0, 500, numPartitions=3))
+    rdd_id = pinned._jdf.queryExecution().analyzed().rdd().id()
+    assert stored().get(rdd_id, 0) > 0
+    release(pinned)
+    assert stored().get(rdd_id, 0) == 0
+
+
 def test_materialize_follows_checkpoint_dir(spark, tmp_path, docs):
     """materialize() takes the reliable path exactly when the session has
     a checkpoint directory (the cluster fault-tolerance switch:

@@ -1,29 +1,42 @@
-"""Scheduled-job inventory for one bench query (VERDICT r12 "Next
-round" #3: repeat batch 9's method — count scheduled jobs per entry and
-delete the ones carrying no new information).
+"""Scheduled-job inventory.
 
-Runs the query once warm in a fresh JVM and reports how many Spark jobs
-the materializing action(s) scheduled, via the status tracker (job group
-ids are not needed: the JVM is dedicated to this one query).
+Query mode (VERDICT r12 "Next round" #3: repeat batch 9's method — count
+scheduled jobs per entry and delete the ones carrying no new
+information): runs one registry query once warm in a fresh JVM and
+reports how many Spark jobs the materializing action(s) scheduled, via
+the status tracker (job group ids are not needed: the JVM is dedicated
+to this one query).
+
+Facade mode: builds the ``enc_interactive`` facade of the benchmark on
+its seeded corpus (``fsbench/gen.py``, the benchmark's system config,
+SQ8 shadow, AES-GCM store), warms it with one search and one rotation,
+then lists one warm search and one warm rotation stage by stage: job,
+stage, tasks, executor run and CPU milliseconds, shuffle read and write
+bytes, read from Spark's status store.  The last line is one JSON object
+with the same listing.
 
 Usage: python3 tools/job_inventory.py <repo_root> <query>
+       python3 tools/job_inventory.py <repo_root> --facade SEED
 """
 
 from __future__ import annotations
 
 import json
 import os
+import shutil
 import sys
+import tempfile
 import time
 
 
-def main():
-    root = os.path.abspath(sys.argv[1])
-    name = sys.argv[2]
+def _setup(root: str) -> None:
     sys.path.insert(0, root)
     os.environ["PYTHONPATH"] = root + (
         os.pathsep + os.environ["PYTHONPATH"]
         if os.environ.get("PYTHONPATH") else "")
+
+
+def query_inventory(root: str, name: str) -> None:
     from fspann_query_system_spark.session import get_spark
     from fspann_query_system_spark import workloads
 
@@ -52,6 +65,102 @@ def main():
         info.append({"job": j, "stages": n_stages})
     print(json.dumps({"root": root, "query": name, "warm_wall_sec": wall,
                       "n_jobs": len(jobs), "jobs": info}), flush=True)
+
+
+def _listed(spark, group: str, fn) -> dict:
+    """Run ``fn`` under job group ``group``; its wall time and one row
+    per stage that ran (skipped stages are left out)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    t0 = time.perf_counter()
+    try:
+        fn()
+    finally:
+        wall = (time.perf_counter() - t0) * 1e3
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jsc = sc._jsc.sc()
+    jsc.listenerBus().waitUntilEmpty()
+    store = jsc.statusStore()
+    stages, seen = [], set()
+    job_ids = sorted(sc.statusTracker().getJobIdsForGroup(group))
+    for j in job_ids:
+        for sid in sc.statusTracker().getJobInfo(j).stageIds:
+            if sid in seen:
+                continue
+            seen.add(sid)
+            s = store.lastStageAttempt(sid)
+            if str(s.status()) == "SKIPPED":
+                continue
+            stages.append({
+                "job": j, "stage": sid, "tasks": s.numTasks(),
+                "run_ms": s.executorRunTime(),
+                "cpu_ms": round(s.executorCpuTime() / 1e6),
+                "shuffle_read": s.shuffleReadBytes(),
+                "shuffle_write": s.shuffleWriteBytes(),
+                "name": s.name().split(" at ")[0]})
+    return {"op": group, "wall_ms": round(wall), "jobs": len(job_ids),
+            "stages": stages}
+
+
+def facade_inventory(root: str, seed: int) -> None:
+    from fsbench import gen
+    from fsbench import workloads as bench
+    from fspann_query_system_spark.api import ForwardSecureANNSystem
+    from fspann_query_system_spark.session import get_spark
+
+    work = tempfile.mkdtemp(prefix="job-inventory-")
+    spark = get_spark("job-inventory", master=f"local[{bench.CORES}]",
+                      extra_conf={"spark.ui.showConsoleProgress": "false"})
+    spark.sparkContext.setLogLevel("ERROR")
+    try:
+        X = gen.clustered_vectors(seed, bench.N_VECTORS)
+        Q = gen.perturbed_queries(seed, X, bench.BATCH)
+        gen.write_vectors(os.path.join(work, "base.parquet"), X,
+                          files=bench.CORES)
+        gen.write_vectors(os.path.join(work, "queries.parquet"), Q,
+                          id_name="q_id", files=1)
+        queries = spark.read.parquet(
+            os.path.join(work, "queries.parquet")).persist()
+        queries.count()
+        sysm = ForwardSecureANNSystem(spark, bench._system_config(),
+                                      master_key=bytes(32))
+        sysm.index_vectors(spark.read.parquet(
+            os.path.join(work, "base.parquet")), sq8=True)
+        sysm.index.routing()
+        sysm.index.codes.count()
+        sysm.index.sq8_codes.count()
+
+        def search():
+            sysm.search(queries, k=bench.K, sq8_rerank=bench.SQ8_RERANK) \
+                .select("q_id", "id", "distance", "rank").collect()
+
+        search()                               # warm-up: the kernels,
+        sysm.rotate_and_reencrypt_touched()    # then a first delta
+        listing = [_listed(spark, "search", search),
+                   _listed(spark, "rotation",
+                           sysm.rotate_and_reencrypt_touched)]
+    finally:
+        spark.stop()
+        shutil.rmtree(work, ignore_errors=True)
+    cols = ("job", "stage", "tasks", "run_ms", "cpu_ms", "shuffle_read",
+            "shuffle_write", "name")
+    for op in listing:
+        print(f"# {op['op']}: {op['wall_ms']} ms wall, {op['jobs']} jobs, "
+              f"{len(op['stages'])} stages")
+        print("  " + " ".join(f"{c:>13}" for c in cols[:-1]) + "  name")
+        for s in op["stages"]:
+            print("  " + " ".join(f"{s[c]:>13}" for c in cols[:-1])
+                  + f"  {s['name']}")
+    print(json.dumps({"root": root, "seed": seed, "ops": listing}), flush=True)
+
+
+def main():
+    root = os.path.abspath(sys.argv[1])
+    _setup(root)
+    if sys.argv[2] == "--facade":
+        facade_inventory(root, int(sys.argv[3]))
+    else:
+        query_inventory(root, sys.argv[2])
 
 
 if __name__ == "__main__":
