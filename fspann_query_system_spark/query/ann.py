@@ -11,7 +11,8 @@ idiomatic win).  Physical shape (SURVEY §4):
             search + hamming-ranked multi-probe, O2/O3)        no job
           → probes (q_id, table, division, part_idx, part_ham) as a
             driver-built table
-          → join codes table on (table, division, part_idx)    shuffle 1
+          → join codes table on (table, division, part_idx),
+            hash on q_id into one partition per core           shuffle 1
           → groupBy (q_id, id) min(partition hamming)  (J2/A1)
           → per-query ranked-hamming prefilter, LIMIT refinement (F4/O5)
           → join point payloads on id (J1), decrypt if encrypted (C5)
@@ -642,10 +643,13 @@ def _sq8_shortlist(index: AnnIndex, kept: DataFrame, q_ids: np.ndarray,
     """Rank hamming-kept candidates by SQ8-reconstructed L2 and keep the
     ``limit`` best per query → (q_id, id).
 
-    Plan: kept ⋈ sq8_codes on id (the only shuffle that moves codes — and
-    it moves ≤ Q·refinement_limit rows of 1-byte/dim arrays, not vectors),
-    one Arrow kernel for the batched reconstruction+distance, then a
-    per-query (d2, id) window.  The query matrix ``Q`` (rows keyed by
+    Plan: ``kept`` arrives hashed on q_id, one partition per core
+    (:func:`search_batch`); kept ⋈ sq8_codes on id is whichever join the
+    planner picks (a broadcast of the shadow while it fits the broadcast
+    threshold, which keeps that partitioning, else a shuffle of ≤
+    Q·refinement_limit code rows), then one Arrow kernel for the batched
+    reconstruction+distance on those partitions, then a per-query
+    (d2, id) window.  The query matrix ``Q`` (rows keyed by
     ``q_ids``) rides in the kernel's broadcast variable, so no query
     vector is copied onto the candidate rows.  Runs strictly BEFORE the
     payload join, so the decrypt stage sees only limit/refinement_limit
@@ -710,6 +714,16 @@ def search_batch(index: AnnIndex, queries: DataFrame, k: int = 10,
     driver; rows the coding filter drops (NaN/Inf, wrong dimension) get
     no results.
 
+    The refine stage runs on every core.  Its one exchange before the
+    SQ8 kernel hashes the probe⋈codes rows on q_id into one partition
+    per core (``defaultParallelism``, at most one per query), which
+    serves the (q_id, id) min-merge and every q_id window after it.  On
+    an encrypted index the final rank window is hashed the same way (the
+    decrypt kernel's output needs an exchange anyway), so the result has
+    that many partitions.  An explicit partition count is not coalesced by
+    AQE, whose byte-sized partitions would put this compute-bound stage,
+    fed by a shuffle of about a megabyte, in one or two tasks.
+
     ``routing_mode``: "auto" (default) picks by measured crossover:
     "broadcast" — collect the bounds once, binary-search them on the
     driver (:func:`_route_slice`) — below ``AUTO_ROUTING_ROWS`` bounds
@@ -771,9 +785,12 @@ def search_batch(index: AnnIndex, queries: DataFrame, k: int = 10,
         probes_df = spark.createDataFrame(_route_probes_local(
             q_ids, coded, index.routing().value, probes))
 
-    # shuffle 1: probe partitions → member ids; min-merge across tables/divisions
+    # shuffle 1: probe partitions → member ids, one partition per core
+    # (see the docstring); min-merge across tables/divisions
+    n = max(1, min(spark.sparkContext.defaultParallelism, len(q_ids)))
     cand = (probes_df.join(index.codes.select("table", "division", "part_idx", "id"),
                            on=["table", "division", "part_idx"])
+            .repartition(n, "q_id")
             .groupBy("q_id", "id").agg(F.min("part_ham").alias("ham")))
 
     # metadata-filtered search: semi-join the allow-list BEFORE the
@@ -830,6 +847,11 @@ def search_batch(index: AnnIndex, queries: DataFrame, k: int = 10,
             scored_src = kept.join(index.points, on="id")
         scored = (scored_src.join(F.broadcast(qv), on="q_id")
                   .withColumn("distance", l2_expr("_qvec", "vector")))
+
+    if index.encrypted:
+        # the decrypt kernel emits new attributes, so the rank window
+        # needs an exchange anyway: size it like shuffle 1
+        scored = scored.repartition(n, "q_id")
 
     # shuffle 2: per-query exact rank (A2), ties by id (A3 semantics)
     wr = Window.partitionBy("q_id").orderBy(F.col("distance").asc(), F.col("id").asc())

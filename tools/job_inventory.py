@@ -11,9 +11,11 @@ Facade mode: builds the ``enc_interactive`` facade of the benchmark on
 its seeded corpus (``fsbench/gen.py``, the benchmark's system config,
 SQ8 shadow, AES-GCM store), warms it with one search and one rotation,
 then lists one warm search and one warm rotation stage by stage: job,
-stage, tasks, executor run and CPU milliseconds, shuffle read and write
-bytes, read from Spark's status store.  The last line is one JSON object
-with the same listing.
+stage, tasks, stage wall milliseconds (submission to completion),
+executor run and CPU milliseconds summed over the tasks, shuffle read
+and write bytes, read from Spark's status store.  A stage whose wall is
+close to its summed run time ran its tasks one after another, or in one
+task.  The last line is one JSON object with the same listing.
 
 Usage: python3 tools/job_inventory.py <repo_root> <query>
        python3 tools/job_inventory.py <repo_root> --facade SEED
@@ -93,6 +95,8 @@ def _listed(spark, group: str, fn) -> dict:
                 continue
             stages.append({
                 "job": j, "stage": sid, "tasks": s.numTasks(),
+                "wall_ms": (s.completionTime().get().getTime()
+                            - s.submissionTime().get().getTime()),
                 "run_ms": s.executorRunTime(),
                 "cpu_ms": round(s.executorCpuTime() / 1e6),
                 "shuffle_read": s.shuffleReadBytes(),
@@ -142,8 +146,8 @@ def facade_inventory(root: str, seed: int) -> None:
     finally:
         spark.stop()
         shutil.rmtree(work, ignore_errors=True)
-    cols = ("job", "stage", "tasks", "run_ms", "cpu_ms", "shuffle_read",
-            "shuffle_write", "name")
+    cols = ("job", "stage", "tasks", "wall_ms", "run_ms", "cpu_ms",
+            "shuffle_read", "shuffle_write", "name")
     for op in listing:
         print(f"# {op['op']}: {op['wall_ms']} ms wall, {op['jobs']} jobs, "
               f"{len(op['stages'])} stages")
