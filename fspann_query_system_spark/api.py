@@ -8,6 +8,13 @@ this facade drives the same lifecycle as a handful of DataFrame plans:
 index build is one job, the whole query set is one plan.  Keys stay on
 the driver (broadcast only).
 
+No table the facade keeps persisted holds a plaintext vector.  The
+routing state (LSH codes, partition bounds), the optional
+one-byte-per-dimension SQ8 shadow and the AES-GCM store stay cached;
+the plaintext corpus is cached only while the build reads it, and
+``evaluate`` and ``groundtruth`` read it again from its source (after a
+restore, by decrypting the live store).
+
 The encrypted store is a fixed base plus a small re-encrypted delta,
 merged on read (the reference writes one record file per id and
 version, so its re-encryption touches only the touched records).  A
@@ -22,6 +29,7 @@ import math
 
 import pyarrow as pa
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -68,7 +76,8 @@ class ForwardSecureANNSystem:
         self._delta_rows = 0                        # the last compaction
         self._rows = 0
         self._store_parts = 0
-        self._base: DataFrame | None = None         # plaintext vectors
+        self._base: DataFrame | None = None         # plaintext source;
+                                                    # None after a restore
         from .query.cache import QueryCache
         self.cache = QueryCache()
         self._index_epoch = 0
@@ -84,18 +93,35 @@ class ForwardSecureANNSystem:
                       sq8: bool = False) -> None:
         """Build routing state + encrypted store (SURVEY §3.1 steps 3-4).
         ``sq8=True`` also attaches the SQ8 compressed shadow at ingest so
-        :meth:`search` can compressed-refine (``sq8_rerank=``)."""
+        :meth:`search` can compressed-refine (``sq8_rerank=``).
+
+        ``vectors`` is persisted for the build only: the count, the
+        params fit, the LSH coding, the SQ8 stats and shadow and the
+        encryption all read it, so a source that is costly to read (a
+        vector file parsed in Python) is read once.  Once the routing
+        state, the shadow and the store are loaded, it is released, so
+        no plaintext copy stays in the block store (releasing it earlier
+        would re-plan the not-yet-loaded tables to read the source).  A
+        table the caller persisted is left as it is."""
         self.profiler.start("index_build")
-        self._base = vectors.persist()
-        rows = self._base.count()
+        owned = vectors.storageLevel == StorageLevel.NONE
+        if owned:
+            vectors.persist()
+        self._base = vectors
+        rows = vectors.count()
         self.keys.record_ops(rows)
         self.keys.rotate_if_needed()
-        plain_idx = AnnIndex.build(self._base, self.config.lsh(), params=params)
+        plain_idx = AnnIndex.build(vectors, self.config.lsh(), params=params)
         if sq8:
             plain_idx = plain_idx.with_sq8()
+            plain_idx.sq8_codes.count()
+        plain_idx.routing()
+        plain_idx.codes.count()
         bc = self._keys_bc()
-        store = encrypt_vectors(self._base, bc, self.keys.current_version).persist()
+        store = encrypt_vectors(vectors, bc, self.keys.current_version).persist()
         store.count()
+        if owned:
+            release(vectors)
         self.index = plain_idx
         self._set_base(store, as_leaf(store), rows, bc)
         self._index_epoch += 1
@@ -199,15 +225,27 @@ class ForwardSecureANNSystem:
     def evaluate(self, results: DataFrame, queries: DataFrame,
                  ks: list[int]) -> DataFrame:
         self.profiler.start("evaluate")
-        rows = query_metric_rows(results, self._base, queries, None, ks,
-                                 n_base=self._base.count())
+        rows = query_metric_rows(results, self._plaintext(), queries, None,
+                                 ks, n_base=self._rows)
         out = aggregates(rows)
         self.profiler.stop("evaluate")
         return out
 
     def groundtruth(self, queries: DataFrame, k: int = 100) -> DataFrame:
         """GT precompute (SURVEY §3.3 oracle) on the plaintext base."""
-        return groundtruth_table(self._base, queries, k=k)
+        return groundtruth_table(self._plaintext(), queries, k=k)
+
+    def _plaintext(self) -> DataFrame:
+        """The plaintext corpus, planned at call time: the source
+        :meth:`index_vectors` was given or, after
+        :meth:`restore_from_store`, a strict decrypt of the current live
+        store under the current keys (a compaction releases the table
+        the facade was restored from)."""
+        if self._base is not None:
+            return self._base
+        from .crypto.aes import decrypt_vectors
+        return decrypt_vectors(self.encrypted, self._keys_bc(),
+                               mode="strict").select("id", "vector")
 
     # -- FORWARD SECURITY -------------------------------------------------
     def rotate_and_reencrypt_touched(self) -> dict:
@@ -315,13 +353,22 @@ class ForwardSecureANNSystem:
         """Rebuild routing state from an encrypted store: decrypt →
         re-code with persisted params (the reference must re-insert
         one-by-one; here it is one decrypt + one build plan).  The store
-        becomes the base of this facade's live store."""
+        becomes the base of this facade's live store.
+
+        The decrypted vectors are persisted only while the routing state
+        is built: its codes and bounds are materialized, then the
+        plaintext is released (releasing it first would re-plan the
+        not-yet-loaded tables to decrypt again).  :meth:`evaluate` and
+        :meth:`groundtruth` decrypt the live store when called."""
         from .crypto.aes import decrypt_vectors
         bc = self._keys_bc()
         plain = decrypt_vectors(encrypted, bc, mode="strict") \
-            .select("id", "vector")
-        self._base = plain.persist()
-        self.index = AnnIndex.build(self._base, params.cfg, params=params)
+            .select("id", "vector").persist()
+        self._base = None
+        self.index = AnnIndex.build(plain, params.cfg, params=params)
+        self.index.routing()
+        self.index.codes.count()
+        release(plain)
         self._set_base(encrypted, as_leaf(encrypted), encrypted.count(), bc)
         self._index_epoch += 1
         self.cache.invalidate()

@@ -145,7 +145,8 @@ class AnnIndex:
     _bounds_rows: int | None = None
     _keys_bc: object = None         # with_encrypted_points: enables the
     _decrypt_mode: str = "skip"     # fused decrypt+score refine kernel
-    sq8_codes: DataFrame = None     # (id, codes ARRAY<INT>) compressed shadow
+    sq8_codes: DataFrame = None     # (id, codes BINARY) compressed shadow,
+                                    # one byte per dimension
     sq8_mins: object = None         # per-dim codebook (lists of float)
     sq8_maxs: object = None
 
@@ -187,26 +188,28 @@ class AnnIndex:
         return cls(params=params, codes=codes_p, bounds=bounds, points=points)
 
     def with_sq8(self) -> "AnnIndex":
-        """Attach an SQ8 compressed shadow of the payload vectors (4x
-        smaller than float32, 8x than float64): ``search_batch(...,
-        sq8_rerank=r)`` then ranks hamming-kept candidates on the codes
-        and decrypts/scores only the top k*r per query, cutting AES work
-        by refinement_limit/(k*r) at matched recall (the reference
-        decrypts EVERY kept candidate, ``QueryServiceImpl.java:219-271``).
+        """Attach an SQ8 compressed shadow of the payload vectors: one
+        byte per dimension (4x smaller than float32, 8x than float64),
+        stored as ``codes BINARY`` (:func:`_sq8_shadow`).
+        ``search_batch(..., sq8_rerank=r)`` then ranks hamming-kept
+        candidates on the codes and decrypts/scores only the top k*r per
+        query, cutting AES work by refinement_limit/(k*r) at matched
+        recall (the reference decrypts EVERY kept candidate,
+        ``QueryServiceImpl.java:219-271``).
 
         Call on the plaintext index BEFORE ``with_encrypted_points`` —
         the shadow derives from plaintext at ingest, exactly like the
         LSH codes (same leakage class as the routing state: both are
         deterministic functions of the vector kept server-side).  One
-        stats aggregate + one map-side encode, computed once."""
+        stats aggregate + one map-side encode, computed once; rows added
+        by :meth:`insert` are coded under the same codebook."""
         from dataclasses import replace
-        from ..ops.similarity import sq8_stats, sq8_quantize
+        from ..ops.similarity import sq8_stats
         if self.encrypted:
             raise ValueError("with_sq8 must run on the plaintext index "
                              "(before with_encrypted_points)")
         mins, maxs = sq8_stats(self.points, "vector")
-        codes = (sq8_quantize(self.points, mins, maxs)
-                 .select("id", "codes").persist())
+        codes = _sq8_shadow(self.points, mins, maxs).persist()
         return replace(self, sq8_codes=codes, sq8_mins=mins, sq8_maxs=maxs)
 
     def with_encrypted_points(self, encrypted: DataFrame, keys_bc,
@@ -274,12 +277,22 @@ class AnnIndex:
         families + refine=400 drops none) — another reason sustained
         append workloads should rebuild on a cadence."""
         from dataclasses import replace
+        if mode not in ("append", "rebuild"):
+            raise ValueError(f"mode must be 'append' or 'rebuild', got {mode!r}")
         cfg = self.params.cfg
         new_codes = code_vectors(new_vectors, self.params,
                                  id_col=id_col, vector_col=vector_col)
         new_points = new_vectors.select(F.col(id_col).alias("id"),
                                         F.col(vector_col).alias("vector"))
         points = self.points.unionByName(new_points)
+        # the SQ8 shadow gains the new rows under the existing codebook
+        # (clipped): the shortlist inner-joins on it.  Only the new rows
+        # are cached; the union reads the old shadow's cache, so no row
+        # of it is stored twice
+        sq8 = self.sq8_codes
+        if sq8 is not None:
+            sq8 = sq8.unionByName(_sq8_shadow(
+                new_points, self.sq8_mins, self.sq8_maxs).persist())
         if mode == "rebuild":
             all_codes = (self.codes.drop("part_idx")
                          .unionByName(new_codes.withColumnRenamed(id_col, "id")))
@@ -287,9 +300,7 @@ class AnnIndex:
                                                id_col="id")
             return replace(self, codes=codes_p.persist(),
                            bounds=bounds.persist(), points=points,
-                           _routing_bc=None, _bounds_rows=None)
-        if mode != "append":
-            raise ValueError(f"mode must be 'append' or 'rebuild', got {mode!r}")
+                           sq8_codes=sq8, _routing_bc=None, _bounds_rows=None)
         routed = _route_nearest(
             new_codes.withColumnRenamed(id_col, "id"), self.routing())
         codes = self.codes.unionByName(routed)
@@ -301,7 +312,8 @@ class AnnIndex:
                               + F.coalesce(F.col("count"), F.lit(0)))
                   .drop("count"))
         return replace(self, codes=codes.persist(), bounds=bounds.persist(),
-                       points=points, _routing_bc=None, _bounds_rows=None)
+                       points=points, sq8_codes=sq8, _routing_bc=None,
+                       _bounds_rows=None)
 
     def delete(self, ids: DataFrame, id_col: str = "id") -> "AnnIndex":
         """Tombstone-delete: filter the payload table; routing state is
@@ -638,6 +650,40 @@ def _route_probes_join(q_codes: DataFrame, bounds: DataFrame,
                     F.col("part_ham").cast("long").alias("part_ham")))
 
 
+def _sq8_shadow(points: DataFrame, mins: list, maxs: list) -> DataFrame:
+    """(id, codes BINARY): :func:`ops.similarity.sq8_quantize`'s codes of
+    ``points`` under the codebook (``mins``, ``maxs``), clipped to
+    [0, 255] (a row inserted after the codebook was fit may fall outside
+    it), one byte per dimension.  A JVM-native expression packs them
+    (two hex digits per code, then ``unhex``), so ingest runs no
+    Python."""
+    from ..ops.similarity import sq8_quantize
+
+    def hex_byte(c):
+        return F.lpad(F.hex(F.least(F.greatest(c, F.lit(0)), F.lit(255))),
+                      2, "0")
+
+    return sq8_quantize(points, mins, maxs).select(
+        "id", F.unhex(F.concat_ws("", F.transform("codes", hex_byte)))
+        .alias("codes"))
+
+
+def _binary_rows(arr: pa.Array, width: int) -> np.ndarray:
+    """A BINARY or LARGE_BINARY Arrow array whose values are all ``width``
+    bytes long, as an (n, width) uint8 view of its values buffer: no
+    copy.  Honors the array's ``offset`` and offsets buffer, since a
+    batch may be a slice of a larger array."""
+    large = pa.types.is_large_binary(arr.type)
+    off_t = np.dtype(np.int64 if large else np.int32)
+    _, offsets, values = arr.buffers()
+    off = np.frombuffer(offsets, dtype=off_t, count=len(arr) + 1,
+                        offset=arr.offset * off_t.itemsize)
+    if np.any(np.diff(off) != width):
+        raise ValueError(f"SQ8 codes must be {width} bytes per row")
+    return np.frombuffer(values, dtype=np.uint8, count=len(arr) * width,
+                         offset=int(off[0])).reshape(len(arr), width)
+
+
 def _sq8_shortlist(index: AnnIndex, kept: DataFrame, q_ids: np.ndarray,
                    Q: np.ndarray, limit: int) -> DataFrame:
     """Rank hamming-kept candidates by SQ8-reconstructed L2 and keep the
@@ -647,13 +693,15 @@ def _sq8_shortlist(index: AnnIndex, kept: DataFrame, q_ids: np.ndarray,
     (:func:`search_batch`); kept ⋈ sq8_codes on id is whichever join the
     planner picks (a broadcast of the shadow while it fits the broadcast
     threshold, which keeps that partitioning, else a shuffle of ≤
-    Q·refinement_limit code rows), then one Arrow kernel for the batched
-    reconstruction+distance on those partitions, then a per-query
-    (d2, id) window.  The query matrix ``Q`` (rows keyed by
-    ``q_ids``) rides in the kernel's broadcast variable, so no query
-    vector is copied onto the candidate rows.  Runs strictly BEFORE the
-    payload join, so the decrypt stage sees only limit/refinement_limit
-    of the candidates."""
+    Q·refinement_limit code rows), then one ``mapInArrow`` kernel for the
+    batched reconstruction+distance on those partitions, then a
+    per-query (d2, id) window.  The kernel reads the one-byte codes
+    straight out of the Arrow values buffer (:func:`_binary_rows`, no
+    per-row decode) and scores them in float64.  The query matrix ``Q``
+    (rows keyed by ``q_ids``) rides in the kernel's broadcast variable,
+    so no query vector is copied onto the candidate rows.  Runs strictly
+    BEFORE the payload join, so the decrypt stage sees only
+    limit/refinement_limit of the candidates."""
     spark = kept.sparkSession
     mn = np.array(index.sq8_mins, dtype=np.float64)
     rg = np.array(index.sq8_maxs, dtype=np.float64) - mn
@@ -662,26 +710,26 @@ def _sq8_shortlist(index: AnnIndex, kept: DataFrame, q_ids: np.ndarray,
 
     carry = [c for c in kept.columns if c.startswith("_cand_")]
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         mn_, rg_, qid_, Q_ = bc.value
-        for pdf in batches:
-            if len(pdf) == 0:
+        for b in batches:
+            if b.num_rows == 0:
                 continue
-            C = np.vstack([np.asarray(c, dtype=np.float64)
-                           for c in pdf["codes"].to_numpy()])
-            Qm = Q_[np.searchsorted(qid_, pdf["q_id"].to_numpy())]
+            C = _binary_rows(b.column("codes"), len(mn_))
+            q = b.column("q_id")
+            Qm = Q_[np.searchsorted(qid_, q.to_numpy())]
             d2 = np.square(mn_ + C / 255.0 * rg_ - Qm).sum(axis=1)
-            out = {"q_id": pdf["q_id"], "id": pdf["id"], "_ad": d2}
-            for c in carry:
-                out[c] = pdf[c]
-            yield pd.DataFrame(out)
+            yield pa.RecordBatch.from_arrays(
+                [q, b.column("id"), pa.array(d2)]
+                + [b.column(c) for c in carry],
+                names=["q_id", "id", "_ad", *carry])
 
     id_type = index.sq8_codes.schema["id"].dataType.simpleString()
     schema = f"q_id BIGINT, id {id_type}, _ad DOUBLE"
     schema += "".join(f", {c} BIGINT" for c in carry)
     approx = (kept.join(index.sq8_codes, on="id")
               .select("q_id", "id", "codes", *carry)
-              .mapInPandas(run, schema=schema))
+              .mapInArrow(run, schema=schema))
     w = Window.partitionBy("q_id").orderBy(F.col("_ad").asc(), F.col("id").asc())
     return (approx.withColumn("_sr", F.row_number().over(w))
             .filter(F.col("_sr") <= limit).select("q_id", "id", *carry))

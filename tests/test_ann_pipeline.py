@@ -355,6 +355,53 @@ def test_insert_append_and_rebuild(spark, clustered):
     assert idx4.codes is idx2.codes                # routing state untouched
 
 
+def test_insert_keeps_sq8_shadow_current(spark, clustered):
+    """Inserted vectors join the SQ8 shadow, coded under the index's
+    codebook and clipped to [0, 255]: the shortlist inner-joins on the
+    shadow, so without them an ``sq8_rerank`` search never returns an
+    inserted vector.  Both insert modes."""
+    from pyspark import StorageLevel
+    from fspann_query_system_spark.ops.similarity import sq8_quantize
+    df, X = clustered
+    base = df.filter(F.col("id") < 1900)
+    held = df.filter(F.col("id") >= 1900)          # 100 held-out vectors
+    cfg = LshConfig(dim=16, m=8, lam=2, tables=4, divisions=2, seed=42,
+                    block_size=32, probes=5, refinement_limit=400)
+    idx = AnnIndex.build(base, cfg).with_sq8()
+    q_new = held.select(F.col("id").alias("q_id"), "vector")
+    clipped = {r.id: [min(max(c, 0), 255) for c in r.codes] for r in
+               sq8_quantize(held, idx.sq8_mins, idx.sq8_maxs).collect()}
+    assert any(c in (0, 255) for cs in clipped.values() for c in cs)
+    for mode in ("append", "rebuild"):
+        idx2 = idx.insert(held, mode=mode)
+        res = search_batch(idx2, q_new, k=5, sq8_rerank=2).collect()
+        top = {r.q_id: r.id for r in res if r.rank == 1}
+        assert top == {i: i for i in range(1900, 2000)}, mode
+        shadow = {r.id: list(r.codes) for r in idx2.sq8_codes.collect()}
+        assert len(shadow) == 2000, mode
+        assert {i: shadow[i] for i in clipped} == clipped, mode
+        # only the new rows are cached anew: the union reads the old
+        # shadow's cache, so none of its rows is stored twice
+        assert idx2.sq8_codes.storageLevel == StorageLevel.NONE, mode
+        assert idx.sq8_codes.storageLevel != StorageLevel.NONE, mode
+
+
+def test_binary_rows_decode_honors_slices_and_large_binary():
+    """The SQ8 kernel's zero-copy decode reads a sliced batch at its own
+    offset, accepts BINARY and LARGE_BINARY, and refuses rows of another
+    width."""
+    import pyarrow as pa
+    from fspann_query_system_spark.query.ann import _binary_rows
+    rows = [bytes([i, 255 - i, 7]) for i in range(6)]
+    want = np.array([list(r) for r in rows], dtype=np.uint8)
+    for typ in (pa.binary(), pa.large_binary()):
+        arr = pa.array(rows, typ)
+        assert np.array_equal(_binary_rows(arr, 3), want)
+        assert np.array_equal(_binary_rows(arr.slice(2, 3), 3), want[2:5])
+        with pytest.raises(ValueError):
+            _binary_rows(pa.array([b"ab", b"abcd"], typ), 3)
+
+
 @pytest.mark.parametrize("cfg_kw", [
     # tight everything: probes ≪ partitions, refine binds hard
     dict(m=6, lam=2, tables=2, divisions=2, seed=5, block_size=8,

@@ -132,6 +132,122 @@ def test_facade_sq8_compressed_refine(spark, clustered):
     assert top1 == {i: i for i in range(5)}    # exact self-hits survive
 
 
+def _block_store(spark) -> tuple[dict, set]:
+    """The cached relations, by JVM identity → (their column names, the
+    RDD id of their buffers when loaded), and the RDD ids that hold
+    blocks in the block store."""
+    cm = spark._jsparkSession.sharedState().cacheManager()
+    field = cm.getClass().getDeclaredField("cachedData")
+    field.setAccessible(True)
+    seq = field.get(cm)
+    identity = spark._jvm.java.lang.System.identityHashCode
+    cached = {}
+    for i in range(seq.size()):
+        cd = seq.apply(i)
+        out = cd.plan().output()
+        builder = cd.cachedRepresentation().cacheBuilder()
+        rdd = (builder.cachedColumnBuffers().id()
+               if builder.isCachedColumnBuffersLoaded() else None)
+        cached[identity(cd)] = (
+            {out.apply(j).name() for j in range(out.size())}, rdd)
+    stored = {i.id() for i in spark.sparkContext._jsc.sc().getRDDStorageInfo()}
+    return cached, stored
+
+
+def _assert_no_plaintext_since(spark, before, timeout_s: float = 20.0):
+    """No relation cached since ``before`` has a ``vector`` column, and
+    every RDD stored since then is the buffer of such a relation.  A
+    released table's blocks are freed asynchronously, hence the wait."""
+    import time
+    deadline = time.monotonic() + timeout_s
+    while True:
+        cached, stored = _block_store(spark)
+        new = {k: v for k, v in cached.items() if k not in before[0]}
+        assert not [cols for cols, _ in new.values() if "vector" in cols]
+        owned = {rdd for _, rdd in new.values()}
+        stray = stored - before[1] - owned
+        if not stray or time.monotonic() > deadline:
+            break
+        time.sleep(0.2)
+    assert not stray, stray
+
+
+def test_no_plaintext_at_rest(spark, clustered):
+    """After ``index_vectors(sq8=True)`` and after ``restore_from_store``
+    the facade has persisted no plaintext vector: its cached tables are
+    routing state, the SQ8 shadow and the AES-GCM store.  ``evaluate``
+    and ``groundtruth`` re-read the plaintext from its source and agree
+    with the same calls on the caller's table, on a restored facade also
+    after a compaction has released the table it was restored from.  The SQ8 shadow is one
+    byte per dimension and unpacks to ``sq8_quantize``'s codes."""
+    from fspann_query_system_spark.api import COMPACT_FRACTION
+    from fspann_query_system_spark.functions.plan import materialize
+    from fspann_query_system_spark.ops.similarity import sq8_quantize
+    from fspann_query_system_spark.query.exact import groundtruth_table
+    from fspann_query_system_spark.query.profiler import (aggregates,
+                                                          query_metric_rows)
+    from pyspark.sql.types import BinaryType
+    df, X = clustered
+    cfg = SystemConfig(dim=16, m=8, lam=2, tables=4, divisions=2,
+                       block_size=32, refinement_limit=400,
+                       rotation_max_ops=10**9, top_k=10)
+    q = df.filter(F.col("id") % 97 == 5).selectExpr("id AS q_id", "vector")
+    ks = [1, 10]
+
+    def expected(res):
+        return (sorted(tuple(r) for r in aggregates(query_metric_rows(
+                    res, df, q, None, ks, n_base=len(X))).collect()),
+                sorted((r.q_id, list(r.neighbor_ids)) for r in
+                       groundtruth_table(df, q, k=20).collect()))
+
+    def got(sysm, res):
+        return (sorted(tuple(r) for r in sysm.evaluate(res, q, ks).collect()),
+                sorted((r.q_id, list(r.neighbor_ids)) for r in
+                       sysm.groundtruth(q, k=20).collect()))
+
+    before = _block_store(spark)
+    sys_ = ForwardSecureANNSystem(spark, cfg, master_key=b"\x49" * 32)
+    # a plan of its own, not the fixture's cached one
+    sys_.index_vectors(df.filter(F.col("id") >= 0), sq8=True)
+    idx = sys_.index
+    idx.routing()
+    idx.codes.count()
+    idx.sq8_codes.count()
+    _assert_no_plaintext_since(spark, before)
+
+    shadow = idx.sq8_codes
+    assert isinstance(shadow.schema["codes"].dataType, BinaryType)
+    packed = {r.id: list(r.codes) for r in shadow.collect()}
+    ref = {r.id: r.codes for r in
+           sq8_quantize(df, idx.sq8_mins, idx.sq8_maxs).collect()}
+    assert len(packed) == len(X) and all(len(c) == 16 for c in packed.values())
+    assert packed == ref
+
+    res = sys_.search(q, k=10, sq8_rerank=4)
+    want = expected(res)
+    assert got(sys_, res) == want
+
+    # restored from a checkpoint, whose blocks a compaction frees
+    stored = materialize(sys_.encrypted)
+    before = _block_store(spark)
+    sys2 = ForwardSecureANNSystem(spark, cfg, master_key=b"\x49" * 32)
+    sys2.restore_from_store(stored, idx.params)
+    _assert_no_plaintext_since(spark, before)
+    assert got(sys2, res) == want
+    assert sorted(tuple(r) for r in sys2.search(q, k=10).collect()) == \
+        sorted(tuple(r) for r in sys_.search(q, k=10).collect())
+
+    # the first rotation leaves a delta past the compaction fraction, the
+    # second compacts it and releases the restored table: the plaintext
+    # view follows the live store
+    for lo, hi in ((0, int(COMPACT_FRACTION * len(X)) + 50), (0, 10)):
+        sys2.tracker.record(df.filter((F.col("id") >= lo) & (F.col("id") < hi))
+                            .select("id"))
+        sys2.rotate_and_reencrypt_touched()
+    assert sys2._store is not stored
+    assert got(sys2, res) == want
+
+
 def test_query_cache_lru_ttl_and_epoch():
     from fspann_query_system_spark.query.cache import QueryCache
     c = QueryCache(max_entries=2, ttl_sec=60)

@@ -15,7 +15,11 @@ stage, tasks, stage wall milliseconds (submission to completion),
 executor run and CPU milliseconds summed over the tasks, shuffle read
 and write bytes, read from Spark's status store.  A stage whose wall is
 close to its summed run time ran its tasks one after another, or in one
-task.  The last line is one JSON object with the same listing.
+task.  Before those, it lists each table the facade build left in the
+block store (name, partitions, bytes, and bytes per raw float32 corpus
+byte, the unit of the benchmark's ``space_amp``), measured where the
+benchmark measures it: after the build and the loads of its lazy
+tables.  The last line is one JSON object with the same listings.
 
 Usage: python3 tools/job_inventory.py <repo_root> <query>
        python3 tools/job_inventory.py <repo_root> --facade SEED
@@ -106,6 +110,35 @@ def _listed(spark, group: str, fn) -> dict:
             "stages": stages}
 
 
+def _stored(spark) -> dict:
+    """RDD id → (partitions, bytes in memory and on disk) of every RDD
+    that holds blocks in the block store."""
+    return {i.id(): (i.numPartitions(), i.memSize() + i.diskSize())
+            for i in spark.sparkContext._jsc.sc().getRDDStorageInfo()}
+
+
+def _persisted_tables(spark, sysm, before: dict, raw_bytes: int) -> list:
+    """One row per RDD stored since ``before``, named after the facade
+    table whose cache it is ("other" when none is)."""
+    cm = spark._jsparkSession.sharedState().cacheManager()
+    idx = sysm.index
+    names = {}
+    for name, df in (("plaintext base", sysm._base), ("store", sysm._store),
+                     ("codes", idx.codes), ("bounds", idx.bounds),
+                     ("sq8 shadow", idx.sq8_codes)):
+        if df is None:
+            continue
+        cd = cm.lookupCachedData(df._jdf)
+        if cd.isDefined():
+            builder = cd.get().cachedRepresentation().cacheBuilder()
+            if builder.isCachedColumnBuffersLoaded():
+                names[builder.cachedColumnBuffers().id()] = name
+    return [{"table": names.get(rdd, "other"), "rdd": rdd, "partitions": parts,
+             "bytes": size, "per_raw": round(size / raw_bytes, 3)}
+            for rdd, (parts, size) in sorted(_stored(spark).items())
+            if rdd not in before]
+
+
 def facade_inventory(root: str, seed: int) -> None:
     from fsbench import gen
     from fsbench import workloads as bench
@@ -126,6 +159,7 @@ def facade_inventory(root: str, seed: int) -> None:
         queries = spark.read.parquet(
             os.path.join(work, "queries.parquet")).persist()
         queries.count()
+        before = _stored(spark)
         sysm = ForwardSecureANNSystem(spark, bench._system_config(),
                                       master_key=bytes(32))
         sysm.index_vectors(spark.read.parquet(
@@ -133,6 +167,7 @@ def facade_inventory(root: str, seed: int) -> None:
         sysm.index.routing()
         sysm.index.codes.count()
         sysm.index.sq8_codes.count()
+        tables = _persisted_tables(spark, sysm, before, bench.RAW_VECTOR_BYTES)
 
         def search():
             sysm.search(queries, k=bench.K, sq8_rerank=bench.SQ8_RERANK) \
@@ -146,6 +181,12 @@ def facade_inventory(root: str, seed: int) -> None:
     finally:
         spark.stop()
         shutil.rmtree(work, ignore_errors=True)
+    total = sum(t["bytes"] for t in tables)
+    print(f"# persisted tables: {total} bytes, "
+          f"{total / bench.RAW_VECTOR_BYTES:.3f} x the raw corpus")
+    for t in tables:
+        print(f"  {t['table']:>14} rdd {t['rdd']:>5} {t['partitions']:>5} parts "
+              f"{t['bytes']:>12} bytes {t['per_raw']:>7.3f} x raw")
     cols = ("job", "stage", "tasks", "wall_ms", "run_ms", "cpu_ms",
             "shuffle_read", "shuffle_write", "name")
     for op in listing:
@@ -155,7 +196,8 @@ def facade_inventory(root: str, seed: int) -> None:
         for s in op["stages"]:
             print("  " + " ".join(f"{s[c]:>13}" for c in cols[:-1])
                   + f"  {s['name']}")
-    print(json.dumps({"root": root, "seed": seed, "ops": listing}), flush=True)
+    print(json.dumps({"root": root, "seed": seed, "tables": tables,
+                      "ops": listing}), flush=True)
 
 
 def main():
