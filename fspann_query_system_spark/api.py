@@ -38,7 +38,7 @@ from .functions.plan import as_leaf, materialize, release
 from .crypto import KeyManager, RotationPolicy, encrypt_vectors, reencrypt_all, \
     TouchedTracker
 from .lsh.params import LshParams, fit_params_from_df
-from .query.ann import AnnIndex, search_batch, search_batch_adaptive
+from .query.ann import AnnIndex, search_batch_adaptive
 from .query.exact import knn_exact, groundtruth_table
 from .query.profiler import Profiler, query_metric_rows, aggregates
 from .query.token import interleave_decoys, strip_decoy_results
@@ -134,8 +134,8 @@ class ForwardSecureANNSystem:
             vec.select("id", F.col("vector").cast("array<double>").alias("vector")))
 
     # -- QUERY + EVAL -----------------------------------------------------
-    def search_cached(self, queries: DataFrame, k: int | None = None,
-                      adaptive: bool = True) -> DataFrame:
+    def search_cached(self, queries: DataFrame,
+                      k: int | None = None) -> DataFrame:
         """Read-through result cache in front of :meth:`search` (reference
         LRU+TTL query cache, ``ForwardSecureANNSystem.java:1103-1151``):
         split the batch into cache hits and misses by logical token key,
@@ -168,7 +168,7 @@ class ForwardSecureANNSystem:
                 "q_id": pa.array([r.q_id for _, r in miss], pa.int64()),
                 "vector": pa.array([r.vector for _, r in miss],
                                    pa.list_(pa.float64()))}))
-            res = self.search(mdf, k=k, adaptive=adaptive, with_decoys=False)
+            res = self.search(mdf, k=k, with_decoys=False)
             got = res.select("q_id", "id", "distance", "rank").collect()
             by_q: dict = {}
             for row in got:
@@ -184,7 +184,7 @@ class ForwardSecureANNSystem:
                 (pa.int64(), pa.int64(), pa.float64(), pa.int32()))}))
 
     def search(self, queries: DataFrame, k: int | None = None,
-               adaptive: bool = True, with_decoys: bool | None = None,
+               with_decoys: bool | None = None,
                sq8_rerank: int | None = None,
                with_diagnostics: bool = False) -> DataFrame:
         """Batched search over the encrypted store; decoy interleaving per
@@ -199,7 +199,8 @@ class ForwardSecureANNSystem:
         the adaptive retry check's collect (plus one count when a retry
         pass runs — for every query with fewer than k rows, zero
         included; :func:`query.ann.search_batch_adaptive`), or one
-        ``count()``.  The batch is coded and routed on the driver."""
+        ``count()`` when ``probe_override <= 0`` turns the retry off.
+        The batch is coded and routed on the driver."""
         if self.index is None:
             raise RuntimeError("index not built")
         k = k or self.config.top_k
@@ -211,12 +212,8 @@ class ForwardSecureANNSystem:
                                   self.config.decoy_mode, self.config.dim,
                                   seed=self.config.seed).drop("is_decoy")
         self.profiler.start("search")
-        kw = dict(k=k, sq8_rerank=sq8_rerank, with_diagnostics=with_diagnostics)
-        if adaptive:
-            res = search_batch_adaptive(self.index, q, **kw)
-        else:
-            res = search_batch(self.index, q, **kw).persist()
-            res.count()
+        res = search_batch_adaptive(self.index, q, k=k, sq8_rerank=sq8_rerank,
+                                    with_diagnostics=with_diagnostics)
         self.profiler.stop("search")
         if self.config.reenc_mode != "off":
             self.tracker.record(res.select("id"))

@@ -28,6 +28,7 @@ from cryptography.exceptions import InvalidTag
 from cryptography.hazmat.primitives.ciphers.aead import AESGCM
 
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 
 IV_LEN = 12
 
@@ -71,40 +72,16 @@ def decrypt_record(key: bytes, point_id, key_version: int, dim: int,
 def encrypt_vectors(df: DataFrame, keys_bc, key_version: int,
                     id_col: str = "id", vector_col: str = "vector") -> DataFrame:
     """(id, vector) → encrypted_points rows
-    (id, key_version, dim, iv, ciphertext)  [FIXTURES.md §4 schema].
+    (id, key_version, dim, iv, ciphertext)  [FIXTURES.md §4 schema], every
+    row under ``key_version``: :func:`encrypt_vectors_versioned` over a
+    constant version column.
 
     IVs are drawn from os.urandom per row (never reused across
     re-encryptions, matching the reference's fresh-IV rule)."""
-    id_type = df.schema[id_col].dataType.simpleString()
-    schema = (f"{id_col} {id_type}, key_version INT, dim INT, "
-              f"iv BINARY, ciphertext BINARY")
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import secrets
-        from cryptography.hazmat.primitives.ciphers.aead import AESGCM as _AESGCM
-        key = keys_bc.value[key_version]
-        aes = _AESGCM(key)
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            ids = pdf[id_col].tolist()
-            ivs, cts, dims = [], [], []
-            for pid, vec in zip(ids, pdf[vector_col]):
-                iv = secrets.token_bytes(IV_LEN)
-                dim = len(vec)
-                cts.append(aes.encrypt(iv, vector_to_bytes(vec),
-                                       _aad(pid, key_version, dim)))
-                ivs.append(iv)
-                dims.append(dim)
-            yield pd.DataFrame({
-                id_col: ids,
-                "key_version": np.full(len(ids), key_version, dtype=np.int32),
-                "dim": np.array(dims, dtype=np.int32),
-                "iv": ivs,
-                "ciphertext": cts,
-            })
-
-    return df.select(id_col, vector_col).mapInPandas(run, schema=schema)
+    return encrypt_vectors_versioned(
+        df.select(id_col, vector_col,
+                  F.lit(key_version).cast("int").alias("_key_version")),
+        keys_bc, "_key_version", id_col=id_col, vector_col=vector_col)
 
 
 def encrypt_vectors_versioned(df: DataFrame, keys_bc, version_col: str,
@@ -146,40 +123,51 @@ def encrypt_vectors_versioned(df: DataFrame, keys_bc, version_col: str,
     return df.select(id_col, version_col, vector_col).mapInPandas(run, schema=schema)
 
 
+def _decrypt_rows(pdf: pd.DataFrame, ciphers: dict, mode: str,
+                  id_col: str) -> tuple[list, list]:
+    """Decrypt one batch, each row under its recorded key_version →
+    (plaintext buffers, positions of the rows they came from).  A row
+    whose version has no cipher in ``ciphers`` or whose tag check fails
+    raises with mode='strict' and is dropped with mode='skip' (the
+    reference's decryptErr accounting, ``QueryServiceImpl.java:241-270``).
+    The kernels pass ciphers built inside their closure: ``AESGCM``
+    captured from this module's globals would be pickled by value and
+    arrive on the workers without methods."""
+    bufs, keep = [], []
+    for i, (pid, kv, dim, iv, ct) in enumerate(zip(
+            pdf[id_col], pdf["key_version"], pdf["dim"], pdf["iv"],
+            pdf["ciphertext"])):
+        aes = ciphers.get(int(kv))
+        try:
+            if aes is None:
+                raise KeyError(f"no key for version {kv}")
+            bufs.append(aes.decrypt(bytes(iv), bytes(ct),
+                                    _aad(pid, int(kv), int(dim))))
+            keep.append(i)
+        except (InvalidTag, KeyError):
+            if mode == "strict":
+                raise
+    return bufs, keep
+
+
 def decrypt_vectors(df: DataFrame, keys_bc, mode: str = "strict",
                     id_col: str = "id", out_col: str = "vector") -> DataFrame:
     """Adds ``out_col ARRAY<DOUBLE>`` decrypted under each row's recorded
-    key_version (C5).  mode='strict' raises on auth failure; mode='skip'
-    drops undecryptable rows and counts them per the reference's
-    decryptErr accounting (``QueryServiceImpl.java:241-270``)."""
+    key_version (C5).  mode='strict' raises on auth failure or a missing
+    key version; mode='skip' drops those rows (:func:`_decrypt_rows`)."""
     in_cols = df.columns
     out_schema = ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in df.schema.fields)
     out_schema += f", {out_col} ARRAY<DOUBLE>"
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from cryptography.exceptions import InvalidTag as _InvalidTag
         from cryptography.hazmat.primitives.ciphers.aead import AESGCM as _AESGCM
-        keys = keys_bc.value
-        ciphers = {v: _AESGCM(k) for v, k in keys.items()}
+        ciphers = {v: _AESGCM(k) for v, k in keys_bc.value.items()}
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            vecs, keep = [], []
-            for i, row in enumerate(zip(pdf[id_col], pdf["key_version"],
-                                        pdf["dim"], pdf["iv"], pdf["ciphertext"])):
-                pid, kv, dim, iv, ct = row
-                aes = ciphers.get(int(kv))
-                try:
-                    if aes is None:
-                        raise KeyError(f"no key for version {kv}")
-                    buf = aes.decrypt(bytes(iv), bytes(ct), _aad(pid, int(kv), int(dim)))
-                    vecs.append(bytes_to_vector(buf).tolist())
-                    keep.append(i)
-                except (_InvalidTag, KeyError):
-                    if mode == "strict":
-                        raise
+            bufs, keep = _decrypt_rows(pdf, ciphers, mode, id_col)
             out = pdf.iloc[keep].copy() if len(keep) < len(pdf) else pdf.copy()
-            out[out_col] = vecs
+            out[out_col] = [bytes_to_vector(b).tolist() for b in bufs]
             yield out[in_cols + [out_col]]
 
     return df.mapInPandas(run, schema=out_schema)
@@ -200,7 +188,7 @@ def decrypt_score_vectors(df: DataFrame, keys_bc, mode: str = "strict",
     fusing removes that exchange and keeps the decrypted matrix in
     numpy (the reference's refine stage is decrypt-bound the same way,
     ``QueryServiceImpl.java:219-271``).  The AESGCM key schedule is
-    built once per (batch, key_version) — not per row.
+    built once per (task, key_version) — not per row.
 
     Bit-compatibility: the distance accumulates per-dimension
     left-to-right exactly like ``l2_expr``'s fold, so the fused path is
@@ -208,8 +196,8 @@ def decrypt_score_vectors(df: DataFrame, keys_bc, mode: str = "strict",
     is unaffected (equivalence is tested).
 
     Output: input columns minus (dim, iv, ciphertext, ``q_col``) plus
-    ``out_col DOUBLE``.  mode='skip' drops undecryptable rows
-    (reference decryptErr accounting); 'strict' raises."""
+    ``out_col DOUBLE``.  mode='skip' drops undecryptable rows, 'strict'
+    raises (:func:`_decrypt_rows`)."""
     drop = {"dim", "iv", "ciphertext", q_col}
     carry = [c for c in df.columns if c not in drop]
     out_schema = ", ".join(
@@ -218,34 +206,17 @@ def decrypt_score_vectors(df: DataFrame, keys_bc, mode: str = "strict",
     out_schema += f", {out_col} DOUBLE"
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from cryptography.exceptions import InvalidTag as _InvalidTag
         from cryptography.hazmat.primitives.ciphers.aead import AESGCM as _AESGCM
-        keys = keys_bc.value
-        ciphers = {v: _AESGCM(k) for v, k in keys.items()}
+        ciphers = {v: _AESGCM(k) for v, k in keys_bc.value.items()}
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            n = len(pdf)
-            bufs, keep = [], []
-            for i, row in enumerate(zip(pdf[id_col], pdf["key_version"],
-                                        pdf["dim"], pdf["iv"],
-                                        pdf["ciphertext"])):
-                pid, kv, dim, iv, ct = row
-                aes = ciphers.get(int(kv))
-                try:
-                    if aes is None:
-                        raise KeyError(f"no key for version {kv}")
-                    bufs.append(aes.decrypt(
-                        bytes(iv), bytes(ct), _aad(pid, int(kv), int(dim))))
-                    keep.append(i)
-                except (_InvalidTag, KeyError):
-                    if mode == "strict":
-                        raise
+            bufs, keep = _decrypt_rows(pdf, ciphers, mode, id_col)
             if not keep:
                 continue
             V = np.vstack([np.frombuffer(b, dtype=">f8") for b in bufs]) \
                 .astype(np.float64)
-            sel = pdf.iloc[keep] if len(keep) < n else pdf
+            sel = pdf.iloc[keep] if len(keep) < len(pdf) else pdf
             Qm = np.vstack([np.asarray(v, dtype=np.float64)
                             for v in sel[q_col].to_numpy()])
             # per-dimension left-to-right accumulation: bit-identical

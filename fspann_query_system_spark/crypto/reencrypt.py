@@ -55,12 +55,6 @@ def version_census(encrypted: DataFrame) -> DataFrame:
     return encrypted.groupBy("key_version").agg(F.count("*").alias("n_points"))
 
 
-def migration_remaining(encrypted: DataFrame, target_version: int) -> int:
-    """Points still bound to pre-target keys
-    (reference ``KeyRotationServiceImpl.migrationRemaining:433-446``)."""
-    return encrypted.filter(F.col("key_version") < target_version).count()
-
-
 def reencrypt_touched(encrypted: DataFrame, touched: DataFrame,
                       keys_bc, target_version: int,
                       id_col: str = "id") -> DataFrame:

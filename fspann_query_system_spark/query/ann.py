@@ -42,12 +42,13 @@ from ..lsh.partitioner import build_partitions
 from ..functions.distance import l2_expr
 from ..functions.plan import rows_cached
 
-# routing_mode="auto" crossover: broadcast routing measured at parity
+# Routing crossover: broadcast routing measured at parity
 # with the distributed join up to ~125k bounds rows (1M vectors,
 # flagship config) and strictly worse by 1.25M rows (10M vectors,
 # 303 vs 237 ms/q; SCALE.md §8b).  300k sits between the measured
 # parity and win points with margin for the per-search broadcast
-# serialize+ship cost that grows linearly in rows.
+# serialize+ship cost that grows linearly in rows.  ``search_batch``
+# routes by join past it, on the driver below it.
 AUTO_ROUTING_ROWS = 300_000
 
 # --- §8b budget-scaling law (SCALE.md), applied ---------------------------
@@ -107,8 +108,10 @@ def suggest_operating_point(n: int, target_recall: float = 0.87,
 
     ``block_size=None`` also derives the block: 512 past
     ``AUTO_BLOCK_CROSSOVER`` (3x faster build, 2x faster query, equal
-    recall at 10M), else 128.  Pass the index's actual block size when
-    suggesting a budget for an ALREADY-BUILT index.
+    recall at 10M), else 128 — the package's one block-size rule; a
+    build takes it through ``LshConfig.block_size``.  Pass the index's
+    actual block size when suggesting a budget for an ALREADY-BUILT
+    index.
     """
     if n <= 0:
         raise ValueError(f"n must be positive, got {n}")
@@ -133,18 +136,18 @@ class AnnIndex:
 
     Routing state (codes/bounds) never changes under key rotation —
     the reference's routing–ciphertext orthogonality invariant
-    (``ARCHITECTURE.md:7-25``).
+    (``ARCHITECTURE.md:7-25``).  ``keys_bc`` says which payload table
+    ``points`` is: None for plaintext (id, vector), else the broadcast
+    {version: key} map of an encrypted store (FIXTURES §4 schema, set by
+    :meth:`with_encrypted_points`).
     """
     params: LshParams
     codes: DataFrame      # (id, table, division, code_key, code_bits, part_idx)
     bounds: DataFrame     # (table, division, part_idx, min/max/center_key, rep_bits, n_ids)
     points: DataFrame     # plaintext (id, vector) OR encrypted store
-    encrypted: bool = False
-    decrypt_fn: object = None   # callable df -> df adding "vector" (crypto layer)
+    keys_bc: object = None
     _routing_bc: object = None
     _bounds_rows: int | None = None
-    _keys_bc: object = None         # with_encrypted_points: enables the
-    _decrypt_mode: str = "skip"     # fused decrypt+score refine kernel
     sq8_codes: DataFrame = None     # (id, codes BINARY) compressed shadow,
                                     # one byte per dimension
     sq8_mins: object = None         # per-dim codebook (lists of float)
@@ -153,25 +156,12 @@ class AnnIndex:
     @classmethod
     def build(cls, vectors: DataFrame, cfg: LshConfig,
               params: LshParams | None = None,
-              id_col: str = "id", vector_col: str = "vector",
-              block_size: int | str | None = None) -> "AnnIndex":
+              id_col: str = "id", vector_col: str = "vector") -> "AnnIndex":
         """Fit params from a sample (P5-P7), code all vectors (P8), build
-        greedy partitions (O1), cache the hot tables.
-
-        ``block_size="auto"`` sizes the block from the corpus: 512 past
-        ``AUTO_BLOCK_CROSSOVER`` vectors — measured at 10M to match
-        b128's recall at equal (pool, refine) while building 3x and
-        querying 2x faster (§8b block sweep; 4x fewer partitions to
-        rank) — else 128.  An int overrides ``cfg.block_size`` directly;
-        None keeps ``cfg.block_size`` (fully explicit)."""
-        from dataclasses import replace as _dc_replace
+        greedy partitions (O1) of ``cfg.block_size`` codes, cache the hot
+        tables.  :func:`suggest_operating_point` sizes the block from
+        the corpus."""
         n_vec = vectors.count()
-        if block_size == "auto":
-            block_size = 512 if n_vec >= AUTO_BLOCK_CROSSOVER else 128
-        if block_size is not None:
-            cfg = _dc_replace(cfg, block_size=int(block_size))
-            if params is not None and params.cfg.block_size != cfg.block_size:
-                params = _dc_replace(params, cfg=cfg)
         if params is None:
             params = fit_params_from_df(vectors, cfg, vector_col=vector_col)
         codes = code_vectors(vectors, params, id_col=id_col, vector_col=vector_col)
@@ -205,25 +195,23 @@ class AnnIndex:
         by :meth:`insert` are coded under the same codebook."""
         from dataclasses import replace
         from ..ops.similarity import sq8_stats
-        if self.encrypted:
+        if self.keys_bc is not None:
             raise ValueError("with_sq8 must run on the plaintext index "
                              "(before with_encrypted_points)")
         mins, maxs = sq8_stats(self.points, "vector")
         codes = _sq8_shadow(self.points, mins, maxs).persist()
         return replace(self, sq8_codes=codes, sq8_mins=mins, sq8_maxs=maxs)
 
-    def with_encrypted_points(self, encrypted: DataFrame, keys_bc,
-                              mode: str = "skip") -> "AnnIndex":
+    def with_encrypted_points(self, encrypted: DataFrame,
+                              keys_bc) -> "AnnIndex":
         """Swap the payload table for an encrypted_points table (FIXTURES
-        §4 schema).  Routing state is untouched — the reference's
-        routing–ciphertext orthogonality invariant: key rotation never
-        changes codes or partition bounds."""
-        from ..crypto.aes import decrypt_vectors
+        §4 schema) whose rows decrypt under the broadcast {version: key}
+        map ``keys_bc``.  Search skips a row that does not decrypt (the
+        reference's decryptErr accounting).  Routing state is untouched —
+        the reference's routing–ciphertext orthogonality invariant: key
+        rotation never changes codes or partition bounds."""
         from dataclasses import replace
-        return replace(
-            self, points=encrypted, encrypted=True,
-            decrypt_fn=lambda df: decrypt_vectors(df, keys_bc, mode=mode),
-            _keys_bc=keys_bc, _decrypt_mode=mode)
+        return replace(self, points=encrypted, keys_bc=keys_bc)
 
     def save(self, path: str) -> None:
         """Persist routing state (restart path, SURVEY §3.4 — strictly
@@ -337,10 +325,12 @@ class AnnIndex:
         """Apply the measured §8b budget-scaling law to THIS index:
         derive (probes, refinement_limit, sq8_rerank) from its corpus
         size and built geometry (block size is fixed at build time, so
-        it is taken as-is, not re-derived).  ``search_batch(...,
-        budget="auto")`` calls this — a 10M-vector user gets the
-        0.87-recall operating point without re-running the sweep
-        (SCALE.md §8b; reference anchor ``QueryServiceImpl.java:444-447``)."""
+        it is taken as-is, not re-derived).  Pass the values to
+        :func:`search_batch` (``probes=``, ``refinement_limit=``, and
+        ``sq8_rerank=`` on an index with an SQ8 shadow) — a 10M-vector
+        user gets the 0.87-recall operating point without re-running the
+        sweep (SCALE.md §8b; reference anchor
+        ``QueryServiceImpl.java:444-447``)."""
         cfg = self.params.cfg
         return suggest_operating_point(
             self.n_vectors(), target_recall=target_recall, k=k,
@@ -738,16 +728,17 @@ def _sq8_shortlist(index: AnnIndex, kept: DataFrame, q_ids: np.ndarray,
 def search_batch(index: AnnIndex, queries: DataFrame, k: int = 10,
                  probes: int | None = None,
                  refinement_limit: int | None = None,
-                 hamming_threshold: int | None = None,
                  q_id_col: str = "q_id", q_vector_col: str = "vector",
-                 routing_mode: str = "auto",
                  sq8_rerank: int | None = None,
                  allow: DataFrame | None = None,
                  allow_id_col: str = "id",
-                 with_diagnostics: bool = False,
-                 budget: str | None = None,
-                 target_recall: float = 0.87) -> DataFrame:
+                 with_diagnostics: bool = False) -> DataFrame:
     """Top-k ANN for a whole query set → (q_id, id, distance, rank).
+
+    ``probes`` and ``refinement_limit`` default to the index config's;
+    :meth:`AnnIndex.suggest_budget` derives both (and ``sq8_rerank``)
+    from the corpus size.  The F4 prefilter threshold is
+    ``cfg.hamming_threshold``.
 
     ``with_diagnostics`` carries the reference's stabilization counters
     (``QueryServiceImpl.java:29-31,87-94``: candTotal raw from the index,
@@ -772,59 +763,39 @@ def search_batch(index: AnnIndex, queries: DataFrame, k: int = 10,
     AQE, whose byte-sized partitions would put this compute-bound stage,
     fed by a shuffle of about a megabyte, in one or two tasks.
 
-    ``routing_mode``: "auto" (default) picks by measured crossover:
-    "broadcast" — collect the bounds once, binary-search them on the
-    driver (:func:`_route_slice`) — below ``AUTO_ROUTING_ROWS`` bounds
-    rows, "join" — fully distributed routing
-    (:func:`_route_probes_join`) — above it (SCALE.md §8b: 303 vs 237
+    Routing is chosen by the index's bounds size: up to
+    ``AUTO_ROUTING_ROWS`` bounds rows the bounds are collected once and
+    binary-searched on the driver (:func:`_route_slice`); past it,
+    where they stop being driver-collectable, the routing is fully
+    distributed (:func:`_route_probes_join`; SCALE.md §8b: 303 vs 237
     ms/q at 10M vectors, measured when the broadcast router ran in
-    executors and re-shipped the bounds every search).  All three
-    accepted explicitly; broadcast and join are output-identical
-    (tested).
+    executors and re-shipped the bounds every search).  Both routers
+    are output-identical (tested).
 
     ``sq8_rerank``: with an index built ``.with_sq8()``, rank the
     hamming-kept candidates on the SQ8 shadow first and decrypt/score
     only the best k*sq8_rerank per query (compressed-refine; see
     :meth:`AnnIndex.with_sq8`).
 
-    ``budget="auto"``: size (probes, refinement_limit, sq8_rerank) for
-    this index's corpus from the measured §8b budget-scaling law via
-    :meth:`AnnIndex.suggest_budget` — the data-sized default for scale
-    users (``target_recall`` picks the law tier; explicit knob
-    arguments still win over the derived values).  sq8_rerank is only
-    auto-applied when the index carries an SQ8 shadow."""
+    The refine stage joins the kept candidates to ``index.points``.  On
+    a plaintext index it scores them with ``l2_expr``; on an encrypted
+    one a single kernel decrypts and scores them
+    (:func:`crypto.aes.decrypt_score_vectors`), dropping rows that do
+    not decrypt."""
     cfg = index.params.cfg
-    if budget is not None:
-        if budget != "auto":
-            raise ValueError(f"budget must be 'auto' or None, got {budget!r}")
-        opt = index.suggest_budget(target_recall=target_recall, k=k)
-        probes = probes or opt["probes"]
-        refinement_limit = refinement_limit or opt["refinement_limit"]
-        if sq8_rerank is None and index.sq8_codes is not None:
-            sq8_rerank = opt["sq8_rerank"]
     probes = probes or cfg.probes
     refinement_limit = refinement_limit or cfg.refinement_limit
-    T = cfg.hamming_threshold if hamming_threshold is None else hamming_threshold
+    T = cfg.hamming_threshold
 
-    if routing_mode not in ("auto", "broadcast", "join"):
-        raise ValueError(f"routing_mode must be 'broadcast', 'join', or "
-                         f"'auto', got {routing_mode!r}")
     spark = queries.sparkSession
     q_ids, Q = _query_batch(queries, q_id_col, q_vector_col, cfg.dim)
     # {(table, division): (keys (n,), words (n, W))}, code_vectors' kernel
     coded = {(t, d): code_family(Q, alpha, r, omega, cfg.lam)
              for t, d, alpha, r, omega in index.params.packed()}
 
-    if routing_mode == "auto":
-        # measured crossover (SCALE.md §8b): broadcast and join route at
-        # parity up to ~125k bounds rows (1M vectors at the flagship
-        # config); by 1.25M bounds rows (10M vectors) the per-search
-        # serialize+ship of the broadcast table loses to the distributed
-        # as-of join (303 vs 237 ms/q).  Count once (bounds is
-        # persisted; the count is cached on the index thereafter).
-        routing_mode = ("join" if index.bounds_rows() > AUTO_ROUTING_ROWS
-                        else "broadcast")
-    if routing_mode == "join":
+    # the bounds size picks the router (see the docstring); counted once,
+    # then cached on the index
+    if index.bounds_rows() > AUTO_ROUTING_ROWS:
         probes_df = _route_probes_join(
             spark.createDataFrame(_q_codes_table(q_ids, coded)),
             index.bounds, probes)
@@ -880,26 +851,18 @@ def search_batch(index: AnnIndex, queries: DataFrame, k: int = 10,
         kept = kept.withColumn("_cand_decrypted", F.count(F.lit(1)).over(wq))
 
     # J1: candidates ⋈ payloads; decrypt only survivors (C5 after O5).
-    if index.encrypted and index._keys_bc is not None:
+    joined = kept.join(index.points, on="id").join(F.broadcast(qv), on="q_id")
+    if index.keys_bc is None:
+        scored = joined.withColumn("distance", l2_expr("_qvec", "vector"))
+    else:
         # fused decrypt+score: one Arrow kernel, no plaintext-vector
         # exchange back to the JVM (SCALE.md §8b — the refine stage is
-        # decrypt-bound at 10M; bit-identical to the split plan, tested)
-        from ..crypto.aes import decrypt_score_vectors
-        scored = decrypt_score_vectors(
-            kept.join(index.points, on="id").join(F.broadcast(qv), on="q_id"),
-            index._keys_bc, mode=index._decrypt_mode)
-    else:
-        if index.encrypted:
-            scored_src = index.decrypt_fn(kept.join(index.points, on="id"))
-        else:
-            scored_src = kept.join(index.points, on="id")
-        scored = (scored_src.join(F.broadcast(qv), on="q_id")
-                  .withColumn("distance", l2_expr("_qvec", "vector")))
-
-    if index.encrypted:
-        # the decrypt kernel emits new attributes, so the rank window
+        # decrypt-bound at 10M; bit-identical to decrypt-then-l2_expr,
+        # tested).  The kernel emits new attributes, so the rank window
         # needs an exchange anyway: size it like shuffle 1
-        scored = scored.repartition(n, "q_id")
+        from ..crypto.aes import decrypt_score_vectors
+        scored = decrypt_score_vectors(joined, index.keys_bc,
+                                       mode="skip").repartition(n, "q_id")
 
     # shuffle 2: per-query exact rank (A2), ties by id (A3 semantics)
     wr = Window.partitionBy("q_id").orderBy(F.col("distance").asc(), F.col("id").asc())

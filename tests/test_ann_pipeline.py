@@ -130,7 +130,7 @@ def test_search_survives_corrupt_ciphertexts(spark, clustered):
         .otherwise(F.col("ciphertext")))
     cfg = LshConfig(dim=16, m=8, lam=2, tables=3, divisions=1, block_size=32,
                     probes=4, refinement_limit=300, seed=5)
-    idx = AnnIndex.build(df, cfg).with_encrypted_points(corrupted, bc, mode="skip")
+    idx = AnnIndex.build(df, cfg).with_encrypted_points(corrupted, bc)
     q = df.filter(F.col("id").isin([0, 500, 999])) \
           .select(F.col("id").alias("q_id"), "vector")
     res = search_batch(idx, q, k=5).collect()
@@ -139,7 +139,7 @@ def test_search_survives_corrupt_ciphertexts(spark, clustered):
     assert not (returned_ids & corrupt_ids)          # damaged rows excluded
     # same index over the intact store can return the damaged ids again
     idx_ok = AnnIndex.build(df, cfg, params=idx.params) \
-        .with_encrypted_points(enc, bc, mode="skip")
+        .with_encrypted_points(enc, bc)
     ok_ids = {r.id for r in search_batch(idx_ok, q, k=5).collect()}
     assert ok_ids & corrupt_ids                       # 0, 500 retrievable again
     assert {r.q_id for r in res} == {0, 500, 999}     # every query answered
@@ -159,7 +159,7 @@ def test_sq8_prefilter_encrypted_path(spark, clustered, queries):
     bc = spark.sparkContext.broadcast(km.key_map())
     enc = encrypt_vectors(df, bc, 1)
     idx = (AnnIndex.build(df, cfg).with_sq8()
-           .with_encrypted_points(enc, bc, mode="skip"))
+           .with_encrypted_points(enc, bc))
     full = search_batch(idx, queries, k=10)
     pre = search_batch(idx, queries, k=10, sq8_rerank=4)
     hits = (pre.select("q_id", "id")
@@ -183,18 +183,23 @@ def test_sq8_prefilter_encrypted_path(spark, clustered, queries):
         idx.with_sq8()
 
 
-def test_join_routing_matches_broadcast(index, queries):
-    """routing_mode="join" (the >broadcast-budget fallback) must produce
+def _join_routed(monkeypatch):
+    """Make every following ``search_batch`` take the distributed join
+    router (the path past the ``AUTO_ROUTING_ROWS`` crossover)."""
+    from fspann_query_system_spark.query import ann as ann_mod
+    monkeypatch.setattr(ann_mod, "AUTO_ROUTING_ROWS", 0)
+
+
+def test_join_routing_matches_broadcast(index, queries, monkeypatch):
+    """Join routing (the >broadcast-budget fallback) must produce
     byte-identical results to the broadcast binary-search path."""
     idx, df, X = index
     a = sorted((r.q_id, r.id, round(r.distance, 9), r.rank)
                for r in search_batch(idx, queries, k=10).collect())
+    _join_routed(monkeypatch)
     b = sorted((r.q_id, r.id, round(r.distance, 9), r.rank)
-               for r in search_batch(idx, queries, k=10,
-                                     routing_mode="join").collect())
+               for r in search_batch(idx, queries, k=10).collect())
     assert a == b
-    with pytest.raises(ValueError):
-        search_batch(idx, queries, k=10, routing_mode="bogus")
 
 
 def _edge_keys(min_keys, max_keys):
@@ -258,7 +263,8 @@ def test_driver_router_matches_join_router(spark, clustered):
         assert set(per_q.values()) <= set(range(1, probes + 1))
 
 
-def test_broadcast_and_join_routing_identical_on_string_ids(spark, clustered):
+def test_broadcast_and_join_routing_identical_on_string_ids(spark, clustered,
+                                                           monkeypatch):
     """End to end on a tiny-block index with STRING point ids: broadcast
     (driver) and join routing return identical rows, diagnostics
     included, through the SQ8 shortlist and an allow-list."""
@@ -272,36 +278,43 @@ def test_broadcast_and_join_routing_identical_on_string_ids(spark, clustered):
         [(i, (X[i * 37] + 0.01).tolist()) for i in range(10)],
         "q_id LONG, vector ARRAY<DOUBLE>")
     allow = sdf.filter(F.col("id") < "p0300").select("id")
-    for kw in ({}, {"sq8_rerank": 3, "with_diagnostics": True},
-               {"sq8_rerank": 3, "allow": allow, "with_diagnostics": True},
-               {"probes": 60}):
-        got = [sorted(tuple(r) for r in search_batch(
-                   idx, q, k=6, routing_mode=mode, **kw).collect())
-               for mode in ("broadcast", "join")]
-        assert got[0] == got[1] and got[0], kw
-        assert isinstance(got[0][0][1], str)
+    kws = ({}, {"sq8_rerank": 3, "with_diagnostics": True},
+           {"sq8_rerank": 3, "allow": allow, "with_diagnostics": True},
+           {"probes": 60})
+    def run():
+        return [sorted(tuple(r) for r in search_batch(idx, q, k=6, **kw)
+                       .collect()) for kw in kws]
+
+    broadcast = run()
+    _join_routed(monkeypatch)
+    for kw, b, j in zip(kws, broadcast, run()):
+        assert b == j and b, kw
+        assert isinstance(b[0][1], str)
 
 
 def test_auto_routing_picks_by_bounds_size(index, queries, monkeypatch):
-    """routing_mode="auto" flips broadcast→join at the measured bounds-
+    """search_batch flips broadcast→join routing at the measured bounds-
     size crossover (SCALE.md §8b) and both selections return the same
     results."""
     from fspann_query_system_spark.query import ann as ann_mod
     idx, df, X = index
-    base = sorted((r.q_id, r.id, round(r.distance, 9), r.rank)
-                  for r in search_batch(idx, queries, k=10).collect())
-    # small index: auto must take the broadcast path (bounds << 300k)
+    joins = []
+    join_router = ann_mod._route_probes_join
+    monkeypatch.setattr(ann_mod, "_route_probes_join",
+                        lambda *a: joins.append(a) or join_router(*a))
+
+    def rows():
+        return sorted((r.q_id, r.id, round(r.distance, 9), r.rank)
+                      for r in search_batch(idx, queries, k=10).collect())
+
+    # small index: the broadcast path (bounds << 300k)
     assert idx.bounds_rows() < ann_mod.AUTO_ROUTING_ROWS
-    auto_small = sorted((r.q_id, r.id, round(r.distance, 9), r.rank)
-                        for r in search_batch(idx, queries, k=10,
-                                              routing_mode="auto").collect())
-    assert auto_small == base
-    # force the crossover: auto must now take the distributed join path
-    monkeypatch.setattr(ann_mod, "AUTO_ROUTING_ROWS", 0)
-    auto_join = sorted((r.q_id, r.id, round(r.distance, 9), r.rank)
-                       for r in search_batch(idx, queries, k=10,
-                                             routing_mode="auto").collect())
-    assert auto_join == base
+    base = rows()
+    assert not joins
+    # force the crossover: the distributed join path
+    _join_routed(monkeypatch)
+    assert rows() == base
+    assert len(joins) == 1
 
 
 def test_insert_append_and_rebuild(spark, clustered):
@@ -462,7 +475,7 @@ def test_load_insert_save_cycle(spark, clustered, tmp_path):
     assert all(top[q_] == q_ for q_ in top)
 
 
-def test_join_routing_with_duplicate_keys(spark):
+def test_join_routing_with_duplicate_keys(spark, monkeypatch):
     """Regression: equal code keys spanning block boundaries (mass-
     duplicated vectors) once made the join-path as-of lookup pick a
     nondeterministic part_idx among equal min_keys — caught by a 1M diff
@@ -482,9 +495,9 @@ def test_join_routing_with_duplicate_keys(spark):
                                                 "vector")
     a = sorted((r.q_id, r.id, r.rank)
                for r in search_batch(idx, q, k=10).collect())
+    _join_routed(monkeypatch)
     b = sorted((r.q_id, r.id, r.rank)
-               for r in search_batch(idx, q, k=10,
-                                     routing_mode="join").collect())
+               for r in search_batch(idx, q, k=10).collect())
     assert a == b
 
 
@@ -517,7 +530,7 @@ def test_filtered_search_composes_with_sq8_and_encryption(spark, clustered,
     km = KeyManager(master=bytes(32))
     bc = spark.sparkContext.broadcast(km.key_map())
     idx = (AnnIndex.build(df, cfg).with_sq8()
-           .with_encrypted_points(encrypt_vectors(df, bc, 1), bc, mode="skip"))
+           .with_encrypted_points(encrypt_vectors(df, bc, 1), bc))
     allow = df.filter(F.col("id") % 2 == 0).select("id")
     res = search_batch(idx, queries, k=5, allow=allow, sq8_rerank=4)
     rows = res.collect()
@@ -623,9 +636,10 @@ def test_suggest_operating_point_pins_the_measured_law():
 
 
 def test_auto_budget_end_to_end(index, queries):
-    """budget="auto" derives the knobs from the index's own corpus size
-    and geometry; explicit knobs still win; results stay a valid
-    search (self-consistency with the explicitly-knobbed call)."""
+    """suggest_budget derives the knobs from the index's own corpus size
+    and geometry, and a search passed them explicitly is a valid search:
+    on this 2,000-row fixture the floored budget covers the whole corpus,
+    so it returns the exact top-k."""
     idx, df, X = index
     sug = idx.suggest_budget()
     # small fixture: floor engages; 2x pool headroom within its geometry
@@ -633,25 +647,28 @@ def test_auto_budget_end_to_end(index, queries):
     slot = cfgb.tables * cfgb.divisions * cfgb.block_size
     assert sug["probes"] * slot >= 2 * sug["refinement_limit"]
     assert sug["refinement_limit"] >= 8192
-    auto = search_batch(idx, queries, k=10, budget="auto")
-    explicit = search_batch(idx, queries, k=10,
-                            probes=sug["probes"],
-                            refinement_limit=sug["refinement_limit"])
-    assert [tuple(r) for r in auto.orderBy("q_id", "rank").collect()] == \
-        [tuple(r) for r in explicit.orderBy("q_id", "rank").collect()]
+    got = search_batch(idx, queries, k=10, probes=sug["probes"],
+                       refinement_limit=sug["refinement_limit"])
+    exact = knn_exact(df, queries, k=10)
+    assert {(r.q_id, r.id) for r in got.collect()} == \
+        {(r.q_id, r.id) for r in exact.collect()}
 
 
 def test_build_auto_block_size(spark, clustered):
-    """block_size="auto" picks 128 below the crossover and honors an
-    explicit int override; params carry the effective block size."""
+    """The one block-size rule: suggest_operating_point picks 128 below
+    the crossover, and a build takes it through ``cfg.block_size``
+    (params carry the effective block size)."""
+    from dataclasses import replace
+    from fspann_query_system_spark.query.ann import suggest_operating_point
     df, X = clustered
     cfg = LshConfig(dim=16, m=6, lam=2, tables=2, divisions=1, seed=3,
                     block_size=999, probes=4, refinement_limit=400)
-    idx = AnnIndex.build(df, cfg, block_size="auto")
-    assert idx.params.cfg.block_size == 128      # n << crossover
-    idx2 = AnnIndex.build(df, cfg, block_size=64)
-    assert idx2.params.cfg.block_size == 64
-    # and the auto-built index still answers (self-hit at distance 0)
+    block = suggest_operating_point(len(X))["block_size"]
+    assert block == 128                          # n << crossover
+    idx = AnnIndex.build(df, replace(cfg, block_size=block))
+    assert idx.params.cfg.block_size == 128
+    assert max(r.n_ids for r in idx.bounds.collect()) <= 128
+    # and the auto-sized index still answers (self-hit at distance 0)
     q = df.limit(3).select(F.col("id").alias("q_id"), "vector")
     top = search_batch(idx, q, k=1).collect()
     assert all(r.distance == 0.0 and r.q_id == r.id for r in top)
@@ -662,40 +679,43 @@ def test_fused_decrypt_score_bit_identical_to_split(spark, clustered, queries):
     + per-dimension left-to-right L2 accumulation) must be BIT-identical
     to the split plan (decrypt_vectors → l2_expr fold) — same rows, same
     distances to the last ulp, so oracle hashes and rank ties cannot
-    move.  The split plan stays reachable via _keys_bc=None (the legacy
-    decrypt_fn path)."""
+    move.  The split reference is a plaintext index over the decrypted
+    store: its refine stage scores with l2_expr."""
     from dataclasses import replace
     from fspann_query_system_spark.crypto.keys import KeyManager
-    from fspann_query_system_spark.crypto.aes import encrypt_vectors
+    from fspann_query_system_spark.crypto.aes import (decrypt_vectors,
+                                                      encrypt_vectors)
 
     df, X = clustered
     km = KeyManager(master=bytes(32))
     bc = spark.sparkContext.broadcast(km.key_map())
-    enc = encrypt_vectors(df, bc, 1)
+    enc = encrypt_vectors(df, bc, 1).persist()
+    decrypted = decrypt_vectors(enc, bc).select("id", "vector")
     cfg = LshConfig(dim=16, m=8, lam=2, tables=3, divisions=2, block_size=32,
                     probes=4, refinement_limit=300, seed=9)
-    fused = AnnIndex.build(df, cfg).with_encrypted_points(enc, bc, mode="skip")
-    assert fused._keys_bc is not None
-    split = replace(fused, _keys_bc=None)
+    plain = AnnIndex.build(df, cfg)
+    fused = plain.with_encrypted_points(enc, bc)
+    split = replace(plain, points=decrypted)
     r_fused = search_batch(fused, queries, k=8).orderBy("q_id", "rank").collect()
     r_split = search_batch(split, queries, k=8).orderBy("q_id", "rank").collect()
     assert [tuple(r) for r in r_fused] == [tuple(r) for r in r_split]
     assert len(r_fused) > 0
     # fused path also composes with SQ8 compressed refine + diagnostics
-    idx8 = AnnIndex.build(df, cfg).with_sq8() \
-        .with_encrypted_points(enc, bc, mode="skip")
-    r8f = search_batch(idx8, queries, k=8, sq8_rerank=4,
-                       with_diagnostics=True).orderBy("q_id", "rank").collect()
-    r8s = search_batch(replace(idx8, _keys_bc=None), queries, k=8,
+    plain8 = plain.with_sq8()
+    r8f = search_batch(plain8.with_encrypted_points(enc, bc), queries, k=8,
+                       sq8_rerank=4, with_diagnostics=True) \
+        .orderBy("q_id", "rank").collect()
+    r8s = search_batch(replace(plain8, points=decrypted), queries, k=8,
                        sq8_rerank=4, with_diagnostics=True) \
         .orderBy("q_id", "rank").collect()
     assert [tuple(r) for r in r8f] == [tuple(r) for r in r8s]
+    enc.unpersist()
 
 
 def test_bounds_rows_is_free_after_routing(spark, index):
     """``routing()`` records the bounds row count it collected, so the
-    ``routing_mode="auto"`` choice on a facade whose routing was forced
-    at set-up runs no ``bounds.count()`` job."""
+    routing choice on a facade whose routing was forced at set-up runs
+    no ``bounds.count()`` job."""
     from dataclasses import replace
     idx = replace(index[0], _routing_bc=None, _bounds_rows=None)
     idx.routing()

@@ -66,6 +66,65 @@ def test_df_encrypt_decrypt_roundtrip(spark, km):
     out = {r.id: r.vector for r in dec.collect()}
     for i in range(50):
         assert np.allclose(out[i], X[i])
+    # a per-row key version: each row under its own key, and back
+    from fspann_query_system_spark.crypto.aes import encrypt_vectors_versioned
+    km2 = KeyManager(master=b"\x08" * 32)
+    km2.rotate()
+    bc2 = spark.sparkContext.broadcast(km2.key_map())
+    mixed = encrypt_vectors_versioned(
+        df.withColumn("_kv", (F.col("id") % 2 + 1).cast("int")), bc2, "_kv")
+    rows = decrypt_vectors(mixed, bc2, mode="strict").collect()
+    assert {r.id: r.key_version for r in rows} == \
+        {i: i % 2 + 1 for i in range(50)}
+    for r in rows:
+        assert np.array_equal(r.vector, X[r.id])
+
+
+def test_decrypt_kernels_skip_and_strict_on_damaged_rows(spark):
+    """The two decrypt kernels share one record loop: over a store with
+    one truncated ciphertext (id 3) and one row under a key version the
+    key map lacks (id 7), mode="skip" keeps the same ids in both, and
+    mode="strict" raises on either defect in both."""
+    from fspann_query_system_spark.crypto.aes import (
+        decrypt_score_vectors, encrypt_vectors_versioned)
+    rng = np.random.default_rng(4)
+    X = rng.normal(0, 1, (20, 8))
+    df = spark.createDataFrame(
+        [(i, X[i].tolist()) for i in range(20)], "id LONG, vector ARRAY<DOUBLE>")
+    km = KeyManager(master=b"\x09" * 32)
+    km.rotate()
+    both = spark.sparkContext.broadcast(km.key_map())
+    only_v1 = spark.sparkContext.broadcast({1: km.key_for(1)})
+    truncated = F.expr("substring(ciphertext, 1, length(ciphertext) - 1)")
+    store = (encrypt_vectors_versioned(
+                 df.withColumn("_kv", F.when(F.col("id") == 7, 2)
+                               .otherwise(1).cast("int")), both, "_kv")
+             .withColumn("ciphertext", F.when(F.col("id") == 3, truncated)
+                         .otherwise(F.col("ciphertext")))
+             .persist())
+    q = spark.createDataFrame([(0, [0.0] * 8)], "q_id LONG, _qvec ARRAY<DOUBLE>")
+
+    def decrypted(st, mode):
+        return {r.id for r in decrypt_vectors(st, only_v1, mode=mode)
+                .select("id").collect()}
+
+    def scored(st, mode):
+        return {r.id: r.distance for r in decrypt_score_vectors(
+            st.crossJoin(F.broadcast(q)), only_v1, mode=mode).collect()}
+
+    want = set(range(20)) - {3, 7}
+    assert decrypted(store, "skip") == want
+    dist = scored(store, "skip")
+    assert set(dist) == want
+    for i in want:
+        assert np.isclose(dist[i], np.linalg.norm(X[i]))
+    # one defect at a time: drop the other damaged row
+    for other, msg in ((7, "InvalidTag"), (3, "no key for version 2")):
+        one = store.filter(F.col("id") != other)
+        for kernel in (decrypted, scored):
+            with pytest.raises(Exception, match=msg):
+                kernel(one, "strict")
+    store.unpersist()
 
 
 def test_forward_security_game(spark, tmp_path):

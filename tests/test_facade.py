@@ -102,7 +102,7 @@ def test_full_lifecycle(spark, clustered, tmp_path):
     sys2 = ForwardSecureANNSystem(spark, cfg, master_key=b"\x33" * 32)
     sys2.keys.current_version = sys_.keys.current_version
     sys2.restore_from_store(sys_.encrypted, sys_.index.params)
-    res3 = sys2.search(q, k=10, adaptive=False)
+    res3 = sys2.search(q, k=10)
     assert res3.count() > 0
 
     # export sinks
@@ -123,8 +123,8 @@ def test_facade_sq8_compressed_refine(spark, clustered):
     sys_ = ForwardSecureANNSystem(spark, cfg, master_key=b"\x44" * 32)
     sys_.index_vectors(df, sq8=True)
     q = df.filter("id < 5").selectExpr("id AS q_id", "vector")
-    full = sys_.search(q, k=10, adaptive=False)
-    pre = sys_.search(q, k=10, adaptive=False, sq8_rerank=4)
+    full = sys_.search(q, k=10)
+    pre = sys_.search(q, k=10, sq8_rerank=4)
     hits = (pre.select("q_id", "id")
             .join(full.select("q_id", "id"), ["q_id", "id"]).count())
     assert full.count() == 50 and hits >= 48

@@ -475,3 +475,52 @@ def test_checkpoints_only_through_materialize():
                     and node.func.attr in ("localCheckpoint", "checkpoint")):
                 bare.append(f"{path.relative_to(root)}:{node.lineno}")
     assert not bare, bare
+
+
+def test_search_call_keywords_name_real_parameters():
+    """Every keyword passed to ``search_batch``, ``search_batch_adaptive``,
+    ``AnnIndex.build`` or ``with_encrypted_points`` in the package,
+    ``tools/`` and ``fsbench/`` names a parameter of that function
+    (``search_batch_adaptive`` forwards its keywords to ``search_batch``).
+    Tier-1 runs no tool, so a keyword an API change removed would
+    otherwise survive there until the tool is next run."""
+    import ast
+    import inspect
+    from pathlib import Path
+
+    import fspann_query_system_spark as pkg
+    from fspann_query_system_spark.query import ann
+
+    def params(fn):
+        return set(inspect.signature(fn).parameters)
+
+    search = params(ann.search_batch)
+    allowed = {
+        "search_batch": search,
+        "search_batch_adaptive": search | params(ann.search_batch_adaptive),
+        "build": params(ann.AnnIndex.build),
+        "with_encrypted_points": params(ann.AnnIndex.with_encrypted_points),
+    }
+    pkg_root = Path(pkg.__file__).parent
+    files = [*pkg_root.rglob("*.py"),
+             *(pkg_root.parent / "tools").rglob("*.py"),
+             *(pkg_root.parent / "fsbench").rglob("*.py")]
+    calls, stale = 0, []
+    for path in sorted(files):
+        for node in ast.walk(ast.parse(path.read_text(), str(path))):
+            if not isinstance(node, ast.Call):
+                continue
+            f = node.func
+            name = f.id if isinstance(f, ast.Name) else getattr(f, "attr", None)
+            if name == "build" and not (isinstance(f, ast.Attribute)
+                                        and isinstance(f.value, ast.Name)
+                                        and f.value.id == "AnnIndex"):
+                continue
+            if name not in allowed:
+                continue
+            calls += 1
+            stale += [f"{path.name}:{node.lineno} {name}({kw.arg}=)"
+                      for kw in node.keywords
+                      if kw.arg is not None and kw.arg not in allowed[name]]
+    assert calls >= 20, calls          # the walk reached the call sites
+    assert not stale, stale

@@ -1,6 +1,8 @@
-"""Matched A/B isolated rerun: tools/isolated_rerun.py parameterized
-by REPO ROOT, so the same fresh-JVM single-query measurement can run
-against a git worktree at an older snapshot (the pathology-#5
+"""Matched A/B isolated rerun: one registry query in a fresh session/JVM
+of the tree at REPO ROOT — the warm-up bench.py applies (JVM, parquet
+footers, python workers), then N timed runs, printed as one JSON line
+with all runs and the median — so the same measurement can run against
+the working tree and a checkout of an older snapshot (the pathology-#5
 adjudication protocol, SCALE.md §10: only a delta that survives the
 isolated back-to-back A/B on the same box is a plan regression).
 

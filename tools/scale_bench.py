@@ -8,9 +8,10 @@ recall@100 vs a numpy exact oracle.
 
 NO hand-tuned query knobs: the operating point (block size, probes,
 refinement budget, SQ8 rerank) is derived from the corpus size by the
-measured §8b budget-scaling law (``AnnIndex.build(block_size="auto")``
-+ ``search_batch(budget="auto")``) — running this at 10M must
-reproduce the ≥0.87-recall point without editing anything.
+measured §8b budget-scaling law (``suggest_operating_point(n)`` sizes
+the block the index is built with, ``AnnIndex.suggest_budget()`` the
+search knobs) — running this at 10M must reproduce the ≥0.87-recall
+point without editing anything.
 
 Usage: python3 tools/scale_bench.py [n_vectors] [n_queries]
 (10M needs SPARK_GRAFT_DRIVER_MEM=96g.)
@@ -27,7 +28,9 @@ sys.path.insert(0, "/root/repo")
 
 from fspann_query_system_spark.session import get_spark            # noqa: E402
 from fspann_query_system_spark.lsh.params import LshConfig, fit_params  # noqa: E402
-from fspann_query_system_spark.query.ann import AnnIndex, search_batch  # noqa: E402
+from fspann_query_system_spark.query import ann                     # noqa: E402
+from fspann_query_system_spark.query.ann import (                    # noqa: E402
+    AnnIndex, search_batch, suggest_operating_point)
 
 DIM = 64
 K = 100
@@ -35,8 +38,8 @@ K = 100
 # Everything budget-shaped (block size, probes, refinement limit, SQ8
 # rerank) is derived from n at run time by the §8b law.  probes /
 # refinement_limit below are the LshConfig defaults for ad-hoc callers;
-# this script never uses them (budget="auto" overrides).
-CFG = dict(m=26, lam=2, tables=8, divisions=2, probes=8, block_size=128,
+# this script never uses them (the searches pass suggest_budget()'s).
+CFG = dict(m=26, lam=2, tables=8, divisions=2, probes=8,
            refinement_limit=8000)
 # Swept at 1M (tools/recall_sweep_1m.py, results in recall_sweep_1m.jsonl):
 # round 1 (m18 T6 p8 b64) had candidate pool T*D*probes*block = 6144 <
@@ -116,9 +119,10 @@ def main():
     print(f"materialize {n} vectors: {time.time()-t0:.1f}s", flush=True)
 
     t0 = time.time()
-    cfg = LshConfig(dim=DIM, seed=11, **CFG)
+    cfg = LshConfig(dim=DIM, seed=11, **CFG,
+                    block_size=suggest_operating_point(n)["block_size"])
     params = fit_params(X[:10000], cfg)
-    idx = AnnIndex.build(vec, cfg, params=params, block_size="auto")
+    idx = AnnIndex.build(vec, cfg, params=params)
     idx.codes.count()          # force build
     idx.routing()
     t_build = time.time() - t0
@@ -129,6 +133,8 @@ def main():
     sug = idx.suggest_budget()
     print(f"auto operating point (SCALE.md §8b law, n={n}): {sug}",
           flush=True)
+    budget = dict(probes=sug["probes"],
+                  refinement_limit=sug["refinement_limit"])
 
     from fspann_query_system_spark.crypto.keys import KeyManager
     from fspann_query_system_spark.crypto.aes import encrypt_vectors
@@ -149,23 +155,26 @@ def main():
     # query — the decrypt-bound comparison the SQ8 path exists to beat;
     # measured on a small batch so the 10M run stays tractable
     t0 = time.time()
-    res = search_batch(idx_enc, queries.limit(20), k=K, budget="auto").collect()
+    res = search_batch(idx_enc, queries.limit(20), k=K, **budget).collect()
     dt = time.time() - t0
     print(f"encrypted search FULL-DECRYPT small (20 queries, auto budget): "
           f"{dt:.1f}s = {1000*dt/20:.0f} ms/query ({len(res)} rows)",
           flush=True)
 
     # --- distributed routing (the >broadcast-budget fallback a 1B-vector
-    # deployment runs): same output as broadcast routing; routing_mode
-    # "auto" picks it past the measured crossover — print the decision
-    print(f"bounds rows {idx.bounds_rows()} -> routing_mode=auto picks "
-          f"{'join' if idx.bounds_rows() > 300_000 else 'broadcast'}",
+    # deployment runs): same output as broadcast routing; search_batch
+    # picks it past the measured crossover — print the decision, then
+    # force it by lowering the crossover
+    crossover = ann.AUTO_ROUTING_ROWS
+    print(f"bounds rows {idx.bounds_rows()} -> search_batch routes by "
+          f"{'join' if idx.bounds_rows() > crossover else 'broadcast'}",
           flush=True)
+    ann.AUTO_ROUTING_ROWS = 0
     t0 = time.time()
-    res_j = search_batch(idx_enc, queries.limit(20), k=K, budget="auto",
-                         routing_mode="join").collect()
+    res_j = search_batch(idx_enc, queries.limit(20), k=K, **budget).collect()
     dt = time.time() - t0
-    print(f"encrypted search routing_mode=join small (20 queries): {dt:.1f}s "
+    ann.AUTO_ROUTING_ROWS = crossover
+    print(f"encrypted search join routing small (20 queries): {dt:.1f}s "
           f"= {1000*dt/20:.0f} ms/query ({len(res_j)} rows)", flush=True)
 
     # exact oracle on a query subsample (numpy blocked)
@@ -199,7 +208,8 @@ def main():
     for label, run_idx in (("plaintext", idx8), ("encrypted", idx8_enc)):
         for attempt in ("cold", "warm"):
             t0 = time.time()
-            res8 = search_batch(run_idx, queries, k=K, budget="auto").collect()
+            res8 = search_batch(run_idx, queries, k=K, **budget,
+                                sq8_rerank=sug["sq8_rerank"]).collect()
             dt = time.time() - t0
             got8: dict[int, set] = {}
             for r in res8:

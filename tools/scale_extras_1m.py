@@ -1,6 +1,7 @@
 """1M-vector measurements for the round-2 scale paths (SCALE.md §8):
 
-1. join-based routing (`routing_mode="join"`) vs broadcast routing —
+1. join-based routing vs broadcast routing (forced through
+   `query.ann.AUTO_ROUTING_ROWS`) —
    same results by construction (equivalence-tested); here: overhead.
 2. IVF with ingest-time assignment: assignment throughput, probe
    latency, recall@100 at nprobe/|C|.
@@ -20,6 +21,7 @@ sys.path.insert(0, "/root/repo")
 
 from fspann_query_system_spark.session import get_spark            # noqa: E402
 from fspann_query_system_spark.lsh.params import LshConfig, fit_params  # noqa: E402
+from fspann_query_system_spark.query import ann                     # noqa: E402
 from fspann_query_system_spark.query.ann import AnnIndex, search_batch  # noqa: E402
 
 DIM = 64
@@ -57,17 +59,21 @@ def main():
             got.setdefault(r.q_id, set()).add(r.id)
         return float(np.mean([len(got.get(q, set()) & gt[q]) / K for q in gt]))
 
-    # ---- 1. routing_mode join vs broadcast at 1M ----
+    # ---- 1. join vs broadcast routing at 1M ----
     cfg = LshConfig(dim=DIM, seed=11, m=20, lam=2, tables=8, divisions=2,
                     probes=8, block_size=128, refinement_limit=8000)
     params = fit_params(X[:10000], cfg)
     idx = AnnIndex.build(vec, cfg, params=params)
     idx.codes.count(); idx.routing()
+    crossover = ann.AUTO_ROUTING_ROWS
     for mode in ("broadcast", "join", "broadcast", "join"):
+        # search_batch routes by join once the bounds pass the crossover
+        ann.AUTO_ROUTING_ROWS = 0 if mode == "join" else sys.maxsize
         t0 = time.time()
-        rows = search_batch(idx, queries, k=K, routing_mode=mode).collect()
+        rows = search_batch(idx, queries, k=K).collect()
         print(f"routing={mode}: {time.time()-t0:.1f}s for {nq} q "
               f"(recall {recall(rows):.3f})", flush=True)
+    ann.AUTO_ROUTING_ROWS = crossover
 
     # ---- 2. IVF with ingest-time assignment (256 cells, nprobe 16) ----
     from fspann_query_system_spark.ops.similarity import ivf_assign, ivf_topk
