@@ -83,6 +83,20 @@ def _q9(a: np.ndarray) -> np.ndarray:
     return (np.sign(b) * np.floor(np.abs(b) + 0.5)).astype(np.int64)
 
 
+def _sweep(B: np.ndarray, C: np.ndarray, quantize: bool) -> np.ndarray:
+    """(rows, |C|) squared L2 distances of ``B``'s rows to ``C``'s, one
+    vectorized row-sweep ``(B - C_j)² @ 1`` per row of ``C``, so memory
+    is O(rows×|C|) distances, never a rows×|C|×dim cube.  ``quantize``
+    sums element-quantized (``_q9``) squared diffs into int64 — the
+    order-free form every oracle-mirrored assign in the PQ chain and
+    the coarse stage uses — instead of floats."""
+    d2 = np.empty((len(B), len(C)), dtype=np.int64 if quantize else np.float64)
+    for j in range(len(C)):
+        sq = np.square(B - C[j])
+        d2[:, j] = (_q9(sq) if quantize else sq).sum(axis=1)
+    return d2
+
+
 def pq_fit(df: DataFrame, m_sub: int = 4, k: int = 8, iters: int = 2,
            id_col: str = "id", vector_col: str = "vector",
            init_offset: int = 0) -> DataFrame:
@@ -135,10 +149,8 @@ def pq_fit(df: DataFrame, m_sub: int = 4, k: int = 8, iters: int = 2,
                 sub_l, cell_l, spos_l, s_l, c_l = [], [], [], [], []
                 for s in range(m_):
                     Bs = B[:, s, :]                      # (n, d_sub)
-                    d2 = np.empty((len(Bs), k_), dtype=np.int64)
-                    for j in range(k_):
-                        d2[:, j] = _q9(np.square(Bs - T_[s, j])).sum(axis=1)
-                    a = np.argmin(d2, axis=1)            # ties -> lowest cell
+                    # ties -> lowest cell
+                    a = np.argmin(_sweep(Bs, T_[s], True), axis=1)
                     for j in range(k_):
                         mask = a == j
                         n_j = int(mask.sum())
@@ -146,12 +158,8 @@ def pq_fit(df: DataFrame, m_sub: int = 4, k: int = 8, iters: int = 2,
                             continue
                         # element-quantized int64 partial: the merge
                         # is then order-independent in ANY engine (see
-                        # kmeans_fit — the duckdb-parallel-avg flip).
-                        # HALF_UP like Spark/DuckDB round(), not
-                        # np.round's half-even
-                        q = Bs[mask] * 1e9
-                        ssum = (np.sign(q) * np.floor(np.abs(q) + 0.5)
-                                ).astype(np.int64).sum(axis=0)
+                        # kmeans_fit — the duckdb-parallel-avg flip)
+                        ssum = _q9(Bs[mask]).sum(axis=0)
                         sub_l.append(np.full(d_, s, dtype=np.int32))
                         cell_l.append(np.full(d_, j, dtype=np.int32))
                         spos_l.append(np.arange(d_, dtype=np.int32))
@@ -211,14 +219,14 @@ def pq_encode(df: DataFrame, codebook: DataFrame,
       (e.g. :func:`residual_table` output); pass it through.
     * ``assign_centroids=<coarse centroid table>`` — compute each
       row's coarse cell inline with the exact `ivf_assign` semantics
-      (:func:`~.similarity._assign_cells_float`: float sweep, ties →
-      lowest centroid id).
+      (:func:`~.similarity._nearest_idx`, float, ties → lowest
+      centroid id).
 
     Both emit (id, codes, cell); mutually exclusive."""
     if carry_cell and assign_centroids is not None:
         raise ValueError("carry_cell and assign_centroids are mutually "
                          "exclusive")
-    from .similarity import _assign_cells_float, _sorted_centroids
+    from .similarity import _nearest_idx, _sorted_centroids
     spark = df.sparkSession
     assign_state = None
     if assign_centroids is not None:
@@ -229,7 +237,7 @@ def pq_encode(df: DataFrame, codebook: DataFrame,
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         T_, assign_ = bc.value
-        m_, k_, d_ = T_.shape
+        m_, _, d_ = T_.shape
         for pdf in batches:
             if len(pdf) == 0:
                 continue
@@ -238,13 +246,11 @@ def pq_encode(df: DataFrame, codebook: DataFrame,
             B = V.reshape(-1, m_, d_)
             codes = np.empty((len(B), m_), dtype=np.int32)
             for s in range(m_):
-                d2 = np.empty((len(B), k_), dtype=np.int64)
-                for j in range(k_):
-                    d2[:, j] = _q9(np.square(B[:, s, :] - T_[s, j])).sum(axis=1)
-                codes[:, s] = np.argmin(d2, axis=1)
+                codes[:, s] = np.argmin(_sweep(B[:, s, :], T_[s], True), axis=1)
             out = {"id": pdf[id_col].to_numpy(), "codes": list(codes)}
             if assign_ is not None:
-                out["cell"] = _assign_cells_float(V, assign_[0], assign_[1])
+                cid_, C_ = assign_
+                out["cell"] = cid_[_nearest_idx(V, C_, 1)[:, 0]]
             elif carry_cell:
                 out["cell"] = pdf["cell"].to_numpy()
             yield pd.DataFrame(out)
@@ -298,9 +304,8 @@ def _scan_shortlist(codes: DataFrame, code_col: str, q_ids: np.ndarray,
     by cell once and each probed cell is a ``searchsorted`` range, so a
     query touches its probed rows, not the batch.  Row cells come from
     the ``cell`` column or, with ``assign=(cid_sorted, C_sorted)``, are
-    derived inline from ``vector_col``
-    (:func:`~.similarity._assign_cells_float`, the exact `ivf_assign`
-    semantics) — the fused encode+assign scan.
+    derived inline from ``vector_col`` (:func:`~.similarity._nearest_idx`,
+    the exact `ivf_assign` semantics) — the fused encode+assign scan.
 
     The batch cut is the exact batch top-``kk`` under the global
     ``(d, id)`` order: ``np.partition`` picks the kth distance, every
@@ -311,7 +316,7 @@ def _scan_shortlist(codes: DataFrame, code_col: str, q_ids: np.ndarray,
     depend on how the table is partitioned — and a plateau (duplicated
     vectors, code-degenerate clusters, integer Hamming distances) never
     ships more than ``kk`` rows per batch."""
-    from .similarity import _assign_cells_float
+    from .similarity import _nearest_idx
     cols = ["id", code_col]
     if assign is not None:
         cols.append(vector_col)
@@ -332,9 +337,10 @@ def _scan_shortlist(codes: DataFrame, code_col: str, q_ids: np.ndarray,
             ids = pdf["id"].to_numpy()
             if cells_ is not None:
                 if assign_ is not None:
+                    cid_, C_ = assign_
                     V = np.vstack([np.asarray(v, dtype=np.float64)
                                    for v in pdf[vector_col].to_numpy()])
-                    row_cell = _assign_cells_float(V, *assign_)
+                    row_cell = cid_[_nearest_idx(V, C_, 1)[:, 0]]
                 else:
                     row_cell = np.asarray(pdf["cell"].to_numpy(),
                                           dtype=np.int64)
@@ -531,7 +537,7 @@ def ivfpq_topk(base: DataFrame, queries: DataFrame, centroids: DataFrame,
     verdict r09 API nit).  Like the others, the cell census is one
     |C|-bounded collect over ``assigned``; pass a persisted
     ``assigned`` so the on-the-fly assign kernel does not run twice."""
-    from .similarity import _probe_cells_local, ivf_assign
+    from .similarity import _cell_counts, _probe_cells_local, ivf_assign
     spark = base.sparkSession
     assigned_given = assigned is not None
     mass = None
@@ -582,14 +588,12 @@ def ivfpq_topk(base: DataFrame, queries: DataFrame, centroids: DataFrame,
         else:
             codes = materialize(codes)
             census_src = codes
-        counts = {r["cell"]: r["count"] for r in
-                  census_src.groupBy("cell").count().collect()}
-        mass = (counts, probe_mass)
+        mass = (_cell_counts(census_src), probe_mass)
     q_rows, q_ids, Q = _query_batch(queries, q_id_col, q_vector_col)
     if not q_rows:
         return spark.createDataFrame([], _TOPK_SCHEMA)
     # probe sets DRIVER-SIDE on the already-collected query batch (the
-    # _nc_batches kernel body verbatim): removes the probe-kernel
+    # _nearest_cells kernel's cell rule): removes the probe-kernel
     # Spark job this call previously ran per invocation, and the
     # centroid collect it needs is shared with the by_residual LUTs
     c_rows = rows_cached(centroids, id_col, vector_col)

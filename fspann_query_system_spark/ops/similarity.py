@@ -19,7 +19,7 @@ from pyspark.sql import functions as F
 
 from ..functions.distance import cosine_expr
 from ..functions.plan import materialize, rows_cached
-from .pq import _q9
+from .pq import _q9, _sweep
 
 
 def cosine_topk(base: DataFrame, queries: DataFrame, k: int = 10,
@@ -93,352 +93,215 @@ def _nearest_cells(df: DataFrame, centroids: DataFrame, n_cells: int,
                    c_id_col: str, c_vector_col: str,
                    keep_vector: bool, quantize: bool = False,
                    sq8: tuple | None = None,
-                   mass: tuple | None = None,
-                   packed: bool = False) -> DataFrame:
-    """Shared coarse-quantizer kernel: for each row, the ``n_cells``
-    nearest centroids by L2, ties broken by lowest centroid id →
-    (id[, vector], cell[, cell_rank]).
+                   mass: tuple | None = None) -> DataFrame:
+    """Shared coarse-quantizer kernel: each row's probed cells by L2,
+    ties broken by lowest centroid id → (id[, vector], cell), one row
+    per (row, cell), each row's cells in probe order.
 
     Arrow-batched numpy against the broadcast centroid matrix — strictly
-    map-side: no crossJoin, no shuffle, no window.  Per batch it is |C|
-    vectorized row-sweeps (``(B - C_j)² @ 1``), so memory is O(batch×|C|)
-    distances, never a batch×|C|×dim cube.
+    map-side: no crossJoin, no shuffle, no window.  Each batch is one
+    call of :func:`_cells`, the cell rule every IVF family shares
+    (:func:`_probe_cells_local` runs it on a collected query batch), so
+    probe sets cannot drift between the spellings.
 
     ``quantize=True`` sums ELEMENT-QUANTIZED (``_q9``) squared diffs in
     the exact sweep — for assigns that chain into a cross-engine oracle
     comparison (semantic_dedup / cluster_sample's final kmeans assign),
     where a float near-tie could resolve differently under DuckDB's
-    parallel aggregation.  Ignored by the tiled-GEMM branches (they
-    serve SemDeDup-scale |C|, past any oracle fixture — see
-    :func:`_argmin_cells`).
+    parallel aggregation.  Ignored past 256 centroids (see
+    :func:`_nearest_idx`).
 
-    ``sq8=(mins, maxs)`` (requires ``keep_vector=True``) replaces the
+    ``sq8=(mins, maxs)`` (with ``keep_vector=True``) replaces the
     emitted vector column with ``qcodes BINARY`` — the row's SQ8 codes
-    packed one byte per dimension (``floor((x-mn)/rg*255 + 0.5)``,
-    HALF_UP like ``sq8_quantize``; rg=0 dims → 0).  This is the
+    packed one byte per dimension (:func:`_sq8_bytes`).  This is the
     knn_join_sq8 probe payload: dim BYTES per probe row instead of
     8·dim, an 8× probe-shuffle reduction over float64.
 
     ``mass=(counts, budget)`` switches to per-row ADAPTIVE probing
-    (verdict r08 Next #5; :func:`_probe_cells_local` runs the same
-    rule on a collected query batch): ``counts`` is the
-    {cell: member_count} census (one |C|-bounded collect), and each
-    row probes cells in ascending ELEMENT-QUANTIZED (``_q9``) L2 order
-    — ties by lowest cid — while
-    the cumulative member count of the cells BEFORE it is < ``budget``.
-    Per-row scanned candidate mass is thus hard-bounded regardless of
-    cell-size skew, which fixed ``n_cells`` cannot offer (a prober
-    whose nearest cell holds 10× the average pays 10× under fixed
-    nprobe).  ``n_cells`` is ignored and no ``cell_rank`` is emitted
-    (the probe count varies per row).  The selection uses the exact
-    quantized per-centroid sweep regardless of |C| so a SQL oracle's
-    cumulative-sum window over the same (dd, cid) ordering picks
-    IDENTICAL cells — at SemDeDup-scale |C| (≥ 10⁴) prefer fixed
-    probing or a coarser census.
-
-    ``packed=True`` (requires ``keep_vector=True``; the verdict r09
-    Next #4 fix) emits ONE ROW PER INPUT ROW — (id, payload,
-    cells ARRAY<BIGINT> in probe order) — instead of one row per
-    (row, cell).  This removes the n·nprobe payload REDUNDANCY from
-    the probe table (a 64-byte qcodes payload duplicated nprobe
-    times was the real bulk of the r9-profiled materialization
-    sub-wall: ~16 GB at 10M×p16 vs ~2.6 GB packed), so the staged
-    path persists the packed table once and each group explodes only
-    its cell ≡ gi slice JVM-side."""
+    (verdict r08 Next #5; :func:`_mass_cells`): ``counts`` is the
+    {cell: member_count} census (one |C|-bounded collect) and
+    ``n_cells`` is ignored.  Without it, an ``n_cells`` below 1 probes
+    nothing and raises on the driver."""
     spark = df.sparkSession
     cid, C = _sorted_centroids(rows_cached(centroids, c_id_col,
                                            c_vector_col))
-    sq8_arrs = None
-    if sq8 is not None:
-        mn8 = np.asarray(sq8[0], dtype=np.float64)
-        rg8 = np.asarray(sq8[1], dtype=np.float64) - mn8
-        sq8_arrs = (mn8, rg8)
-    if packed and not keep_vector:
-        raise ValueError("packed=True requires keep_vector=True "
-                         "(the payload is the point of packing)")
-    bc = spark.sparkContext.broadcast((cid, C, n_cells, sq8_arrs,
-                                       _mass_arrs(mass, cid), packed))
+    bc = spark.sparkContext.broadcast((cid, C, sq8,
+                                       _mass_arrs(mass, cid, n_cells)))
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        yield from _nc_batches(bc.value, id_col, vector_col, keep_vector,
-                               quantize, batches)
-
-    id_type = df.schema[id_col].dataType.simpleString()
-    vec_type = df.schema[vector_col].dataType.simpleString()
-    schema = f"{id_col} {id_type}"
-    if keep_vector:
-        if sq8 is not None:
-            schema += ", qcodes BINARY"
-        else:
-            schema += f", {vector_col} {vec_type}"
-    if packed:
-        schema += ", cells ARRAY<BIGINT>"
-    else:
-        schema += ", cell BIGINT"
-        if n_cells > 1 and mass is None:
-            schema += ", cell_rank INT"
-    return df.select(id_col, vector_col).mapInPandas(run, schema=schema)
-
-
-def _nc_batches(state, id_col: str, vector_col: str, keep_vector: bool,
-                quantize: bool, batches: "Iterator[pd.DataFrame]"
-                ) -> "Iterator[pd.DataFrame]":
-    """The per-batch body of :func:`_nearest_cells`'s Arrow kernel,
-    hoisted to module level so the DRIVER-SIDE probe path
-    (:func:`_probe_cells_local`) runs the IDENTICAL code on a collected
-    query batch — the probe sets cannot drift between the two spellings
-    because they are the same function."""
-    cid_, C_, nc_req, sq8_, mass_, packed_ = state
-    nc = min(nc_req, len(cid_))
-
-
-    def payload(V: np.ndarray) -> list:
-        # sq8 packing: HALF_UP rounding (floor(x+0.5) on the
-        # non-negative normalized value — mirrors sq8_quantize's
-        # F.round and the oracle's round())
-        mn8, rg8 = sq8_
-        x = np.zeros_like(V)
-        nz = rg8 > 0
-        x[:, nz] = (V[:, nz] - mn8[nz]) / rg8[nz] * 255.0
-        codes = np.clip(np.floor(x + 0.5), 0, 255).astype(np.uint8)
-        return [c.tobytes() for c in codes]
-
-    for pdf in batches:
-        if len(pdf) == 0:
-            continue
-        B = np.vstack([np.asarray(v, dtype=np.float64)
-                       for v in pdf[vector_col].to_numpy()])
-        if mass_ is not None:
-            # adaptive mass-budget probing: order cells by
-            # element-quantized (dd, cid); keep cell i while the
-            # cumulative member count of cells BEFORE it is <
-            # budget.  Row chunks bound the working set.
-            #
-            # Small codebook (<= 256, the oracle fixtures): exact
-            # quantized sweep over ALL cells + stable argsort on
-            # int64 dd over cid-ascending columns == (dd, cid)
-            # order, engine-reproducible at any tie density.
-            #
-            # Large codebook (the scale path): the full sweep is
-            # |C| python-loop passes + a (rows × |C|) sort per
-            # chunk — measured as kernel-dominating at |C| = 10⁴.
-            # Instead: T = the worst-case cell count that covers
-            # the budget (smallest prefix of ASCENDING cell counts
-            # ≥ budget — no prober can need more cells than the
-            # all-smallest-cells adversary), tiled-GEMM float
-            # prefilter to the T+8 nearest (same +8 margin and
-            # tie caveat as the nc>1 branch), quantized recompute
-            # of only those, then the same (dd, cid) cumulative
-            # rule within the shortlist.
-            cnt_, budget_ = mass_
-            ids_all = pdf[id_col].to_numpy()
-            vec_all = pdf[vector_col].to_numpy()
-            T = len(cid_)
-            if len(cid_) > 256:
-                asc = np.cumsum(np.sort(cnt_))
-                T = min(len(cid_),
-                        int(np.searchsorted(asc, budget_)) + 1 + 8)
-            cn = np.square(C_).sum(axis=1)
-            # bound the (rows × |C|) GEMM buffer at ~32 MB/task and
-            # PREALLOCATE it: a fresh allocation per chunk is the
-            # page-zeroing storm the nc==1 branch documents
-            # (measured: it dominated the 10M probe kernel)
-            RB = max(256, min(2048, (4 << 20) // max(1, len(cid_))))
-            gbuf = (np.empty((min(RB, len(B)), len(cid_)))
-                    if T < len(cid_) else None)
-            for r0 in range(0, len(B), RB):
-                Br = B[r0:r0 + RB]
-                if T < len(cid_):
-                    # float GEMM prefilter (|q|² is row-constant,
-                    # cannot move the per-row order)
-                    d2g = gbuf[:len(Br)]
-                    np.matmul(Br, C_.T, out=d2g)
-                    d2g *= -2.0
-                    d2g += cn
-                    part = np.argpartition(d2g, T - 1,
-                                           axis=1)[:, :T]
-                    # column index == cid rank: pre-sort so the
-                    # later stable argsort ties break by cid
-                    part = np.sort(part, axis=1)
-                    # quantized recompute of the shortlist, tiled
-                    # over rows: RB is sized only by |C|, so just
-                    # past the 256-centroid crossover a large
-                    # budget (T → |C|) would otherwise blow the
-                    # (RB × T × dim) cube to hundreds of MB/task
-                    # (r09 ADVICE) — cap the cube at ~32 MB
-                    sub = max(1, (32 << 20)
-                              // max(1, T * Br.shape[1] * 8))
-                    dd = np.empty((len(Br), T), dtype=np.int64)
-                    for s0 in range(0, len(Br), sub):
-                        diff = (Br[s0:s0 + sub, None, :]
-                                - C_[part[s0:s0 + sub]])
-                        dd[s0:s0 + sub] = _q9(
-                            np.square(diff)).sum(axis=2)
-                    ordT = np.argsort(dd, axis=1, kind="stable")
-                    perm = np.take_along_axis(part, ordT, 1)
-                else:
-                    d2 = np.empty((len(Br), len(cid_)),
-                                  dtype=np.int64)
-                    for j in range(len(cid_)):
-                        d2[:, j] = _q9(
-                            np.square(Br - C_[j])).sum(axis=1)
-                    perm = np.argsort(d2, axis=1, kind="stable")
-                run_cnt = np.cumsum(cnt_[perm], axis=1)
-                keep = np.empty(perm.shape, dtype=bool)
-                keep[:, 0] = True           # prior mass 0 < budget
-                keep[:, 1:] = run_cnt[:, :-1] < budget_
-                nk = keep.sum(axis=1)
-                # perm[keep] flattens row-major: per-row cells in
-                # (dd, cid) order, rows in input order
-                flat_cells = cid_[perm[keep]]
-                if packed_:
-                    out = {id_col: ids_all[r0:r0 + RB]}
-                    if sq8_ is not None:
-                        out["qcodes"] = payload(Br)
-                    else:
-                        out[vector_col] = vec_all[r0:r0 + RB]
-                    out["cells"] = np.split(flat_cells,
-                                            np.cumsum(nk)[:-1])
-                    yield pd.DataFrame(out)
-                    continue
-                out = {id_col: np.repeat(ids_all[r0:r0 + RB], nk)}
-                if keep_vector:
-                    if sq8_ is not None:
-                        out["qcodes"] = list(np.repeat(
-                            np.array(payload(Br), dtype=object), nk))
-                    else:
-                        out[vector_col] = np.repeat(
-                            vec_all[r0:r0 + RB], nk)
-                out["cell"] = flat_cells
-                yield pd.DataFrame(out)
-            continue
-        if nc_req == 1 and len(cid_) > 256:
-            # large codebook (SemDeDup-scale k ~ n/64): GEMM form
-            # -2 b·c + |c|^2 (the |b|^2 term is row-constant, so it
-            # cannot move the argmin), computed in (row, centroid)
-            # TILES with preallocated buffers and a running argmin.
-            # Materializing the full batch×k distance matrix (and
-            # the GEMM expression's temporaries) at k=15625 means
-            # several ~1.25 GB allocations per 10k-row batch ×32
-            # concurrent workers — measured as a kernel-time
-            # page-zeroing storm that was SLOWER than the python
-            # loop.  Tiles bound the working set at ~64 MB/task.
-            # fp summation order differs from the exact sweep only
-            # within ~1 ulp; oracle-gated small-k entries keep the
-            # exact per-centroid sweep below.
-            cn = np.square(C_).sum(axis=1)
-            RB, CB = 2048, 4096
-            buf = np.empty((RB, CB), dtype=np.float64)
-            best_d = np.empty(len(B), dtype=np.float64)
-            best_j = np.empty(len(B), dtype=np.int64)
-            for r0 in range(0, len(B), RB):
-                Br = B[r0:r0 + RB]
-                bd = np.full(len(Br), np.inf)
-                bj = np.zeros(len(Br), dtype=np.int64)
-                for c0 in range(0, len(cid_), CB):
-                    Ct = C_[c0:c0 + CB]
-                    t = buf[:len(Br), :len(Ct)]
-                    np.matmul(Br, Ct.T, out=t)
-                    t *= -2.0
-                    t += cn[c0:c0 + CB]
-                    j = t.argmin(axis=1)
-                    d = t[np.arange(len(Br)), j]
-                    upd = d < bd      # strict: ties keep lower cid
-                    bd[upd] = d[upd]
-                    bj[upd] = j[upd] + c0
-                best_d[r0:r0 + RB] = bd
-                best_j[r0:r0 + RB] = bj
-            cells1 = cid_[best_j]
-            if packed_:
-                out = {id_col: pdf[id_col].to_numpy()}
-                if sq8_ is not None:
-                    out["qcodes"] = payload(B)
-                else:
-                    out[vector_col] = pdf[vector_col].to_numpy()
-                out["cells"] = list(cells1[:, None])
-                yield pd.DataFrame(out)
+        cid_, C_, sq8_, mass_ = bc.value
+        for pdf in batches:
+            if len(pdf) == 0:
                 continue
-            out = {id_col: pdf[id_col].to_numpy()}
-            if keep_vector:
-                if sq8_ is not None:
-                    out["qcodes"] = payload(B)
-                else:
-                    out[vector_col] = pdf[vector_col].to_numpy()
-            out["cell"] = cells1
+            B = np.vstack([np.asarray(v, dtype=np.float64)
+                           for v in pdf[vector_col].to_numpy()])
+            cells, nk = _cells(B, cid_, C_, n_cells, mass_, quantize)
+            out = {id_col: np.repeat(pdf[id_col].to_numpy(), nk)}
+            if keep_vector and sq8_ is not None:
+                out["qcodes"] = list(np.repeat(_sq8_bytes(B, *sq8_), nk))
+            elif keep_vector:
+                out[vector_col] = np.repeat(pdf[vector_col].to_numpy(), nk)
+            out["cell"] = cells
             yield pd.DataFrame(out)
-            continue
-        if nc_req > 1 and len(cid_) > 256:
-            # large codebook, top-nc probes (the IVF query path at
-            # SemDeDup-scale |C|): same tiled GEMM as the nc==1
-            # branch, with a per-tile top-(nc+8) candidate cut and
-            # one final per-row (d, cid) merge — O(|C|) GEMM work
-            # per row instead of |C| python sweeps per batch
-            # (measured: |C|=10k probes at 10M went from hours to
-            # minutes).  The +8 margin absorbs within-tile float
-            # ties at the cut; a >8-deep cohort of bit-identical
-            # GEMM distances straddling the boundary (duplicate
-            # centroids) could still resolve differently than the
-            # exact path's lowest-cid order — small-|C| oracle
-            # fixtures keep the exact sweep below.
-            cn = np.square(C_).sum(axis=1)
-            RB, CB = 2048, 4096
-            kk = min(nc + 8, len(cid_))
-            near = np.empty((len(B), nc), dtype=np.int64)
-            for r0 in range(0, len(B), RB):
-                Br = B[r0:r0 + RB]
-                cd, cj = [], []
-                for c0 in range(0, len(cid_), CB):
-                    Ct = C_[c0:c0 + CB]
-                    t = Br @ Ct.T
-                    t *= -2.0
-                    t += cn[c0:c0 + CB]
-                    w = min(kk, t.shape[1])
-                    part = np.argpartition(t, w - 1, axis=1)[:, :w]
-                    cd.append(np.take_along_axis(t, part, 1))
-                    cj.append(part + c0)
-                md = np.concatenate(cd, axis=1)
-                mj = np.concatenate(cj, axis=1)
-                for r in range(len(Br)):
-                    order = np.lexsort((mj[r], md[r]))[:nc]
-                    near[r0 + r] = mj[r][order]
-        elif quantize:
-            d2 = np.empty((len(B), len(cid_)), dtype=np.int64)
-            for j in range(len(cid_)):
-                d2[:, j] = _q9(np.square(B - C_[j])).sum(axis=1)
-            near = None
+
+    schema = f"{id_col} {df.schema[id_col].dataType.simpleString()}"
+    if keep_vector and sq8 is not None:
+        schema += ", qcodes BINARY"
+    elif keep_vector:
+        schema += (f", {vector_col} "
+                   f"{df.schema[vector_col].dataType.simpleString()}")
+    return df.select(id_col, vector_col).mapInPandas(
+        run, schema=schema + ", cell BIGINT")
+
+
+def _sq8_bytes(V: np.ndarray, mins, maxs) -> np.ndarray:
+    """Rows → their SQ8 codes packed one byte per dimension, as an
+    object array of ``bytes``.  HALF_UP rounding (floor(x+0.5) on the
+    non-negative normalized value — mirrors sq8_quantize's F.round and
+    the oracle's round()); rg=0 dims → 0."""
+    mn8 = np.asarray(mins, dtype=np.float64)
+    rg8 = np.asarray(maxs, dtype=np.float64) - mn8
+    x = np.zeros_like(V)
+    nz = rg8 > 0
+    x[:, nz] = (V[:, nz] - mn8[nz]) / rg8[nz] * 255.0
+    codes = np.clip(np.floor(x + 0.5), 0, 255).astype(np.uint8)
+    return np.array([c.tobytes() for c in codes], dtype=object)
+
+
+def _cells(B: np.ndarray, cid: np.ndarray, C: np.ndarray, n_cells: int,
+           mass: tuple | None, quantize: bool = False) -> tuple:
+    """The one cell rule of every IVF family → (the probed cell ids of
+    all rows, flattened row-major with each row's cells in probe order;
+    the per-row cell counts).  ``mass=None`` probes the ``n_cells``
+    nearest (:func:`_nearest_idx`), a :func:`_mass_arrs` pair the
+    adaptive rule (:func:`_mass_cells`).  ``cid``/``C`` are sorted by
+    cid (:func:`_sorted_centroids`), so index order is cid order."""
+    if mass is None:
+        near = _nearest_idx(B, C, min(n_cells, len(C)), quantize)
+        return cid[near].ravel(), np.full(len(B), near.shape[1])
+    idx, nk = _mass_cells(B, C, *mass)
+    return cid[idx], nk
+
+
+def _nearest_idx(B: np.ndarray, C: np.ndarray, nc: int,
+                 quantize: bool = False) -> np.ndarray:
+    """(rows, nc) indices of each row's ``nc`` nearest rows of ``C`` in
+    (squared L2, index) order — over cid-sorted centroids, the
+    lowest-cid tie-break.
+
+    Up to 256 centroids it is the exact per-centroid sweep
+    (:func:`~.pq._sweep`), float or, with ``quantize``,
+    element-quantized.
+
+    Past 256 (SemDeDup-scale |C| ~ n/64): the GEMM form -2 b·c + |c|²
+    (the |b|² term is row-constant, so it cannot move the per-row
+    order), computed in (row, centroid) TILES through one preallocated
+    buffer.  Materializing the full batch×|C| distance matrix (and the
+    GEMM expression's temporaries) at |C|=15625 means several ~1.25 GB
+    allocations per 10k-row batch ×32 concurrent workers — measured as
+    a kernel-time page-zeroing storm that was SLOWER than the python
+    loop.  Tiles bound the working set at ~64 MB/task.  Each tile keeps
+    its argmin (nc == 1) or its top-(nc+8), and one per-row (d, index)
+    merge picks the nc: O(|C|) GEMM work per row instead of |C| python
+    sweeps per batch (measured: |C|=10k probes at 10M went from hours
+    to minutes).  ``quantize`` is ignored here: the GEMM form has no
+    per-element squared diff to quantize, its fp summation order
+    differs from the sweep only within ~1 ulp, and the oracle-gated
+    fixtures keep the sweep.  The +8 margin absorbs within-tile float
+    ties at the cut; a >8-deep cohort of bit-identical GEMM distances
+    straddling the boundary (duplicate centroids) could still resolve
+    differently than the sweep's lowest-cid order."""
+    if len(C) <= 256:
+        d2 = _sweep(B, C, quantize)
+        if nc == 1:
+            # argmin returns the first (= lowest-index) minimum
+            return np.argmin(d2, axis=1)[:, None]
+        return np.argsort(d2, axis=1, kind="stable")[:, :nc]
+    cn = np.square(C).sum(axis=1)
+    RB, CB = 2048, 4096
+    buf = np.empty((min(RB, len(B)), min(CB, len(C))), dtype=np.float64)
+    near = np.empty((len(B), nc), dtype=np.int64)
+    for r0 in range(0, len(B), RB):
+        Br = B[r0:r0 + RB]
+        cd, cj = [], []
+        for c0 in range(0, len(C), CB):
+            Ct = C[c0:c0 + CB]
+            t = buf[:len(Br), :len(Ct)]
+            np.matmul(Br, Ct.T, out=t)
+            t *= -2.0
+            t += cn[c0:c0 + CB]
+            w = min(1 if nc == 1 else nc + 8, len(Ct))
+            j = (t.argmin(axis=1)[:, None] if w == 1
+                 else np.argpartition(t, w - 1, axis=1)[:, :w])
+            cd.append(np.take_along_axis(t, j, 1))
+            cj.append(j + c0)
+        md, mj = np.concatenate(cd, axis=1), np.concatenate(cj, axis=1)
+        near[r0:r0 + RB] = np.take_along_axis(
+            mj, np.lexsort((mj, md), axis=1)[:, :nc], 1)
+    return near
+
+
+def _mass_cells(B: np.ndarray, C: np.ndarray, cnt: np.ndarray,
+                budget: int) -> tuple:
+    """Adaptive mass-budget probing → (the cell indices of all rows,
+    flattened row-major; the per-row cell counts).  Each row takes
+    cells in ascending ELEMENT-QUANTIZED (``_q9``) L2 order, ties by
+    lowest index, while the cumulative member count ``cnt`` of the
+    cells BEFORE the cell is < ``budget``.  Per-row scanned candidate
+    mass is thus hard-bounded regardless of cell-size skew, which a
+    fixed cell count cannot offer (a prober whose nearest cell holds
+    10× the average pays 10× under fixed nprobe), and a SQL oracle's
+    cumulative-sum window over the same (dd, cid) ordering picks
+    IDENTICAL cells.
+
+    Up to 256 centroids (the oracle fixtures) the order is the exact
+    quantized sweep over ALL cells plus a stable argsort —
+    engine-reproducible at any tie density.  Past 256 the full sweep
+    is |C| python-loop passes + a (rows × |C|) sort per chunk, measured
+    as kernel-dominating at |C| = 10⁴.  Instead: T = the worst-case
+    cell count that covers the budget (smallest prefix of ASCENDING
+    cell counts ≥ budget — no prober can need more cells than the
+    all-smallest-cells adversary), a float prefilter to the T+8
+    nearest (:func:`_nearest_idx`, same tie caveat), a quantized
+    recompute of only those, then the same (dd, index) rule within the
+    shortlist.  At SemDeDup-scale |C| (≥ 10⁴) prefer fixed probing or a
+    coarser census."""
+    T = len(C)
+    if len(C) > 256:
+        asc = np.cumsum(np.sort(cnt))
+        T = min(len(C), int(np.searchsorted(asc, budget)) + 1 + 8)
+    # row chunks bound the (rows × |C|) working set at ~32 MB/task
+    RB = max(256, min(2048, (4 << 20) // max(1, len(C))))
+    idx, nk = [], []
+    for r0 in range(0, len(B), RB):
+        Br = B[r0:r0 + RB]
+        if T < len(C):
+            # index order == cid order: pre-sort so the stable argsort
+            # below breaks quantized ties by cid
+            part = np.sort(_nearest_idx(Br, C, T), axis=1)
+            # quantized recompute of the shortlist, tiled over rows:
+            # RB is sized only by |C|, so just past the 256-centroid
+            # crossover a large budget (T → |C|) would otherwise blow
+            # the (RB × T × dim) cube to hundreds of MB/task (r09
+            # ADVICE) — cap the cube at ~32 MB
+            sub = max(1, (32 << 20) // max(1, T * Br.shape[1] * 8))
+            dd = np.empty((len(Br), T), dtype=np.int64)
+            for s0 in range(0, len(Br), sub):
+                diff = Br[s0:s0 + sub, None, :] - C[part[s0:s0 + sub]]
+                dd[s0:s0 + sub] = _q9(np.square(diff)).sum(axis=2)
+            perm = np.take_along_axis(
+                part, np.argsort(dd, axis=1, kind="stable"), 1)
         else:
-            d2 = np.empty((len(B), len(cid_)), dtype=np.float64)
-            for j in range(len(cid_)):
-                d2[:, j] = np.square(B - C_[j]).sum(axis=1)
-            near = None
-        if nc_req == 1:
-            # argmin returns the first (= lowest-cid) minimum
-            cells_m = cid_[np.argmin(d2, axis=1)][:, None]
-        else:
-            if near is None:
-                near = np.argsort(d2, axis=1, kind="stable")[:, :nc]
-            cells_m = cid_[near]
-        if packed_:
-            out = {id_col: pdf[id_col].to_numpy()}
-            if sq8_ is not None:
-                out["qcodes"] = payload(B)
-            else:
-                out[vector_col] = pdf[vector_col].to_numpy()
-            out["cells"] = list(cells_m)
-            yield pd.DataFrame(out)
-            continue
-        out = {id_col: np.repeat(pdf[id_col].to_numpy(), nc)}
-        if keep_vector:
-            if sq8_ is not None:
-                out["qcodes"] = list(np.repeat(
-                    np.array(payload(B), dtype=object), nc))
-            else:
-                out[vector_col] = np.repeat(
-                    pdf[vector_col].to_numpy(), nc)
-        out["cell"] = cells_m.ravel()
-        if nc_req > 1:
-            out["cell_rank"] = np.tile(np.arange(1, nc + 1), len(B))
-        yield pd.DataFrame(out)
+            perm = np.argsort(_sweep(Br, C, True), axis=1, kind="stable")
+        run_cnt = np.cumsum(cnt[perm], axis=1)
+        keep = np.empty(perm.shape, dtype=bool)
+        keep[:, 0] = True                   # prior mass 0 < budget
+        keep[:, 1:] = run_cnt[:, :-1] < budget
+        # perm[keep] flattens row-major: per-row cells in (dd, index)
+        # order, rows in input order
+        idx.append(perm[keep])
+        nk.append(keep.sum(axis=1))
+    return np.concatenate(idx), np.concatenate(nk)
 
 
 def _probe_cells_local(q_rows, c_rows, n_cells: int,
@@ -446,8 +309,8 @@ def _probe_cells_local(q_rows, c_rows, n_cells: int,
     """Driver-side fixed/adaptive probe sets for an ALREADY-COLLECTED
     query batch: {q_id: sorted int64 cell array}.
 
-    Runs :func:`_nc_batches` — the exact `_nearest_cells` kernel body —
-    on the collected rows, so the probe sets are bit-identical to the
+    Runs :func:`_cells` — the `_nearest_cells` kernel's cell rule — on
+    the collected rows, so the probe sets are bit-identical to the
     distributed spelling by construction.  The point (guide §1/§4): the
     online ANN families (`ivfpq_topk`, `_ivf_bq_partial`) already
     collect both the query batch and the centroid table; deriving the
@@ -463,14 +326,14 @@ def _probe_cells_local(q_rows, c_rows, n_cells: int,
     deeper (SCALE.md §9e addendum 2), and the (dd, cid) order plus one
     cumulative-sum window reproduce the probe set in SQL."""
     cid, C = _sorted_centroids(c_rows)
-    state = (cid, C, n_cells, None, _mass_arrs(mass, cid), False)
-    pdf = pd.DataFrame({"q_id": [r[0] for r in q_rows],
-                        "vector": [list(r[1]) for r in q_rows]})
+    mass_ = _mass_arrs(mass, cid, n_cells)
+    if not q_rows:
+        return {}
+    B = np.array([list(r[1]) for r in q_rows], dtype=np.float64)
+    cells, nk = _cells(B, cid, C, n_cells, mass_)
     probed: dict[int, set] = {}
-    for out in _nc_batches(state, "q_id", "vector", False, False,
-                           iter([pdf])):
-        for q, c in zip(out["q_id"].to_numpy(), out["cell"].to_numpy()):
-            probed.setdefault(int(q), set()).add(int(c))
+    for q, c in zip(np.repeat([int(r[0]) for r in q_rows], nk), cells):
+        probed.setdefault(int(q), set()).add(int(c))
     return {q: np.array(sorted(s), dtype=np.int64)
             for q, s in probed.items()}
 
@@ -484,10 +347,15 @@ def _sorted_centroids(c_rows) -> tuple:
     return cid[order], C[order]
 
 
-def _mass_arrs(mass: tuple | None, cid: np.ndarray) -> tuple | None:
+def _mass_arrs(mass: tuple | None, cid: np.ndarray,
+               n_cells: int) -> tuple | None:
     """``mass=(counts, budget)`` → the kernel's ``(member counts aligned
-    with cid, budget)``; a budget below 1 probes nothing and raises."""
+    with cid, budget)``, or None for fixed probing.  Either rule probes
+    nothing below 1 — ``n_cells`` without a budget, the budget with one
+    — and raises on the driver rather than return no rows."""
     if mass is None:
+        if n_cells < 1:
+            raise ValueError(f"nprobe must be >= 1, got {n_cells}")
         return None
     counts, budget = mass
     if budget < 1:
@@ -495,86 +363,6 @@ def _mass_arrs(mass: tuple | None, cid: np.ndarray) -> tuple | None:
     cnt = np.array([int(counts.get(int(c), 0)) for c in cid],
                    dtype=np.int64)
     return cnt, int(budget)
-
-
-def _assign_cells_float(B: np.ndarray, cid_sorted: np.ndarray,
-                        C_sorted: np.ndarray) -> np.ndarray:
-    """Per-row nearest-centroid CELL ID, float sweep — EXACTLY the
-    ``_nearest_cells`` nc==1 / quantize=False semantics (the
-    `ivf_assign` contract): centroids pre-sorted by cid so argmin's
-    first-minimum rule is the lowest-cid tie-break; tiled GEMM with
-    strict-improvement updates past 256 centroids, the per-centroid
-    ``(B-C_j)²`` sweep below.  Used by the fused encode+assign kernels
-    (`bq_encode_assign` / `pq_encode(assign_centroids=)`) so the fused
-    cell column is bit-identical to a separate `ivf_assign` pass."""
-    if len(cid_sorted) > 256:
-        cn = np.square(C_sorted).sum(axis=1)
-        RB, CB = 2048, 4096
-        buf = np.empty((RB, CB), dtype=np.float64)
-        best_j = np.empty(len(B), dtype=np.int64)
-        for r0 in range(0, len(B), RB):
-            Br = B[r0:r0 + RB]
-            bd = np.full(len(Br), np.inf)
-            bj = np.zeros(len(Br), dtype=np.int64)
-            for c0 in range(0, len(cid_sorted), CB):
-                Ct = C_sorted[c0:c0 + CB]
-                t = buf[:len(Br), :len(Ct)]
-                np.matmul(Br, Ct.T, out=t)
-                t *= -2.0
-                t += cn[c0:c0 + CB]
-                j = t.argmin(axis=1)
-                d = t[np.arange(len(Br)), j]
-                upd = d < bd      # strict: ties keep lower cid
-                bd[upd] = d[upd]
-                bj[upd] = j[upd] + c0
-            best_j[r0:r0 + RB] = bj
-        return cid_sorted[best_j]
-    d2 = np.empty((len(B), len(cid_sorted)), dtype=np.float64)
-    for j in range(len(cid_sorted)):
-        d2[:, j] = np.square(B - C_sorted[j]).sum(axis=1)
-    return cid_sorted[np.argmin(d2, axis=1)]
-
-
-def _argmin_cells(B: np.ndarray, C: np.ndarray) -> np.ndarray:
-    """Row-wise nearest-centroid INDEX (ties → lowest index): the exact
-    per-centroid sweep for small codebooks, the tiled-GEMM form past
-    256 centroids (same crossover and tie semantics as
-    :func:`_nearest_cells`'s nc==1 branch).
-
-    The exact sweep sums ELEMENT-QUANTIZED (``_q9``) squared diffs —
-    order-free int64, mirrored by ``_sql_kmeans_parts``'s ``d{i}``
-    CTEs, so a kmeans assign near-tie cannot flip between Spark's
-    batch summation and DuckDB's parallel aggregation (the SCALE.md
-    pathology-#3 class).  The GEMM branch stays float: it serves only
-    SemDeDup-scale codebooks (|C| ~ n/64), far past any oracle-gated
-    fixture, where a -2b·c+|c|² form has no per-element squared diff
-    to quantize."""
-    if len(C) > 256:
-        cn = np.square(C).sum(axis=1)
-        RB, CB = 2048, 4096
-        best_d = np.empty(len(B), dtype=np.float64)
-        best_j = np.empty(len(B), dtype=np.int64)
-        for r0 in range(0, len(B), RB):
-            Br = B[r0:r0 + RB]
-            bd = np.full(len(Br), np.inf)
-            bj = np.zeros(len(Br), dtype=np.int64)
-            for c0 in range(0, len(C), CB):
-                Ct = C[c0:c0 + CB]
-                t = Br @ Ct.T
-                t *= -2.0
-                t += cn[c0:c0 + CB]
-                j = t.argmin(axis=1)
-                d = t[np.arange(len(Br)), j]
-                upd = d < bd          # strict: ties keep lower index
-                bd[upd] = d[upd]
-                bj[upd] = j[upd] + c0
-            best_d[r0:r0 + RB] = bd
-            best_j[r0:r0 + RB] = bj
-        return best_j
-    d2 = np.empty((len(B), len(C)), dtype=np.int64)
-    for j in range(len(C)):
-        d2[:, j] = _q9(np.square(B - C[j])).sum(axis=1)
-    return np.argmin(d2, axis=1)
 
 
 def ivf_assign(base: DataFrame, centroids: DataFrame,
@@ -675,13 +463,11 @@ def kmeans_fit(df: DataFrame, k: int = 16, iters: int = 2,
                     continue
                 B = np.vstack([np.asarray(v, dtype=np.float64)
                                for v in pdf[vector_col].to_numpy()])
-                a = _argmin_cells(B, C_)
+                a = _nearest_idx(B, C_, 1, quantize=True)[:, 0]
                 cell_l, pos_l, s_l, c_l = [], [], [], []
                 for j in np.unique(a):
                     mask = a == j
-                    q = B[mask] * 1e9
-                    ssum = (np.sign(q) * np.floor(np.abs(q) + 0.5)
-                            ).astype(np.int64).sum(axis=0)
+                    ssum = _q9(B[mask]).sum(axis=0)
                     cell_l.append(np.full(dim_, j, dtype=np.int64))
                     pos_l.append(pos)
                     s_l.append(ssum)
@@ -724,6 +510,40 @@ def ivf_save(assigned: DataFrame, path: str) -> None:
     assigned.write.mode("overwrite").partitionBy("cell").parquet(path)
 
 
+def _cell_counts(assigned: DataFrame) -> dict:
+    """The cell census {cell: member count}: one |C|-bounded collect."""
+    return {r["cell"]: r["count"] for r in
+            assigned.groupBy("cell").count().collect()}
+
+
+def _assigned_and_mass(df: DataFrame, centroids: DataFrame,
+                       assigned: DataFrame | None,
+                       probe_mass: int | None,
+                       id_col: str, vector_col: str,
+                       c_id_col: str, c_vector_col: str) -> tuple:
+    """``(assigned, mass)`` for a probe-based family over ``df``:
+    ``assigned`` as given, or the lazy :func:`ivf_assign` of ``df``;
+    ``mass`` the ``(census, probe_mass)`` pair :func:`_nearest_cells`
+    takes, None without a budget.  With ``assigned`` omitted the census
+    is a census-only pass: the SAME assign kernel but WITHOUT carrying
+    vectors through Arrow — the census needs only `cell`, so the pass
+    ships ~16 bytes/row across the Python boundary instead of the full
+    vector (guide §4.2; r12 optimization round), while the candidate
+    side keeps its own lazy vector-carrying assign."""
+    mass = None
+    if probe_mass is not None:
+        census_src = assigned
+        if assigned is None:
+            census_src = _nearest_cells(df, centroids, 1, id_col,
+                                        vector_col, c_id_col,
+                                        c_vector_col, keep_vector=False)
+        mass = (_cell_counts(census_src), probe_mass)
+    if assigned is None:
+        assigned = ivf_assign(df, centroids, id_col, vector_col,
+                              c_id_col, c_vector_col)
+    return assigned, mass
+
+
 def ivf_topk(base: DataFrame, queries: DataFrame, centroids: DataFrame,
              k: int = 10, nprobe: int = 2,
              id_col: str = "id", vector_col: str = "vector",
@@ -759,31 +579,12 @@ def ivf_topk(base: DataFrame, queries: DataFrame, centroids: DataFrame,
     the full base table TWICE (census collect + candidate join) — pass
     a persisted ``assigned`` at scale (r09 ADVICE)."""
     from ..functions.distance import l2_expr
-    assigned_on_the_fly = assigned is None
-    if assigned is None:
-        assigned = ivf_assign(base, centroids, id_col, vector_col,
-                              id_col, vector_col)
-    mass = None
-    if probe_mass is not None:
-        census_src = assigned
-        if assigned_on_the_fly:
-            # census-only pass: the SAME assign kernel but WITHOUT
-            # carrying vectors through Arrow — the census needs only
-            # `cell`, so the on-the-fly pass ships ~16 bytes/row
-            # across the Python boundary instead of the full vector
-            # (guide §4.2; r12 optimization round).  The candidate
-            # side below keeps its own lazy vector-carrying assign.
-            census_src = _nearest_cells(base, centroids, 1, id_col,
-                                        vector_col, id_col, vector_col,
-                                        keep_vector=False)
-        counts = {r["cell"]: r["count"] for r in
-                  census_src.groupBy("cell").count().collect()}
-        mass = (counts, probe_mass)
+    assigned, mass = _assigned_and_mass(base, centroids, assigned,
+                                        probe_mass, id_col, vector_col,
+                                        id_col, vector_col)
     probes = _nearest_cells(
         queries, centroids, nprobe, q_id_col, q_vector_col,
         id_col, vector_col, keep_vector=True, mass=mass)
-    if "cell_rank" in probes.columns:
-        probes = probes.drop("cell_rank")
     qp = (probes.withColumnRenamed(q_vector_col, "_qv")
           if q_vector_col in probes.columns else probes)
     cand = (assigned.withColumnRenamed(vector_col, "_bv")
@@ -890,30 +691,13 @@ def knn_join(df: DataFrame, centroids: DataFrame, k: int = 10,
     if shuffle_dtype not in ("double", "float"):
         raise ValueError(f"shuffle_dtype must be 'double' or 'float', "
                          f"got {shuffle_dtype!r}")
-    assigned_on_the_fly = assigned is None
-    if assigned is None:
-        assigned = ivf_assign(df, centroids, id_col, vector_col,
-                              c_id_col, c_vector_col)
-    mass = None
-    if probe_mass is not None:
-        census_src = assigned
-        if assigned_on_the_fly:
-            # census-only pass: same assign kernel WITHOUT carrying
-            # vectors through Arrow — the census needs only `cell`
-            # (guide §4.2; r12 optimization round); the member side
-            # keeps its own lazy vector-carrying assign
-            census_src = _nearest_cells(df, centroids, 1, id_col,
-                                        vector_col, c_id_col,
-                                        c_vector_col, keep_vector=False)
-        counts = {r["cell"]: r["count"] for r in
-                  census_src.groupBy("cell").count().collect()}
-        mass = (counts, probe_mass)
+    assigned, mass = _assigned_and_mass(df, centroids, assigned,
+                                        probe_mass, id_col, vector_col,
+                                        c_id_col, c_vector_col)
     probes = _nearest_cells(queries if queries is not None else df,
                             centroids, nprobe, id_col, vector_col,
                             c_id_col, c_vector_col, keep_vector=True,
                             mass=mass)
-    if "cell_rank" in probes.columns:
-        probes = probes.drop("cell_rank")
     _vt = "array<float>" if shuffle_dtype == "float" else None
     _cast = (lambda c: c.cast(_vt)) if _vt else (lambda c: c)
     qp = probes.select(F.col(id_col).alias("q_id"),
@@ -1285,8 +1069,6 @@ def knn_graph_fold(graph: DataFrame, probes: DataFrame,
     new_probes = _nearest_cells(new_batch, centroids, nprobe, id_col,
                                 vector_col, c_id_col, c_vector_col,
                                 keep_vector=keep_vec)
-    if "cell_rank" in new_probes.columns:
-        new_probes = new_probes.drop("cell_rank")
     p_cols = [id_col, vector_col, "cell"] if keep_vec else [id_col, "cell"]
     p2 = probes.select(*p_cols).unionByName(new_probes.select(*p_cols))
     a2 = assigned.select(id_col, vector_col, "cell").unionByName(
@@ -1305,8 +1087,7 @@ def knn_join_sq8(df: DataFrame, centroids: DataFrame,
                  exclude_self: bool = True,
                  shuffle_dtype: str = "double",
                  probe_groups: int = 1,
-                 probe_mass: int | None = None,
-                 probe_table: str = "flat") -> DataFrame:
+                 probe_mass: int | None = None) -> DataFrame:
     """kNN self-join with SQ8 PROBE CODES — the high-nprobe scale
     variant of :func:`knn_join` (verdict r07 Next #2's "ascending
     ambition" option): the probe side ships each row's scalar-quantized
@@ -1384,31 +1165,13 @@ def knn_join_sq8(df: DataFrame, centroids: DataFrame,
     """
     from ..functions.distance import l2q_expr
     spark = df.sparkSession
-    assigned_on_the_fly = assigned is None
-    if assigned is None:
-        assigned = ivf_assign(df, centroids, id_col, vector_col,
-                              c_id_col, c_vector_col)
-    mass = None
-    if probe_mass is not None:
-        census_src = assigned
-        if assigned_on_the_fly:
-            # census-only pass: same assign kernel WITHOUT carrying
-            # vectors through Arrow — the census needs only `cell`
-            # (guide §4.2; r12 optimization round); the member side
-            # keeps its own lazy vector-carrying assign
-            census_src = _nearest_cells(df, centroids, 1, id_col,
-                                        vector_col, c_id_col,
-                                        c_vector_col, keep_vector=False)
-        counts = {r["cell"]: r["count"] for r in
-                  census_src.groupBy("cell").count().collect()}
-        mass = (counts, probe_mass)
-    def make_qp():
-        p = _nearest_cells(df, centroids, nprobe, id_col, vector_col,
-                           c_id_col, c_vector_col, keep_vector=True,
-                           sq8=(mins, maxs), mass=mass)
-        if "cell_rank" in p.columns:
-            p = p.drop("cell_rank")
-        return p.select(F.col(id_col).alias("q_id"), "qcodes", "cell")
+    assigned, mass = _assigned_and_mass(df, centroids, assigned,
+                                        probe_mass, id_col, vector_col,
+                                        c_id_col, c_vector_col)
+    qp = _nearest_cells(df, centroids, nprobe, id_col, vector_col,
+                        c_id_col, c_vector_col, keep_vector=True,
+                        sq8=(mins, maxs), mass=mass)
+    qp = qp.select(F.col(id_col).alias("q_id"), "qcodes", "cell")
 
     _vt = "array<float>" if shuffle_dtype == "float" else None
     _cast = (lambda c: c.cast(_vt)) if _vt else (lambda c: c)
@@ -1466,53 +1229,28 @@ def knn_join_sq8(df: DataFrame, centroids: DataFrame,
     kk = k * rerank
     w_ap = Window.partitionBy("q_id").orderBy("ad2", "id")
     if probe_groups <= 1:
-        scored = (make_qp().groupBy("cell").cogroup(bp.groupBy("cell"))
+        scored = (qp.groupBy("cell").cogroup(bp.groupBy("cell"))
                   .applyInPandas(cell_topk, schema=sch))
         short = (scored.withColumn("_ar", F.row_number().over(w_ap))
                  .filter(F.col("_ar") <= kk).select("q_id", "id"))
     else:
         from pyspark import StorageLevel
-        # Staged probe table.  All three layouts were built and
-        # measured back-to-back at 10M × p16/g4 (SCALE.md §9j):
+        # Staged probe table: one row per probe, persisted DISK_ONLY.
+        # Three layouts were built and measured back-to-back at
+        # 10M × p16/g4 (SCALE.md §9j):
         #   flat persist (one row per probe, DISK_ONLY)   1847.7 s
         #   packed persist (one row per prober + explode) 2036.1 s
         #   per-group kernel recompute (probe fusion)     2872.4 s
-        # so "flat" — the r8 plan — stays the default: disk reads of
-        # the redundant table are cheaper than either the per-group
-        # selection sweep or the per-group array explode + HOF filter.
-        # "packed" (probe_table="packed") trades ~10% wall for a ~6×
-        # smaller persisted footprint (~2.6 GB vs ~16 GB at p16) —
-        # the scratch-constrained-box option.
-        if probe_table == "packed":
-            pk = _nearest_cells(df, centroids, nprobe, id_col,
-                                vector_col, c_id_col, c_vector_col,
-                                keep_vector=True, sq8=(mins, maxs),
-                                mass=mass, packed=True)
-            pk = (pk.select(F.col(id_col).alias("q_id"), "qcodes",
-                            "cells")
-                  .persist(StorageLevel.DISK_ONLY))
-        elif probe_table == "flat":
-            pk = make_qp().persist(StorageLevel.DISK_ONLY)
-        else:
-            raise ValueError(f"probe_table must be 'flat' or 'packed', "
-                             f"got {probe_table!r}")
+        # disk reads of the redundant flat table are cheaper than
+        # either the per-group selection sweep or the per-group array
+        # explode + HOF filter; packed only saved scratch disk.
+        pk = qp.persist(StorageLevel.DISK_ONLY)
         running = None
         for gi in range(probe_groups):
+            # pmod, not %: SQL '%' keeps the sign of the dividend, so
+            # negative cell ids would match no group
             in_g = F.pmod(F.col("cell"), F.lit(probe_groups)) == gi
-            if probe_table == "packed":
-                qp_g = pk.select(
-                    "q_id", "qcodes",
-                    F.explode(F.filter(
-                        # pmod, not %: SQL '%' keeps the sign of the
-                        # dividend, so negative cell ids would match no
-                        # group and drop candidates vs the flat path
-                        "cells",
-                        lambda c: F.pmod(c, F.lit(probe_groups))
-                        == F.lit(gi)))
-                    .alias("cell"))
-            else:
-                qp_g = pk.filter(in_g)
-            sg = (qp_g.groupBy("cell")
+            sg = (pk.filter(in_g).groupBy("cell")
                   .cogroup(bp.filter(in_g).groupBy("cell"))
                   .applyInPandas(cell_topk, schema=sch))
             # per-prober top-kk WITHIN the group, eagerly materialized:
@@ -1994,7 +1732,7 @@ def _bq_encode_cells(base: DataFrame, thresholds: list,
                      c_vector_col: str = "vector") -> DataFrame:
     """Fused (id, words, cell) corpus table: the JVM-native BQ word
     packing of :func:`bq_encode` chained into the Arrow coarse-assign
-    kernel (:func:`_assign_cells_float`, the exact `ivf_assign`
+    kernel (:func:`_nearest_idx`, the exact `ivf_assign`
     semantics — lowest-cid ties) in ONE corpus scan, no join.
 
     The adaptive (``probe_mass``) BQ paths eagerly materialize this
@@ -2020,7 +1758,7 @@ def _bq_encode_cells(base: DataFrame, thresholds: list,
             yield pd.DataFrame({
                 "id": pdf["id"].to_numpy(),
                 "words": pdf["words"].to_numpy(),
-                "cell": _assign_cells_float(V, cid_, C_)})
+                "cell": cid_[_nearest_idx(V, C_, 1)[:, 0]]})
 
     id_t = enc.schema["id"].dataType.simpleString()
     return enc.mapInPandas(
@@ -2168,9 +1906,7 @@ def _bq_adaptive_setup(base: DataFrame, centroids: DataFrame,
         census_src = assigned
     else:
         census_src = assigned
-    counts = {r["cell"]: r["count"] for r in
-              census_src.groupBy("cell").count().collect()}
-    return assigned, codes, (counts, probe_mass)
+    return assigned, codes, (_cell_counts(census_src), probe_mass)
 
 
 def _ivf_bq_partial(base: DataFrame, queries: DataFrame,
@@ -2192,7 +1928,7 @@ def _ivf_bq_partial(base: DataFrame, queries: DataFrame,
     On-the-fly plan shape (r12 optimization round): when NEITHER
     ``assigned`` nor ``codes`` is supplied, the corpus scan is ONE
     fused pass — JVM-native BQ word packing feeding the kernel, which
-    derives each row's coarse cell inline (:func:`_assign_cells_float`,
+    derives each row's coarse cell inline (:func:`_nearest_idx`,
     the exact `ivf_assign` semantics) and Hamming-scores probed cells.
     This removes the separate assign kernel pass over the corpus AND
     the codes⋈assigned id-join (guide §2.4/§4).  Pass persisted

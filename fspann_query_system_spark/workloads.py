@@ -3552,7 +3552,7 @@ def _sql_kmeans_parts(k: int, iters: int) -> tuple:
         # assign distance is ELEMENT-QUANTIZED (the _q9 treatment, like
         # the PQ chain's d{i}): int64 sums are order-free under duckdb's
         # parallel aggregation, so an assign near-tie cannot flip vs
-        # Spark's _argmin_cells quantized sweep (ADVICE r07)
+        # Spark's _nearest_idx quantized sweep (ADVICE r07)
         parts.append(
             f"d{i} AS (SELECT ex.id, {prev}.cell, "
             f"sum(CAST(round((ex.x - {prev}.cv) * (ex.x - {prev}.cv) "
@@ -3816,8 +3816,6 @@ def _knn_graph_state(spark, sf_dir, old_pred):
     assigned = ivf_assign(old, centroids)
     probes = _nearest_cells(old, centroids, IVF_NPROBE, "id", "vector",
                             "id", "vector", keep_vector=False)
-    if "cell_rank" in probes.columns:
-        probes = probes.drop("cell_rank")
     graph = knn_join(old, centroids, k=KNN_JOIN_K, nprobe=IVF_NPROBE,
                      assigned=assigned)
     return base, centroids, graph, probes, assigned

@@ -2377,8 +2377,6 @@ def test_knn_join_incremental_equals_full_rebuild(spark, clustered):
     assigned_old = ivf_assign(old, cents)
     probes_old = _nearest_cells(old, cents, 2, "id", "vector", "id",
                                 "vector", keep_vector=False)
-    if "cell_rank" in probes_old.columns:
-        probes_old = probes_old.drop("cell_rank")
     og = knn_join(old, cents, k=5, nprobe=2, assigned=assigned_old)
     inc = sorted(map(tuple, knn_join_incremental(
         og, probes_old, assigned_old, new, cents, k=5,
@@ -2390,8 +2388,6 @@ def test_knn_join_incremental_equals_full_rebuild(spark, clustered):
     # exact equality
     probes_v = _nearest_cells(old, cents, 2, "id", "vector", "id",
                               "vector", keep_vector=True)
-    if "cell_rank" in probes_v.columns:
-        probes_v = probes_v.drop("cell_rank")
     inc_v = sorted(map(tuple, knn_join_incremental(
         og, probes_v, assigned_old, new, cents, k=5,
         nprobe=2).collect()))
@@ -2424,8 +2420,6 @@ def test_knn_join_incremental_float_dtype_equals_full(spark, clustered):
     assigned_old = ivf_assign(old, cents)
     probes_old = _nearest_cells(old, cents, 2, "id", "vector", "id",
                                 "vector", keep_vector=False)
-    if "cell_rank" in probes_old.columns:
-        probes_old = probes_old.drop("cell_rank")
     og = knn_join(old, cents, k=5, nprobe=2, assigned=assigned_old,
                   shuffle_dtype="float")
     inc = sorted(map(tuple, knn_join_incremental(
@@ -2463,8 +2457,6 @@ def test_knn_graph_fold_two_file_stream_state_carry(spark, clustered,
     assigned = ivf_assign(old, cents)
     probes = _nearest_cells(old, cents, 2, "id", "vector", "id",
                             "vector", keep_vector=False)
-    if "cell_rank" in probes.columns:
-        probes = probes.drop("cell_rank")
     og = knn_join(old, cents, k=5, nprobe=2, assigned=assigned)
     state = {"g": og.localCheckpoint(eager=True),
              "p": probes.localCheckpoint(eager=True),
@@ -2501,38 +2493,6 @@ def test_knn_graph_fold_two_file_stream_state_carry(spark, clustered,
             == sorted((r.id, r.cell) for r in fresh_p.collect()))
 
 
-def test_nearest_cells_packed_equals_exploded(spark):
-    """packed=True emits one row per prober with (payload, cells) —
-    exploding it must reproduce the per-(row, cell) output exactly,
-    in probe order, for both fixed-nprobe and mass probing."""
-    import numpy as np
-    from fspann_query_system_spark.ops.similarity import _nearest_cells
-    rng = np.random.default_rng(13)
-    X = rng.normal(0, 2, (200, 16))
-    C = rng.normal(0, 2, (40, 16))
-    df = spark.createDataFrame([(i, X[i].tolist()) for i in range(len(X))],
-                               "id LONG, vector ARRAY<DOUBLE>")
-    cents = spark.createDataFrame(
-        [(j, C[j].tolist()) for j in range(len(C))],
-        "id LONG, vector ARRAY<DOUBLE>")
-    mins, maxs = X.min(axis=0).tolist(), X.max(axis=0).tolist()
-    counts = {j: (j % 5) + 1 for j in range(len(C))}
-    for kw in (dict(), dict(mass=(counts, 8))):
-        flat = _nearest_cells(df, cents, 3, "id", "vector", "id",
-                              "vector", keep_vector=True,
-                              sq8=(mins, maxs), **kw)
-        if "cell_rank" in flat.columns:
-            flat = flat.drop("cell_rank")
-        want = sorted((r.id, r.qcodes, r.cell) for r in flat.collect())
-        pk = _nearest_cells(df, cents, 3, "id", "vector", "id",
-                            "vector", keep_vector=True,
-                            sq8=(mins, maxs), packed=True, **kw)
-        got = []
-        for r in pk.collect():
-            got += [(r.id, r.qcodes, c) for c in r.cells]
-        assert sorted(got) == want, kw
-
-
 def test_knn_join_sq8_probe_groups_identical_with_mass(spark, clustered):
     """The staged path under an adaptive mass budget: per-group probe
     slicing must leave results identical to the single-pass adaptive
@@ -2554,10 +2514,11 @@ def test_knn_join_sq8_probe_groups_identical_with_mass(spark, clustered):
 
 def test_nearest_cells_gemm_topn_matches_exact_sweep(spark):
     """The tiled-GEMM top-nc probe path (large codebooks, |C| > 256)
-    must return the same (cell, cell_rank) assignment as the exact
-    per-centroid sweep — verified against a numpy exact oracle on a
-    300-centroid codebook (the IVF query path at SemDeDup-scale |C|,
-    where the python sweep was hours at 10M)."""
+    must probe the same cells as the exact per-centroid sweep —
+    verified against a numpy exact oracle on a 300-centroid codebook
+    (the IVF query path at SemDeDup-scale |C|, where the python sweep
+    was hours at 10M).  The probe ORDER is checked without Spark by
+    test_nearest_idx_and_mass_cells_follow_lexsort_order."""
     import numpy as np
     from fspann_query_system_spark.ops.similarity import _nearest_cells
     rng = np.random.default_rng(3)
@@ -2568,13 +2529,78 @@ def test_nearest_cells_gemm_topn_matches_exact_sweep(spark):
     cents = spark.createDataFrame(
         [(i, C[i].tolist()) for i in range(len(C))],
         "cell LONG, vector ARRAY<DOUBLE>")
-    got = {(r.id, r.cell_rank): r.cell for r in
-           _nearest_cells(df, cents, 3, "id", "vector", "cell", "vector",
-                          keep_vector=False).collect()}
+    got = {}
+    for r in _nearest_cells(df, cents, 3, "id", "vector", "cell", "vector",
+                            keep_vector=False).collect():
+        got.setdefault(r.id, set()).add(r.cell)
     for i in range(len(X)):
         d2 = ((C - X[i]) ** 2).sum(1)
-        for rk, j in enumerate(np.argsort(d2, kind="stable")[:3], 1):
-            assert got[(i, rk)] == j, (i, rk)
+        assert got[i] == set(np.argsort(d2, kind="stable")[:3]), i
+
+
+def test_nearest_idx_and_mass_cells_follow_lexsort_order():
+    """The coarse stage's one cell rule, numpy only: _nearest_idx
+    returns each row's nc nearest centroids in (d2, index) order — the
+    brute-force np.lexsort((index, d2)) order — and _mass_cells keeps
+    cells in quantized (dd, index) order while the member count of the
+    cells before them is below the budget."""
+    from fspann_query_system_spark.ops.pq import _q9
+    from fspann_query_system_spark.ops.similarity import (_mass_cells,
+                                                          _nearest_idx)
+
+    def lex(B, C, quantize):
+        out = []
+        for r0 in range(0, len(B), 128):        # bounds the cube
+            sq = np.square(B[r0:r0 + 128, None, :] - C[None])
+            d2 = (_q9(sq) if quantize else sq).sum(axis=2)
+            idx = np.broadcast_to(np.arange(len(C)), d2.shape)
+            out.append(np.lexsort((idx, d2), axis=1))
+        return np.concatenate(out)
+
+    rng = np.random.default_rng(11)
+    # up to 256 centroids: the sweep, with exact ties from duplicated
+    # centroids and from rows that sit on a centroid
+    C = rng.integers(-3, 4, (40, 6)).astype(np.float64)
+    C[20:] = C[:20]
+    B = np.vstack([C[:10], rng.integers(-3, 4, (150, 6))]).astype(np.float64)
+    for quantize in (False, True):
+        want = lex(B, C, quantize)
+        for nc in (1, 3, 9):
+            got = _nearest_idx(B, C, nc, quantize)
+            assert (got == want[:, :nc]).all(), (quantize, nc)
+    # past 256: the tiled GEMM over two 4,096-wide column tiles and
+    # two 2,048-row tiles, on tie-free data; then on small integers,
+    # where every GEMM distance is exact, with centroids duplicated
+    # within and across column tiles (2-deep ties, inside the +8 margin)
+    C = rng.normal(0, 3, (4200, 8))
+    B = rng.normal(0, 3, (2100, 8))
+    want = lex(B, C, False)
+    for nc in (1, 3):
+        assert (_nearest_idx(B, C, nc) == want[:, :nc]).all(), nc
+    C = rng.integers(-20, 21, (4200, 8)).astype(np.float64)
+    C[4100:] = C[:100]
+    C[200:300] = C[100:200]
+    B = np.vstack([C[:100] + 1, rng.integers(-20, 21, (200, 8))])
+    want = lex(B, C, False)
+    for nc in (1, 3):
+        assert (_nearest_idx(B, C, nc) == want[:, :nc]).all(), nc
+    # mass budgets against a cumulative-count reference, both sides of
+    # 256 centroids
+    for n_c in (40, 300):
+        C = rng.normal(0, 3, (n_c, 8))
+        B = rng.normal(0, 3, (120, 8))
+        cnt = rng.integers(0, 25, n_c)
+        order = lex(B, C, True)
+        for budget in (1, 60, 400):
+            idx, nk = _mass_cells(B, C, cnt, budget)
+            want_idx, want_nk = [], []
+            for row in order:
+                prior = np.concatenate([[0], np.cumsum(cnt[row])[:-1]])
+                kept = row[prior < budget]
+                want_idx += kept.tolist()
+                want_nk.append(len(kept))
+            assert idx.tolist() == want_idx, (n_c, budget)
+            assert nk.tolist() == want_nk, (n_c, budget)
 
 
 def test_ivf_bq_sq8_full_budget_matches_exact(spark, clustered):
@@ -2678,14 +2704,16 @@ def test_probe_cells_local_mass_coverage_semantics(spark, clustered):
 
 
 @pytest.mark.parametrize("family", ["ivf_topk", "ivfpq_topk", "ivf_bq_topk",
-                                    "ivf_bq_sq8_topk"])
+                                    "ivf_bq_sq8_topk", "knn_join",
+                                    "knn_join_sq8"])
 def test_probe_mass_below_one_raises(spark, clustered, family):
-    """A probe-mass budget below 1 probes no cell: every IVF family
-    refuses it with ValueError instead of returning zero rows."""
+    """A probe-mass budget below 1, or a fixed nprobe below 1, probes
+    no cell: every IVF family refuses it on the driver with ValueError
+    instead of returning zero rows or failing inside a Python worker."""
     from fspann_query_system_spark.ops.pq import ivfpq_topk
     from fspann_query_system_spark.ops.similarity import (
         bq_thresholds, ivf_assign, ivf_bq_sq8_topk, ivf_bq_topk, ivf_topk,
-        sq8_stats)
+        knn_join, knn_join_sq8, sq8_stats)
     df, X = clustered
     small = df.filter(F.col("id") < 200)
     cents = small.filter(F.col("id") % 50 == 0)
@@ -2699,17 +2727,22 @@ def test_probe_mass_below_one_raises(spark, clustered, family):
          for s in range(2) for c in range(4)],
         "sub INT, cell INT, vector ARRAY<DOUBLE>")
     calls = {
-        "ivf_topk": lambda: ivf_topk(small, q, cents, k=5, probe_mass=0,
-                                     assigned=assigned),
-        "ivfpq_topk": lambda: ivfpq_topk(small, q, cents, cb, k=5,
-                                         probe_mass=0, assigned=assigned),
-        "ivf_bq_topk": lambda: ivf_bq_topk(small, q, cents, thr, k=5,
-                                           probe_mass=0, assigned=assigned),
-        "ivf_bq_sq8_topk": lambda: ivf_bq_sq8_topk(
-            small, q, cents, thr, mins, maxs, k=5, probe_mass=0,
-            assigned=assigned)}
+        "ivf_topk": lambda **kw: ivf_topk(small, q, cents, k=5,
+                                          assigned=assigned, **kw),
+        "ivfpq_topk": lambda **kw: ivfpq_topk(small, q, cents, cb, k=5,
+                                              assigned=assigned, **kw),
+        "ivf_bq_topk": lambda **kw: ivf_bq_topk(small, q, cents, thr, k=5,
+                                                assigned=assigned, **kw),
+        "ivf_bq_sq8_topk": lambda **kw: ivf_bq_sq8_topk(
+            small, q, cents, thr, mins, maxs, k=5, assigned=assigned, **kw),
+        "knn_join": lambda **kw: knn_join(small, cents, k=5,
+                                          assigned=assigned, **kw),
+        "knn_join_sq8": lambda **kw: knn_join_sq8(
+            small, cents, mins, maxs, k=5, assigned=assigned, **kw)}
     with pytest.raises(ValueError, match="probe mass budget"):
-        calls[family]()
+        calls[family](probe_mass=0)
+    with pytest.raises(ValueError, match="nprobe must be >= 1"):
+        calls[family](nprobe=0)
 
 
 def test_ivf_bq_sq8_adaptive_budget_beats_matched_fixed_probes(spark,
@@ -3131,12 +3164,6 @@ def test_knn_join_sq8_probe_groups_identical(spark, clustered):
                      knn_join_sq8(small, cents, mins, maxs, k=5, nprobe=3,
                                   probe_groups=g).collect())
         assert got == base, f"probe_groups={g} diverged"
-    # the packed probe-table layout is the same physical rewrite
-    got = sorted((r.q_id, r.id, r.dist, r.rank) for r in
-                 knn_join_sq8(small, cents, mins, maxs, k=5, nprobe=3,
-                              probe_groups=2,
-                              probe_table="packed").collect())
-    assert got == base, "probe_table=packed diverged"
 
 
 def test_containment_pairs_finds_doc_in_doc(spark):
@@ -3205,11 +3232,11 @@ def test_pii_scrub_redacts_and_counts(spark):
         pii_scrub(docs, kinds=("email", "ssn")).collect()
 
 
-def test_knn_join_sq8_packed_negative_cells_match_flat(spark):
-    """Negative cell ids through the staged packed layout: the group
-    filter must use pmod like the flat path (advice r10 — SQL '%'
-    keeps the dividend's sign, silently dropping every negative cell's
-    candidates), so packed/flat/single-pass all agree."""
+def test_knn_join_sq8_staged_negative_cells_match_single_pass(spark):
+    """Negative cell ids through the staged path: the group filter must
+    use pmod (advice r10 — SQL '%' keeps the dividend's sign, silently
+    dropping every negative cell's candidates), so staged and
+    single-pass agree."""
     import numpy as np
     from fspann_query_system_spark.ops.similarity import (knn_join_sq8,
                                                           sq8_stats)
@@ -3226,12 +3253,10 @@ def test_knn_join_sq8_packed_negative_cells_match_flat(spark):
     base = sorted((r.q_id, r.id, r.dist, r.rank) for r in
                   knn_join_sq8(df, cents, mins, maxs, k=5,
                                nprobe=3).collect())
-    for layout in ("flat", "packed"):
-        got = sorted((r.q_id, r.id, r.dist, r.rank) for r in
-                     knn_join_sq8(df, cents, mins, maxs, k=5, nprobe=3,
-                                  probe_groups=2,
-                                  probe_table=layout).collect())
-        assert got == base, layout
+    got = sorted((r.q_id, r.id, r.dist, r.rank) for r in
+                 knn_join_sq8(df, cents, mins, maxs, k=5, nprobe=3,
+                              probe_groups=2).collect())
+    assert got == base
 
 
 def test_knn_join_decremental_equals_full_rebuild(spark, clustered):
@@ -3281,8 +3306,6 @@ def test_knn_graph_fold_upsert_delete_then_reinsert_identity(
     assigned = ivf_assign(full, cents)
     probes = _nearest_cells(full, cents, 2, "id", "vector", "id",
                             "vector", keep_vector=False)
-    if "cell_rank" in probes.columns:
-        probes = probes.drop("cell_rank")
     og = knn_join(full, cents, k=5, nprobe=2, assigned=assigned)
     g2, p2, a2 = knn_graph_fold(
         og, probes, assigned, full.filter(is_mut), cents, k=5,
@@ -3303,7 +3326,7 @@ def test_knn_graph_fold_upsert_delete_then_reinsert_identity(
 
 def test_probe_cells_local_matches_kernel_fixed_and_mass(spark, clustered):
     """_probe_cells_local (driver-side probe sets over the collected
-    query batch) runs the _nc_batches kernel body verbatim — fixed and
+    query batch) runs the _nearest_cells kernel's cell rule — fixed and
     mass-budget probe sets must equal the distributed spelling's."""
     from pyspark.sql import functions as F
     from fspann_query_system_spark.ops.similarity import (
@@ -3476,8 +3499,6 @@ def test_knn_graph_fold_preserves_vector_carrying_probe_layout(spark,
     for kv in (False, True):
         probes = _nearest_cells(old, cents, 2, "id", "vector", "id",
                                 "vector", keep_vector=kv)
-        if "cell_rank" in probes.columns:
-            probes = probes.drop("cell_rank")
         g, p, a = knn_join(old, cents, k=5, nprobe=2,
                            assigned=assigned), probes, assigned
         for batch in (base.filter(is_b1), base.filter(is_b2)):

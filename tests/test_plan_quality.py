@@ -479,7 +479,8 @@ def test_checkpoints_only_through_materialize():
 
 def test_search_call_keywords_name_real_parameters():
     """Every keyword passed to ``search_batch``, ``search_batch_adaptive``,
-    ``AnnIndex.build`` or ``with_encrypted_points`` in the package,
+    ``AnnIndex.build``, ``with_encrypted_points``, ``_nearest_cells``,
+    ``ivf_topk``, ``knn_join`` or ``knn_join_sq8`` in the package,
     ``tools/`` and ``fsbench/`` names a parameter of that function
     (``search_batch_adaptive`` forwards its keywords to ``search_batch``).
     Tier-1 runs no tool, so a keyword an API change removed would
@@ -489,6 +490,7 @@ def test_search_call_keywords_name_real_parameters():
     from pathlib import Path
 
     import fspann_query_system_spark as pkg
+    from fspann_query_system_spark.ops import similarity
     from fspann_query_system_spark.query import ann
 
     def params(fn):
@@ -500,6 +502,9 @@ def test_search_call_keywords_name_real_parameters():
         "search_batch_adaptive": search | params(ann.search_batch_adaptive),
         "build": params(ann.AnnIndex.build),
         "with_encrypted_points": params(ann.AnnIndex.with_encrypted_points),
+        **{fn.__name__: params(fn) for fn in (
+            similarity._nearest_cells, similarity.ivf_topk,
+            similarity.knn_join, similarity.knn_join_sq8)},
     }
     pkg_root = Path(pkg.__file__).parent
     files = [*pkg_root.rglob("*.py"),

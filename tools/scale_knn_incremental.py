@@ -88,10 +88,7 @@ def main():
     assigned = ivf_assign(old, cent, c_id_col="cell").persist()
     assigned.count()
     probes = _nearest_cells(old, cent, nprobe, "id", "vector", "cell",
-                            "vector", keep_vector=False)
-    if "cell_rank" in probes.columns:
-        probes = probes.drop("cell_rank")
-    probes = probes.persist()
+                            "vector", keep_vector=False).persist()
     probes.count()
     layouts = [("skinny", probes)]
     if not os.environ.get("KNN_INC_SKIP_VEC"):
@@ -101,8 +98,6 @@ def main():
         # 10M×p4×64d) — skip via KNN_INC_SKIP_VEC=1 on tight disks.
         probes_v = _nearest_cells(old, cent, nprobe, "id", "vector",
                                   "cell", "vector", keep_vector=True)
-        if "cell_rank" in probes_v.columns:
-            probes_v = probes_v.drop("cell_rank")
         probes_v = probes_v.repartition("cell").persist()
         probes_v.count()
         layouts.append(("vec-carrying", probes_v))
